@@ -1,5 +1,7 @@
 package graft.dedup
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -445,8 +447,8 @@ object Dedup {
     // (the q_dedup topology: 2 rounds → 1). Replaces the canonical-
     // projection step at the cost of one narrow in-task pass — the
     // distinct exchange below was already there. Per-task state is
-    // O(nodes in partition), the same order the global rounds'
-    // shuffles would carry.
+    // the union-find map, one entry per node in the partition; the
+    // output edges stream off its key set without a second buffer.
     val contracted = edges
       .filter(col("a") =!= col("b"))
       .select(col("a"), col("b")).as[(Long, Long)]
@@ -467,14 +469,11 @@ object Dedup {
             if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
           } else { parent.putIfAbsent(a, ra); parent.putIfAbsent(b, rb) }
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        val ks = parent.keySet().iterator()
-        while (ks.hasNext) {
-          val n: Long = ks.next()
-          val r = find(n)
-          if (r != n) out += ((n, r))
-        }
-        out.iterator
+        // emitted lazily off the key iterator: find's path compression
+        // only rewrites values of existing keys, never the key set
+        parent.keySet().iterator().asScala
+          .map { n => val l: Long = n; (l, find(l)) }
+          .filter { case (n, r) => r != n }
       }.toDF("a", "b")
     var e = contracted.distinct().localCheckpoint()
     var eCount = e.count()

@@ -36,10 +36,10 @@ object FlowRunner {
   case class FlowResult(artifacts: Map[String, Any],
     streams: Map[String, XesReader.XLog],
     cached: Seq[Dataset[_]] = Nil) {
-    /** Releases executor storage pinned by fan-out segments
-      * (Duplicator caches at the tee); call when the flow's outputs
-      * are no longer needed so repeated runs in one long-lived
-      * session don't accumulate cached blocks. */
+    /** Releases executor storage pinned by the flow: each XesReader
+      * source's component cache and the Duplicator caches at the tee;
+      * call when the flow's outputs are no longer needed so repeated
+      * runs in one long-lived session don't accumulate cached blocks. */
     def unpersist(): Unit = cached.foreach(_.unpersist())
   }
 
@@ -220,8 +220,9 @@ object FlowRunner {
 
     var current: XesReader.XLog = pipe.source.name match {
       case "XesReader" =>
-        val path = pipe.source.attributes("path").toString
-        XesReader.read(spark, path)
+        val log = XesReader.read(spark, pipe.source.attributes("path").toString)
+        log.cached.foreach(registerCached)
+        log
       case "Receiver" =>
         named(pipe.source.streamReceiver.head)
       case other =>
@@ -265,8 +266,8 @@ object FlowRunner {
         // forward the stream unchanged while an exact copy goes to the
         // sink acquired from the named channel. Lazy-plan world: the
         // copy IS the same plan; cache at the fan-out so the two
-        // consumers share one parse (the Buffer subsumption, SURVEY
-        // §7.5).
+        // consumers share one evaluation of the segments upstream of
+        // the tee (the Buffer subsumption, SURVEY §7.5).
         val shared = in.copy(traces = in.traces.cache(), events = in.events.cache())
         registerCached(shared.traces)
         registerCached(shared.events)

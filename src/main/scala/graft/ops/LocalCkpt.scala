@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Deterministic release of `localCheckpoint` storage (r17, guide §5
   * memory hygiene): `Dataset.unpersist` only clears CacheManager
@@ -8,28 +9,22 @@ import org.apache.spark.sql.DataFrame
   * until the ContextCleaner GC-collects the RDD — under a bench run
   * that is long enough for stale generations of an iterative
   * operator's edge lists to stack up and pressure the executor store.
-  * Walks the logical plan for the `LogicalRDD` leaves a checkpoint
-  * compiles to and unpersists their RDDs directly. Call ONLY on
-  * frames no downstream plan will read again. */
+  * Unpersists a checkpoint's RDD directly. Call ONLY on frames no
+  * downstream plan will read again. */
 object LocalCkpt {
 
-  /** r18 (advisor item): `free` unpersists every LogicalRDD leaf in
-    * the plan it is handed, and a freed checkpoint has TRUNCATED
-    * lineage — reaching a leaf shared with a live frame would fail
-    * that frame unrecoverably. Require the argument to be the
-    * checkpoint itself (at most one LogicalRDD leaf; zero for the
-    * not-yet-checkpointed first generation of an iterative loop), so
-    * the composite-plan footgun is a loud error instead of a scaladoc
-    * sentence. */
-  def free(df: DataFrame): Unit = {
-    val leaves = df.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    require(leaves.size <= 1,
-      s"LocalCkpt.free expects the checkpointed frame itself (at most one " +
-        s"LogicalRDD leaf), got ${leaves.size} — freeing leaves reachable " +
-        "from a composite plan could unpersist blocks shared with live frames")
-    leaves.foreach(_.unpersist(blocking = false))
+  /** Frees `df`'s checkpoint blocks when `df` IS a checkpoint: its
+    * plan root is the `LogicalRDD` its `localCheckpoint` compiled to.
+    * Any other shape is left alone and returns false — the
+    * not-yet-checkpointed first generation of an iterative loop, and
+    * every composite plan: a freed checkpoint has TRUNCATED lineage,
+    * so unpersisting a leaf reachable from a composite plan could fail
+    * a live frame that shares it, unrecoverably. The legal argument is
+    * a shape of the plan, so a wrong one frees nothing instead of
+    * throwing mid-query. */
+  def free(df: DataFrame): Boolean = df.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false); true
+    case _ => false
   }
 
   /** Row-count cutoff for materializing a reused intermediate

@@ -28,7 +28,7 @@ object MinerQueries {
   private val fixtures = "/root/repo/fixtures"
 
   private def bookEvents(s: SparkSession, name: String) =
-    XesReader.read(s, s"$book/$name.xes").eventsDf
+    XesReader.withTs(XesReader.readEvents(s, s"$book/$name.xes"))
 
   /** Mining fans one tiny events DF into several jobs (DFG edges,
     * starts, ends, alphabet); cache it for the duration so the XES

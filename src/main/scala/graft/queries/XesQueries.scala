@@ -230,7 +230,7 @@ object XesQueries {
     "q_stream_conformance_parity" -> { (s, _) =>
       ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      val l1 = XesReader.read(s, s"$book/L1.xes").eventsDf.cache()
+      val l1 = XesReader.withTs(XesReader.readEvents(s, s"$book/L1.xes")).cache()
       val (net, src) = try {
         val n = graft.ops.Alpha.mine(l1, "traceIdx", "activity", "ts", "seq")
         (n, l1

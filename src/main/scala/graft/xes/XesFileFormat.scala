@@ -9,10 +9,10 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import XesModel._
 
@@ -30,9 +30,16 @@ import XesModel._
   * that dominates full-fidelity parsing. `attrs` in the projection
   * disables pruning (full parse).
   *
-  * Options: `tolerant=true` drops files that fail to parse (the
-  * quarantine read pairs it with the error-side scan in
-  * [[XesReader.readEventsTolerant]]).
+  * Options:
+  *  - `tolerant=true` drops files that fail to parse (the quarantine
+  *    read pairs it with the error-side scan in
+  *    [[XesReader.readEventsTolerant]]);
+  *  - `components=true` switches to [[XesFileFormat.componentsSchema]]:
+  *    one full-fidelity parse per file emitting one row per meta,
+  *    trace and event. [[XesReader.read]] caches that scan once per log
+  *    handle and projects its metas, traces and events out of the
+  *    cache, so a handle parses each file once however many actions
+  *    run on it.
   *
   * XML has no splittable structure, so `isSplitable` is false and
   * parallelism is per file — inherent to the format; steady-state
@@ -46,7 +53,8 @@ class XesFileFormat extends FileFormat with DataSourceRegister with Serializable
   override def inferSchema(sparkSession: SparkSession,
       options: Map[String, String],
       files: Seq[org.apache.hadoop.fs.FileStatus]): Option[StructType] =
-    Some(XesFileFormat.eventsSchema)
+    Some(if (XesFileFormat.componentsMode(options)) XesFileFormat.componentsSchema
+         else XesFileFormat.eventsSchema)
 
   override def prepareWrite(sparkSession: SparkSession, job: Job,
       options: Map[String, String], dataSchema: StructType): OutputWriterFactory =
@@ -62,6 +70,7 @@ class XesFileFormat extends FileFormat with DataSourceRegister with Serializable
       hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
     val confB = sparkSession.sparkContext.broadcast(
       new XesFileFormat.SerializableHadoopConf(hadoopConf))
+    val components = XesFileFormat.componentsMode(options)
     val keep = XesFileFormat.keepFor(requiredSchema)
     val tolerant = options.getOrElse("tolerant", "false").toBoolean
     (pf: PartitionedFile) => {
@@ -85,12 +94,15 @@ class XesFileFormat extends FileFormat with DataSourceRegister with Serializable
           b
         } finally in.close()
       val name = path.getName
-      val events =
-        try XesParser.parse(name, bytes, keep).events
-        catch { case _: XesParseException if tolerant => Seq.empty[XesEvent] }
-      val ser = XesFileFormat.encoder.createSerializer()
-      val proj = XesFileFormat.projectionFor(requiredSchema)
-      events.iterator.map(e => proj(ser(e)))
+      if (components) XesFileFormat.componentRows(name, bytes, requiredSchema)
+      else {
+        val events =
+          try XesParser.parse(name, bytes, keep).events
+          catch { case _: XesParseException if tolerant => Seq.empty[XesEvent] }
+        val ser = XesFileFormat.encoder.createSerializer()
+        val proj = XesFileFormat.projectionFor(requiredSchema)
+        events.iterator.map(e => proj(ser(e)))
+      }
     }
   }
 }
@@ -119,6 +131,55 @@ object XesFileFormat {
     * order, identical to `Dataset[XesEvent].toDF()`. */
   lazy val encoder: ExpressionEncoder[XesEvent] = ExpressionEncoder[XesEvent]()
   lazy val eventsSchema: StructType = encoder.schema
+
+  /** Component kinds of the `components=true` rows. */
+  val MetaKind = 0
+  val TraceKind = 1
+  val EventKind = 2
+
+  private[xes] def componentsMode(options: Map[String, String]): Boolean =
+    options.getOrElse("components", "false").toBoolean
+
+  private lazy val metaEncoder: ExpressionEncoder[XesMeta] = ExpressionEncoder[XesMeta]()
+  private lazy val traceEncoder: ExpressionEncoder[XesTrace] = ExpressionEncoder[XesTrace]()
+
+  /** The `components=true` schema: `kind` plus the union of the
+    * event, trace and meta columns, each by name (fields the three
+    * share — `file`, `traceIdx`, `filePos`, `attrs` — have one type,
+    * checked here). Flat rather than one struct per kind, so the
+    * in-memory cache over it stays columnar: an events query that
+    * reads `activity` decodes that column only. A row fills its own
+    * kind's columns and leaves the rest null. */
+  private[xes] lazy val componentsSchema: StructType = {
+    val all = eventsSchema.fields ++ traceEncoder.schema.fields ++ metaEncoder.schema.fields
+    val union = all.groupBy(_.name).map { case (n, fs) =>
+      require(fs.map(_.dataType).distinct.size == 1, s"component column $n has two types")
+      n -> fs.head.dataType
+    }
+    StructType(StructField("kind", IntegerType, nullable = false) +:
+      all.map(_.name).distinct.map(n => StructField(n, union(n), nullable = true)))
+  }
+
+  /** One full-fidelity parse of `bytes` as `requiredSchema` rows of
+    * [[componentsSchema]]: the meta first, then the traces, then the
+    * events. */
+  private[xes] def componentRows(name: String, bytes: Array[Byte],
+      requiredSchema: StructType): Iterator[InternalRow] = {
+    val log = XesParser.parse(name, bytes)
+    def rows[T](enc: ExpressionEncoder[T], kind: Int, xs: Iterator[T]) = {
+      val ser = enc.createSerializer()
+      val proj = UnsafeProjection.create(requiredSchema.fields.toIndexedSeq.map { f =>
+        val i = enc.schema.fieldNames.indexOf(f.name)
+        if (f.name == "kind") Literal(kind)
+        else if (i >= 0) BoundReference(i, f.dataType, enc.schema(i).nullable)
+        else Literal(null, f.dataType)
+      })
+      xs.map(x => proj(ser(x)))
+    }
+    rows(metaEncoder, MetaKind, Iterator(log.meta)) ++
+      rows(traceEncoder, TraceKind, log.traces.iterator) ++
+      rows(encoder, EventKind, log.events.iterator)
+  }
 
   /** Promoted column → the XES standard-extension key it reads. */
   private val promotedKeys: Map[String, String] = Map(

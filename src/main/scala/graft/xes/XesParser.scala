@@ -58,10 +58,15 @@ object XesParser {
     f
   }
 
+  /** Test seam: invoked with the file name on the parsing thread as
+    * each parse begins — the parse-once specs count calls here. */
+  @volatile private[graft] var parseHook: String => Unit = _ => ()
+
   def parse(file: String, bytes: Array[Byte]): ParsedLog =
     parse(file, bytes, Keep.All)
 
   def parse(file: String, bytes: Array[Byte], keep: Keep): ParsedLog = {
+    parseHook(file)
     val r = factory.createXMLStreamReader(new ByteArrayInputStream(bytes))
     try parseRoot(file, r, keep)
     catch {

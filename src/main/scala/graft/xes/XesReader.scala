@@ -1,13 +1,13 @@
 package graft.xes
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import XesModel._
 
-/** Spark XES source: `binaryFile` scan → per-file StAX parse in
-  * executors → typed Datasets (SURVEY.md §2.2 "XesReader" row;
-  * reference `/root/reference/src/stream/xes.rs:562-714`).
+/** Spark XES source: the registered `xes` file source → per-file
+  * StAX parse in executors → typed Datasets (SURVEY.md §2.2
+  * "XesReader" row; reference `src/stream/xes.rs:562-714`).
   *
   * Scale notes:
   *  - parallelism is per *file* (XML has no splittable structure);
@@ -15,22 +15,33 @@ import XesModel._
   *    that is inherent to the format, and the first thing this engine
   *    does at scale is convert to parquet (`toParquet`) so every
   *    downstream query gets columnar pruning + splittable scans;
-  *  - `events`/`traces` are separate lazy plans over the same files
-  *    (each runs its own parse pass — XML ingestion is a one-time
-  *    conversion cost, not the steady-state query path);
-  *  - Meta is a driver-side object per file (emitted once, first —
-  *    xes.rs:627-648); it never enters the row plane.
+  *  - a log handle ([[read]]) parses each file ONCE: one
+  *    `components=true` scan emits the meta, trace and event rows, is
+  *    cached, and `metaDs`/`traces`/`events` are column projections of
+  *    that cache — the promi reference likewise parses a stream once
+  *    and pulls every component through its pipes. Event-only callers
+  *    use [[readEvents]] instead: a pruned scan that pins no cache;
+  *  - Meta is one row per file, emitted first (xes.rs:627-648); it
+  *    reaches the driver only when a meta-consuming operator collects.
   */
 object XesReader {
 
-  /** A log handle: lazy per-file metas + distributed traces/events.
-    * `metaDs` is a plan, not a collection — nothing is materialized
-    * driver-side until a meta-consuming operator (writer, validator,
-    * repair) actually runs, and `metaFor` brings exactly one file's
-    * header. `metas` collects them all — bounded by the file count a
-    * flow writes/validates, never forced by event-plane queries. */
+  /** A log handle: per-file metas + distributed traces/events, all
+    * projections of the handle's one cached component scan (`cached`;
+    * None for handles not built by [[read]]). `metaDs` is a plan, not
+    * a collection — nothing is materialized driver-side until a
+    * meta-consuming operator (writer, validator, repair) actually
+    * runs, and `metaFor` brings exactly one file's header. `metas`
+    * collects them all — bounded by the file count a flow
+    * writes/validates, never forced by event-plane queries.
+    *
+    * The cache is a `CacheManager` entry, so `spark.catalog.clearCache()`
+    * releases it too; after [[unpersist]] the handle still works and
+    * re-parses on demand. Two handles never share a cache (each
+    * [[read]] builds its own relation), so a fresh read of a
+    * rewritten file sees the new bytes. */
   case class XLog(metaDs: Dataset[XesMeta], traces: Dataset[XesTrace],
-      events: Dataset[XesEvent]) {
+      events: Dataset[XesEvent], cached: Option[DataFrame] = None) {
     lazy val metas: Seq[XesMeta] = metaDs.collect().toSeq
     /** One file's header, driver-side — the millions-of-files path. */
     def metaFor(file: String): Option[XesMeta] =
@@ -42,9 +53,14 @@ object XesReader {
       copy(metaDs = s.createDataset(ms))
     }
     /** Events with a timestamp column usable by the Time DSL. */
-    def eventsDf: DataFrame =
-      events.withColumn("ts", timestamp_micros(col("tsMicros")))
+    def eventsDf: DataFrame = withTs(events)
+    /** Releases the handle's component cache. */
+    def unpersist(): Unit = cached.foreach(_.unpersist())
   }
+
+  /** `events` with the Time DSL's `ts` timestamp column. */
+  def withTs(events: Dataset[XesEvent]): DataFrame =
+    events.withColumn("ts", timestamp_micros(col("tsMicros")))
 
   private def binary(spark: SparkSession, path: String): Dataset[(String, Array[Byte])] = {
     import spark.implicits._
@@ -66,21 +82,28 @@ object XesReader {
 
   def readTraces(spark: SparkSession, path: String): Dataset[XesTrace] = {
     import spark.implicits._
-    binary(spark, path).flatMap { case (p, c) =>
-      XesParser.parse(shortName(p), c).traces }
+    project[XesTrace](components(spark, path), XesFileFormat.TraceKind)
   }
 
-  /** Metas as a lazy plan — parses headers on executors; collect is
-    * the caller's explicit choice ([[XLog.metas]] / [[XLog.metaFor]]). */
-  def metas(spark: SparkSession, path: String): Dataset[XesMeta] = {
+  /** A log handle over `path`: one cached component scan (one
+    * full-fidelity parse per file, on the first action), projected
+    * into metas, traces and events. */
+  def read(spark: SparkSession, path: String): XLog = {
     import spark.implicits._
-    binary(spark, path).map { case (p, c) =>
-      XesParser.parse(shortName(p), c).meta }
+    val rows = components(spark, path).cache()
+    XLog(project[XesMeta](rows, XesFileFormat.MetaKind),
+      project[XesTrace](rows, XesFileFormat.TraceKind),
+      project[XesEvent](rows, XesFileFormat.EventKind), Some(rows))
   }
 
-  def read(spark: SparkSession, path: String): XLog =
-    XLog(metas(spark, path), readTraces(spark, path),
-      readEvents(spark, path))
+  /** The `components=true` scan: one row per meta, trace and event. */
+  private def components(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("xes").option("components", "true").load(path)
+
+  /** A component scan's `kind` rows, as `T`'s columns. */
+  private def project[T: Encoder](rows: DataFrame, kind: Int): Dataset[T] =
+    rows.filter(col("kind") === kind)
+      .select(implicitly[Encoder[T]].schema.fieldNames.toIndexedSeq.map(col): _*).as[T]
 
   /** Fault-tolerant directory read: files that fail to parse land in a
     * quarantine table instead of failing the job (the Spark analogue of
