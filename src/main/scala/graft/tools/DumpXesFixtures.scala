@@ -2,9 +2,16 @@ package graft.tools
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.time.{Instant, OffsetDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
+import java.time.temporal.ChronoUnit
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.GraftSession
 import graft.queries.XesQueries
+import graft.xes.XesModel._
+import graft.xes.XesWriter
 
 /** Regenerates the committed XES oracle fixtures (dev tool).
   *
@@ -16,15 +23,33 @@ import graft.queries.XesQueries
   * corpus statistics (`/root/reference/src/stream/stats.rs:178-186`),
   * and XesFixtureSpec asserts fixture ↔ spec-count agreement.
   *
+  * The last step rewrites `xes/book/`, the in-repo copy of the book
+  * logs, from the event fixture alone ([[bookLogs]]); with
+  * `--book-only` it runs just that step, which needs no reference
+  * checkout.
+  *
   * Run after any intentional parser behavior change:
-  * `sbt "runMain graft.tools.DumpXesFixtures"`.
+  * `sbt "runMain graft.tools.DumpXesFixtures [outDir] [--book-only]"`
+  * (`outDir` defaults to `fixtures/` under the working directory).
   */
 object DumpXesFixtures {
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/root/repo/fixtures")
+    val bookOnly = args.contains("--book-only")
+    val out = args.filterNot(_ == "--book-only").headOption
+      .getOrElse(Paths.get("fixtures").toAbsolutePath.toString)
     val spark = GraftSession.get("8")
     new File(out).mkdirs()
+    if (!bookOnly) writeOracles(spark, out)
+    val bookDir = Paths.get(out, "xes", "book")
+    Files.createDirectories(bookDir)
+    bookLogs(spark.read.parquet(s"$out/xes_book_events.parquet")).foreach {
+      case (file, xml) => Files.writeString(bookDir.resolve(file), xml)
+    }
+    spark.stop()
+  }
+
+  private def writeOracles(spark: SparkSession, out: String): Unit = {
     writeSingle(XesQueries.queries("q_xes_read_events")(spark, ""),
       s"$out/xes_book_events.parquet")
     writeSingle(XesQueries.queries("q_xes_log_stats")(spark, ""),
@@ -39,7 +64,55 @@ object DumpXesFixtures {
       graft.xes.XesReader.readEvents(spark, s"$out/lifecycle.xes").toDF()
         .select("file", "traceIdx", "seq", "activity", "lifecycle", "tsMicros"),
       s"$out/xes_lifecycle_events.parquet")
-    spark.stop()
+  }
+
+  /** Header of every rebuilt book log: the four extensions whose keys
+    * the event fixture carries. The fixture pins no trace names,
+    * globals, classifiers or log attributes, so none are written. */
+  private val bookExtensions = Seq(
+    ExtensionDecl("Concept", "concept", "http://www.xes-standard.org/concept.xesext"),
+    ExtensionDecl("Lifecycle", "lifecycle", "http://www.xes-standard.org/lifecycle.xesext"),
+    ExtensionDecl("Organizational", "org", "http://www.xes-standard.org/org.xesext"),
+    ExtensionDecl("Time", "time", "http://www.xes-standard.org/time.xesext"))
+
+  /** The book corpus's lexical timestamp form: milliseconds and an
+    * explicit `±hh:mm` offset. */
+  private val tsFormat = DateTimeFormatter.ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSxxx")
+
+  private def timestamp(tsMicros: Long, tzOffsetMin: Int): String = {
+    require(tsMicros % 1000L == 0L, s"sub-millisecond timestamp $tsMicros")
+    OffsetDateTime.ofInstant(Instant.EPOCH.plus(tsMicros, ChronoUnit.MICROS),
+      ZoneOffset.ofTotalSeconds(tzOffsetMin * 60)).format(tsFormat)
+  }
+
+  /** Renders each log of the book event fixture (`xes_book_events`
+    * rows) as XES, one (file name, XML) pair per log in file-name
+    * order: one `<trace>` per (file, traceIdx) in traceIdx order,
+    * events in `seq` order, each with `concept:name`,
+    * `lifecycle:transition`, `org:resource` and `time:timestamp`
+    * (written with its source offset). */
+  def bookLogs(events: DataFrame): Seq[(String, String)] = {
+    import events.sparkSession.implicits._
+    val rows = events
+      .select("file", "traceIdx", "seq", "activity", "lifecycle", "resource",
+        "tsMicros", "tzOffsetMin")
+      .as[(String, Long, Long, String, String, String, Long, Int)].collect()
+    rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (file, fileRows) =>
+      val evs = fileRows.toSeq.map { case (_, t, seq, act, lc, res, ts, tz) =>
+        XesEvent(file, Some(t), t, seq, Some(act), None, Some(lc), Some(res),
+          None, None, Some(ts), Some(tz), Seq(
+            XAttr("concept:name", "string", act),
+            XAttr("lifecycle:transition", "string", lc),
+            XAttr("org:resource", "string", res),
+            XAttr("time:timestamp", "date", timestamp(ts, tz))))
+      }
+      val traces = evs.groupBy(_.traceIdx.get).toSeq.map { case (t, es) =>
+        XesTrace(file, t, t, None, es.size.toLong, Nil)
+      }
+      val meta = XesMeta(file, Map("xes.version" -> "1.0"), bookExtensions,
+        Nil, Nil, Nil)
+      file -> XesWriter.render(ParsedLog(meta, traces, evs))
+    }
   }
 
   /** Writes a DataFrame as ONE plain parquet file (not a directory) so

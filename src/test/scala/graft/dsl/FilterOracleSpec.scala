@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Sequence-string oracles ported verbatim from the reference filter
   * tests (SURVEY.md §5 technique 5): surviving events rendered as
@@ -20,8 +20,8 @@ import graft.xes.XesReader
   */
 class FilterOracleSpec extends SparkSpec {
 
-  val book = "/root/reference/static/xes/book"
-  val full = "/root/reference/static/xes/test/extension_full.xes"
+  val book = XesCorpus.book
+  def full = XesCorpus.reference("xes/test/extension_full.xes")
 
   /** Token string per surviving trace, in trace order: "[tok tok…]…".
     * `tokenCol` is evaluated per event; traces with no surviving
@@ -78,7 +78,7 @@ class FilterOracleSpec extends SparkSpec {
       Seq(Concept.filterMatch("Case2\\.\\d", "caseId"),
         Concept.filterMatch("Case3\\.\\d", "caseId")))
     expected.foreach { case (f, want) =>
-      val (traces, events) = log(s"$book/$f")
+      val (traces, events) = log(s"${XesCorpus.reference("xes/book")}/$f")
       val kept = traces.filter(cnf)
       val cascaded = events.join(broadcast(kept.select("traceIdx")), Seq("traceIdx"), "left_semi")
       assert(render(kept, cascaded, col("activity")) == want, s"$f")

@@ -1,7 +1,7 @@
 package graft.dsl
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Working-together org mining on the one multi-resource corpus file
   * (`/root/reference/static/xes/test/extension_full.xes`): six traces
@@ -18,7 +18,7 @@ class OrgMiningSpec extends SparkSpec {
 
   test("workingTogether on extension_full: within-trace pairs only, one trace each") {
     val ev = XesReader.readEvents(spark,
-      "/root/reference/static/xes/test/extension_full.xes").toDF()
+      XesCorpus.reference("xes/test/extension_full.xes")).toDF()
     val wt = Org.workingTogether(ev, "traceIdx", "resource")
       .as[(String, String, Long)].collect().toSeq
 
@@ -54,7 +54,7 @@ class OrgMiningSpec extends SparkSpec {
     // unique to it, so no two profiles share a task — the sparse
     // inverted-index formulation must emit nothing (not zeros).
     val ev = XesReader.readEvents(spark,
-      "/root/reference/static/xes/test/extension_full.xes").toDF()
+      XesCorpus.reference("xes/test/extension_full.xes")).toDF()
     val st = Org.similarTask(ev, "resource", "activity")
       .as[(String, String, Double)].collect()
     assert(st.isEmpty)
@@ -82,7 +82,7 @@ class OrgMiningSpec extends SparkSpec {
     // within two steps in this corpus shape — guard against phantom
     // pairs from cross-case leakage (window partitioned by trace)
     val ev = XesReader.readEvents(spark,
-      "/root/reference/static/xes/test/extension_full.xes").toDF()
+      XesCorpus.reference("xes/test/extension_full.xes")).toDF()
     val out = Org.subcontracting(ev, "traceIdx", "resource",
       "tsMicros", "seq").collect()
     assert(out.isEmpty)

@@ -3,7 +3,7 @@ package graft.flow
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.xes.XesParser
+import graft.xes.{XesCorpus, XesParser}
 
 /** End-to-end flow execution mirroring the reference's doc-test
   * pipeline (`/root/reference/src/stream/flow/mod.rs:3-64`):
@@ -17,13 +17,15 @@ import graft.xes.XesParser
   */
 class FlowRunnerSpec extends SparkSpec {
 
+  private val book = XesCorpus.book
+
   def spec(tmp: String): String =
     s"""{
        |  "pipes": [
        |    {
        |      "name": "Train",
        |      "source": {"name": "XesReader", "attributes":
-       |        {"path": {"String": "/root/reference/static/xes/book/bigger-example.xes"}}},
+       |        {"path": {"String": "$book/bigger-example.xes"}}},
        |      "streams": [
        |        {"name": "Repair"},
        |        {"name": "Validator"},
@@ -85,9 +87,9 @@ class FlowRunnerSpec extends SparkSpec {
     // /tmp sinks anchored for the test environment — structure,
     // segments, channels, and the indent attribute untouched
     val yml = new String(Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/static/flow/flow.yml")))
+        java.nio.file.Paths.get(XesCorpus.reference("flow/flow.yml"))))
       .replace("static/xes/book/bigger-example.xes",
-        "/root/reference/static/xes/book/bigger-example.xes")
+        s"$book/bigger-example.xes")
       .replace("/tmp/train.xes", s"$tmp/train.xes")
       .replace("/tmp/test.xes", s"$tmp/test.xes")
     val result = FlowRunner.runYaml(spark, yml)
@@ -110,7 +112,7 @@ class FlowRunnerSpec extends SparkSpec {
     // sequential runner pipe A would wait out the full timeout with
     // pipe B never started; under the threaded runner both arrive at
     // the latch immediately and the flow completes.
-    val l1 = "/root/reference/static/xes/book/L1.xes"
+    val l1 = s"$book/L1.xes"
     val two =
       s"""{
          |  "pipes": [
@@ -146,11 +148,11 @@ class FlowRunnerSpec extends SparkSpec {
          |  "pipes": [
          |    {"name": "OK",
          |     "source": {"name": "XesReader", "attributes":
-         |       {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+         |       {"path": {"String": "$book/L1.xes"}}},
          |     "streams": [{"name": "Statistics", "artifact_sender": ["ok_stats"]}]},
          |    {"name": "BAD",
          |     "source": {"name": "XesReader", "attributes":
-         |       {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+         |       {"path": {"String": "$book/L1.xes"}}},
          |     "streams": [{"name": "NoSuchSegment"}]}
          |  ]
          |}""".stripMargin
@@ -160,13 +162,13 @@ class FlowRunnerSpec extends SparkSpec {
 
   test("Duplicator fan-out: copy channel sees the identical stream (duplicator.rs:12-92)") {
     val flow =
-      """pipes:
+      s"""pipes:
         |  - name: Main
         |    source:
         |      name: XesReader
         |      attributes:
         |        path:
-        |          String: /root/reference/static/xes/book/L1.xes
+        |          String: $book/L1.xes
         |    streams:
         |      - name: Duplicator
         |        stream_sender:
@@ -203,15 +205,15 @@ class FlowRunnerSpec extends SparkSpec {
     // consumer pipe listed FIRST: it must wait for the producer pipe's
     // raw_stats artifact, not deadlock or run early
     val flow =
-      """{"pipes": [
+      s"""{"pipes": [
         |  {"name": "Consumer",
         |   "source": {"name": "XesReader", "attributes":
-        |     {"path": {"String": "/root/reference/static/xes/book/L2.xes"}}},
+        |     {"path": {"String": "$book/L2.xes"}}},
         |   "streams": [{"name": "Void", "artifact_receiver": ["stats_a"]},
         |               {"name": "Statistics", "artifact_sender": ["stats_b"]}]},
         |  {"name": "Producer",
         |   "source": {"name": "XesReader", "attributes":
-        |     {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+        |     {"path": {"String": "$book/L1.xes"}}},
         |   "streams": [{"name": "Statistics", "artifact_sender": ["stats_a"]}]}
         |]}""".stripMargin
     val result = FlowRunner.runJson(spark, flow)
@@ -226,11 +228,11 @@ class FlowRunnerSpec extends SparkSpec {
       s"""{"pipes": [
          |  {"name": "P",
          |   "source": {"name": "XesReader", "attributes":
-         |     {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+         |     {"path": {"String": "$book/L1.xes"}}},
          |   "streams": [{"name": "Statistics", "artifact_sender": ["s1"]}]},
          |  {"name": "C",
          |   "source": {"name": "XesReader", "attributes":
-         |     {"path": {"String": "/root/reference/static/xes/book/L2.xes"}}},
+         |     {"path": {"String": "$book/L2.xes"}}},
          |   "streams": [{"name": "AssertStats", "artifact_receiver": ["s1"],
          |     "attributes": {"min_traces": {"Int": $minTraces}}}]}
          |]}""".stripMargin
@@ -241,9 +243,9 @@ class FlowRunnerSpec extends SparkSpec {
 
     // a receiver on a channel nobody produces is a detected deadlock
     val bad =
-      """{"pipes": [{"name": "P",
+      s"""{"pipes": [{"name": "P",
         |  "source": {"name": "XesReader", "attributes":
-        |    {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+        |    {"path": {"String": "$book/L1.xes"}}},
         |  "streams": [{"name": "Void", "artifact_receiver": ["ghost"]}]}]}""".stripMargin
     val e = intercept[IllegalStateException](FlowRunner.runJson(spark, bad))
     assert(e.getMessage.contains("ghost"))
@@ -254,7 +256,7 @@ class FlowRunnerSpec extends SparkSpec {
     val flow =
       s"""{"pipes": [{"name": "W",
          |  "source": {"name": "XesReader", "attributes":
-         |    {"path": {"String": "/root/reference/static/xes/book/*.xes"}}},
+         |    {"path": {"String": "$book/*.xes"}}},
          |  "sink": {"name": "XesWriter", "attributes":
          |    {"path": {"String": "$tmp/out"}}}}]}""".stripMargin
     FlowRunner.runJson(spark, flow)
@@ -271,7 +273,7 @@ class FlowRunnerSpec extends SparkSpec {
     val flow =
       s"""{"pipes": [{"name": "I",
          |  "source": {"name": "XesReader", "attributes":
-         |    {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+         |    {"path": {"String": "$book/L1.xes"}}},
          |  "sink": {"name": "XesWriter", "attributes":
          |    {"path": {"String": "$tmp/flat.xes"}, "indent": {"Int": 0}}}}]}""".stripMargin
     FlowRunner.runJson(spark, flow)
@@ -283,9 +285,9 @@ class FlowRunnerSpec extends SparkSpec {
 
   test("Statistics segment runs one aggregation job over events, not three scans") {
     val flow =
-      """{"pipes": [{"name": "S",
+      s"""{"pipes": [{"name": "S",
         |  "source": {"name": "XesReader", "attributes":
-        |    {"path": {"String": "/root/reference/static/xes/book/L1.xes"}}},
+        |    {"path": {"String": "$book/L1.xes"}}},
         |  "streams": [{"name": "Statistics", "artifact_sender": ["s"]}]}]}""".stripMargin
     spark.sparkContext.setJobGroup("stats-flow", "job-count assertion", false)
     try FlowRunner.runJson(spark, flow)

@@ -2,6 +2,7 @@ package graft.flow
 
 import graft.SparkSpec
 import graft.ops.{Alpha, ProcessTree}
+import graft.xes.XesCorpus
 
 /** The reference's aspirational miner plugins (lib.rs:3-27 scenarios:
   * `Log | InductiveMiner`, `DFGGenerator | HeuristicMiner`,
@@ -12,7 +13,7 @@ import graft.ops.{Alpha, ProcessTree}
   */
 class MinerSegmentsSpec extends SparkSpec {
 
-  private val l1 = "/root/reference/static/xes/book/L1.xes"
+  private val l1 = s"${XesCorpus.book}/L1.xes"
 
   private def spec: String =
     s"""{

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Optimal alignments against the textbook L1 model
   * seq(a, xor(and(b,c), e), d) — costs are hand-derivable. */
@@ -16,7 +16,7 @@ class AlignmentsSpec extends SparkSpec {
   private val net = PetriNet.fromTree(l1Tree)
 
   private def bookEvents(name: String) =
-    XesReader.read(spark, s"/root/reference/static/xes/book/$name.xes").eventsDf
+    XesReader.read(spark, s"${XesCorpus.book}/$name.xes").eventsDf
 
   test("perfectly fitting traces align at cost 0 with all-sync moves") {
     Seq(Vector("a", "b", "c", "d"), Vector("a", "c", "b", "d"),

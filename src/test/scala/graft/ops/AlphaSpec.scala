@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Alpha miner against the textbook oracle: L1 is the worked example
   * of the process-mining book the corpus comes from; its discovered
@@ -9,7 +9,7 @@ import graft.xes.XesReader
 class AlphaSpec extends SparkSpec {
 
   test("alpha miner discovers the textbook net for L1") {
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     val net = Alpha.mine(events, "traceIdx", "activity", "ts", "seq")
 
@@ -26,7 +26,7 @@ class AlphaSpec extends SparkSpec {
   test("token replay: L1 fits its own alpha net perfectly; a corrupted trace does not") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     val net = Alpha.mine(events, "traceIdx", "activity", "ts", "seq")
 

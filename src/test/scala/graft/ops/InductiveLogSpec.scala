@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Full inductive miner (log splitting) — closed-form trees derived
   * by hand, the contrast with IMd on behavior only log splitting can
@@ -34,7 +34,7 @@ class InductiveLogSpec extends SparkSpec {
   import spark.implicits._
 
   private def bookEvents(name: String) =
-    XesReader.read(spark, s"/root/reference/static/xes/book/$name.xes").eventsDf
+    XesReader.read(spark, s"${XesCorpus.book}/$name.xes").eventsDf
 
   private def litLog(traces: Seq[Seq[String]]) =
     traces.zipWithIndex.flatMap { case (tr, ci) =>

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Inductive miner (IMd) against the textbook oracles: L1 and L2 are
   * the worked examples of the process-mining book the corpus comes
@@ -11,7 +11,7 @@ import graft.xes.XesReader
 class InductiveSpec extends SparkSpec {
 
   private def bookEvents(name: String) =
-    XesReader.read(spark, s"/root/reference/static/xes/book/$name.xes").eventsDf
+    XesReader.read(spark, s"${XesCorpus.book}/$name.xes").eventsDf
 
   private def variantsOf(name: String): Seq[Seq[String]] = {
     import org.apache.spark.sql.functions._

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** PNML round trip + WF-net export: nets mined here must serialize to
   * the ecosystem interchange format and come back semantically
@@ -29,7 +29,7 @@ class PnmlSpec extends SparkSpec {
   }
 
   test("alpha WF-net exports to PNML and the explicit net replays L1") {
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     val wf = Alpha.mine(events, "traceIdx", "activity", "ts", "seq")
     val net = PetriNet.fromWorkflowNet(wf)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Escaping-edges precision: hand-computed toy cases + the textbook
   * contrast (fitted model ≈ precise, flower model ≈ imprecise). */
@@ -11,7 +11,7 @@ class PrecisionSpec extends SparkSpec {
   import spark.implicits._
 
   private def bookEvents(name: String) =
-    XesReader.read(spark, s"/root/reference/static/xes/book/$name.xes").eventsDf
+    XesReader.read(spark, s"${XesCorpus.book}/$name.xes").eventsDf
 
   private def toyLog(variants: (Seq[String], Int)*) = {
     val rows = for {

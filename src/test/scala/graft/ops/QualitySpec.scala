@@ -1,13 +1,13 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Four-dimension quality report on the textbook log/model pairs. */
 class QualitySpec extends SparkSpec {
 
   private def l1 = XesReader.read(spark,
-    "/root/reference/static/xes/book/L1.xes").eventsDf
+    s"${XesCorpus.book}/L1.xes").eventsDf
 
   test("L1 vs its own alpha net: perfect fitness, high precision") {
     val net = Alpha.mine(l1, "traceIdx", "activity", "ts", "seq")
@@ -22,7 +22,7 @@ class QualitySpec extends SparkSpec {
 
   test("cross-log: L1's net scores worse on L2's behavior") {
     val l2 = XesReader.read(spark,
-      "/root/reference/static/xes/book/L2.xes").eventsDf
+      s"${XesCorpus.book}/L2.xes").eventsDf
     val net = Alpha.mine(l1, "traceIdx", "activity", "ts", "seq")
     val own = Quality.report(spark, l1, "traceIdx", "activity", "ts", "seq", net)
     val cross = Quality.report(spark, l2, "traceIdx", "activity", "ts", "seq", net)

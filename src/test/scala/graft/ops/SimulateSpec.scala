@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** Model playout: deterministic, model-conforming, and the
   * discover → simulate → re-discover loop closes on the textbook L1
@@ -13,7 +13,7 @@ class SimulateSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val l1Net: PetriNet = {
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     PetriNet.fromWorkflowNet(Alpha.mine(events, "traceIdx", "activity", "ts", "seq"))
   }

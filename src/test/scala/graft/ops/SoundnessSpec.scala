@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.xes.XesReader
+import graft.xes.{XesCorpus, XesReader}
 
 /** WF-net soundness checking: the textbook L1 net is sound; each
   * soundness violation is detected individually. */
@@ -10,7 +10,7 @@ class SoundnessSpec extends SparkSpec {
   private def t(id: String, l: String) = PetriNet.Transition(id, Some(l))
 
   test("alpha-mined L1 net is classically sound") {
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     val net = PetriNet.fromWorkflowNet(
       Alpha.mine(events, "traceIdx", "activity", "ts", "seq"))
@@ -19,7 +19,7 @@ class SoundnessSpec extends SparkSpec {
   }
 
   test("inductive-miner trees compile to sound nets") {
-    val events = XesReader.read(spark, "/root/reference/static/xes/book/L1.xes")
+    val events = XesReader.read(spark, s"${XesCorpus.book}/L1.xes")
       .eventsDf
     val tree = Inductive.mine(events, "traceIdx", "activity", "ts", "seq")
     val s = PetriNet.fromTree(tree).soundness()

@@ -67,7 +67,7 @@ class StreamingConformanceSpec extends SparkSpec {
   test("replay fitness works on alpha-mined nets in the same stream shape") {
     implicit val sqlCtx = spark.sqlContext
     val ev = graft.xes.XesReader.read(spark,
-      "/root/reference/static/xes/book/L1.xes").eventsDf
+      s"${graft.xes.XesCorpus.book}/L1.xes").eventsDf
     val wf = graft.ops.Alpha.mine(ev, "traceIdx", "activity", "ts", "seq")
 
     val input = MemoryStream[TraceAssembly.InEvent]
@@ -103,7 +103,7 @@ class StreamingConformanceSpec extends SparkSpec {
   test("compact replay state folds across >=3 watermark advances, tie group at a cut") {
     implicit val sqlCtx = spark.sqlContext
     val ev = graft.xes.XesReader.read(spark,
-      "/root/reference/static/xes/book/L1.xes").eventsDf
+      s"${graft.xes.XesCorpus.book}/L1.xes").eventsDf
     val wf = graft.ops.Alpha.mine(ev, "traceIdx", "activity", "ts", "seq")
 
     val input = MemoryStream[TraceAssembly.InEvent]

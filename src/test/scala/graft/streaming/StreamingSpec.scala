@@ -202,7 +202,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming XES source picks up files as they arrive") {
     val dir = java.nio.file.Files.createTempDirectory("xes_stream")
-    val book = java.nio.file.Paths.get("/root/reference/static/xes/book")
+    val book = java.nio.file.Paths.get(graft.xes.XesCorpus.book)
     java.nio.file.Files.copy(book.resolve("L1.xes"), dir.resolve("L1.xes"))
 
     val events = graft.xes.XesReader.readEventsStream(spark, dir.toString)

@@ -14,13 +14,11 @@ import XesModel._
   */
 class XesCorpusSpec extends AnyFunSuite {
 
-  val corpus = "/root/reference/static/xes"
-
   def parseFile(p: Path): ParsedLog =
     XesParser.parse(p.getFileName.toString, Files.readAllBytes(p))
 
   def filesIn(dir: String): Seq[Path] =
-    Files.list(Paths.get(corpus, dir)).iterator().asScala.toSeq
+    Files.list(Paths.get(dir)).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".xes")).sortBy(_.toString)
 
   test("book corpus count oracles") {
@@ -32,41 +30,41 @@ class XesCorpusSpec extends AnyFunSuite {
       "L5.xes" -> Seq(14L, 92L, 92L),
       "bigger-example.xes" -> Seq(1391L, 7539L, 7539L))
     expected.foreach { case (name, counts) =>
-      val log = parseFile(Paths.get(corpus, "book", name))
+      val log = parseFile(Paths.get(XesCorpus.book, name))
       assert(log.counts == counts, s"$name: got ${log.counts}")
     }
   }
 
   test("all book files parse") {
-    filesIn("book").foreach(parseFile)
+    filesIn(XesCorpus.book).foreach(parseFile)
   }
 
   test("correct files parse") {
-    filesIn("correct").foreach(parseFile)
+    filesIn(XesCorpus.reference("xes/correct")).foreach(parseFile)
   }
 
   test("recoverable files parse") {
-    filesIn("recoverable").foreach(parseFile)
+    filesIn(XesCorpus.reference("xes/recoverable")).foreach(parseFile)
   }
 
   test("non_validating files parse (validation failures come later)") {
-    filesIn("non_validating").foreach(parseFile)
+    filesIn(XesCorpus.reference("xes/non_validating")).foreach(parseFile)
   }
 
   test("non_parsing files all fail") {
-    filesIn("non_parsing").foreach { p =>
+    filesIn(XesCorpus.reference("xes/non_parsing")).foreach { p =>
       assertThrows[XesParseException](parseFile(p))
     }
   }
 
   test("extension_full fixture parses with typed columns populated") {
-    val log = parseFile(Paths.get(corpus, "test", "extension_full.xes"))
+    val log = parseFile(Paths.get(XesCorpus.reference("xes/test/extension_full.xes")))
     assert(log.events.nonEmpty)
     assert(log.events.forall(e => e.activity.isDefined))
   }
 
   test("trace event order and seq are preserved from file position") {
-    val log = parseFile(Paths.get(corpus, "book", "L1.xes"))
+    val log = parseFile(Paths.get(XesCorpus.book, "L1.xes"))
     val t0 = log.events.filter(_.traceIdx.contains(0L)).sortBy(_.seq)
     assert(t0.map(_.seq) == (0L until t0.size).toSeq)
     // L1 trace 0 (Case3.0) is the a-e-d sequence from the textbook.
@@ -74,7 +72,7 @@ class XesCorpusSpec extends AnyFunSuite {
   }
 
   test("timestamps preserve source offset") {
-    val log = parseFile(Paths.get(corpus, "book", "L1.xes"))
+    val log = parseFile(Paths.get(XesCorpus.book, "L1.xes"))
     val e = log.events.head
     assert(e.tzOffsetMin.contains(120)) // +02:00
   }

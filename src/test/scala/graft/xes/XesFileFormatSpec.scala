@@ -14,8 +14,7 @@ import XesParser.Keep
   */
 class XesFileFormatSpec extends SparkSpec {
 
-  private val corpus = "/root/reference/static/xes"
-  private val book = s"$corpus/book"
+  private val book = XesCorpus.book
 
   private def listXes(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".xes"))
@@ -63,7 +62,7 @@ class XesFileFormatSpec extends SparkSpec {
 
   test("pruned and full parse classify every corpus file identically") {
     for (dir <- Seq("correct", "recoverable", "non_parsing");
-         f <- listXes(s"$corpus/$dir")) {
+         f <- listXes(XesCorpus.reference(s"xes/$dir"))) {
       val bytes = Files.readAllBytes(Paths.get(f.getPath))
       val full = try { XesParser.parse(f.getName, bytes); None }
         catch { case e: XesModel.XesParseException => Some(e.message) }
@@ -76,7 +75,7 @@ class XesFileFormatSpec extends SparkSpec {
 
   test("tolerant option: non-parsing corpus yields zero rows, no failure") {
     val df = spark.read.format("xes").option("tolerant", "true")
-      .load(s"$corpus/non_parsing/*.xes")
+      .load(s"${XesCorpus.reference("xes/non_parsing")}/*.xes")
     assert(df.count() === 0L)
   }
 

@@ -13,16 +13,9 @@ class XesFixtureSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val fixtures = "/root/repo/fixtures"
+  import XesFixtureSpec.pinned
 
-  // (file, n_traces, n_events) pinned from the reference's stats tests
-  private val pinned = Map(
-    "L1.xes" -> ((6L, 23L)),
-    "L2.xes" -> ((13L, 80L)),
-    "L3.xes" -> ((4L, 39L)),
-    "L4.xes" -> ((147L, 441L)),
-    "L5.xes" -> ((14L, 92L)),
-    "bigger-example.xes" -> ((1391L, 7539L)))
+  private val fixtures = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
 
   test("event fixture matches reference-published per-file event counts") {
     val byFile = spark.read.parquet(s"$fixtures/xes_book_events.parquet")
@@ -44,7 +37,7 @@ class XesFixtureSpec extends SparkSpec {
   test("quarantine fixture covers the whole non_parsing corpus, one row per file") {
     val q = spark.read.parquet(s"$fixtures/xes_quarantine.parquet")
       .as[(String, String)].collect()
-    val corpusFiles = new java.io.File("/root/reference/static/xes/non_parsing")
+    val corpusFiles = new java.io.File(XesCorpus.reference("xes/non_parsing"))
       .listFiles().filter(_.getName.endsWith(".xes")).map(_.getName).toSet
     assert(q.map(_._1).toSet == corpusFiles)       // every file quarantined
     assert(q.forall(_._2.nonEmpty))                // with a real error message
@@ -77,7 +70,34 @@ class XesFixtureSpec extends SparkSpec {
     "lifecycle.xes" ->
       "9dede2b331bc23f8fa1a8c5ee0cd6986028a1a0b230dcd325826b8ce6c02c985",
     "xes_lifecycle_events.parquet" ->
-      "58bef13034f9f28e65b5e4ff20d579ee3bf4593e5dd9c4373fe0edd62825d72b")
+      "58bef13034f9f28e65b5e4ff20d579ee3bf4593e5dd9c4373fe0edd62825d72b",
+    // in-repo copy of the book logs: DumpXesFixtures.bookLogs output
+    "xes/book/L1.xes" ->
+      "38a1d16ba3cf8c9f0b97174bee1b7ce57d1543e3960456c714f1f17bbef9c9d5",
+    "xes/book/L10.xes" ->
+      "8f32940ffccfc3e8e95dbfcd91de13d999aefe09eeec920ae415307224774514",
+    "xes/book/L11.xes" ->
+      "d278612fe9cf5fb34a3250e65b37a1625fc94b8643773998536ab6610f19221a",
+    "xes/book/L12.xes" ->
+      "473242f4b04022a024f96c0e750c4a95ee288bf247e3a225d7bd061fe596a222",
+    "xes/book/L2.xes" ->
+      "61c359c226fc22804613bc50d712cde70959374797102f84e8f9f5295b9b19c4",
+    "xes/book/L3.xes" ->
+      "9cd3684402954536c12929bbca3747a7ec2c191e07382c9cc046f68ca84f9bab",
+    "xes/book/L4.xes" ->
+      "0cee93dfb60a735904820657ea3afea62f9afdf0557ae15056c7d7007b7e9e8e",
+    "xes/book/L5.xes" ->
+      "5c07f60e6c275f6502839843c1349ea7f9c6a6639d1b8070bf49f8887566c927",
+    "xes/book/L6.xes" ->
+      "d853710b2a9c559a3fa121430d63030caa98041777c4b51fb716b35a88e0529d",
+    "xes/book/L7.xes" ->
+      "9b08abbd8c5563e68cc1a5ea03c1e97c65655500e212043a65f78ee6715c17e2",
+    "xes/book/L8.xes" ->
+      "e73c777b98436e267c1f03eb4bdac4a61b8fac4ced33d142c6162753d5377334",
+    "xes/book/L9.xes" ->
+      "9e3ead182aa8d941737acbbd08289057cddef24e07fd931535b22df60a7ee208",
+    "xes/book/bigger-example.xes" ->
+      "26becfb1725a74f1635bff4530b0196d74edde0b587ef7f888bebb237fa34731")
 
   test("fixture files match their reviewed content hashes") {
     pinnedSha256.foreach { case (name, expected) =>
@@ -139,10 +159,25 @@ class XesFixtureSpec extends SparkSpec {
   }
 
   test("fixture equals a fresh distributed parse (reader ↔ fixture round trip)") {
+    // q_xes_read_events reads the reference's book/; on the in-repo copy
+    // this would compare the fixture with a copy made from itself
+    XesCorpus.reference("xes/book")
     val fresh = graft.queries.XesQueries.queries("q_xes_read_events")(spark, "")
     val fixture = spark.read.parquet(s"$fixtures/xes_book_events.parquet")
     assert(fresh.count() == fixture.count())
     assert(fresh.exceptAll(fixture).count() == 0L)
     assert(fixture.exceptAll(fresh).count() == 0L)
   }
+}
+
+object XesFixtureSpec {
+
+  /** (file, n_traces, n_events) pinned from the reference's stats tests. */
+  val pinned: Map[String, (Long, Long)] = Map(
+    "L1.xes" -> ((6L, 23L)),
+    "L2.xes" -> ((13L, 80L)),
+    "L3.xes" -> ((4L, 39L)),
+    "L4.xes" -> ((147L, 441L)),
+    "L5.xes" -> ((14L, 92L)),
+    "bigger-example.xes" -> ((1391L, 7539L)))
 }

@@ -9,11 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * read preserves semantics; successive writes are byte-identical. */
 class XesRoundTripSpec extends AnyFunSuite {
 
-  val corpus = "/root/reference/static/xes"
-
   def parseableFiles: Seq[java.nio.file.Path] =
-    Seq("book", "correct", "recoverable", "non_validating").flatMap { d =>
-      Files.list(Paths.get(corpus, d)).iterator().asScala.toSeq
+    (XesCorpus.book +: Seq("correct", "recoverable", "non_validating")
+        .map(d => XesCorpus.reference(s"xes/$d"))).flatMap { d =>
+      Files.list(Paths.get(d)).iterator().asScala.toSeq
         .filter(_.toString.endsWith(".xes"))
     }.sortBy(_.toString)
 
@@ -37,7 +36,7 @@ class XesRoundTripSpec extends AnyFunSuite {
   }
 
   test("typed event columns survive the round trip") {
-    val p = Paths.get(corpus, "book", "L1.xes")
+    val p = Paths.get(XesCorpus.book, "L1.xes")
     val log1 = XesParser.parse("L1.xes", Files.readAllBytes(p))
     val log2 = XesParser.parseString("L1.xes", XesWriter.render(log1))
     assert(log2.events.map(_.activity) == log1.events.map(_.activity))

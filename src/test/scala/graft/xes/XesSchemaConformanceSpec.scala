@@ -13,13 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class XesSchemaConformanceSpec extends AnyFunSuite {
 
-  val corpus = "/root/reference/static/xes"
-  val xsd = s"$corpus/xes-ieee-1849-2016.xsd"
-
   test("serialized output validates against the IEEE XSD (xmllint)") {
     assume(("which xmllint" #> new java.io.File("/dev/null")).! == 0)
+    val xsd = XesCorpus.reference("xes/xes-ieee-1849-2016.xsd")
     val tmp = Files.createTempDirectory("xsd")
-    val files = Files.list(Paths.get(corpus, "correct")).iterator().asScala
+    val files = Files.list(Paths.get(XesCorpus.reference("xes/correct"))).iterator().asScala
       .filter(_.toString.endsWith(".xes")).toSeq.sortBy(_.toString)
     files.foreach { p =>
       val name = p.getFileName.toString

@@ -9,7 +9,7 @@ import graft.ops.LogStats
   * typed Datasets → DataFrame ops, against the reference corpus. */
 class XesSparkSpec extends SparkSpec {
 
-  val book = "/root/reference/static/xes/book"
+  val book = XesCorpus.book
 
   test("Spark read of L1 matches the count oracle [6,23,23]") {
     val xlog = XesReader.read(spark, s"$book/L1.xes")
@@ -46,7 +46,7 @@ class XesSparkSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$book/L1.xes"), tmp.resolve("L1.xes"))
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/static/xes/non_parsing/broken_xml.xes"),
+      java.nio.file.Paths.get(XesCorpus.reference("xes/non_parsing/broken_xml.xes")),
       tmp.resolve("broken_xml.xes"))
     val (events, quarantine) = XesReader.readEventsTolerant(spark, s"$tmp/*.xes")
     assert(events.count() == 23L) // L1 only

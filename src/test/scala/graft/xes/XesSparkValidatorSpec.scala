@@ -7,8 +7,7 @@ import graft.SparkSpec
 /** Distributed validator over the corpus through the Spark read path. */
 class XesSparkValidatorSpec extends SparkSpec {
 
-  val nv = "/root/reference/static/xes/non_validating"
-  val book = "/root/reference/static/xes/book"
+  def nv = XesCorpus.reference("xes/non_validating")
 
   def violationsFor(path: String) = {
     val xlog = XesReader.read(spark, path)
@@ -34,7 +33,7 @@ class XesSparkValidatorSpec extends SparkSpec {
   }
 
   test("book logs produce no data-plane violations (whole dir, one plan)") {
-    val v = violationsFor(s"$book/*.xes")
+    val v = violationsFor(s"${XesCorpus.reference("xes/book")}/*.xes")
     assert(v.count() == 0L)
   }
 }

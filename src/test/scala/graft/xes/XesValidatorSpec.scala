@@ -9,13 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * (SURVEY.md §5 table; xes.rs:911-916, validator.rs:125-149). */
 class XesValidatorSpec extends AnyFunSuite {
 
-  val corpus = "/root/reference/static/xes"
-
   def parse(p: Path): XesModel.ParsedLog =
     XesParser.parse(p.getFileName.toString, Files.readAllBytes(p))
 
   def filesIn(dir: String): Seq[Path] =
-    Files.list(Paths.get(corpus, dir)).iterator().asScala.toSeq
+    Files.list(Paths.get(XesCorpus.reference(s"xes/$dir"))).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".xes")).sortBy(_.toString)
 
   /** The two feature-declaration cases the reference Validator also
@@ -46,7 +44,7 @@ class XesValidatorSpec extends AnyFunSuite {
 
   test("extension_full validates") {
     assert(XesValidator.validate(
-      parse(Paths.get(corpus, "test", "extension_full.xes"))).isEmpty)
+      parse(Paths.get(XesCorpus.reference("xes/test/extension_full.xes")))).isEmpty)
   }
 
   test("non_validating files are rejected (except documented feature-flag cases)") {
@@ -60,12 +58,12 @@ class XesValidatorSpec extends AnyFunSuite {
 
   test("globals violation error text names the missing key (validator.rs:134-147)") {
     val v = XesValidator.validate(
-      parse(Paths.get(corpus, "non_validating", "globals_violation_type.xes")))
+      parse(Paths.get(XesCorpus.reference("xes/non_validating/globals_violation_type.xes"))))
     assert(v.exists(_.contains("lifecycle:transition")))
   }
 
   test("repair fixes invalid classifier names (repair.rs:69-83)") {
-    val log = parse(Paths.get(corpus, "non_validating", "classifier_incorrect_names.xes"))
+    val log = parse(Paths.get(XesCorpus.reference("xes/non_validating/classifier_incorrect_names.xes")))
     assert(XesValidator.validate(log).nonEmpty)
     val repaired = XesValidator.repair(log)
     assert(XesValidator.validate(repaired).isEmpty)
