@@ -23,24 +23,26 @@ import graft.xes.XesWriter
   * corpus statistics (`/root/reference/src/stream/stats.rs:178-186`),
   * and XesFixtureSpec asserts fixture ↔ spec-count agreement.
   *
-  * The last step rewrites `xes/book/`, the in-repo copy of the book
-  * logs, from the event fixture alone ([[bookLogs]]); with
-  * `--book-only` it runs just that step, which needs no reference
-  * checkout.
+  * The parquet oracles are parsed from the reference checkout and are
+  * left as they are where it is absent. The last step always rewrites
+  * `xes/book/`, the in-repo copy of the book logs, from the event
+  * fixture alone ([[bookLogs]]).
   *
   * Run after any intentional parser behavior change:
-  * `sbt "runMain graft.tools.DumpXesFixtures [outDir] [--book-only]"`
+  * `sbt "runMain graft.tools.DumpXesFixtures [outDir]"`
   * (`outDir` defaults to `fixtures/` under the working directory).
   */
 object DumpXesFixtures {
 
+  /** The reference checkout the XES queries parse. */
+  private val referenceStatic = Paths.get("/root/reference/static")
+
   def main(args: Array[String]): Unit = {
-    val bookOnly = args.contains("--book-only")
-    val out = args.filterNot(_ == "--book-only").headOption
-      .getOrElse(Paths.get("fixtures").toAbsolutePath.toString)
+    val out = args.headOption.getOrElse(Paths.get("fixtures").toAbsolutePath.toString)
     val spark = GraftSession.get("8")
     new File(out).mkdirs()
-    if (!bookOnly) writeOracles(spark, out)
+    if (Files.isDirectory(referenceStatic)) writeOracles(spark, out)
+    else println(s"$referenceStatic is absent: parquet oracles left as they are")
     val bookDir = Paths.get(out, "xes", "book")
     Files.createDirectories(bookDir)
     bookLogs(spark.read.parquet(s"$out/xes_book_events.parquet")).foreach {

@@ -30,13 +30,13 @@ class XesCorpusSpec extends AnyFunSuite {
       "L5.xes" -> Seq(14L, 92L, 92L),
       "bigger-example.xes" -> Seq(1391L, 7539L, 7539L))
     expected.foreach { case (name, counts) =>
-      val log = parseFile(Paths.get(XesCorpus.book, name))
+      val log = parseFile(Paths.get(XesCorpus.reference("xes/book"), name))
       assert(log.counts == counts, s"$name: got ${log.counts}")
     }
   }
 
   test("all book files parse") {
-    filesIn(XesCorpus.book).foreach(parseFile)
+    filesIn(XesCorpus.reference("xes/book")).foreach(parseFile)
   }
 
   test("correct files parse") {

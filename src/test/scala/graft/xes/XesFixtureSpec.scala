@@ -13,9 +13,16 @@ class XesFixtureSpec extends SparkSpec {
 
   import spark.implicits._
 
-  import XesFixtureSpec.pinned
-
   private val fixtures = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
+
+  // (file, n_traces, n_events) pinned from the reference's stats tests
+  private val pinned = Map(
+    "L1.xes" -> ((6L, 23L)),
+    "L2.xes" -> ((13L, 80L)),
+    "L3.xes" -> ((4L, 39L)),
+    "L4.xes" -> ((147L, 441L)),
+    "L5.xes" -> ((14L, 92L)),
+    "bigger-example.xes" -> ((1391L, 7539L)))
 
   test("event fixture matches reference-published per-file event counts") {
     val byFile = spark.read.parquet(s"$fixtures/xes_book_events.parquet")
@@ -168,16 +175,4 @@ class XesFixtureSpec extends SparkSpec {
     assert(fresh.exceptAll(fixture).count() == 0L)
     assert(fixture.exceptAll(fresh).count() == 0L)
   }
-}
-
-object XesFixtureSpec {
-
-  /** (file, n_traces, n_events) pinned from the reference's stats tests. */
-  val pinned: Map[String, (Long, Long)] = Map(
-    "L1.xes" -> ((6L, 23L)),
-    "L2.xes" -> ((13L, 80L)),
-    "L3.xes" -> ((4L, 39L)),
-    "L4.xes" -> ((147L, 441L)),
-    "L5.xes" -> ((14L, 92L)),
-    "bigger-example.xes" -> ((1391L, 7539L)))
 }
