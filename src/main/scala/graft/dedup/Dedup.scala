@@ -382,23 +382,32 @@ object Dedup {
       // path for genuinely huge pair lists.
       val es = edges.as[(Long, Long)].collect()
       graft.ops.LocalCkpt.free(edges) // last read of the staged edges
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // union by MIN root ⇒ cluster id = component min
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-      nodes.map(n => (n, find(n))).toSeq.toDF("doc_id", "cluster_id")
+      minRootLabels(es).toSeq.toDF("doc_id", "cluster_id")
     } else starComponents(edges)._1
+  }
+
+  /** Driver union-find by MIN root over an edge list: `(node, label)`
+    * for every node on some edge, the label being its component's
+    * smallest id. Path compression keeps each find near-constant. The
+    * bounded driver path of [[clusters]] and
+    * [[graft.ops.TraceCluster.clusterVariants]]' whole-inventory tail. */
+  private[graft] def minRootLabels(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // union by MIN root ⇒ cluster id = component min
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    nodes.map(n => (n, find(n)))
   }
 
   /** Alternating large-star / small-star contraction over an edge

@@ -3,7 +3,7 @@ package graft.flow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Portable
+import graft.functions.NativeExpressions
 import graft.xes.{XesReader, XesValidator, XesWriter}
 import graft.xes.XesModel.XesMeta
 
@@ -242,15 +242,19 @@ object FlowRunner {
     * standalone events split independently (key = file#e&lt;seq&gt;) —
     * the reference's per-component split granularity (split.rs:65-72).
     * Meta goes to both branches (split.rs:59-64). */
-  private def traceBucket(seed: Long) =
-    graft.ops.Split.bucket(
-      Portable.charHash(concat_ws("#", col("file"), col("traceIdx"))), seed)
+  private[flow] def traceBucket(seed: Long) =
+    graft.ops.Split.bucket(NativeExpressions.charHash(traceKey, 7L), seed)
 
-  private def eventBucket(seed: Long) =
-    graft.ops.Split.bucket(
-      Portable.charHash(concat_ws("#", col("file"),
-        coalesce(col("traceIdx").cast("string"),
-          concat(lit("e"), col("seq"))))), seed)
+  private[flow] def eventBucket(seed: Long) =
+    graft.ops.Split.bucket(NativeExpressions.charHash(eventKey, 7L), seed)
+
+  /** The bucket keys: `file#traceIdx` for traces and their events,
+    * `file#e<seq>` for standalone events. The hash is the compiled
+    * code-point hash; it equals `Portable.charHash` on every nonempty
+    * string, and a key always holds the file name or an index. */
+  private[flow] val traceKey = concat_ws("#", col("file"), col("traceIdx"))
+  private[flow] val eventKey = concat_ws("#", col("file"),
+    coalesce(col("traceIdx").cast("string"), concat(lit("e"), col("seq"))))
 
   private def applySegment(spark: SparkSession, seg: Segment, segIndex: Int,
       in: XesReader.XLog, received: Map[String, Any],
@@ -289,12 +293,18 @@ object FlowRunner {
         in
 
       case "Statistics" =>
-        // one aggregation job over the events (total + in-trace counts
-        // partial-agg'd in the same pass) plus the cheap trace-table
-        // count — not three full scans of the data.
-        val row = in.events.toDF().agg(
-          count(lit(1)).as("total"), count(col("traceIdx")).as("inTraces")).head()
-        val stats = Statistics(in.traces.count(), row.getLong(1), row.getLong(0))
+        // ONE action: a single aggregation over the union of the trace
+        // rows and the event rows counts traces, in-trace events and
+        // all events in the same pass, instead of an events agg plus a
+        // separate traces count.
+        val row = in.traces.toDF()
+          .select(lit(true).as("_trace"), lit(null).cast("long").as("_case"))
+          .unionByName(in.events.toDF()
+            .select(lit(false).as("_trace"), col("traceIdx").as("_case")))
+          .agg(count(when(col("_trace"), 1)), count(col("_case")),
+            count(when(!col("_trace"), 1)))
+          .head()
+        val stats = Statistics(row.getLong(0), row.getLong(1), row.getLong(2))
         seg.artifactSender.foreach(ch => emitArtifacts(Map(ch -> stats)))
         in
 

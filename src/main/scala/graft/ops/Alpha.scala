@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Alpha miner (van der Aalst) — discovers a workflow net from the
   * directly-follows relations. The reference lists miners as its
@@ -9,12 +8,12 @@ import org.apache.spark.sql.functions._
   * implementation); the book corpus (L1…) is the textbook's worked
   * example for exactly this algorithm.
   *
-  * Scale shape: the heavy part (directly-follows pairs, start/end
-  * activities) is the distributed [[Dfg]] pass over the full log; the
-  * place search runs driver-side over the collected footprint, which
-  * is |activities|² — small by construction (an activity alphabet is
-  * human-scale even when the log is 100 TB). The subset search is
-  * capped by `maxActivities`.
+  * Scale shape: the heavy part (directly-follows pairs, alphabet,
+  * start/end activities) is ONE distributed action over the full log,
+  * [[Dfg.collectFootprint]]; the place search runs driver-side over
+  * the collected footprint, which is |activities|² — small by
+  * construction (an activity alphabet is human-scale even when the log
+  * is 100 TB). The subset search is capped by `maxActivities`.
   */
 object Alpha {
 
@@ -29,34 +28,13 @@ object Alpha {
   /** Runs the alpha algorithm. `events` as in [[Dfg.edges]]. */
   def mine(events: DataFrame, caseCol: String, activityCol: String,
       tsCol: String, tieBreak: String, maxActivities: Int = 20): WorkflowNet = {
-    // ONE collect for all four bounded footprint pieces (r17, the
-    // probeInventory fold): edges, alphabet, start and end activities
-    // ride a single tagged union — the four separate collects each
-    // paid a full job's scheduling latency, and the union's branches
-    // run as parallel stages of one job instead.
-    val nullS = lit(null).cast("string")
-    val edgesB = Dfg.edges(events, caseCol, activityCol, tsCol, tieBreak)
-      .select(lit(0).as("_k"), col("act_from").as("_a"), col("act_to").as("_b"))
-    val actsB = events.select(col(activityCol)).distinct()
-      .select(lit(1).as("_k"), col(activityCol).as("_a"), nullS.as("_b"))
-    val startsB = Dfg.startActivities(events, caseCol, activityCol, tsCol,
-        tieBreak)
-      .select(lit(2).as("_k"), col("activity").as("_a"), nullS.as("_b"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(caseCol)).orderBy(col(tsCol).desc, col(tieBreak).desc)
-    val endsB = events.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col(activityCol)).distinct()
-      .select(lit(3).as("_k"), col(activityCol).as("_a"), nullS.as("_b"))
-    val rows = edgesB.unionByName(actsB).unionByName(startsB)
-      .unionByName(endsB).collect()
-    val edges = rows.filter(_.getInt(0) == 0)
-      .map(r => (r.getString(1), r.getString(2))).toSet
-    val acts = rows.filter(_.getInt(0) == 1).map(_.getString(1)).toSet
+    val fp = Dfg.collectFootprint(events, caseCol, activityCol, tsCol, tieBreak)
+    val edges = fp.edges.keySet
+    val acts = fp.activities.keySet
     require(acts.size <= maxActivities,
       s"alpha miner subset search capped at $maxActivities activities (got ${acts.size})")
-    val starts = rows.filter(_.getInt(0) == 2).map(_.getString(1)).toSet
-    val ends = rows.filter(_.getInt(0) == 3).map(_.getString(1)).toSet
+    val starts = fp.starts.keySet
+    val ends = fp.ends.keySet
 
     def follows(a: String, b: String) = edges.contains((a, b))
     def causal(a: String, b: String) = follows(a, b) && !follows(b, a)

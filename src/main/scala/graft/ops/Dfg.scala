@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,6 +31,54 @@ object Dfg {
       .filter(col("act_to").isNotNull)
       .groupBy(col(activityCol).as("act_from"), col("act_to"))
       .agg(count(lit(1)).as("n"))
+  }
+
+  /** The collected abstraction the driver-side miners ([[Alpha]],
+    * [[Inductive]]) run on: activity frequencies, directly-follows
+    * edge counts, and start/end activity counts per case. */
+  case class Footprint(
+      activities: Map[String, Long],
+      edges: Map[(String, String), Long],
+      starts: Map[String, Long],
+      ends: Map[String, Long])
+
+  /** [[Footprint]] in one action: ONE window pass over
+    * (case, ts, tieBreak) computes each event's successor activity, a
+    * last-row flag (`lead(true)` is null) and a first-row flag; every
+    * event explodes into tagged `(kind, a, b)` rows — an edge to its
+    * successor, its activity, and its activity again as a start or end
+    * — which one partial-aggregated count reduces to the alphabet-sized
+    * result. Equals [[edges]], `distinct` over the activities,
+    * [[startActivities]] and [[endActivities]], which cost four
+    * actions. Where (ts, tieBreak) is not unique within a case the
+    * first and last events are arbitrary there too, and the two may
+    * resolve such ties differently.
+    */
+  def collectFootprint(events: DataFrame, caseCol: String,
+      activityCol: String, tsCol: String, tieBreak: String): Footprint = {
+    val w = Window.partitionBy(col(caseCol)).orderBy(col(tsCol), col(tieBreak))
+    val act = col(activityCol)
+    val none = lit(null).cast("string")
+    def tag(kind: Int, cond: Column, b: Column): Column =
+      when(cond, struct(lit(kind).as("k"), act.as("a"), b.as("b")))
+    val rows = events
+      .select(act, lead(act, 1).over(w).as("_next"),
+        lead(lit(true), 1).over(w).isNull.as("_last"),
+        lag(lit(true), 1).over(w).isNull.as("_first"))
+      .select(explode(array(
+        tag(0, col("_next").isNotNull, col("_next")),
+        tag(1, lit(true), none),
+        tag(2, col("_first"), none),
+        tag(3, col("_last"), none))).as("_t"))
+      .filter(col("_t").isNotNull)
+      .groupBy(col("_t.k"), col("_t.a"), col("_t.b"))
+      .agg(count(lit(1)))
+      .collect()
+    def of(kind: Int) = rows.iterator.filter(_.getInt(0) == kind)
+    def counts(kind: Int) = of(kind).map(r => r.getString(1) -> r.getLong(3)).toMap
+    Footprint(counts(1),
+      of(0).map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap,
+      counts(2), counts(3))
   }
 
   /** Footprint matrix (alpha-miner relations) derived from the DFG:

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import ProcessTree._
 
@@ -14,10 +13,11 @@ import ProcessTree._
   * [[Dfg.dependencyMeasures]] (heuristics measures).
   *
   * Scale shape — same split as [[Alpha]]: the single heavy pass is
-  * the distributed [[Dfg]] extraction over the full log (one case-key
-  * shuffle + pair partial-agg); the recursive cut search then runs
-  * driver-side over the collected graph, which is |activities|² —
-  * alphabet-sized no matter how many terabytes of events produced it.
+  * the distributed [[Dfg.collectFootprint]] over the full log (one
+  * case-key shuffle + partial-agg, one action); the recursive cut
+  * search then runs driver-side over the collected graph, which is
+  * |activities|² — alphabet-sized no matter how many terabytes of
+  * events produced it.
   *
   * Cut rules (tried in the standard order: base, ×, →, ∧, ⟲; flower
   * fallthrough):
@@ -46,19 +46,12 @@ object Inductive {
       starts: Set[String],
       ends: Set[String])
 
-  /** Distributed extraction: one [[Dfg]] pass, three small collects. */
+  /** Distributed extraction: the unweighted view of
+    * [[collectWeightedGraph]]. */
   def collectGraph(events: DataFrame, caseCol: String, activityCol: String,
       tsCol: String, tieBreak: String): Graph = {
-    val e = Dfg.edges(events, caseCol, activityCol, tsCol, tieBreak)
-      .select("act_from", "act_to").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val acts = events.select(col(activityCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val starts = Dfg.startActivities(events, caseCol, activityCol, tsCol, tieBreak)
-      .select("activity").collect().map(_.getString(0)).toSet
-    val ends = Dfg.endActivities(events, caseCol, activityCol, tsCol, tieBreak)
-      .select("activity").collect().map(_.getString(0)).toSet
-    Graph(acts, e, starts, ends)
+    val g = collectWeightedGraph(events, caseCol, activityCol, tsCol, tieBreak)
+    Graph(g.activities, g.edges.keySet, g.starts.keySet, g.ends.keySet)
   }
 
   def mine(events: DataFrame, caseCol: String, activityCol: String,
@@ -67,8 +60,8 @@ object Inductive {
 
   /** Weighted abstraction for the noise-filtered variant (IMf-d):
     * edge/start/end frequencies kept so infrequent behavior can be
-    * thresholded out before the cut search. Same distributed pass as
-    * [[collectGraph]]. */
+    * thresholded out before the cut search. One action:
+    * [[Dfg.collectFootprint]]. */
   case class WeightedGraph(
       activities: Set[String],
       edges: Map[(String, String), Long],
@@ -77,15 +70,8 @@ object Inductive {
 
   def collectWeightedGraph(events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String): WeightedGraph = {
-    val e = Dfg.edges(events, caseCol, activityCol, tsCol, tieBreak)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val acts = events.select(col(activityCol)).distinct()
-      .collect().map(_.getString(0)).toSet
-    val st = Dfg.startActivities(events, caseCol, activityCol, tsCol, tieBreak)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val en = Dfg.endActivities(events, caseCol, activityCol, tsCol, tieBreak)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    WeightedGraph(acts, e, st, en)
+    val fp = Dfg.collectFootprint(events, caseCol, activityCol, tsCol, tieBreak)
+    WeightedGraph(fp.activities.keySet, fp.edges, fp.starts, fp.ends)
   }
 
   /** The IMf relative-noise filter (Leemans et al., IMf family): drop

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.dedup.Dedup
 
@@ -23,6 +24,12 @@ import graft.dedup.Dedup
   * not. Components reuse [[Dedup.clusters]] (bounded driver
   * union-find below 2²² edges, distributed large-star/small-star
   * contraction above).
+  *
+  * Small inventories skip all of that: [[clusterVariants]]' one probe
+  * action already returns every variant when there are at most
+  * [[SampleN]] (1001) of them, and the edit pairs, components and
+  * labels then come from a driver-side sweep and union-find, with no
+  * further Spark job.
   */
 object TraceCluster {
 
@@ -98,52 +105,68 @@ object TraceCluster {
     // probe sample ride ONE eager action ([[probeInventory]], the r11
     // judge fold) — the natural path costs exactly one
     // plan-construction job.
-    probeInventory(variants) match {
-      case None => pairsOf(variants, maxDist) // empty inventory
-      case Some((afterGlobal, sample)) =>
-        dominantAffixes(sample) match {
-          case affixes if affixes.size >= 2 =>
-            multiGroupedPairs(afterGlobal, affixes, maxDist)
-          case _ =>
-            dominantAffix(sample) match {
-              case Some((affix, isSuffix)) =>
-                groupedPairs(afterGlobal, affix, isSuffix, maxDist)
-              case None => pairsOf(afterGlobal, maxDist)
-            }
-        }
-    }
+    pairsAfter(variants, probeInventory(variants), maxDist)
   }
 
+  /** [[editPairs]] on an inventory already probed by
+    * [[probeInventory]]: the defense chain picks the plan from the
+    * probe's sample. */
+  private def pairsAfter(variants: DataFrame, probe: Option[Probe],
+      maxDist: Int): DataFrame = probe match {
+    case None => pairsOf(variants, maxDist) // empty inventory
+    case Some(p) =>
+      dominantAffixes(p.sample) match {
+        case affixes if affixes.size >= 2 =>
+          multiGroupedPairs(p.stripped, affixes, maxDist)
+        case _ =>
+          dominantAffix(p.sample) match {
+            case Some((affix, isSuffix)) =>
+              groupedPairs(p.stripped, affix, isSuffix, maxDist)
+            case None => pairsOf(p.stripped, maxDist)
+          }
+      }
+  }
+
+  /** What [[probeInventory]] learns in its one action: the post-strip
+    * plan, the post-strip sample, and — when the inventory holds at
+    * most [[SampleN]] rows, so the sample IS the inventory — every raw
+    * `(variant, vid, n_cases)` row. */
+  private case class Probe(stripped: DataFrame, sample: Array[String],
+      whole: Option[Array[(String, Long, Long)]])
+
   /** The defense chain's ONE eager job: the global-strip agg
-    * (min/max/reverse-min/max/minlen) and the [[SampleN]]-row
-    * deterministic probe sample ride a single `collect()` as a
-    * two-branch union, replacing the r11 pair of jobs. The strip is
-    * applied to the sample DRIVER-side — the strip is the same
-    * bijective per-string trim the returned plan applies (every string
-    * carries the affix, so trimming is injective), hence probing
+    * (min/max/reverse-min/max/minlen and the row count) and the
+    * [[SampleN]]-row deterministic probe sample ride a single
+    * `collect()` as a two-branch union, replacing the r11 pair of jobs.
+    * The strip is applied to the sample DRIVER-side — the strip is the
+    * same bijective per-string trim the returned plan applies (every
+    * string carries the affix, so trimming is injective), hence probing
     * stripped sample strings equals sampling the stripped inventory,
     * up to the hash-order key being the raw instead of the stripped
     * string — a heuristic-only difference: any partition the probes
     * pick is sound ([[groupedPairs]]). Returns None on an empty
-    * inventory, else (post-strip plan, post-strip sample). Tiny
-    * inventories pay exactly this one small job: below [[SampleN]]
-    * rows the sample IS the inventory and no further probe work runs
-    * ([[MinSampleN]] floors the probes themselves). */
-  private def probeInventory(variants: DataFrame)
-      : Option[(DataFrame, Array[String])] = {
+    * inventory. Sample rows also carry `rep_case` and `n_cases`, so
+    * at most [[SampleN]] rows the probe holds the whole inventory
+    * ([[Probe.whole]]) and [[clusterVariants]] finishes on the driver;
+    * [[MinSampleN]] floors the family probes themselves. */
+  private def probeInventory(variants: DataFrame): Option[Probe] = {
     val vcol = col("variant")
     val nullS = lit(null).cast("string")
+    val nullL = lit(null).cast("long")
     val aggBranch = variants.agg(
         min(vcol).as("_s1"), max(vcol).as("_s2"),
         min(reverse(vcol)).as("_s3"), max(reverse(vcol)).as("_s4"),
-        min(length(vcol)).as("_ml"))
+        min(length(vcol)).as("_ml"), count(lit(1)).as("_n"))
       .select(lit(0).as("_kind"), col("_s1"), col("_s2"), col("_s3"),
-        col("_s4"), col("_ml"), nullS.as("_v"))
+        col("_s4"), col("_ml"), col("_n"), nullS.as("_v"),
+        nullL.as("_vid"), nullL.as("_cases"))
     val sampleBranch = variants
       .orderBy(xxhash64(vcol), vcol).limit(SampleN)
       .select(lit(1).as("_kind"), nullS.as("_s1"), nullS.as("_s2"),
         nullS.as("_s3"), nullS.as("_s4"),
-        lit(null).cast("int").as("_ml"), vcol.as("_v"))
+        lit(null).cast("int").as("_ml"), nullL.as("_n"), vcol.as("_v"),
+        col("rep_case").cast("long").as("_vid"),
+        col("n_cases").cast("long").as("_cases"))
     // 1 agg row + ≤ SampleN sample rows — bounded collect, one action
     val rows = aggBranch.unionByName(sampleBranch).collect()
     val agg = rows.find(_.getInt(0) == 0).get
@@ -151,12 +174,17 @@ object TraceCluster {
     val pre = lcpLen(agg.getString(1), agg.getString(2))
     val suf = math.max(0, math.min(
       lcpLen(agg.getString(3), agg.getString(4)), agg.getInt(5) - pre))
-    val rawSample = rows.filter(_.getInt(0) == 1).map(_.getString(6))
-    if (pre == 0 && suf == 0) Some((variants, rawSample))
-    else Some((
+    val sampled = rows.filter(_.getInt(0) == 1)
+    val rawSample = sampled.map(_.getString(7))
+    val whole =
+      if (agg.getLong(6) > SampleN ||
+          sampled.exists(r => r.isNullAt(8) || r.isNullAt(9))) None
+      else Some(sampled.map(r => (r.getString(7), r.getLong(8), r.getLong(9))))
+    if (pre == 0 && suf == 0) Some(Probe(variants, rawSample, whole))
+    else Some(Probe(
       variants.withColumn("variant",
         vcol.substr(lit(pre + 1), length(vcol) - (pre + suf))),
-      rawSample.map(stripStr(_, pre, suf))))
+      rawSample.map(stripStr(_, pre, suf)), whole))
   }
 
   /** Driver-side twin of the plan-level affix trim, in code points
@@ -629,8 +657,63 @@ object TraceCluster {
   /** 1-based position for `Column.substr`. */
   private def one(zeroBased: Column): Column = zeroBased + 1
 
+  /** All pairs within `maxDist` of a whole inventory held on the
+    * driver: `(vid_a, vid_b, dist)` with `vid_a < vid_b`, exactly
+    * [[editPairs]]' rows. A sweep over the length-sorted strings
+    * visits only partners within ±`maxDist` code points of length;
+    * the code-point histogram filter (one edit moves the multiset L1
+    * by at most 2) drops pairs with L1 > 2·`maxDist`; survivors run
+    * the same banded `levenshteinDistance(other, maxDist)` Spark's
+    * three-argument `levenshtein` calls. Raw strings are compared:
+    * Levenshtein is invariant under the common-affix strip. */
+  private[graft] def driverPairs(inventory: Seq[(String, Long)],
+      maxDist: Int): Array[(Long, Long, Int)] = {
+    final class V(val s: UTF8String, val vid: Long, val cps: Array[Int])
+    val vs = inventory.map { case (str, vid) =>
+      val cps = str.codePoints().toArray
+      java.util.Arrays.sort(cps)
+      new V(UTF8String.fromString(str), vid, cps)
+    }.sortBy(_.cps.length).toArray
+    // |x| + |y| − 2·|x ∩ y| over sorted code-point multisets
+    def histL1(x: Array[Int], y: Array[Int]): Int = {
+      var (i, j, common) = (0, 0, 0)
+      while (i < x.length && j < y.length) {
+        if (x(i) == y(j)) { common += 1; i += 1; j += 1 }
+        else if (x(i) < y(j)) i += 1
+        else j += 1
+      }
+      x.length + y.length - 2 * common
+    }
+    val out = Array.newBuilder[(Long, Long, Int)]
+    for (i <- vs.indices) {
+      val a = vs(i)
+      var j = i + 1
+      while (j < vs.length && vs(j).cps.length - a.cps.length <= maxDist) {
+        val b = vs(j)
+        if (histL1(a.cps, b.cps) <= 2 * maxDist) {
+          val dist = a.s.levenshteinDistance(b.s, maxDist)
+          if (dist >= 0)
+            out += ((math.min(a.vid, b.vid), math.max(a.vid, b.vid), dist))
+        }
+        j += 1
+      }
+    }
+    out.result()
+  }
+
   /** Full pipeline: `(variant, vid, cluster_id, n_cases)` — singleton
     * variants keep their own id as `cluster_id`.
+    *
+    * Scale shape: [[probeInventory]] runs once. When the inventory
+    * holds at most [[SampleN]] variants its sample already carries
+    * every `(variant, vid, n_cases)` row, so the tail runs on the
+    * driver — [[driverPairs]], then [[Dedup.minRootLabels]] (the
+    * union-find of [[Dedup.clusters]]' driver path) — and the labeled
+    * rows come back as a local frame: no edit-pair plan, no
+    * checkpoint, and no job at all when the caller collects. Larger
+    * inventories run the distributed [[editPairs]] pipeline on the
+    * same probe and [[Dedup.clusters]]. Both paths label each
+    * component by its smallest vid.
     */
   def clusterVariants(events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String,
@@ -642,13 +725,28 @@ object TraceCluster {
     // share one entry (variant tables are inventory-sized).
     val reps = Sessionize.variantRepresentatives(events, caseCol,
       activityCol, tsCol, tieBreak).cache()
-    val comp = Dedup.clusters(editPairs(reps, maxDist), "vid_a", "vid_b")
-      .select(col("doc_id").as("_vid"), col("cluster_id"))
-    reps
-      .withColumn("vid", col("rep_case").cast("long"))
-      .join(broadcast(comp), col("vid") === col("_vid"), "left")
-      .select(col("variant"), col("vid"),
-        coalesce(col("cluster_id"), col("vid")).as("cluster_id"),
-        col("n_cases"))
+    val probe = probeInventory(reps)
+    probe.flatMap(_.whole) match {
+      case Some(inventory) =>
+        reps.unpersist() // the probe was its only reader
+        val spark = reps.sparkSession
+        import spark.implicits._
+        val label = Dedup.minRootLabels(
+          driverPairs(inventory.map(r => (r._1, r._2)).toSeq, maxDist)
+            .map { case (a, b, _) => (a, b) }).toMap
+        inventory.toSeq.map { case (variant, vid, nCases) =>
+          (variant, vid, label.getOrElse(vid, vid), nCases)
+        }.toDF("variant", "vid", "cluster_id", "n_cases")
+      case None =>
+        val comp = Dedup.clusters(pairsAfter(reps, probe, maxDist),
+            "vid_a", "vid_b")
+          .select(col("doc_id").as("_vid"), col("cluster_id"))
+        reps
+          .withColumn("vid", col("rep_case").cast("long"))
+          .join(broadcast(comp), col("vid") === col("_vid"), "left")
+          .select(col("variant"), col("vid"),
+            coalesce(col("cluster_id"), col("vid")).as("cluster_id"),
+            col("n_cases"))
+    }
   }
 }

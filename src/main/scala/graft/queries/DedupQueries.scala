@@ -16,7 +16,7 @@ object DedupQueries {
 
   private val neardupRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.Fixtures.dir
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Bloom-filter membership against a reference snapshot (the

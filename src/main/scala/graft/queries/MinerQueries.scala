@@ -25,7 +25,7 @@ import graft.xes.XesReader
 object MinerQueries {
 
   private val book = "/root/reference/static/xes/book"
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.Fixtures.dir
 
   private def bookEvents(s: SparkSession, name: String) =
     XesReader.withTs(XesReader.readEvents(s, s"$book/$name.xes"))

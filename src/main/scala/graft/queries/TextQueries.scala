@@ -20,7 +20,7 @@ object TextQueries {
   // ingestion fixtures live with the repo (same convention as
   // XesQueries/DedupQueries); the Spark path and its DuckDB-oracle
   // twin must reference the same bytes
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.Fixtures.dir
 
   /** q_text_bm25 query terms: one rare marker + three common terms. */
   private[queries] val Bm25Terms = Seq("dup", "spark", "hash", "key")

@@ -24,7 +24,7 @@ import graft.xes.{XesReader, XesWriter}
 object XesQueries {
 
   private val book = "/root/reference/static/xes/book"
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.Fixtures.dir
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Distributed XES parse of the whole book corpus → flat event rows.

@@ -99,7 +99,7 @@ object DumpImageFixtures {
         (500L + k, "jpg", ImageIo.encodeJpeg(base(k), quality = 0.9f)))
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/root/repo/fixtures")
+    val out = args.headOption.getOrElse(graft.Fixtures.dir)
     val imgDir = new File(s"$out/images")
     imgDir.mkdirs()
     val rows = files

@@ -38,7 +38,7 @@ object DumpXesFixtures {
   private val referenceStatic = Paths.get("/root/reference/static")
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse(Paths.get("fixtures").toAbsolutePath.toString)
+    val out = args.headOption.getOrElse(graft.Fixtures.dir)
     val spark = GraftSession.get("8")
     new File(out).mkdirs()
     if (Files.isDirectory(referenceStatic)) writeOracles(spark, out)

@@ -288,24 +288,50 @@ class FlowRunnerSpec extends SparkSpec {
   }
 
   test("Statistics segment runs one aggregation job over events, not three scans") {
-    val flow =
+    def flow(streams: String) =
       s"""{"pipes": [{"name": "S",
         |  "source": {"name": "XesReader", "attributes":
         |    {"path": {"String": "$book/L1.xes"}}},
-        |  "streams": [{"name": "Statistics", "artifact_sender": ["s"]}]}]}""".stripMargin
-    spark.sparkContext.setJobGroup("stats-flow", "job-count assertion", false)
-    try FlowRunner.runJson(spark, flow)
-    finally spark.sparkContext.clearJobGroup()
-    // the status store is fed asynchronously — poll until stable
-    def count() = spark.sparkContext.statusTracker
-      .getJobIdsForGroup("stats-flow").length
-    var (n, prev) = (count(), -1)
-    while (n != prev) { Thread.sleep(300); prev = n; n = count() }
-    // three actions total — metas collect (1 job) + ONE events agg +
-    // traces count (≤2 jobs each under AQE) ⇒ ≤5; the old Statistics
-    // ran separate events.count + filtered count + traces.count
-    // actions ⇒ ≥7 jobs on the same flow
-    assert(n <= 5 && n > 0, s"expected 1..5 jobs, saw $n")
+        |  "streams": [$streams]}]}""".stripMargin
+    val stats = """{"name": "Statistics", "artifact_sender": ["s"]}"""
+    // ONE action: an aggregation over the union of traces and events.
+    // On a fresh parse cache each union branch's cache scan submits
+    // its own materialization job under AQE, then the count exchange
+    // and the result stage ⇒ ≤4 jobs; an events agg plus a separate
+    // traces count made 2 actions and ≤5 jobs, and separate
+    // events.count + filtered count + traces.count actions ≥7
+    var result: FlowRunner.FlowResult = null
+    val fresh = graft.JobProbe(spark) { result = FlowRunner.runJson(spark, flow(stats)) }
+    result.unpersist()
+    assert(fresh.actions == 1 && fresh.jobs <= 4, fresh)
+    // after a metas read (Validator) has materialized the cache: the
+    // metas collect (1 job) + the aggregation (≤2 jobs) ⇒ ≤3
+    val warm = graft.JobProbe(spark) {
+      result = FlowRunner.runJson(spark, flow(s"""{"name": "Validator"}, $stats"""))
+    }
+    result.unpersist()
+    assert(warm.actions == 2 && warm.jobs <= 3, warm)
+    assert(result.artifacts("s") == FlowRunner.Statistics(6L, 23L, 23L))
+  }
+
+  test("Sample/Split buckets: the compiled hash equals the portable one on ASCII, accented, CJK and supplementary-plane file names") {
+    import spark.implicits._
+    import graft.functions.{NativeExpressions, Portable}
+    val files = Seq("L1.xes", "café-Ñandú.xes", "日志文件.xes", "𝔘𝔫𝔦𝔠𝔬𝔡𝔢-😀.xes")
+    val df = (for (f <- files; t <- Seq(Some(0L), Some(17L), None); s <- Seq(0L, 3L))
+      yield (f, t, s)).toDF("file", "traceIdx", "seq")
+    val keys = Seq(FlowRunner.traceKey, FlowRunner.eventKey)
+    val hashes = df.select(keys.flatMap(k =>
+      Seq(NativeExpressions.charHash(k, 7L), Portable.charHash(k))): _*).collect()
+    assert(hashes.forall(r => r.getLong(0) == r.getLong(1) && r.getLong(2) == r.getLong(3)))
+    assert(hashes.map(_.getLong(2)).distinct.length ==
+      df.select(FlowRunner.eventKey).distinct().count())
+    Seq(7919L, 15838L).foreach { seed =>
+      val buckets = df.select(FlowRunner.traceBucket(seed), FlowRunner.eventBucket(seed),
+        graft.ops.Split.bucket(Portable.charHash(FlowRunner.traceKey), seed),
+        graft.ops.Split.bucket(Portable.charHash(FlowRunner.eventKey), seed)).collect()
+      assert(buckets.forall(r => r.get(0) == r.get(2) && r.get(1) == r.get(3)), seed)
+    }
   }
 
   test("describeSegments: complete registry table, reference declarations match") {

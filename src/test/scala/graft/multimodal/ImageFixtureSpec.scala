@@ -16,7 +16,7 @@ import graft.SparkSpec
   */
 class ImageFixtureSpec extends SparkSpec {
 
-  private val fixtures = "/root/repo/fixtures"
+  private val fixtures = graft.Fixtures.dir
 
   private def committedHashes: Map[Long, Long] = {
     import spark.implicits._

@@ -314,4 +314,66 @@ class TraceClusterSpec extends SparkSpec {
       "a>bb>c" -> ((5L, 1L, 1L)),
       "x>y>z>q" -> ((3L, 3L, 1L))))
   }
+
+  test("driver tail: pairs and labels equal editPairs + Dedup.clusters at d = 1, 2, 5") {
+    val serial = (0 until 300).map(i => f"ORD-$i%06d-X")
+    val universes: Seq[(String, Seq[String])] = Seq(
+      // lengths ≤ d take the pipeline's short-string bucket
+      "short" -> Seq("", "a", "b", "ab", "ba", "abc", "xy", "xyz12", "a>b", "b>a>c"),
+      // equal lengths, vids out of string order
+      "ties" -> Seq("abcd", "abce", "abde", "bbcd", "wxyz", "wxya", "axyz", "abcf"),
+      "non-BMP" -> Seq("a>\uD835\uDD18>c", "a>\uD835\uDD19>c", "a>b>c",
+        "\uD835\uDD18\uD835\uDD18", "\uD835\uDD18", "\uD83D\uDE00>b",
+        "\uD83D\uDE00>c", "b>c"),
+      "serial" -> serial)
+    for ((name, words) <- universes; d <- Seq(1, 2, 5)) {
+      val inv = words.zipWithIndex.map { case (w, i) => (w, (words.size - i) * 10L) }
+      val reps = inv.map(_.swap).toDF("rep_case", "variant").withColumn("n_cases", lit(1L))
+      val want = TraceCluster.editPairs(reps, d).as[(Long, Long, Int)].collect().toSet
+      val got = TraceCluster.driverPairs(inv, d).toSet
+      assert(got == want, s"$name d=$d")
+      val wantLabels = graft.dedup.Dedup.clusters(want.toSeq.toDF("vid_a", "vid_b", "dist"),
+        "vid_a", "vid_b").as[(Long, Long)].collect().toMap
+      val gotLabels = graft.dedup.Dedup.minRootLabels(got.toArray.map(p => (p._1, p._2))).toMap
+      assert(gotLabels == wantLabels, s"$name d=$d")
+      // and the brute-force oracle, so the equality is not vacuous:
+      // code points map one-to-one onto BMP chars for `lev`
+      val enc = words.flatMap(_.codePoints.toArray).distinct.zipWithIndex
+        .map { case (cp, i) => cp -> (0xE000 + i).toChar }.toMap
+      def bmp(w: String) = w.codePoints.toArray.map(enc).mkString
+      val brute = (for {
+        (a, va) <- inv; (b, vb) <- inv if va != vb
+        dist = lev(bmp(a), bmp(b)) if dist <= d
+      } yield (math.min(va, vb), math.max(va, vb), dist)).toSet
+      assert(got == brute, s"$name d=$d")
+    }
+  }
+
+  test("clusterVariants: at most SampleN variants run the probe and no edit-pair job") {
+    val c = graft.JobProbe(spark) {
+      val out = TraceCluster.clusterVariants(log, "case_id", "activity",
+        "ts", "event_id", maxDist = 2)
+      val collected = graft.JobProbe(spark)(out.collect())
+      assert(collected.jobs == 0, collected)
+    }
+    assert(c.actions == 1, c)
+  }
+
+  test("clusterVariants: a larger-than-SampleN inventory labels as the driver tail does") {
+    // 1,100 cases with distinct variants over a digit alphabet: many
+    // near pairs, above the probe's 1,001-row whole-inventory bound
+    val big = (0 until 1100).flatMap { c =>
+      f"${c * 7919 % 10007}%05d".map(_.toString).zipWithIndex.map { case (a, i) =>
+        (c.toLong, a, new Timestamp(i * 1000L), c * 100L + i)
+      }
+    }.toDF("case_id", "activity", "ts", "event_id")
+    val out = TraceCluster.clusterVariants(big, "case_id", "activity",
+      "ts", "event_id", maxDist = 1).as[(String, Long, Long, Long)].collect()
+    assert(out.length == 1100)
+    val label = graft.dedup.Dedup.minRootLabels(
+      TraceCluster.driverPairs(out.map(r => (r._1, r._2)).toSeq, 1)
+        .map(p => (p._1, p._2))).toMap
+    assert(out.forall(r => r._3 == label.getOrElse(r._2, r._2)))
+    assert(out.count(r => r._3 != r._2) > 100)
+  }
 }

@@ -13,7 +13,7 @@ class CsvFixtureSpec extends SparkSpec {
     .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
     .option("header", "true").option("multiLine", "true")
     .option("escape", "\"")
-    .csv("/root/repo/fixtures/docs_sample.csv")
+    .csv(graft.Fixtures.path("docs_sample.csv"))
 
   test("dialect landmines parse exactly") {
     assert(df.count() == 12L)

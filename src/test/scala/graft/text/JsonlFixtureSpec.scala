@@ -15,7 +15,7 @@ class JsonlFixtureSpec extends SparkSpec {
 
   private lazy val df = spark.read
     .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-    .json("/root/repo/fixtures/docs_sample.jsonl")
+    .json(graft.Fixtures.path("docs_sample.jsonl"))
 
   test("row count and the landmine rows parse exactly") {
     assert(df.count() == 20L)

@@ -18,7 +18,7 @@ object XesCorpus {
 
   /** The in-repo copy of the book logs, resolved against the project
     * directory. */
-  val inRepoBook: String = Paths.get("fixtures/xes/book").toAbsolutePath.toString
+  val inRepoBook: String = graft.Fixtures.path("xes/book")
 
   /** The reference's `xes/book` directory where it exists, else
     * [[inRepoBook]]. */

@@ -13,7 +13,7 @@ class XesFixtureSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private val fixtures = java.nio.file.Paths.get("fixtures").toAbsolutePath.toString
+  private val fixtures = graft.Fixtures.dir
 
   // (file, n_traces, n_events) pinned from the reference's stats tests
   private val pinned = Map(
