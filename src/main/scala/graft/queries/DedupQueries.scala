@@ -14,8 +14,6 @@ import graft.functions.Portable.{P, charHashSql}
   */
 object DedupQueries {
 
-  private val neardupRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private val fixtures = graft.Fixtures.dir
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -76,10 +74,8 @@ object DedupQueries {
     // uses. Collisions emit in Append mode at batch end; no sentinel
     // or timer firing is needed.
     "q_stream_neardup_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingNearDup
-      import org.apache.spark.sql.streaming.OutputMode
       val docs = Tables(s, dir, "documents")
         // +1: event time must be strictly past the initial watermark
         // (0), or doc_id 0's hits are dropped as late in batch one
@@ -92,19 +88,11 @@ object DedupQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingNearDup.BucketHit]
-      val name = s"stream_neardup_parity_${neardupRun.incrementAndGet()}"
-      val q = StreamingNearDup.collisions(s, hits, ttlSeconds = 600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name)
-        .select(col("docId").as("doc_id"), col("firstDocId").as("first_doc_id"),
-          col("band"), col("bucket"))
-      val rows = res.collect() // collision rows: bounded by bucket collisions
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_neardup_parity") {
+        StreamingNearDup.collisions(s, hits, ttlSeconds = 600L)
+      }() {
+        _.select(col("docId").as("doc_id"), col("firstDocId").as("first_doc_id"),
+          col("band"), col("bucket")) // bounded by bucket collisions
       }
       }
     },
@@ -161,9 +149,7 @@ object DedupQueries {
     // q_dedup_distinct_sketch's oracle VERBATIM — digest, n_zero,
     // s_sum, raw_est all hash-exact.
     "q_stream_distinct_sketch_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.functions.NativeExpressions
       import graft.streaming.StreamingSketches
       val Ignore = "zz_ignore" // not a lang value; sentinel routing key
@@ -184,36 +170,24 @@ object DedupQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.HItem]
-      val name = s"stream_hll_parity_${neardupRun.incrementAndGet()}"
-      val q = StreamingSketches.hllRegisters(s, items, m = 64,
+      ParityGate.collect(s, "q_stream_distinct_sketch_parity") {
+        StreamingSketches.hllRegisters(s, items, m = 64,
           budgetBits = 24, gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, "",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: |langs| rows × 64 ints; same downstream algebra as
-      // the batch gate, over the flushed registers
-      val res = s.table(name)
-        .select(col("group").as("lang"), col("regs").as("_regs"))
-        .select(col("lang"),
-          NativeExpressions.foldHash(
-            expr("transform(_regs, r -> CAST(r AS BIGINT))"), 0L)
-            .as("reg_digest"),
-          expr("CAST(size(filter(_regs, r -> r = 0)) AS BIGINT)")
-            .as("n_zero"),
-          expr("aggregate(_regs, CAST(0.0 AS DOUBLE), " +
-            "(s, r) -> s + 1.0 / CAST(shiftleft(CAST(1 AS BIGINT), r) AS DOUBLE))")
-            .as("s_sum"))
-        .withColumn("raw_est", lit(0.709) * lit(4096.0) / col("s_sum"))
-      val rows = res.collect()
-      val schema = res.schema
-      s.catalog.dropTempView(name)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      }(() => ParityFeed.sentinel(s, feed, Ignore, "",
+          maxTs + 2L * 86400L * 1000000L)) {
+        // bounded: |langs| rows × 64 ints; same downstream algebra as
+        // the batch gate, over the flushed registers
+        _.select(col("group").as("lang"), col("regs").as("_regs"))
+          .select(col("lang"),
+            NativeExpressions.foldHash(
+              expr("transform(_regs, r -> CAST(r AS BIGINT))"), 0L)
+              .as("reg_digest"),
+            expr("CAST(size(filter(_regs, r -> r = 0)) AS BIGINT)")
+              .as("n_zero"),
+            expr("aggregate(_regs, CAST(0.0 AS DOUBLE), " +
+              "(s, r) -> s + 1.0 / CAST(shiftleft(CAST(1 AS BIGINT), r) AS DOUBLE))")
+              .as("s_sum"))
+          .withColumn("raw_est", lit(0.709) * lit(4096.0) / col("s_sum"))
       }
       }
     },
@@ -232,9 +206,7 @@ object DedupQueries {
     // the ingest ledger maintained online as documents arrive, probed
     // in batch whenever a new snapshot must be diffed against it.
     "q_stream_bloom_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.dedup.Bloom
       import graft.streaming.StreamingSketches
       val Ignore = "zz_ignore" // not a lang value; sentinel routing key
@@ -255,25 +227,15 @@ object DedupQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.BItem]
-      val name = s"stream_bloom_parity_${neardupRun.incrementAndGet()}"
-      val q = StreamingSketches.bloomWords(s, items, gapSeconds = 3600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, "",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // the flushed table IS the filter (≤ 2048 rows); the probe is
-      // the batch kernel over it, broadcast exactly as in q_dedup_bloom
-      val words = s.table(name).select(col("word"), col("bits"))
-      val res = Bloom.probe(Tables(s, dir, "documents"), "doc_id", key, words)
-      val rows = res.collect() // one row per doc, the gate's own output
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_bloom_parity") {
+        StreamingSketches.bloomWords(s, items, gapSeconds = 3600L)
+      }(() => ParityFeed.sentinel(s, feed, Ignore, "",
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // the flushed table IS the filter (≤ 2048 rows); the probe is
+        // the batch kernel over it, broadcast exactly as in
+        // q_dedup_bloom (one row per doc, the gate's own output)
+        Bloom.probe(Tables(s, dir, "documents"), "doc_id", key,
+          sink.select(col("word"), col("bits")))
       }
       }
     },

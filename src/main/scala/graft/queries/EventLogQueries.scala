@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,9 +22,6 @@ import graft.ops.{Decision, Declare, Dfg, Drift, Features, Heuristics,
   * miners (§2.4, lib.rs:11-22).
   */
 object EventLogQueries {
-
-  private val sessRun = new AtomicInteger(0)
-  private val hopRun = new AtomicInteger(0)
 
   /** r18 (judge item 1, the streaming-gate floor): ONE shared staged
     * superset feed for every events-table parity gate — previously 13
@@ -199,45 +194,30 @@ object EventLogQueries {
   private def streamAsOfGate(s: SparkSession, dir: String, tag: String)(
       op: (SparkSession, Dataset[graft.streaming.StreamingAsOf.AItem]) => DataFrame)
       : DataFrame = {
-    ParityFeed.withStreamParallelism(s, 8) {
-      import s.implicits._
-      import graft.streaming.StreamingAsOf
-      // r18: shared superset feed. The click/purchase filter moved
-      // into the fold's existing foreign-kind drop (its `case _ =>`
-      // branch is watermark-only), and every far-future row — own
-      // canonical sentinels and stale foreign ones alike — remaps to
-      // the "__sentinel__" kind the fold already absorbs.
-      withEventsFeed(s, dir) { (feed, maxTs) =>
-        eventsSentinel(s, feed, maxTs + FlushS1)
-        val items = ParityFeed.stream(s, feed)
-          .select(col("user_id").as("userId"),
-            when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
-              .otherwise(col("event_type")).as("kind"),
-            col("event_id").as("eventId"), col("tsMicros"))
-          // restore the staged feed's old click/purchase selectivity
-          // (the fold only reads those kinds): the filter KEEPS the
-          // remapped "__sentinel__" rows, so even pushed below the
-          // watermark node it never starves watermark advancement
-          .filter(col("kind").isin("click", "purchase", "__sentinel__"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingAsOf.AItem]
-        val name = s"stream_asof_${tag}_${sessRun.incrementAndGet()}"
-        val q = op(s, items)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          q.processAllAvailable()
-          eventsSentinel(s, feed, maxTs + FlushS2)
-          q.processAllAvailable()
-        } finally q.stop()
-        graft.streaming.LateDrops.assertNone(q, name)
-        val res = s.table(name)
-        val rows = res.collect()
-        val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-        s.catalog.dropTempView(name)
-        out
-      }
+    import s.implicits._
+    import graft.streaming.StreamingAsOf
+    // r18: shared superset feed. The click/purchase filter moved
+    // into the fold's existing foreign-kind drop (its `case _ =>`
+    // branch is watermark-only), and every far-future row — own
+    // canonical sentinels and stale foreign ones alike — remaps to
+    // the "__sentinel__" kind the fold already absorbs.
+    withEventsFeed(s, dir) { (feed, maxTs) =>
+      eventsSentinel(s, feed, maxTs + FlushS1)
+      val items = ParityFeed.stream(s, feed)
+        .select(col("user_id").as("userId"),
+          when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
+            .otherwise(col("event_type")).as("kind"),
+          col("event_id").as("eventId"), col("tsMicros"))
+        // restore the staged feed's old click/purchase selectivity
+        // (the fold only reads those kinds): the filter KEEPS the
+        // remapped "__sentinel__" rows, so even pushed below the
+        // watermark node it never starves watermark advancement
+        .filter(col("kind").isin("click", "purchase", "__sentinel__"))
+        .withColumn("ts", timestamp_micros(col("tsMicros")))
+        .withWatermark("ts", "10 seconds")
+        .as[StreamingAsOf.AItem]
+      ParityGate.collect(s, tag)(op(s, items))(
+        () => eventsSentinel(s, feed, maxTs + FlushS2))(identity)
     }
   }
 
@@ -383,7 +363,6 @@ object EventLogQueries {
     // every real window by two far-future sentinel events (filtered
     // below). Hash-compared against the batch oracle arithmetic.
     "q_stream_hopping_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       // r18: shared superset feed; far-future rows remap to the
       // "__sentinel__" type the result fold already filters
       withEventsFeed(s, dir) { (feed, maxTs) =>
@@ -393,24 +372,12 @@ object EventLogQueries {
           .otherwise(col("event_type")).as("event_type"), col("tsMicros"))
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
-      val name = s"stream_hop_parity_${hopRun.incrementAndGet()}"
-      val q = ev
-        .groupBy(window(col("ts"), "1 day", "6 hours").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).filter(col("event_type") =!= "__sentinel__")
-      val rows = res.collect() // window × type cardinality, bounded
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_hopping_parity") {
+        ev.groupBy(window(col("ts"), "1 day", "6 hours").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("w.start").as("window_start"), col("event_type"), col("n"))
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        _.filter(col("event_type") =!= "__sentinel__") // window × type rows
       }
       }
     },
@@ -426,7 +393,6 @@ object EventLogQueries {
     // pipeline (dedup → windowed agg) none of the other parity gates
     // touch.
     "q_stream_dedup_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       val single = Tables(s, dir, "events")
         .select(col("event_id"), col("event_type"),
           unix_micros(col("ts")).as("tsMicros"))
@@ -448,30 +414,18 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .dropDuplicatesWithinWatermark("event_id")
-      val name = s"stream_dedup_parity_${sessRun.incrementAndGet()}"
       // tumbling windows finalize the per-(window, type) counts when
       // the sentinel (100 d out ≫ 30 d width) advances the watermark
       // past every data window — nothing event-proportional reaches
       // the sink or driver (rows = windows × types)
-      val q = ev
-        .groupBy(window(col("ts"), "30 days").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, -2L, "__sentinel__",
-          maxTs + 200L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).filter(col("event_type") =!= "__sentinel__")
-        .groupBy("event_type").agg(sum(col("n")).as("n"))
-      val rows = res.collect() // one row per event type
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_dedup_parity") {
+        ev.groupBy(window(col("ts"), "30 days").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("event_type"), col("n"))
+      }(() => ParityFeed.sentinel(s, feed, -2L, "__sentinel__",
+          maxTs + 200L * 86400L * 1000000L)) {
+        _.filter(col("event_type") =!= "__sentinel__")
+          .groupBy("event_type").agg(sum(col("n")).as("n"))
       }
       }
     },
@@ -486,12 +440,7 @@ object EventLogQueries {
     // Nothing data-proportional touches the driver: the feed is staged
     // parquet slices, and the result collect is bounded by the session
     // count (≤ #users) — a parity-harness cost, not an operator shape.
-    // The memory sink registers a temp
-    // view per invocation; it is dropped after materialization so
-    // repeated runs (ScaleBench --all, runs ≥ 2) don't accumulate
-    // sink tables in driver memory.
     "q_stream_sessionize_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       // r18: shared superset feed; the whole input + the first
       // far-future sentinel land in ONE micro-batch (the watermark
       // only advances at the batch boundary, so no data event is ever
@@ -505,25 +454,14 @@ object EventLogQueries {
           .otherwise(col("user_id")).as("user_id"), col("tsMicros"))
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
-      val name = s"stream_sess_parity_${sessRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingStats
-        .sessionStats(ev, "user_id", "ts", gapSeconds = 43200L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).filter(col("user_id") =!= -1L)
-        .select(col("user_id"), col("n_events"),
-          unix_micros(col("t_start")).as("t_start_us"),
-          unix_micros(col("t_end")).as("t_end_us"))
-      val rows = res.collect()
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_sessionize_parity") {
+        graft.streaming.StreamingStats
+          .sessionStats(ev, "user_id", "ts", gapSeconds = 43200L)
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        _.filter(col("user_id") =!= -1L)
+          .select(col("user_id"), col("n_events"),
+            unix_micros(col("t_start")).as("t_start_us"),
+            unix_micros(col("t_end")).as("t_end_us"))
       }
       }
     },
@@ -538,7 +476,6 @@ object EventLogQueries {
     // in the oracle. Sentinel windows (far-future watermark pushers)
     // are filtered by windowStartMicros <= max data ts.
     "q_stream_drift_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       val ev = Tables(s, dir, "events")
       val baseline = ev.groupBy(col("event_type")).count()
@@ -554,26 +491,14 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[graft.streaming.StreamingDrift.InEvent]
-      val name = s"stream_drift_parity_${sessRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingDrift
-        .monitor(s, events, windowSeconds = 86400L, baseline)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxDataTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name)
-        .filter(col("windowStartMicros") <= maxDataTs)
-        .select(col("windowStartMicros").as("window_start_us"),
-          col("nEvents").as("n_events"),
-          col("l1x2VsBaseline").as("l1x2_vs_baseline"))
-      val rows = res.collect() // one row per tumbling day window
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_drift_parity") {
+        graft.streaming.StreamingDrift
+          .monitor(s, events, windowSeconds = 86400L, baseline)
+      }(() => eventsSentinel(s, feed, maxDataTs + FlushS2)) {
+        _.filter(col("windowStartMicros") <= maxDataTs) // one row per day
+          .select(col("windowStartMicros").as("window_start_us"),
+            col("nEvents").as("n_events"),
+            col("l1x2VsBaseline").as("l1x2_vs_baseline"))
       }
       }
     },
@@ -588,7 +513,6 @@ object EventLogQueries {
     // SQL. One row per constraint: per-case verdicts fold to
     // (n_cases, n_applicable, n_satisfied) inside the plan.
     "q_stream_declare_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       // r18: shared superset feed; far-future rows remap to the
       // "_sentinel" case the result fold already filters
@@ -602,34 +526,22 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[graft.streaming.TraceAssembly.InEvent]
-      val name = s"stream_declare_parity_${sessRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingDeclare
-        .monitor(s, events, gapSeconds = 43200L, DeclareMonitorSet)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // fold to the 8-row per-template aggregate IN THE PLAN — the
-      // per-(case × constraint) rows never cross to the driver (the
-      // memory sink is the documented harness bound; the gate path
-      // itself collects only |templates| rows)
-      val res = s.table(name)
-        .filter(col("caseId") =!= "_sentinel")
-        .groupBy(col("template"), col("actA").as("act_a"),
-          col("actB").as("act_b"))
-        .agg(count(lit(1)).as("n_cases"),
-          sum(when(col("applicable"), lit(1L)).otherwise(lit(0L)))
-            .as("n_applicable"),
-          sum(when(col("satisfied"), lit(1L)).otherwise(lit(0L)))
-            .as("n_satisfied"))
-      val rows = res.collect() // 8 rows, one per constraint
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_declare_parity") {
+        graft.streaming.StreamingDeclare
+          .monitor(s, events, gapSeconds = 43200L, DeclareMonitorSet)
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        // fold to the 8-row per-template aggregate IN THE PLAN — the
+        // per-(case × constraint) rows never cross to the driver (the
+        // memory sink is the documented harness bound; the gate path
+        // itself collects only |templates| rows)
+        _.filter(col("caseId") =!= "_sentinel")
+          .groupBy(col("template"), col("actA").as("act_a"),
+            col("actB").as("act_b"))
+          .agg(count(lit(1)).as("n_cases"),
+            sum(when(col("applicable"), lit(1L)).otherwise(lit(0L)))
+              .as("n_applicable"),
+            sum(when(col("satisfied"), lit(1L)).otherwise(lit(0L)))
+              .as("n_satisfied"))
       }
       }
     },
@@ -649,7 +561,6 @@ object EventLogQueries {
     // count in n_events_total but never as a trace, matching
     // count(DISTINCT)/count(col) null semantics exactly.
     "q_stream_stats_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       // r18: shared superset feed. This gate appends no sentinels
       // (Complete mode, one batch), but stale foreign sentinels now
       // arrive in its data batch: remap them to a distinct ignore
@@ -662,23 +573,16 @@ object EventLogQueries {
           .otherwise(col("user_id").cast("string")).as("caseId"),
           col("tsMicros"))
         .withColumn("ts", timestamp_micros(col("tsMicros")))
-      val name = s"stream_stats_parity_${sessRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingStats
-        .perCase(events, caseCol = "caseId", tsCol = "ts")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete()).start()
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).filter(!(col("caseId") <=> lit(Ignore))).agg(
-        sum(when(col("caseId").isNotNull, lit(1L)).otherwise(lit(0L)))
-          .as("n_traces"),
-        sum(col("n_events")).as("n_events_total"),
-        coalesce(sum(when(col("caseId").isNull, col("n_events"))),
-          lit(0L)).as("n_orphan_events"))
-      val rows = res.collect() // exactly one row
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_stats_parity", OutputMode.Complete()) {
+        graft.streaming.StreamingStats
+          .perCase(events, caseCol = "caseId", tsCol = "ts")
+      }() {
+        _.filter(!(col("caseId") <=> lit(Ignore))).agg( // exactly one row
+          sum(when(col("caseId").isNotNull, lit(1L)).otherwise(lit(0L)))
+            .as("n_traces"),
+          sum(col("n_events")).as("n_events_total"),
+          coalesce(sum(when(col("caseId").isNull, col("n_events"))),
+            lit(0L)).as("n_orphan_events"))
       }
       }
     },
@@ -691,7 +595,6 @@ object EventLogQueries {
     // per-type totals happens in-plan over the bounded per-key
     // partials — nothing event-proportional crosses to the driver.
     "q_stream_throttle_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingThrottle
       // r18: shared superset feed; this gate needs no sentinels of its
@@ -707,20 +610,13 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingThrottle.InEvent]
-      val name = s"stream_throttle_parity_${sessRun.incrementAndGet()}"
-      val q = StreamingThrottle.keptCounts(s, events, gapSeconds = 600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).filter(col("label") =!= Ignore)
-        .groupBy(col("label").as("event_type"))
-        .agg(sum(col("nTotal")).as("n_total"),
-          sum(col("nKept")).as("n_kept"))
-      val rows = res.collect() // one row per event type
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_throttle_parity") {
+        StreamingThrottle.keptCounts(s, events, gapSeconds = 600L)
+      }() {
+        _.filter(col("label") =!= Ignore) // one row per event type
+          .groupBy(col("label").as("event_type"))
+          .agg(sum(col("nTotal")).as("n_total"),
+            sum(col("nKept")).as("n_kept"))
       }
       }
     },
@@ -736,7 +632,6 @@ object EventLogQueries {
     // the emission exact vs the batch join, and LateDrops proves
     // nothing was dropped. Oracle: the same self-join in plain SQL.
     "q_stream_join_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       // r18: shared superset feed; the inner join needs no watermark
       // pushing (matches emit per batch), so ALL far-future rows remap
       // to a type neither branch filter accepts — in particular the
@@ -757,20 +652,14 @@ object EventLogQueries {
         .select(col("user_id").as("b_user"), col("ts").as("b_ts"),
           col("event_id").as("b_id"))
         .withWatermark("b_ts", "10 seconds")
-      val joined = views.join(buys, expr(
-        "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"))
-      val name = s"stream_join_parity_${sessRun.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // fold per purchase IN THE PLAN: view count + earliest view id
-      val res = s.table(name).groupBy(col("b_id").as("purchase_id"))
-        .agg(count(lit(1)).as("n_views"), min(col("v_id")).as("first_view_id"))
-      val rows = res.collect() // ≤ one row per purchase event
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_join_parity") {
+        views.join(buys, expr(
+          "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"))
+      }() {
+        // fold per purchase IN THE PLAN: view count + earliest view id
+        // (≤ one row per purchase event)
+        _.groupBy(col("b_id").as("purchase_id"))
+          .agg(count(lit(1)).as("n_views"), min(col("v_id")).as("first_view_id"))
       }
       }
     },
@@ -786,7 +675,6 @@ object EventLogQueries {
     // sentinel BEFORE the watermark nodes (the ProbeHop footgun) and
     // the null rows would never flush. Oracle: plain SQL LEFT JOIN.
     "q_stream_outer_join_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       // r18: shared superset feed. This is the ONE gate whose own
       // sentinels must PASS its branch filters (view/purchase pairs,
       // user -1, one commit) to drive both branch watermarks — the
@@ -816,33 +704,22 @@ object EventLogQueries {
         .select(col("user_id").as("b_user"), col("ts").as("b_ts"),
           col("event_id").as("b_id"))
         .withWatermark("b_ts", "10 seconds")
-      val joined = buys.join(views, expr(
-        "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"),
-        "leftOuter")
-      val name = s"stream_ojoin_parity_${sessRun.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        // one post-start round suffices: the watermark set at batch 1's
-        // END (s1 - delay, past every real purchase's join horizon)
-        // evicts-and-emits the unmatched rows DURING batch 2 (the s2
-        // batch); only the s2 sentinels' own state stays buffered, and
-        // those rows are filtered out of the result anyway. (A third
-        // round was measured pure overhead: identical hash, ~0.5 s.)
-        sentinels(FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // count(v_id) skips the null-padded rows → n_views = 0 for
-      // purchases the watermark released unmatched
-      val res = s.table(name).filter(col("b_user") =!= -1L)
-        .groupBy(col("b_id").as("purchase_id"))
-        .agg(count(col("v_id")).as("n_views"), min(col("v_id")).as("first_view_id"))
-      val rows = res.collect() // one row per purchase event
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      // one post-start round suffices: the watermark set at batch 1's
+      // END (s1 - delay, past every real purchase's join horizon)
+      // evicts-and-emits the unmatched rows DURING batch 2 (the s2
+      // batch); only the s2 sentinels' own state stays buffered, and
+      // those rows are filtered out of the result anyway. (A third
+      // round was measured pure overhead: identical hash, ~0.5 s.)
+      ParityGate.collect(s, "q_stream_outer_join_parity") {
+        buys.join(views, expr(
+          "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"),
+          "leftOuter")
+      }(() => sentinels(FlushS2)) {
+        // count(v_id) skips the null-padded rows → n_views = 0 for
+        // purchases the watermark released unmatched
+        _.filter(col("b_user") =!= -1L)
+          .groupBy(col("b_id").as("purchase_id"))
+          .agg(count(col("v_id")).as("n_views"), min(col("v_id")).as("first_view_id"))
       }
       }
     },
@@ -964,7 +841,6 @@ object EventLogQueries {
     // its ts over ALL clicks — exactly the batch ASOF LEFT JOIN row.
     // Shares q_asof_last_click's DuckDB oracle VERBATIM.
     "q_stream_asof_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingAsOf
       val src = Tables(s, dir, "events")
@@ -979,25 +855,14 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingAsOf.AItem]
-      val name = s"stream_asof_parity_${sessRun.incrementAndGet()}"
-      val q = StreamingAsOf.backward(s, items, gapSeconds = 3600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, -2L, "__sentinel__", -2L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).select(
-        col("userId").as("user_id"), col("purchaseId").as("purchase_id"),
-        timestamp_micros(col("lastClickTsMicros")).as("last_click_ts"),
-        col("lastClickId").as("last_click_id"))
-      val rows = res.collect() // one row per purchase — the gate output
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_asof_parity") {
+        StreamingAsOf.backward(s, items, gapSeconds = 3600L)
+      }(() => ParityFeed.sentinel(s, feed, -2L, "__sentinel__", -2L,
+          maxTs + 2L * 86400L * 1000000L)) {
+        _.select( // one row per purchase — the gate output
+          col("userId").as("user_id"), col("purchaseId").as("purchase_id"),
+          timestamp_micros(col("lastClickTsMicros")).as("last_click_ts"),
+          col("lastClickId").as("last_click_id"))
       }
       }
     },
@@ -1054,7 +919,7 @@ object EventLogQueries {
     // gates zero) — emitting exactly the horizon-bounded batch row.
     // Shares q_asof_first_click's DuckDB oracle VERBATIM.
     "q_stream_asof_forward_parity" -> { (s, dir) =>
-      streamAsOfGate(s, dir, "fwd") { (s2, items) =>
+      streamAsOfGate(s, dir, "q_stream_asof_forward_parity") { (s2, items) =>
         graft.streaming.StreamingAsOf.forward(s2, items,
           horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = 3600L)
           .toDF().select(col("userId").as("user_id"),
@@ -1073,7 +938,7 @@ object EventLogQueries {
     // standing long without polluting it. Shares
     // q_asof_nearest_click's oracle VERBATIM.
     "q_stream_asof_nearest_parity" -> { (s, dir) =>
-      streamAsOfGate(s, dir, "near") { (s2, items) =>
+      streamAsOfGate(s, dir, "q_stream_asof_nearest_parity") { (s2, items) =>
         graft.streaming.StreamingAsOf.nearest(s2, items,
           horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = 3600L)
           .toDF().select(col("userId").as("user_id"),
@@ -1126,7 +991,6 @@ object EventLogQueries {
     // the compacted table is the stream's standing output, not a
     // nightly recompute.
     "q_stream_upsert_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingUpsert
       // r18: shared superset feed; far-future rows remap to the
@@ -1141,25 +1005,14 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingUpsert.UItem]
-      val name = s"stream_upsert_parity_${sessRun.incrementAndGet()}"
-      val q = StreamingUpsert.latest(s, items, gapSeconds = 3600L,
+      ParityGate.collect(s, "q_stream_upsert_parity") {
+        StreamingUpsert.latest(s, items, gapSeconds = 3600L,
           ignoreType = "__sentinel__")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name).select(
-        col("userId").as("user_id"), col("eventType").as("event_type"),
-        timestamp_micros(col("tsMicros")).as("ts"),
-        col("eventId").as("event_id"), col("value"))
-      val rows = res.collect() // one row per live key — the gate output
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        _.select( // one row per live key — the gate output
+          col("userId").as("user_id"), col("eventType").as("event_type"),
+          timestamp_micros(col("tsMicros")).as("ts"),
+          col("eventId").as("event_id"), col("value"))
       }
       }
     },
@@ -1327,7 +1180,6 @@ object EventLogQueries {
     // into the same (stage_idx, stage, n_cases) rows as the batch
     // operator — the oracle is q_funnel_steps' SQL verbatim.
     "q_stream_funnel_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingFunnel
       val stages = Seq("view", "click", "purchase")
@@ -1345,29 +1197,20 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingFunnel.InEvent]
-      val name = s"stream_funnel_parity_${sessRun.incrementAndGet()}"
-      val q = StreamingFunnel.reached(s, events, stages, gapSeconds = 86400L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // fold per-case reached rows to per-index counts IN THE PLAN;
       // only ≤ |stages| aggregate rows reach the driver, where the
       // (tiny) cumulative stage sums are formed
-      val perIdx = s.table(name).filter(col("caseId") =!= -1L)
-        .groupBy(col("reachedIdx")).agg(count(lit(1)).as("n"))
-        .collect()
-      s.catalog.dropTempView(name)
+      val perIdx = ParityGate.collect(s, "q_stream_funnel_parity") {
+        StreamingFunnel.reached(s, events, stages, gapSeconds = 86400L)
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        _.filter(col("caseId") =!= -1L)
+          .groupBy(col("reachedIdx")).agg(count(lit(1)).as("n"))
+      }.collect()
       val byIdx = perIdx.map(r => r.getInt(0) -> r.getLong(1)).toMap
       stages.zipWithIndex
         .map { case (st, i) =>
           (i, st, byIdx.collect { case (idx, n) if idx >= i => n }.sum) }
         .toDF("stage_idx", "stage", "n_cases")
-      }
       }
     },
 
@@ -1384,7 +1227,6 @@ object EventLogQueries {
     // emits a pair: its second event stays above every watermark it
     // sees, and its gap timer never fires.
     "q_stream_temporal_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.{StreamingTemporal, TraceAssembly}
       // the FIXED profile an online monitor checks against — the
@@ -1410,38 +1252,26 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val name = s"stream_temporal_parity_${sessRun.incrementAndGet()}"
       val pairs = StreamingTemporal.pairs(s, events, gapSeconds = 86400L)
         .select(col("actFrom").as("act_from"), col("actTo").as("act_to"),
           expr("waitUs div 1000000").as("wait_s"))
-      val q = graft.ops.Temporal.deviationFlags(pairs, profile, zeta = 2.0)
-        .filter(col("is_dev"))
-        .select(col("act_from"), col("act_to"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // alert-proportional sink → alphabet²-bounded rollup, then the
-      // profile supplies each segment's total n (0-deviation segments
-      // included via the left join)
-      val counts = s.table(name)
-        .groupBy(col("act_from"), col("act_to"))
-        .agg(count(lit(1)).as("_nd"))
-      val res = profile.select(col("act_from"), col("act_to"), col("n"))
-        .join(counts, Seq("act_from", "act_to"), "left")
-        .select(col("act_from"), col("act_to"), col("n"),
-          coalesce(col("_nd"), lit(0L)).as("n_dev"))
-      val rows = res.collect()
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_temporal_parity") {
+        graft.ops.Temporal.deviationFlags(pairs, profile, zeta = 2.0)
+          .filter(col("is_dev"))
+          .select(col("act_from"), col("act_to"))
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) { sink =>
+        // alert-proportional sink → alphabet²-bounded rollup, then the
+        // profile supplies each segment's total n (0-deviation segments
+        // included via the left join)
+        val counts = sink.groupBy(col("act_from"), col("act_to"))
+          .agg(count(lit(1)).as("_nd"))
+        profile.select(col("act_from"), col("act_to"), col("n"))
+          .join(counts, Seq("act_from", "act_to"), "left")
+          .select(col("act_from"), col("act_to"), col("n"),
+            coalesce(col("_nd"), lit(0L)).as("n_dev"))
+      }
       }
       } finally profile.unpersist()
-      }
     },
 
     // Run-length interval collapse (ops/Sessionize.runs): consecutive
@@ -1547,7 +1377,6 @@ object EventLogQueries {
     // per CLOSED maximal run, rolled up per activity IN THE PLAN to
     // the batch summary. Shares q_batching's oracle verbatim.
     "q_stream_batching_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       import graft.streaming.StreamingBatching
       // r18: shared superset feed; far-future rows remap to the
@@ -1561,29 +1390,18 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingBatching.BItem]
-      val name = s"stream_batching_parity_${sessRun.incrementAndGet()}"
-      val q = StreamingBatching.batches(s, items,
+      ParityGate.collect(s, "q_stream_batching_parity") {
+        StreamingBatching.batches(s, items,
           gapUs = 86400L * 1000000L, gapSeconds = 86400L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        eventsSentinel(s, feed, maxTs + FlushS2)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // batch rows fold to the alphabet-bounded summary IN THE PLAN
-      val res = s.table(name)
-        .filter(col("activity") =!= "_sentinel")
-        .groupBy(col("activity"))
-        .agg(count(lit(1)).as("n_batches"),
-          max(col("batchSize")).as("max_batch_size"),
-          sum(when(col("batchSize") >= 2L, col("batchSize")).otherwise(0L))
-            .as("n_batched_events"))
-      val rows = res.collect() // one row per activity
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        // batch rows fold to the alphabet-bounded summary IN THE PLAN
+        // (one row per activity)
+        _.filter(col("activity") =!= "_sentinel")
+          .groupBy(col("activity"))
+          .agg(count(lit(1)).as("n_batches"),
+            max(col("batchSize")).as("max_batch_size"),
+            sum(when(col("batchSize") >= 2L, col("batchSize")).otherwise(0L))
+              .as("n_batched_events"))
       }
       }
     },

@@ -10,7 +10,7 @@ import graft.xes.XesReader
   * pinned against TEXTBOOK closed forms — the same discipline as the
   * XES fixtures, but with oracles that are literal expectations rather
   * than dumps: L1/L2 are the worked examples of the process-mining
-  * book the reference ships (`/root/reference/static/xes/book`), whose
+  * book the reference ships ([[graft.Fixtures.book]]), whose
   * alpha net, inductive trees, alignment costs, replay fitness,
   * precision, soundness, and playout language are all known in closed
   * form (derivations in the matching specs: AlphaSpec, InductiveSpec,
@@ -24,7 +24,7 @@ import graft.xes.XesReader
   */
 object MinerQueries {
 
-  private val book = "/root/reference/static/xes/book"
+  private val book = graft.Fixtures.book
   private val fixtures = graft.Fixtures.dir
 
   private def bookEvents(s: SparkSession, name: String) =

@@ -1,9 +1,12 @@
 package graft.queries
 
-import java.io.File
+import java.io.{File, IOException}
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.types.StructType
 
@@ -28,13 +31,28 @@ import org.apache.spark.sql.types.StructType
   *
   * Event-time timers still fire through far-future sentinel ROWS, now
   * appended as one-row parquet slices ([[sentinel]]): a new file is a
-  * new micro-batch, exactly like a drop-dir tail in production.
+  * new micro-batch, exactly like a drop-dir tail in production. A
+  * slice becomes visible to the source only once complete (written
+  * hidden, then renamed).
+  *
+  * The feeds stop at the streaming frame: a gate runs its stream,
+  * flushes and sink collect through [[ParityGate.collect]] inside the
+  * feed bracket.
   */
 private[graft] object ParityFeed {
 
   /** A staged drop-dir feed: the directory and the staged schema (the
-    * file source requires an explicit schema). */
-  final case class FileFeed(dir: String, schema: StructType)
+    * file source requires an explicit schema). Each handle records the
+    * files its own [[sentinelRows]] calls created, so a shared feed's
+    * block can delete exactly those. */
+  final case class FileFeed(dir: String, schema: StructType) {
+    private[queries] val created = new ConcurrentLinkedQueue[Path]()
+  }
+
+  private def rmTree(x: File): Unit = {
+    if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rmTree))
+    x.delete()
+  }
 
   /** tmpfs when available; falls back to java.io.tmpdir. */
   private def feedBase(): Path = {
@@ -53,8 +71,8 @@ private[graft] object ParityFeed {
     * scan of the slices) seeds sentinel construction. `slices` sizes
     * the round-robin repartition before the write — it is the feed's
     * source-side parallelism (each slice is its own scan task in the
-    * single data micro-batch; the downstream stateful exchange is
-    * governed by [[withStreamParallelism]] independently). The default
+    * single data micro-batch; the downstream stateful exchange
+    * runs at [[ParityGate.StreamPartitions]] independently). The default
     * 8 matches the stream parallelism the gates run at; gates whose
     * map side is CPU-heavy (the heavy-hitters shingle explode) pass
     * 32. */
@@ -66,13 +84,7 @@ private[graft] object ParityFeed {
       val feed = FileFeed(dir.toString, df.schema)
       val maxTs = replay(s, feed).agg(max(col(tsCol))).head().getLong(0)
       f(feed, maxTs)
-    } finally {
-      def rm(x: File): Unit = {
-        if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
-        x.delete()
-      }
-      rm(dir.toFile)
-    }
+    } finally rmTree(dir.toFile)
   }
 
   /** One staged feed SHARED across gates that stream the same
@@ -108,36 +120,28 @@ private[graft] object ParityFeed {
         d.repartition(slices).write.mode("overwrite").parquet(dir.toString)
         val feed = FileFeed(dir.toString, d.schema)
         val mx = replay(s, feed).agg(max(col(tsCol))).head().getLong(0)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(x: File): Unit = {
-            if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
-            x.delete()
-          }
-          rm(dir.toFile)
-        }))
+        Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir.toFile)))
         (feed, mx)
       })
     }
-    // r18: delete the files ADDED during `f` (the gate's own sentinel
-    // slices) once its streams are stopped — on a JVM-lived shared dir
-    // every stale one-row slice costs each LATER gate a scan task plus
-    // listing/seen-log bookkeeping in its data batch, which at ~2
-    // appends per gate per run outgrows the staging cost the sharing
-    // saves. Safe because the graded harnesses run queries
-    // sequentially (no stream is live on the feed when `f` returns);
-    // the stale-sentinel absorption contract above stays in force as
-    // the defense for any leftover slice.
-    val dirFile = new File(feed.dir)
-    val before = Option(dirFile.list()).map(_.toSet).getOrElse(Set.empty[String])
-    try f(feed, maxTs) finally {
-      var deleted = false
-      Option(dirFile.listFiles()).foreach(_.foreach { x =>
-        if (!before.contains(x.getName)) { x.delete(); deleted = true }
-      })
+    // Delete the gate's own sentinel slices once its streams are
+    // stopped: on a JVM-lived shared dir every stale one-row slice
+    // costs each LATER gate a scan task plus listing/seen-log
+    // bookkeeping in its data batch. Only the files this block's
+    // handle recorded go; a file anything else put in the dir stays.
+    // The stale-sentinel absorption contract above stays in force for
+    // any slice left behind.
+    val handle = feed.copy()
+    try f(handle, maxTs) finally {
+      val mine = handle.created.asScala.toSeq
+      mine.foreach { p =>
+        if (Files.exists(p) && !p.toFile.delete())
+          throw new IOException(s"could not delete sentinel slice $p")
+      }
       // the replay path is a batch read whose file listing rides the
       // session FileStatusCache — drop the stale entries so a LATER
       // gate's replay of this dir cannot list the files just deleted
-      if (deleted) s.catalog.refreshByPath(feed.dir)
+      if (mine.nonEmpty) s.catalog.refreshByPath(feed.dir)
     }
   }
 
@@ -183,7 +187,13 @@ private[graft] object ParityFeed {
     * string), and the file-stream source reads parquet columns by
     * name, so interop with the Spark-staged slices is the ordinary
     * parquet contract. A fresh UUID filename makes each append its
-    * own micro-batch exactly like the old one-file append job. */
+    * own micro-batch exactly like the old one-file append job.
+    *
+    * The file source lists the dir while it polls, so the slice is
+    * written under a dot-prefixed name (hidden from the source) and
+    * renamed to its visible name only after `close()` has written the
+    * footer. The visible file and its checksum side file are recorded
+    * on `feed`. */
   def sentinelRows(s: SparkSession, feed: FileFeed,
       rows: Seq[Seq[Any]]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroup
@@ -206,16 +216,17 @@ private[graft] object ParityFeed {
       }
     }
     val schema = b.named("spark_schema")
-    val path = new org.apache.hadoop.fs.Path(
-      feed.dir, s"sentinel-${java.util.UUID.randomUUID()}.parquet")
-    val w = ExampleParquetWriter.builder(path)
+    rows.foreach(vs => require(vs.length == feed.schema.fields.length,
+      s"sentinel row arity ${vs.length} != schema ${feed.schema.fields.length}"))
+    val name = s"sentinel-${java.util.UUID.randomUUID()}.parquet"
+    val tmp = new org.apache.hadoop.fs.Path(feed.dir, s".$name")
+    val dst = new org.apache.hadoop.fs.Path(feed.dir, name)
+    val w = ExampleParquetWriter.builder(tmp)
       .withConf(s.sparkContext.hadoopConfiguration)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
       .build()
     try rows.foreach { vs =>
-      require(vs.length == feed.schema.fields.length,
-        s"sentinel row arity ${vs.length} != schema ${feed.schema.fields.length}")
       val g = new SimpleGroup(schema)
       feed.schema.fields.zip(vs).foreach { case (f, v) =>
         f.dataType match {
@@ -228,24 +239,13 @@ private[graft] object ParityFeed {
       }
       w.write(g)
     } finally w.close()
+    // the checksummed local filesystem renames the side file with it
+    if (!tmp.getFileSystem(s.sparkContext.hadoopConfiguration).rename(tmp, dst))
+      throw new IOException(s"could not rename sentinel slice $tmp to $dst")
+    Seq(Paths.get(feed.dir, name), Paths.get(feed.dir, s".$name.crc"))
+      .filter(Files.exists(_)).foreach(feed.created.add)
   }
 
-  /** Runs `f` with `spark.sql.shuffle.partitions` lowered to `n` and
-    * no-data micro-batches disabled, restoring both after. The parity
-    * micro-batches carry sf-scale row counts through ONE stateful
-    * operator; at the session default (32+) every micro-batch pays
-    * per-partition state-store open/commit/checkpoint on mostly-empty
-    * partitions — measurable fixed cost, no parallelism gain. Results
-    * are partition-count independent (the hash gate runs these
-    * queries at 32 and 256). No-data batches exist to fire event-time
-    * timers WITHOUT new input; every parity query instead fires its
-    * timers with explicit far-future sentinel rows, so the automatic
-    * extra batch after each data batch is pure overhead (~0.6 s/query
-    * measured, ProbeStream) and the final table is identical either
-    * way — the timers fire in the sentinel's own data batch at the
-    * latest. Safe because a streaming query fixes both settings from
-    * the conf AT START, inside this scope; batch queries planned
-    * after restore are untouched. */
   /** The streaming folds order tied events by (ts, activity) while
     * the batch oracles tie-break on event_id — parity therefore rests
     * on the dataset's unique-(case, ts) contract (stated in
@@ -265,6 +265,22 @@ private[graft] object ParityFeed {
         "batch event_id tie-break are no longer interchangeable")
   }
 
+  /** Runs `f` with `spark.sql.shuffle.partitions` lowered to `n` and
+    * no-data micro-batches disabled, restoring both after. The parity
+    * micro-batches carry sf-scale row counts through ONE stateful
+    * operator; at the session default (32+) every micro-batch pays
+    * per-partition state-store open/commit/checkpoint on mostly-empty
+    * partitions — measurable fixed cost, no parallelism gain. Results
+    * are partition-count independent (the hash gate runs these
+    * queries at 32 and 256). No-data batches exist to fire event-time
+    * timers WITHOUT new input; every parity query instead fires its
+    * timers with explicit far-future sentinel rows, so the automatic
+    * extra batch after each data batch is pure overhead (~0.6 s/query
+    * measured, ProbeStream) and the final table is identical either
+    * way — the timers fire in the sentinel's own data batch at the
+    * latest. Safe because a streaming query fixes both settings from
+    * the conf AT START, inside this scope; batch queries planned
+    * after restore are untouched. */
   def withStreamParallelism[A](s: SparkSession, n: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -278,11 +294,11 @@ private[graft] object ParityFeed {
     // ~0.1 s/query of fsync/IO measured (ProbeStream /tmp vs
     // /dev/shm). Fresh UUID base per invocation ⇒ a rerun can never
     // resume a previous run's state.
-    val ckDir: Option[java.nio.file.Path] =
+    val ckDir: Option[Path] =
       try {
-        val base = java.nio.file.Paths.get("/dev/shm/graft_ckpt")
-        java.nio.file.Files.createDirectories(base)
-        Some(java.nio.file.Files.createTempDirectory(base, "p"))
+        val base = Paths.get("/dev/shm/graft_ckpt")
+        Files.createDirectories(base)
+        Some(Files.createTempDirectory(base, "p"))
       } catch { case _: Exception => None } // no tmpfs: keep Spark's temp dir
     s.conf.set(key, n.toString)
     s.conf.set(ndKey, "false")
@@ -294,14 +310,21 @@ private[graft] object ParityFeed {
         case Some(v) => s.conf.set(ckKey, v)
         case None => if (ckDir.isDefined) s.conf.unset(ckKey)
       }
-      ckDir.foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(d.toFile)
-      }
+      ckDir.foreach(d => rmTree(d.toFile))
     }
   }
 
+  /** A fresh drop dir holding copies of the `suffix` files in `src`,
+    * deleted after `f` — the feed of a gate whose stream source reads
+    * whole files (the XES file-stream source). */
+  def withFileDrop[A](src: String, suffix: String)(f: String => A): A = {
+    val drop = Files.createTempDirectory(feedBase(), "drop")
+    try {
+      Option(new File(src).listFiles()).getOrElse(
+        throw new IOException(s"cannot list $src"))
+        .filter(_.getName.endsWith(suffix))
+        .foreach(x => Files.copy(x.toPath, drop.resolve(x.getName)))
+      f(drop.toString)
+    } finally rmTree(drop.toFile)
+  }
 }

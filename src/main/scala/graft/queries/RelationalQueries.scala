@@ -19,7 +19,10 @@ import graft.Tables
   */
 object RelationalQueries {
 
-  private val winsRun = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The sketch-quantile gates' collected estimates. */
+  private val EstSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "`group` STRING, p_permille INT, value_est BIGINT, n_total BIGINT, " +
+      "err_bound_rank BIGINT")
 
   private def dec(c: String) = col(c).cast("decimal(18,2)")
 
@@ -95,9 +98,7 @@ object RelationalQueries {
     // integer→double casts, and IEEE tree bit-for-bit, so the gate
     // shares q_winsorized_stats's clip-and-sum oracle verbatim.
     "q_stream_winsorized_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingWinsorized
       val Ignore = "\u0000ignore"
       val loP = 10; val hiP = 990
@@ -123,40 +124,31 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_wins_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
+      ParityGate.collect(s, "q_stream_winsorized_parity") {
+        StreamingWinsorized.histogram(s, items, width = W,
           gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: ≤ groups · value-range/width rows (≈ 6 · 5100 here)
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      val bands = StreamingWinsorized.bandBuckets(hist, loP, hiP)
-      // ---- pass 2: exact band refinement, ONE bounded batch job over
-      // the retained drop-dir (sentinel slices excluded by their
-      // far-future ts) ----
-      val ref = new StreamingWinsorized.BandRefiner(s, bands, W, Ignore)
-      ref.addBatch(ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(col("group"), col("v")), 0L)
-      ref.result(loP, hiP).toDF()
-        .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
-          substring_index(col("group"), "|", -1).as("l_linestatus"),
-          col("nTotal").as("n_total"), col("loValue").as("lo_value"),
-          col("hiValue").as("hi_value"),
-          col("winsorizedSum").as("winsorized_sum"),
-          col("winsorizedSumSq").as("winsorized_sumsq"),
-          col("winsorizedMean").as("winsorized_mean"),
-          col("winsorizedVar").as("winsorized_var"),
-          col("winsorizedStd").as("winsorized_std"))
+      }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: ≤ groups · value-range/width rows (≈ 6 · 5100 here)
+        val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
+        val bands = StreamingWinsorized.bandBuckets(hist, loP, hiP)
+        // ---- pass 2: exact band refinement, ONE bounded batch job over
+        // the retained drop-dir (sentinel slices excluded by their
+        // far-future ts) ----
+        val ref = new StreamingWinsorized.BandRefiner(s, bands, W, Ignore)
+        ref.addBatch(ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(col("group"), col("v")), 0L)
+        ref.result(loP, hiP).toDF()
+          .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
+            substring_index(col("group"), "|", -1).as("l_linestatus"),
+            col("nTotal").as("n_total"), col("loValue").as("lo_value"),
+            col("hiValue").as("hi_value"),
+            col("winsorizedSum").as("winsorized_sum"),
+            col("winsorizedSumSq").as("winsorized_sumsq"),
+            col("winsorizedMean").as("winsorized_mean"),
+            col("winsorizedVar").as("winsorized_var"),
+            col("winsorizedStd").as("winsorized_std"))
       }
       }
     },
@@ -175,9 +167,7 @@ object RelationalQueries {
     // batch kernel's integer contract, so the gate shares
     // q_exact_quantiles's row_number oracle verbatim.
     "q_stream_quantiles_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.{StreamingQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
       val ps = Seq(250, 500, 750, 900, 990)
@@ -200,32 +190,23 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_quant_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
+      ParityGate.collect(s, "q_stream_quantiles_parity") {
+        StreamingWinsorized.histogram(s, items, width = W,
           gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: ≤ groups · value-range/width rows
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      // ---- pass 2: per-value counts in the rank buckets, ONE bounded
-      // batch job over the retained drop-dir ----
-      val res = new StreamingQuantiles.RankResolver(s, hist, ps, W, Ignore)
-      res.addBatch(ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(col("group"), col("v")), 0L)
-      res.result().toDF()
-        .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
-          substring_index(col("group"), "|", -1).as("l_linestatus"),
-          col("pPermille").as("p_permille"), col("value"))
+      }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: ≤ groups · value-range/width rows
+        val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
+        // ---- pass 2: per-value counts in the rank buckets, ONE bounded
+        // batch job over the retained drop-dir ----
+        val res = new StreamingQuantiles.RankResolver(s, hist, ps, W, Ignore)
+        res.addBatch(ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(col("group"), col("v")), 0L)
+        res.result().toDF()
+          .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
+            substring_index(col("group"), "|", -1).as("l_linestatus"),
+            col("pPermille").as("p_permille"), col("value"))
       }
       }
     },
@@ -240,9 +221,7 @@ object RelationalQueries {
     // enforced replay-faithfulness guard; the gate shares
     // q_outlier_flags's oracle VERBATIM.
     "q_stream_outliers_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.{StreamingQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
       val W = 2048L // tuning only: sizes state + join volume, never the answer
@@ -262,30 +241,21 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_outliers_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
+      ParityGate.collect(s, "q_stream_outliers_parity") {
+        StreamingWinsorized.histogram(s, items, width = W,
           gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      val res = new StreamingQuantiles.RankResolver(s, hist, Seq(990), W,
-        Ignore)
-      res.addBatch(ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(col("group"), col("v")), 0L)
-      res.outlierCounts(990).toDF()
-        .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
-          substring_index(col("group"), "|", -1).as("l_linestatus"),
-          col("nTotal").as("n_total"), col("nAbove").as("n_above_p99"))
+      }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
+        val res = new StreamingQuantiles.RankResolver(s, hist, Seq(990), W,
+          Ignore)
+        res.addBatch(ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(col("group"), col("v")), 0L)
+        res.outlierCounts(990).toDF()
+          .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
+            substring_index(col("group"), "|", -1).as("l_linestatus"),
+            col("nTotal").as("n_total"), col("nAbove").as("n_above_p99"))
       }
       }
     },
@@ -364,9 +334,7 @@ object RelationalQueries {
     // operator); the hashed columns (n, bound, rank_ok) are
     // deterministic and shared with q_quantiles_sketch's oracle.
     "q_stream_quantiles_sketch_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.ops.SketchQuantiles
       import graft.streaming.{StreamingSketchQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
@@ -385,53 +353,29 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_sketchq_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingSketchQuantiles.quantiles(s, items, k = K,
+      ParityGate.collect(s, "q_stream_quantiles_sketch_parity") {
+        StreamingSketchQuantiles.quantiles(s, items, k = K,
           psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: |groups| · |ps| rows (the flushed estimates)
-      val est = s.table(name)
-        .select(col("group"), col("pPermille").as("p_permille"),
-          col("valueEst").as("value_est"), col("nTotal").as("n_total"),
-          col("errBoundRank").as("err_bound_rank"))
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      val estDf = s.createDataFrame(
-        java.util.Arrays.asList(est: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("group",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("p_permille",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("value_est",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_total",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("err_bound_rank",
-            org.apache.spark.sql.types.LongType))))
-      // audit-only read of the retained files (sentinels excluded by
-      // ts): certifies |true_rank(est) − target| ≤ bound. Materialized
-      // INSIDE the feed block (r18): the shared feed now deletes a
-      // gate's sentinel slices at block exit, so a lazy plan escaping
-      // the block would list files that no longer exist at action time.
-      val audit = SketchQuantiles.rankAudit(
-          ParityFeed.replay(s, feed).where(col("tsMicros") <= maxTs)
-            .select(col("group"), col("v")),
-          col("group"), col("v"), estDf)
-        .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
-          substring_index(col("group"), "|", -1).as("l_linestatus"),
-          col("p_permille"), col("n_total"), col("err_bound_rank"),
-          col("rank_ok"))
-      val auditRows = audit.collect() // |groups| · |ps| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: |groups| · |ps| rows (the flushed estimates)
+        val est = sink
+          .select(col("group"), col("pPermille").as("p_permille"),
+            col("valueEst").as("value_est"), col("nTotal").as("n_total"),
+            col("errBoundRank").as("err_bound_rank"))
+          .collect().toSeq
+        val estDf = s.createDataFrame(java.util.Arrays.asList(est: _*),
+          EstSchema)
+        // audit-only read of the retained files (sentinels excluded by
+        // ts): certifies |true_rank(est) − target| ≤ bound
+        SketchQuantiles.rankAudit(
+            ParityFeed.replay(s, feed).where(col("tsMicros") <= maxTs)
+              .select(col("group"), col("v")),
+            col("group"), col("v"), estDf)
+          .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
+            substring_index(col("group"), "|", -1).as("l_linestatus"),
+            col("p_permille"), col("n_total"), col("err_bound_rank"),
+            col("rank_ok"))
       }
       }
     },
@@ -448,9 +392,7 @@ object RelationalQueries {
     // exact WEIGHTED ranks (rankAuditWeighted — the audit, not the
     // operator); shares q_quantiles_sketch_weighted's oracle verbatim.
     "q_stream_quantiles_sketch_weighted_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.ops.SketchQuantiles
       import graft.streaming.StreamingSketchQuantiles
       val Ignore = "\u0000ignore"
@@ -471,51 +413,29 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketchQuantiles.WItem]
-      val name = s"stream_sketchqw_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingSketchQuantiles.quantilesWeighted(s, items, k = K,
+      ParityGate.collect(s, "q_stream_quantiles_sketch_weighted_parity") {
+        StreamingSketchQuantiles.quantilesWeighted(s, items, k = K,
           psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L, 1L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: |groups| · |ps| rows (the flushed estimates)
-      val est = s.table(name)
-        .select(col("group"), col("pPermille").as("p_permille"),
-          col("valueEst").as("value_est"), col("nTotal").as("n_total"),
-          col("errBoundRank").as("err_bound_rank"))
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      val estDf = s.createDataFrame(
-        java.util.Arrays.asList(est: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("group",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("p_permille",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("value_est",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_total",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("err_bound_rank",
-            org.apache.spark.sql.types.LongType))))
-      // audit-only read of the retained files (sentinels excluded by
-      // ts): certifies |true weighted rank(est) − target| ≤ bound.
-      // Materialized INSIDE the feed block (r18, see the unit gate).
-      val audit = SketchQuantiles.rankAuditWeighted(
-          ParityFeed.replay(s, feed).where(col("tsMicros") <= maxTs)
-            .select(col("group"), col("v"), col("w")),
-          col("group"), col("v"), col("w"), estDf)
-        .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
-          substring_index(col("group"), "|", -1).as("l_linestatus"),
-          col("p_permille"), col("n_total"), col("err_bound_rank"),
-          col("rank_ok"))
-      val auditRows = audit.collect() // |groups| · |ps| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      }(() => ParityFeed.sentinel(s, feed, Ignore, 0L, 1L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: |groups| · |ps| rows (the flushed estimates)
+        val est = sink
+          .select(col("group"), col("pPermille").as("p_permille"),
+            col("valueEst").as("value_est"), col("nTotal").as("n_total"),
+            col("errBoundRank").as("err_bound_rank"))
+          .collect().toSeq
+        val estDf = s.createDataFrame(java.util.Arrays.asList(est: _*),
+          EstSchema)
+        // audit-only read of the retained files (sentinels excluded by
+        // ts): certifies |true weighted rank(est) − target| ≤ bound
+        SketchQuantiles.rankAuditWeighted(
+            ParityFeed.replay(s, feed).where(col("tsMicros") <= maxTs)
+              .select(col("group"), col("v"), col("w")),
+            col("group"), col("v"), col("w"), estDf)
+          .select(substring_index(col("group"), "|", 1).as("l_returnflag"),
+            substring_index(col("group"), "|", -1).as("l_linestatus"),
+            col("p_permille"), col("n_total"), col("err_bound_rank"),
+            col("rank_ok"))
       }
       }
     },

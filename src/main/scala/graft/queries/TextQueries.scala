@@ -25,10 +25,6 @@ object TextQueries {
   /** q_text_bm25 query terms: one rare marker + three common terms. */
   private[queries] val Bm25Terms = Seq("dup", "spark", "hash", "key")
 
-  /** Unique memory-sink names across Verify's repeated invocations. */
-  private val hhRun = new java.util.concurrent.atomic.AtomicInteger
-  private val sampleRun = new java.util.concurrent.atomic.AtomicInteger
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // BM25-style ranked retrieval in exact integer arithmetic (no
     // logarithms — dyadic-rational idf and cleared-denominator tf
@@ -127,9 +123,7 @@ object TextQueries {
     // count over the retained staged files. Shares q_token_cm_est's
     // oracle VERBATIM.
     "q_stream_cm_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.text.CmSketch
       import graft.streaming.StreamingSketches
       val d = 4; val w = 64; val seed = 42L
@@ -155,45 +149,24 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.CItem]
-      val name = s"stream_cm_parity_${hhRun.incrementAndGet()}"
-      val q = StreamingSketches.cmCells(s, items, w = w,
-          gapSeconds = 3600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: ≤ d·w cell rows
-      val cellRows = s.table(name)
-        .select(col("row"), col("bucket"), col("n")).collect()
-      s.catalog.dropTempView(name)
-      val cells = s.createDataFrame(
-        java.util.Arrays.asList(cellRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("row",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-      val probes = (TextOps.Stopwords :+ "zzz_absent").toDF("token")
-      val exact = ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(explode(TextOps.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("true_n"))
-      // materialized INSIDE the feed block (r18): the shared feed
-      // deletes this gate's sentinel slices at block exit, so a lazy
-      // plan escaping the block would list files that no longer exist
-      val res = CmSketch.estimate(cells, probes, d = d, w = w, seed = seed)
-        .join(exact, Seq("token"), "left")
-        .select(col("token"), col("est_n"),
-          coalesce(col("true_n"), lit(0L)).as("true_n"))
-      val resRows = res.collect() // |probes| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(resRows: _*), res.schema)
+      ParityGate.collect(s, "q_stream_cm_parity") {
+        StreamingSketches.cmCells(s, items, w = w, gapSeconds = 3600L)
+      }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s",
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: ≤ d·w cell rows
+        val cellRows = sink.select(col("row"), col("bucket"), col("n")).collect()
+        val cells = s.createDataFrame(java.util.Arrays.asList(cellRows: _*),
+          org.apache.spark.sql.types.StructType.fromDDL(
+            "row INT, bucket INT, n BIGINT"))
+        val probes = (TextOps.Stopwords :+ "zzz_absent").toDF("token")
+        val exact = ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(explode(TextOps.tokens(col("text"))).as("token"))
+          .groupBy("token").agg(count(lit(1)).as("true_n"))
+        CmSketch.estimate(cells, probes, d = d, w = w, seed = seed) // |probes| rows
+          .join(exact, Seq("token"), "left")
+          .select(col("token"), col("est_n"),
+            coalesce(col("true_n"), lit(0L)).as("true_n"))
       }
       }
     },
@@ -324,9 +297,7 @@ object TextQueries {
     // q_token_heavy_hitters; the oracle is the identical vocabulary
     // GROUP BY … HAVING.
     "q_stream_heavy_hitters_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingHeavyHitters
       val Ignore = "\u0000"
       val ppm = 75
@@ -357,31 +328,22 @@ object TextQueries {
       // watermark itself, downstream of its map-side pre-combine
       val items = shingleStream(ParityFeed.stream(s, feed))
         .as[StreamingHeavyHitters.Item]
-      val name = s"stream_hh_parity_${hhRun.incrementAndGet()}"
-      val q = StreamingHeavyHitters.candidates(s, items, k = 1 << 14,
+      ParityGate.collect(s, "q_stream_heavy_hitters_parity") {
+        StreamingHeavyHitters.candidates(s, items, k = 1 << 14,
           nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded by the post-prune candidate set (≈ heavy set + border)
-      val cands = s.table(name).select(col("item")).distinct()
-        .as[String].collect()
-      s.catalog.dropTempView(name)
-      // ---- pass 2: exact recount, ONE bounded batch job over the
-      // retained drop-dir (sentinel slices excluded by their
-      // far-future ts) ----
-      val rec = new StreamingHeavyHitters.ExactRecount(s, cands, Ignore)
-      rec.addBatch(ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(explode(TextOps.shingleStrings(col("text"), 3))
-          .as("item")), 0L)
-      rec.result(ppm).toDF("gram", "n")
+      }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded by the post-prune candidate set (≈ heavy set + border)
+        val cands = sink.select(col("item")).distinct().as[String].collect()
+        // ---- pass 2: exact recount, ONE bounded batch job over the
+        // retained drop-dir (sentinel slices excluded by their
+        // far-future ts) ----
+        val rec = new StreamingHeavyHitters.ExactRecount(s, cands, Ignore)
+        rec.addBatch(ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(explode(TextOps.shingleStrings(col("text"), 3))
+            .as("item")), 0L)
+        rec.result(ppm).toDF("gram", "n")
       }
       }
     },
@@ -431,9 +393,7 @@ object TextQueries {
     // columns are deterministic and shared with q_token_hh_sketch's
     // oracle VERBATIM.
     "q_stream_hh_sketch_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingHeavyHitters
       val Ignore = "\u0000"
       val ppm = 75; val k = 1 << 14
@@ -450,53 +410,36 @@ object TextQueries {
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("gram")).as("item"), col("tsMicros"))
         .as[StreamingHeavyHitters.Item]
-      val name = s"stream_hh_sketch_${hhRun.incrementAndGet()}"
       // emitBucketCounts (r17): each flush carries one null-item row
       // with the bucket's exact folded weight — their sum is the
       // exact stream length, so the audit below no longer re-counts
       // the retained files (the recount re-paid the tokenize+explode;
       // a wrong N cannot pass silently — n_total is oracle-hashed)
-      val q = StreamingHeavyHitters.candidates(s, items, k = k,
+      ParityGate.collect(s, "q_stream_hh_sketch_parity") {
+        StreamingHeavyHitters.candidates(s, items, k = k,
           nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore,
           emitBucketCounts = true)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: the post-prune candidate superset (≈ heavy + border)
-      // plus one exact-count row per flush epoch
-      val allRows = s.table(name)
-        .select(col("item"), col("wLower").as("w_lower")).collect()
-      s.catalog.dropTempView(name)
-      val n = allRows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
-      val candRows = allRows.filter(!_.isNullAt(0))
-      val estDf = s.createDataFrame(
-        java.util.Arrays.asList(candRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("item",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("w_lower",
-            org.apache.spark.sql.types.LongType))))
-      // audit-only read of the retained files (sentinels excluded by
-      // ts): certifies found / lower_le_exact / gap_le_bound per true
-      // heavy item against exact counts. Materialized INSIDE the feed
-      // block (r18): the shared feed deletes this gate's sentinel
-      // slices at block exit, so a lazy plan escaping the block would
-      // list files that no longer exist at action time.
-      val sh = ParityFeed.replay(s, feed)
-        .where(col("tsMicros") <= maxTs)
-        .select(explode(TextOps.shingleStrings(col("text"), 3))
-          .as("gram"))
-      val audit = graft.text.HeavyHitters
-        .mgAudit(sh, col("gram"), estDf, ppm, k, Some(n))
-        .withColumnRenamed("item", "gram")
-      val auditRows = audit.collect() // ≤ |true heavy| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: the post-prune candidate superset (≈ heavy + border)
+        // plus one exact-count row per flush epoch
+        val allRows = sink.select(col("item"), col("wLower").as("w_lower"))
+          .collect()
+        val n = allRows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
+        val candRows = allRows.filter(!_.isNullAt(0))
+        val estDf = s.createDataFrame(java.util.Arrays.asList(candRows: _*),
+          org.apache.spark.sql.types.StructType.fromDDL(
+            "item STRING, w_lower BIGINT"))
+        // audit-only read of the retained files (sentinels excluded by
+        // ts): certifies found / lower_le_exact / gap_le_bound per true
+        // heavy item against exact counts (≤ |true heavy| rows)
+        val sh = ParityFeed.replay(s, feed)
+          .where(col("tsMicros") <= maxTs)
+          .select(explode(TextOps.shingleStrings(col("text"), 3))
+            .as("gram"))
+        graft.text.HeavyHitters
+          .mgAudit(sh, col("gram"), estDf, ppm, k, Some(n))
+          .withColumnRenamed("item", "gram")
       }
       }
     },
@@ -536,9 +479,7 @@ object TextQueries {
     // sketch: every output bit matches the batch kernel, so the gate
     // shares q_sample_weighted's oracle verbatim.
     "q_stream_sample_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingSample
       val IgnoreId = Long.MinValue
       // r18: ONE shared (group, id, weight, ts) documents feed serves
@@ -559,24 +500,16 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSample.Item]
-      val name = s"stream_sample_parity_${sampleRun.incrementAndGet()}"
-      val q = StreamingSample.topK(s, items, k = 100, seed = 11L,
+      ParityGate.collect(s, "q_stream_sample_parity") {
+        StreamingSample.topK(s, items, k = 100, seed = 11L,
           nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: ≤ nBuckets·k flushed rows
-      val flushed = s.table(name).as[StreamingSample.BucketTop]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      StreamingSample.merge(flushed, k = 100)
-        .toDF().select(col("id").as("doc_id"), col("weight").as("n_chars"),
-          col("priority"))
+      }(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: ≤ nBuckets·k flushed rows
+        val flushed = sink.as[StreamingSample.BucketTop].collect().toSeq
+        StreamingSample.merge(flushed, k = 100)
+          .toDF().select(col("id").as("doc_id"), col("weight").as("n_chars"),
+            col("priority"))
       }
       }
     },
@@ -588,9 +521,7 @@ object TextQueries {
     // lang — exactly the batch kernel's per-group row_number, so the
     // gate shares q_sample_stratified_weighted's oracle verbatim.
     "q_stream_stratified_sample_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingSample
       val IgnoreId = Long.MinValue
       // r18: the shared docsample feed (see q_stream_sample_parity)
@@ -610,24 +541,16 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSample.GItem]
-      val name = s"stream_strat_sample_${sampleRun.incrementAndGet()}"
-      val q = StreamingSample.topKByGroup(s, items, k = 20, seed = 11L,
+      ParityGate.collect(s, "q_stream_stratified_sample_parity") {
+        StreamingSample.topKByGroup(s, items, k = 20, seed = 11L,
           nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // bounded: ≤ |langs|·nBuckets·k flushed rows
-      val flushed = s.table(name).as[StreamingSample.GroupBucketTop]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
-      StreamingSample.mergeByGroup(flushed, k = 20)
-        .toDF().select(col("group").as("lang"), col("id").as("doc_id"),
-          col("weight").as("n_chars"), col("priority"), col("rk"))
+      }(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
+          maxTs + 2L * 86400L * 1000000L)) { sink =>
+        // bounded: ≤ |langs|·nBuckets·k flushed rows
+        val flushed = sink.as[StreamingSample.GroupBucketTop].collect().toSeq
+        StreamingSample.mergeByGroup(flushed, k = 20)
+          .toDF().select(col("group").as("lang"), col("id").as("doc_id"),
+            col("weight").as("n_chars"), col("priority"), col("rk"))
       }
       }
     },

@@ -1,10 +1,7 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.{StreamingDfg, TraceAssembly}
 import graft.xes.{XesReader, XesWriter}
@@ -18,12 +15,13 @@ import graft.xes.{XesReader, XesWriter}
   * XesFixtureSpec cross-checks fixture ↔ spec counts — the driver
   * gate then hash-compares full rows.
   *
-  * The corpus path is fixed (the XES spec lives with the reference);
-  * `sfDir` is unused.
+  * The book corpus resolves through [[graft.Fixtures.book]]; the
+  * quarantine, validation and write-roundtrip queries read
+  * reference-only inputs. `sfDir` is unused.
   */
 object XesQueries {
 
-  private val book = "/root/reference/static/xes/book"
+  private val book = graft.Fixtures.book
   private val fixtures = graft.Fixtures.dir
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -99,7 +97,6 @@ object XesQueries {
     // streaming DFG edges, aggregated after completion; the oracle
     // derives the same edge multiset from the batch events fixture.
     "q_stream_dfg_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       val src = XesReader.readEvents(s, s"$book/*.xes").toDF()
         .filter(col("traceIdx").isNotNull && col("activity").isNotNull &&
@@ -119,27 +116,13 @@ object XesQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val name = s"stream_dfg_parity_${parityRun.incrementAndGet()}"
-      val q = StreamingDfg.edges(s, events, gapSeconds = 60)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "_sentinel", "y",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // materialize (bounded: one row per distinct activity pair),
-      // then drop the per-invocation memory-sink view so repeated
-      // runs don't accumulate sink tables in driver memory
-      val res = s.table(name)
-        .groupBy(col("actFrom").as("act_from"), col("actTo").as("act_to"))
-        .agg(count(lit(1)).as("n"))
-      val rows = res.collect()
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_dfg_parity") {
+        StreamingDfg.edges(s, events, gapSeconds = 60)
+      }(() => ParityFeed.sentinel(s, feed, "_sentinel", "y",
+          maxTs + 2L * 86400L * 1000000L)) {
+        // bounded: one row per distinct activity pair
+        _.groupBy(col("actFrom").as("act_from"), col("actTo").as("act_to"))
+          .agg(count(lit(1)).as("n"))
       }
       }
     },
@@ -162,37 +145,18 @@ object XesQueries {
     // The parse is stateless, so no watermark state exists to drop
     // rows; LateDrops still asserts the zero.
     "q_stream_xes_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import scala.jdk.CollectionConverters._
-      val drop = Files.createTempDirectory("xes_stream_drop")
-      try {
-        listDir(Paths.get(book))
-          .filter(_.toString.endsWith(".xes"))
-          .foreach(p => Files.copy(p, drop.resolve(p.getFileName),
-            StandardCopyOption.REPLACE_EXISTING))
-        val events = XesReader.readEventsStream(s, drop.toString,
-          maxFilesPerTrigger = Some(5))
-        val name = s"stream_xes_parity_${parityRun.incrementAndGet()}"
-        val q = events.writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try q.processAllAvailable() finally q.stop()
-        graft.streaming.LateDrops.assertNone(q, name)
+      ParityFeed.withFileDrop(book, ".xes") { drop =>
         val seqActs = transform(
           array_sort(collect_list(struct(col("seq"), col("activity")))),
           x => x.getField("activity"))
-        val res = s.table(name).filter(col("traceIdx").isNotNull)
-          .groupBy(col("file"), col("traceIdx").as("trace_idx"))
-          .agg(count(lit(1)).as("n_events"),
-            md5(concat_ws(">", seqActs)).as("seq_md5"))
-        val rows = res.collect() // one row per (file, trace): corpus-bounded
-        val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-        s.catalog.dropTempView(name)
-        out
-      } finally {
-        listDir(drop).foreach(Files.delete)
-        Files.delete(drop)
-      }
+        ParityGate.collect(s, "q_stream_xes_parity") {
+          XesReader.readEventsStream(s, drop, maxFilesPerTrigger = Some(5))
+        }() {
+          _.filter(col("traceIdx").isNotNull) // one row per (file, trace)
+            .groupBy(col("file"), col("traceIdx").as("trace_idx"))
+            .agg(count(lit(1)).as("n_events"),
+              md5(concat_ws(">", seqActs)).as("seq_md5"))
+        }
       }
     },
 
@@ -206,7 +170,8 @@ object XesQueries {
     // deliberately. Covers the writer half of xes.rs:717-784.
     "q_xes_write_roundtrip" -> { (s, _) =>
       import s.implicits._
-      val xlog = XesReader.read(s, s"$book/*.xes")
+      // the pinned digests are of the reference files' rendering
+      val xlog = XesReader.read(s, "/root/reference/static/xes/book/*.xes")
       XesWriter.toXmlStrings(s, xlog).map { case (file, xml) =>
         val bytes = xml.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val sha = java.security.MessageDigest.getInstance("SHA-256")
@@ -228,7 +193,6 @@ object XesQueries {
     // missing 0 / remaining 0 per trace; the streaming run must
     // reproduce it trace by trace.
     "q_stream_conformance_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
       import s.implicits._
       val l1 = XesReader.withTs(XesReader.readEvents(s, s"$book/L1.xes")).cache()
       val (net, src) = try {
@@ -244,43 +208,18 @@ object XesQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val name = s"stream_conf_parity_${parityRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingConformance
-        .replayFitness(s, events, gapSeconds = 60, net)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "_sentinel", "y",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name)
-        .filter(col("caseId") =!= "_sentinel")
-        .select(col("caseId").as("case_id"), col("nEvents").as("n_events"),
-          col("fitness"), col("missing"), col("remaining"))
-      val rows = res.collect() // one row per L1 trace (6)
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      ParityGate.collect(s, "q_stream_conformance_parity") {
+        graft.streaming.StreamingConformance
+          .replayFitness(s, events, gapSeconds = 60, net)
+      }(() => ParityFeed.sentinel(s, feed, "_sentinel", "y",
+          maxTs + 2L * 86400L * 1000000L)) {
+        _.filter(col("caseId") =!= "_sentinel") // one row per L1 trace (6)
+          .select(col("caseId").as("case_id"), col("nEvents").as("n_events"),
+            col("fitness"), col("missing"), col("remaining"))
       }
       }
     }
   )
-
-  private val parityRun = new AtomicInteger(0)
-
-  /** Materialized directory listing — Files.list returns a Stream
-    * backed by an open DirectoryStream that must be CLOSED, or each
-    * call leaks a file descriptor until GC. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.toVector
-    } finally st.close()
-  }
 
   def oracle: Map[String, String] = Map(
     "q_xes_read_events" ->

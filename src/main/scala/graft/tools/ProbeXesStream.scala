@@ -36,8 +36,7 @@ object ProbeXesStream {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("32")
     GraftSession.quietWindowWarnings()
-    val book = sys.env.getOrElse("SPARK_GRAFT_XES_BOOK",
-      "/root/reference/static/xes/book")
+    val book = sys.env.getOrElse("SPARK_GRAFT_XES_BOOK", graft.Fixtures.book)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     var n = 0

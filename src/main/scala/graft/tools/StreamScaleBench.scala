@@ -1915,8 +1915,7 @@ object StreamScaleBench {
       val xfpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_XES_FPT", "32").toInt
       // corpus dir is overridable so the row runs on boxes without the
       // reference checkout at its canonical path (r11 advice)
-      val book = sys.env.getOrElse("SPARK_GRAFT_XES_BOOK",
-        "/root/reference/static/xes/book")
+      val book = sys.env.getOrElse("SPARK_GRAFT_XES_BOOK", graft.Fixtures.book)
       val filesDir = Paths.get(s"$xdir/files")
       // the corpus staging depends only on copies — the --files knob
       // sizes event-parquet slices, not this dir (review finding: an

@@ -26,7 +26,7 @@ import graft.xes.{XesReader, XesWriter}
 object XesExampleBench {
   def main(args: Array[String]): Unit = {
     val inPath = args.headOption.getOrElse(
-      "/root/reference/static/xes/book/bigger-example.xes")
+      s"${graft.Fixtures.book}/bigger-example.xes")
     val outPath = if (args.length > 1) args(1) else "/tmp/out.xes"
     val spark = GraftSession.get("8")
     spark.range(1000L).count() // session warmup

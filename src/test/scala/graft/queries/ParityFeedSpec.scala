@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -91,6 +93,62 @@ class ParityFeedSpec extends SparkSpec {
       (feed, _) => feed.dir
     }
     assert(dirB != dir1)
+  }
+
+  test("withSharedFeed deletes its own sentinel slices and nothing else") {
+    val k = s"spec-own:${System.identityHashCode(this)}"
+    val (dir, maxTs) = ParityFeed.withSharedFeed(spark, k, srcDf(20)) {
+      (feed, maxTs) => (feed.dir, maxTs)
+    }
+    def names = new java.io.File(dir).list().toSet
+    val staged = names
+    val foreign = java.nio.file.Paths.get(dir, "foreign-slice.bin")
+    ParityFeed.withSharedFeed(spark, k,
+      sys.error("must not restage"): org.apache.spark.sql.DataFrame) {
+      (feed, _) =>
+        ParityFeed.sentinel(spark, feed, -1L, "_s", maxTs + 86400000000L)
+        java.nio.file.Files.write(foreign, Array[Byte](1, 2, 3))
+        assert(names.exists(_.startsWith("sentinel-")))
+    }
+    try assert(names == staged + foreign.getFileName.toString,
+      "the block must delete its own slice (and side file), only those")
+    finally java.nio.file.Files.deleteIfExists(foreign)
+  }
+
+  test("a concurrent lister reads a complete footer from every visible slice") {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    ParityFeed.withFeed(spark, srcDf(10), slices = 1) { (feed, maxTs) =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listing = new java.util.concurrent.CountDownLatch(1)
+      // the file source's view of the dir: every name not hidden by a
+      // leading '.' or '_'
+      val lister = new Thread(() => while (!done.get()) {
+        new java.io.File(feed.dir).listFiles()
+          .filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+          .foreach { f =>
+            try {
+              val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+                new org.apache.hadoop.fs.Path(f.getPath), conf))
+              try r.getFooter finally r.close()
+              reads.incrementAndGet()
+            } catch {
+              case e: Exception => errors.add(s"${f.getName}: $e")
+            }
+          }
+        listing.countDown()
+      })
+      lister.start()
+      listing.await() // the appends below race a running lister
+      try (1 to 200).foreach(i =>
+        ParityFeed.sentinel(spark, feed, -i.toLong, "_s", maxTs + i))
+      finally { done.set(true); lister.join() }
+      assert(errors.isEmpty, errors.asScala.take(3).mkString("; "))
+      assert(reads.get() > 1)
+    }
   }
 
   test("withFeed cleans up its drop-dir; withFeedDoubled stages the doubled multiset") {

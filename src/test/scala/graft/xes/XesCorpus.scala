@@ -21,11 +21,8 @@ object XesCorpus {
   val inRepoBook: String = graft.Fixtures.path("xes/book")
 
   /** The reference's `xes/book` directory where it exists, else
-    * [[inRepoBook]]. */
-  val book: String = {
-    val ref = referenceStatic.resolve("xes/book")
-    if (Files.isDirectory(ref)) ref.toString else inRepoBook
-  }
+    * [[inRepoBook]] ([[graft.Fixtures.book]]). */
+  val book: String = graft.Fixtures.book
 
   /** `<reference static>/<sub>`. Call inside a test body: it cancels the
     * test, naming the path, where the reference checkout lacks it. */
