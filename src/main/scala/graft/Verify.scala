@@ -19,7 +19,8 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(absentInput(e).fold(s"[verify] $name failed: ${e.getMessage}")(
+          path => s"[verify] $name absent: $path"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -64,4 +65,12 @@ object Verify {
       digests.mkString("{", ",", "}"))
     spark.stop()
   }
+
+  /** The input a query failed on because it does not exist: Spark's
+    * PATH_NOT_FOUND anywhere in the cause chain. */
+  private def absentInput(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: org.apache.spark.SparkThrowable if t.getCondition == "PATH_NOT_FOUND" =>
+        t.getMessageParameters.get("path")
+    }
 }

@@ -37,7 +37,8 @@ object FlowRunner {
     streams: Map[String, XesReader.XLog],
     cached: Seq[Dataset[_]] = Nil) {
     /** Releases executor storage pinned by the flow: each XesReader
-      * source's component cache and the Duplicator caches at the tee;
+      * source's component cache, the Duplicator caches at the tee and
+      * the variant tables the miner segments cached;
       * call when the flow's outputs are no longer needed so repeated
       * runs in one long-lived session don't accumulate cached blocks. */
     def unpersist(): Unit = cached.foreach(_.unpersist())
@@ -262,6 +263,13 @@ object FlowRunner {
       emitStreams: Map[String, XesReader.XLog] => Unit,
       registerCached: Dataset[_] => Unit): XesReader.XLog = {
     import spark.implicits._
+    // Alpha, Inductive and TokenReplay cache the events' variant table
+    // (graft.ops.Variants); the flow releases it on unpersist
+    def minedEvents(): DataFrame = {
+      val ev = minerEvents(in)
+      registerCached(graft.ops.Variants.frame(ev, "_case", "activity", "tsMicros", "seq"))
+      ev
+    }
     seg.name match {
       case "Void" => in
 
@@ -397,7 +405,7 @@ object FlowRunner {
         in
 
       case "AlphaMiner" =>
-        val net = graft.ops.Alpha.mine(minerEvents(in),
+        val net = graft.ops.Alpha.mine(minedEvents(),
           "_case", "activity", "tsMicros", "seq")
         seg.artifactSender.foreach(ch => emitArtifacts(Map(ch -> net)))
         in
@@ -417,7 +425,7 @@ object FlowRunner {
         in
 
       case "InductiveMiner" =>
-        val tree = graft.ops.Inductive.mine(minerEvents(in),
+        val tree = graft.ops.Inductive.mine(minedEvents(),
           "_case", "activity", "tsMicros", "seq")
         seg.artifactSender.foreach(ch => emitArtifacts(Map(ch -> tree)))
         in
@@ -428,7 +436,7 @@ object FlowRunner {
         }.getOrElse(throw new IllegalArgumentException(
           "TokenReplay needs a WorkflowNet artifact on a receiver channel"))
         val fitness = graft.ops.Replay.logFitness(
-          graft.ops.Replay.variantFitness(spark, minerEvents(in),
+          graft.ops.Replay.variantFitness(spark, minedEvents(),
             "_case", "activity", "tsMicros", "seq", net))
         seg.artifactSender.foreach(ch => emitArtifacts(Map(ch -> fitness)))
         in

@@ -1,8 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Optimal-alignment conformance checking (Adriansyah/van der Aalst;
   * public algorithm family) — the exact counterpart of the heuristic
@@ -25,11 +23,12 @@ import org.apache.spark.sql.functions._
   * guards degenerate inputs.
   *
   * Scale shape — same split as [[Replay]]: alignment is per-VARIANT
-  * (distinct activity sequence), not per-trace. One case-key shuffle
-  * builds the variant table; each variant aligns once in an executor
-  * against the broadcast net, weighted by case count. The imperative
-  * search runs on the already-tiny variant side (documented
-  * last-resort tier), never on the event mass.
+  * (distinct null-free activity sequence of the frame's [[Variants]]
+  * table), not per-trace, each aligned once and weighted by case
+  * count — on the driver into a local frame when the table is there,
+  * else in executors over the cached table. The imperative search
+  * runs on the already-tiny variant side (documented last-resort
+  * tier), never on the event mass.
   */
 object Alignments {
 
@@ -114,32 +113,24 @@ object Alignments {
     * `1 − cost / (|trace| + shortestModelRun)`. */
   def variantAlignments(spark: SparkSession, events: DataFrame,
       caseCol: String, activityCol: String, tsCol: String, tieBreak: String,
+      net: PetriNet): Dataset[VariantAlignment] =
+    alignmentsOf(Variants.of(events, caseCol, activityCol, tsCol, tieBreak), net)
+
+  private[ops] def alignmentsOf(t: Variants.Table,
       net: PetriNet): Dataset[VariantAlignment] = {
+    val spark = t.frame.sparkSession
     import spark.implicits._
-    val bNet = spark.sparkContext.broadcast(net)
     val emptyCost = shortestModelRunCost(net)
-    val w = Window.partitionBy(col(caseCol))
-      .orderBy(col(tsCol), col(tieBreak))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    events
-      .select(col(caseCol), collect_list(col(activityCol)).over(w).as("_seq"))
-      .groupBy(col(caseCol)).agg(first(col("_seq")).as("_seq"))
-      .groupBy(col("_seq")).agg(count(lit(1)).as("_n"))
-      .as[(Seq[String], Long)]
-      .map { case (seq, n) =>
-        val a = align(bNet.value, seq.toIndexedSeq)
-        val worst = seq.length + emptyCost
-        val fit = if (worst == 0) 1.0 else 1.0 - a.cost.toDouble / worst
-        VariantAlignment(seq, n, a.cost, a.syncMoves, a.modelMoves,
-          a.logMoves, fit)
-      }
+    Variants.mapSequences(t) { case (seq, n) =>
+      val a = align(net, seq.toIndexedSeq)
+      val worst = seq.length + emptyCost
+      val fit = if (worst == 0) 1.0 else 1.0 - a.cost.toDouble / worst
+      VariantAlignment(seq, n, a.cost, a.syncMoves, a.modelMoves,
+        a.logMoves, fit)
+    }
   }
 
   /** Case-weighted alignment fitness in [0,1]. */
-  def logFitness(aligned: Dataset[VariantAlignment]): Double = {
-    val row = aligned.toDF()
-      .agg(sum(col("fitness") * col("nCases")).as("w"),
-        sum(col("nCases")).as("n")).head()
-    row.getDouble(0) / row.getLong(1).toDouble
-  }
+  def logFitness(aligned: Dataset[VariantAlignment]): Double =
+    Variants.caseWeighted(aligned.toDF(), "fitness")
 }

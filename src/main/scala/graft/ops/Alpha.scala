@@ -9,11 +9,13 @@ import org.apache.spark.sql.DataFrame
   * example for exactly this algorithm.
   *
   * Scale shape: the heavy part (directly-follows pairs, alphabet,
-  * start/end activities) is ONE distributed action over the full log,
-  * [[Dfg.collectFootprint]]; the place search runs driver-side over
-  * the collected footprint, which is |activities|² — small by
-  * construction (an activity alphabet is human-scale even when the log
-  * is 100 TB). The subset search is capped by `maxActivities`.
+  * start/end activities) is [[Dfg.collectFootprint]], a fold over the
+  * frame's [[Variants]] table — at most one action over the full log;
+  * the place search runs driver-side over the collected footprint,
+  * which is |activities|² — small by construction (an activity
+  * alphabet is human-scale even when the log is 100 TB). The search
+  * grows only #-independent sets with a common causal neighbour, and
+  * is capped by `maxActivities`.
   */
 object Alpha {
 
@@ -41,24 +43,21 @@ object Alpha {
     def choice(a: String, b: String) = !follows(a, b) && !follows(b, a)
 
     // candidate (A, B): all causal across, all #-independent within
-    def valid(as: Set[String], bs: Set[String]): Boolean =
-      as.nonEmpty && bs.nonEmpty &&
-        as.forall(a => bs.forall(b => causal(a, b))) &&
-        as.forall(a1 => as.forall(a2 => choice(a1, a2))) &&
-        bs.forall(b1 => bs.forall(b2 => choice(b1, b2)))
-
-    val actSeq = acts.toSeq
-    def subsets(xs: Seq[String]): Iterator[Set[String]] =
-      (1 to xs.size).iterator.flatMap(n => xs.combinations(n).map(_.toSet))
-
-    // grow from causal pairs: for tractability enumerate subsets of the
-    // causal-connected neighborhoods only
+    // (each activity with itself too). Sets grow one activity at a time
+    // and stop where they break that, or where `ok` fails — `ok` holds
+    // for every subset of a set it holds for — so exactly the valid
+    // candidates are visited, not every subset of the alphabet.
+    def grow(xs: List[String], ok: Set[String] => Boolean,
+        chosen: Set[String] = Set.empty): Iterator[Set[String]] =
+      xs.tails.flatMap {
+        case x :: rest if choice(x, x) && chosen.forall(choice(x, _)) && ok(chosen + x) =>
+          Iterator.single(chosen + x) ++ grow(rest, ok, chosen + x)
+        case _ => Iterator.empty
+      }
+    val actList = acts.toList
     val candidates = (for {
-      as <- subsets(actSeq.filter(a => actSeq.exists(b => causal(a, b))))
-      outs = actSeq.filter(b => as.forall(a => causal(a, b)))
-      if outs.nonEmpty
-      bs <- subsets(outs)
-      if valid(as, bs)
+      as <- grow(actList, as => actList.exists(b => as.forall(causal(_, b))))
+      bs <- grow(actList.filter(b => as.forall(causal(_, b))), _ => true)
     } yield Place(as, bs)).toSet
 
     // maximal only

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: one shuffle to co-locate each case's events
   * (window partitionBy case), then a partial-aggregated pair count —
   * the same two-exchange plan at 60k rows and at 100 TB. Per-case data
-  * is never materialized on the driver.
+  * is never materialized on the driver; [[collectFootprint]] folds the
+  * per-variant [[Variants]] table instead.
   */
 object Dfg {
 
@@ -42,43 +43,50 @@ object Dfg {
       starts: Map[String, Long],
       ends: Map[String, Long])
 
-  /** [[Footprint]] in one action: ONE window pass over
-    * (case, ts, tieBreak) computes each event's successor activity, a
-    * last-row flag (`lead(true)` is null) and a first-row flag; every
-    * event explodes into tagged `(kind, a, b)` rows — an edge to its
-    * successor, its activity, and its activity again as a start or end
-    * — which one partial-aggregated count reduces to the alphabet-sized
-    * result. Equals [[edges]], `distinct` over the activities,
-    * [[startActivities]] and [[endActivities]], which cost four
-    * actions. Where (ts, tieBreak) is not unique within a case the
-    * first and last events are arbitrary there too, and the two may
-    * resolve such ties differently.
+  /** [[Footprint]] of `events`, a fold over its [[Variants]] table:
+    * each variant adds its case count to every activity, to every
+    * directly-follows pair with a non-null successor, and to its first
+    * and last activity. Equals [[edges]], `distinct` over the
+    * activities, [[startActivities]] and [[endActivities]], which cost
+    * four actions. On the driver when the table is; above the bound,
+    * one aggregate over the cached table. Where (ts, tieBreak) is not
+    * unique within a case the first and last events are arbitrary
+    * there too, and the two may resolve such ties differently.
     */
   def collectFootprint(events: DataFrame, caseCol: String,
-      activityCol: String, tsCol: String, tieBreak: String): Footprint = {
-    val w = Window.partitionBy(col(caseCol)).orderBy(col(tsCol), col(tieBreak))
-    val act = col(activityCol)
-    val none = lit(null).cast("string")
-    def tag(kind: Int, cond: Column, b: Column): Column =
-      when(cond, struct(lit(kind).as("k"), act.as("a"), b.as("b")))
-    val rows = events
-      .select(act, lead(act, 1).over(w).as("_next"),
-        lead(lit(true), 1).over(w).isNull.as("_last"),
-        lag(lit(true), 1).over(w).isNull.as("_first"))
-      .select(explode(array(
-        tag(0, col("_next").isNotNull, col("_next")),
-        tag(1, lit(true), none),
-        tag(2, col("_first"), none),
-        tag(3, col("_last"), none))).as("_t"))
-      .filter(col("_t").isNotNull)
-      .groupBy(col("_t.k"), col("_t.a"), col("_t.b"))
-      .agg(count(lit(1)))
-      .collect()
-    def of(kind: Int) = rows.iterator.filter(_.getInt(0) == kind)
-    def counts(kind: Int) = of(kind).map(r => r.getString(1) -> r.getLong(3)).toMap
-    Footprint(counts(1),
-      of(0).map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap,
-      counts(2), counts(3))
+      activityCol: String, tsCol: String, tieBreak: String): Footprint =
+    footprintOf(Variants.of(events, caseCol, activityCol, tsCol, tieBreak))
+
+  private[ops] def footprintOf(t: Variants.Table): Footprint = {
+    // (kind, a, b) -> cases: kind 0 is a position and its successor
+    // (null at the end), 2 the first and 3 the last activity
+    val counts: Seq[((Int, String, String), Long)] = t.local match {
+      case Some(vs) =>
+        vs.flatMap { v =>
+          val s = v.seq
+          (s.indices.map(i => (0, s(i), s.lift(i + 1).orNull)) :+
+            ((2, s.head, null: String)) :+ ((3, s.last, null: String)))
+            .map(_ -> v.nCases)
+        }.groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      case None =>
+        val s = col("seq")
+        val none = lit(null).cast("string")
+        def tag(kind: Int, a: Column, b: Column): Column =
+          struct(lit(kind).as("k"), a.as("a"), b.as("b"))
+        t.frame
+          .select(col("n_cases"), explode(concat(
+            zip_with(s, slice(s, lit(2), size(s)), tag(0, _, _)),
+            array(tag(2, element_at(s, 1), none), tag(3, element_at(s, -1), none))))
+            .as("_t"))
+          .groupBy(col("_t.k"), col("_t.a"), col("_t.b"))
+          .agg(sum(col("n_cases")))
+          .collect().toSeq
+          .map(r => (r.getInt(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+    }
+    def of(kind: Int) = counts.collect { case ((`kind`, a, _), n) => a -> n }
+    Footprint(of(0).groupMapReduce(_._1)(_._2)(_ + _),
+      counts.collect { case ((0, a, b), n) if b != null => (a, b) -> n }.toMap,
+      of(2).toMap, of(3).toMap)
   }
 
   /** Footprint matrix (alpha-miner relations) derived from the DFG:

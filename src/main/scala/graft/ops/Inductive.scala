@@ -13,8 +13,9 @@ import ProcessTree._
   * [[Dfg.dependencyMeasures]] (heuristics measures).
   *
   * Scale shape — same split as [[Alpha]]: the single heavy pass is
-  * the distributed [[Dfg.collectFootprint]] over the full log (one
-  * case-key shuffle + partial-agg, one action); the recursive cut
+  * [[Dfg.collectFootprint]], a fold over the frame's [[Variants]]
+  * table (one action, shared with every other variant reader of the
+  * frame); the recursive cut
   * search then runs driver-side over the collected graph, which is
   * |activities|² — alphabet-sized no matter how many terabytes of
   * events produced it.

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ETC-style precision (escaping-edges; Muñoz-Gama/Carmona family,
@@ -16,14 +15,16 @@ import org.apache.spark.sql.functions._
   * A model that allows exactly the observed behavior scores 1; a
   * flower model scores near 0 on any non-trivial log.
   *
-  * Scale shape: prefix states are generated per VARIANT (one case-key
-  * shuffle builds the variant table; each variant of length L yields
-  * its L proper prefixes weighted by case count), aggregated by prefix
-  * in one partial-agg shuffle — prefix rows ≤ event rows, usually far
-  * fewer. Each distinct prefix then computes `en_M` once in an
-  * executor against the broadcast net (BFS with τ-closure over the
-  * alphabet-sized safe net). Unreplayable prefixes (non-fitting log)
-  * contribute nothing, per the standard ETC assumption.
+  * Scale shape: prefix states are generated per VARIANT (the replay
+  * view of the frame's [[Variants]] table; each variant of length L
+  * yields its L proper prefixes weighted by case count) and grouped
+  * by prefix; each distinct prefix then computes `en_M` once (BFS
+  * with τ-closure over the alphabet-sized safe net). On the driver
+  * into a local frame when the table is there; otherwise the prefixes
+  * aggregate in one partial-agg shuffle over the cached table —
+  * prefix rows ≤ event rows, usually far fewer — and `en_M` runs in
+  * executors. Unreplayable prefixes (non-fitting log) contribute
+  * nothing, per the standard ETC assumption.
   */
 object Precision {
 
@@ -79,38 +80,47 @@ object Precision {
   /** Per-prefix escaping-edge table: weight, |en_M|, |en_M \ en_L|. */
   def prefixTable(spark: SparkSession, events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String,
+      net: PetriNet): Dataset[PrefixPrecision] =
+    prefixTableOf(Variants.of(events, caseCol, activityCol, tsCol, tieBreak), net)
+
+  private[ops] def prefixTableOf(t: Variants.Table,
       net: PetriNet): Dataset[PrefixPrecision] = {
+    val spark = t.frame.sparkSession
     import spark.implicits._
-    val bNet = spark.sparkContext.broadcast(net)
-    val w = Window.partitionBy(col(caseCol))
-      .orderBy(col(tsCol), col(tieBreak))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    events
-      .select(col(caseCol), collect_list(col(activityCol)).over(w).as("_seq"))
-      .groupBy(col(caseCol)).agg(first(col("_seq")).as("_seq"))
-      .groupBy(col("_seq")).agg(count(lit(1)).as("_n"))
-      .as[(Seq[String], Long)]
-      .flatMap { case (seq, n) =>
-        seq.indices.map(i => (seq.take(i), seq(i), n))
-      }
-      .toDF("_prefix", "_next", "_n")
-      .groupBy(col("_prefix"))
-      .agg(collect_set(col("_next")).as("_enLog"),
-        sum(col("_n")).as("_w"))
-      .as[(Seq[String], Seq[String], Long)]
-      .map { case (prefix, enLog, wSum) =>
-        val enM = enabledAfter(bNet.value, prefix)
-        PrefixPrecision(prefix, wSum, enM.size, (enM -- enLog.toSet).size)
-      }
+    Variants.sequences(t) match {
+      case Left(seqs) => spark.createDataset(seqs.flatMap(steps).groupBy(_._1)
+        .toSeq.map { case (p, rs) => row(net, p, rs.map(_._2).toSet, rs.map(_._3).sum) })
+      case Right(seqs) => seqs.flatMap(steps)
+        .toDF("_prefix", "_next", "_n")
+        .groupBy(col("_prefix"))
+        .agg(collect_set(col("_next")).as("_enLog"), sum(col("_n")).as("_w"))
+        .as[(Seq[String], Seq[String], Long)]
+        .map { case (p, enLog, w) => row(net, p, enLog.toSet, w) }
+    }
+  }
+
+  /** Each proper prefix of a variant with the activity that follows it. */
+  private def steps(v: (Seq[String], Long)): Seq[(Seq[String], String, Long)] =
+    v._1.indices.map(i => (v._1.take(i), v._1(i), v._2))
+
+  private def row(net: PetriNet, prefix: Seq[String], enLog: Set[String],
+      w: Long): PrefixPrecision = {
+    val enM = enabledAfter(net, prefix)
+    PrefixPrecision(prefix, w, enM.size, (enM -- enLog).size)
   }
 
   /** The scalar ETC precision in [0,1]. Prefixes the model cannot
     * replay are excluded (their `enabledModel` is 0). */
   def precision(table: Dataset[PrefixPrecision]): Double = {
-    val row = table.toDF()
-      .agg(sum(col("w") * col("escaping")).as("esc"),
-        sum(col("w") * col("enabledModel")).as("en")).head()
-    val en = row.getLong(1)
-    if (en == 0L) 1.0 else 1.0 - row.getLong(0).toDouble / en.toDouble
+    val (esc, en) =
+      if (Variants.isLocal(table)) table.collect().foldLeft((0L, 0L)) {
+        case ((e, m), p) => (e + p.w * p.escaping, m + p.w * p.enabledModel) }
+      else {
+        val row = table.toDF()
+          .agg(sum(col("w") * col("escaping")).as("esc"),
+            sum(col("w") * col("enabledModel")).as("en")).head()
+        (row.getLong(0), row.getLong(1))
+      }
+    if (en == 0L) 1.0 else 1.0 - esc.toDouble / en.toDouble
   }
 }

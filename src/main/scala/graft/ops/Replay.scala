@@ -1,8 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Token-replay conformance checking (Rozinat/van der Aalst fitness)
   * of a log against a workflow net — the "check" half of the
@@ -10,14 +8,15 @@ import org.apache.spark.sql.functions._
   * reference's scope (like the miners themselves, lib.rs:11-22 lists
   * the direction only).
   *
-  * Scale shape: replay is per-VARIANT, not per-trace — the variant
-  * table is the distinct activity sequences (usually orders of
-  * magnitude smaller than the trace count), each replayed once in an
-  * executor against the broadcast net and weighted by its case count.
-  * The per-variant replay is genuinely imperative token bookkeeping,
-  * so it runs as a typed `map` over the variant Dataset — the
-  * documented last-resort tier, applied to the already-tiny side of
-  * the data.
+  * Scale shape: replay is per-VARIANT, not per-trace — it maps over
+  * the replay view of the frame's [[Variants]] table (the distinct
+  * null-free activity sequences, usually orders of magnitude fewer
+  * than the traces), each replayed once and weighted by its case
+  * count. A table of at most [[Variants.SampleN]] variants replays on
+  * the driver into a local frame, which [[logFitness]] sums with no
+  * job; a larger one replays as a typed `map` over the cached table —
+  * the documented last-resort tier, applied to the already-tiny side
+  * of the data.
   *
   * Replay semantics: implicit source place (feeds the start
   * activities) and sink place (fed by the end activities); firing an
@@ -67,25 +66,18 @@ object Replay {
   /** Per-variant fitness table for a log against `net`. */
   def variantFitness(spark: SparkSession, events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String,
+      net: Alpha.WorkflowNet): Dataset[VariantFitness] =
+    fitnessOf(Variants.of(events, caseCol, activityCol, tsCol, tieBreak), net)
+
+  private[ops] def fitnessOf(t: Variants.Table,
       net: Alpha.WorkflowNet): Dataset[VariantFitness] = {
+    val spark = t.frame.sparkSession
     import spark.implicits._
-    val bNet = spark.sparkContext.broadcast(net)
-    val w = Window.partitionBy(col(caseCol))
-      .orderBy(col(tsCol), col(tieBreak))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    events
-      .select(col(caseCol), collect_list(col(activityCol)).over(w).as("_seq"))
-      .groupBy(col(caseCol)).agg(first(col("_seq")).as("_seq"))
-      .groupBy(col("_seq")).agg(count(lit(1)).as("_n"))
-      .as[(Seq[String], Long)]
-      .map { case (seq, n) => replayVariant(bNet.value, seq).copy(nCases = n) }
+    Variants.mapSequences(t) { case (seq, n) =>
+      replayVariant(net, seq).copy(nCases = n) }
   }
 
   /** Case-weighted log fitness in [0,1]. */
-  def logFitness(fitness: Dataset[VariantFitness]): Double = {
-    val row = fitness.toDF()
-      .agg(sum(col("fitness") * col("nCases")).as("w"),
-        sum(col("nCases")).as("n")).head()
-    row.getDouble(0) / row.getLong(1).toDouble
-  }
+  def logFitness(fitness: Dataset[VariantFitness]): Double =
+    Variants.caseWeighted(fitness.toDF(), "fitness")
 }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * component.rs:76-81 / 155-160).
   *
   * Scale shape: both are one shuffle on the case key (window
-  * partitionBy), then pure map-side arithmetic; the variant count adds
-  * one partial-agg shuffle on the (small) variant string.
+  * partitionBy), then pure map-side arithmetic; the variant views read
+  * the [[Variants]] table, one partial-agg shuffle on the sequence
+  * and one on the (small) variant string.
   */
 object Sessionize {
 
@@ -136,9 +137,9 @@ object Sessionize {
         count(lit(1)).as("n_events"))
   }
 
-  /** Per-case variant strings — the shared first stage of the variant
-    * family: one partition-level sort (window) + once-per-case
-    * collect_list, no interpreted comparators. */
+  /** Per-case variant strings — the per-case rows
+    * [[filterTopKVariants]] needs: one partition-level sort (window) +
+    * once-per-case collect_list, no interpreted comparators. */
   def caseVariants(events: DataFrame, caseCol: String, activityCol: String,
       tsCol: String, tieBreak: String): DataFrame = {
     val w = Window.partitionBy(col(caseCol))
@@ -152,12 +153,11 @@ object Sessionize {
 
   /** Variant log: one representative case per distinct variant (the
     * min case id) with its frequency — the standard reduction of a
-    * huge log to its unique behaviors. */
+    * huge log to its unique behaviors. The string view of the frame's
+    * [[Variants]] table, so a cached table serves it. */
   def variantRepresentatives(events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String): DataFrame =
-    caseVariants(events, caseCol, activityCol, tsCol, tieBreak)
-      .groupBy("variant")
-      .agg(min(col(caseCol)).as("rep_case"), count(lit(1)).as("n_cases"))
+    Variants.strings(Variants.frame(events, caseCol, activityCol, tsCol, tieBreak))
 
   /** Keeps only the events of cases whose variant is among the k most
     * frequent (count desc, variant string tiebreak — total order).
@@ -180,20 +180,10 @@ object Sessionize {
   }
 
   /** Trace variants: the ordered activity sequence per case, counted.
-    * The sequence string is the trace's classifier identity.
-    *
-    * Plan shape: ordering comes from the window's partition-level
-    * UnsafeSort on (case, ts, tieBreak) — codegen'd, cache-friendly —
-    * and `collect_list` over the unbounded frame evaluates ONCE per
-    * case, collecting only the activity strings. (The previous form
-    * sorted a per-case array of 3-field structs with the interpreted
-    * `sort_array` comparator — 2× the shuffled bytes and ~3× the
-    * time at sf0.1.) The per-case dedup agg reuses the window's hash
-    * partitioning, so the whole reshape is one exchange on the case
-    * key plus one on the (small) variant string. */
+    * The sequence string is the trace's classifier identity — the
+    * [[variantRepresentatives]] projection. */
   def variants(events: DataFrame, caseCol: String, activityCol: String,
       tsCol: String, tieBreak: String): DataFrame =
-    caseVariants(events, caseCol, activityCol, tsCol, tieBreak)
-      .groupBy("variant")
-      .agg(count(lit(1)).as("n_cases"))
+    variantRepresentatives(events, caseCol, activityCol, tsCol, tieBreak)
+      .drop("rep_case")
 }

@@ -25,11 +25,10 @@ import graft.dedup.Dedup
   * union-find below 2²² edges, distributed large-star/small-star
   * contraction above).
   *
-  * Small inventories skip all of that: [[clusterVariants]]' one probe
-  * action already returns every variant when there are at most
-  * [[SampleN]] (1001) of them, and the edit pairs, components and
-  * labels then come from a driver-side sweep and union-find, with no
-  * further Spark job.
+  * Small inventories skip all of that: when the frame's [[Variants]]
+  * table holds at most [[Variants.SampleN]] (1001) variants it is
+  * already on the driver, and the edit pairs, components and labels
+  * come from a driver-side sweep and union-find, with no Spark job.
   */
 object TraceCluster {
 
@@ -105,68 +104,49 @@ object TraceCluster {
     // probe sample ride ONE eager action ([[probeInventory]], the r11
     // judge fold) — the natural path costs exactly one
     // plan-construction job.
-    pairsAfter(variants, probeInventory(variants), maxDist)
+    probeInventory(variants) match {
+      case None => pairsOf(variants, maxDist) // empty inventory
+      case Some((stripped, sample)) =>
+        dominantAffixes(sample) match {
+          case affixes if affixes.size >= 2 =>
+            multiGroupedPairs(stripped, affixes, maxDist)
+          case _ =>
+            dominantAffix(sample) match {
+              case Some((affix, isSuffix)) =>
+                groupedPairs(stripped, affix, isSuffix, maxDist)
+              case None => pairsOf(stripped, maxDist)
+            }
+        }
+    }
   }
-
-  /** [[editPairs]] on an inventory already probed by
-    * [[probeInventory]]: the defense chain picks the plan from the
-    * probe's sample. */
-  private def pairsAfter(variants: DataFrame, probe: Option[Probe],
-      maxDist: Int): DataFrame = probe match {
-    case None => pairsOf(variants, maxDist) // empty inventory
-    case Some(p) =>
-      dominantAffixes(p.sample) match {
-        case affixes if affixes.size >= 2 =>
-          multiGroupedPairs(p.stripped, affixes, maxDist)
-        case _ =>
-          dominantAffix(p.sample) match {
-            case Some((affix, isSuffix)) =>
-              groupedPairs(p.stripped, affix, isSuffix, maxDist)
-            case None => pairsOf(p.stripped, maxDist)
-          }
-      }
-  }
-
-  /** What [[probeInventory]] learns in its one action: the post-strip
-    * plan, the post-strip sample, and — when the inventory holds at
-    * most [[SampleN]] rows, so the sample IS the inventory — every raw
-    * `(variant, vid, n_cases)` row. */
-  private case class Probe(stripped: DataFrame, sample: Array[String],
-      whole: Option[Array[(String, Long, Long)]])
 
   /** The defense chain's ONE eager job: the global-strip agg
-    * (min/max/reverse-min/max/minlen and the row count) and the
-    * [[SampleN]]-row deterministic probe sample ride a single
-    * `collect()` as a two-branch union, replacing the r11 pair of jobs.
-    * The strip is applied to the sample DRIVER-side — the strip is the
-    * same bijective per-string trim the returned plan applies (every
-    * string carries the affix, so trimming is injective), hence probing
+    * (min/max/reverse-min/max/minlen) and the [[Variants.SampleN]]-row
+    * deterministic probe sample ride a single `collect()` as a
+    * two-branch union, replacing the r11 pair of jobs. The strip is
+    * applied to the sample DRIVER-side — the strip is the same
+    * bijective per-string trim the returned plan applies (every string
+    * carries the affix, so trimming is injective), hence probing
     * stripped sample strings equals sampling the stripped inventory,
     * up to the hash-order key being the raw instead of the stripped
     * string — a heuristic-only difference: any partition the probes
-    * pick is sound ([[groupedPairs]]). Returns None on an empty
-    * inventory. Sample rows also carry `rep_case` and `n_cases`, so
-    * at most [[SampleN]] rows the probe holds the whole inventory
-    * ([[Probe.whole]]) and [[clusterVariants]] finishes on the driver;
-    * [[MinSampleN]] floors the family probes themselves. */
-  private def probeInventory(variants: DataFrame): Option[Probe] = {
+    * pick is sound ([[groupedPairs]]). Returns the post-strip plan and
+    * sample, or None on an empty inventory; [[MinSampleN]] floors the
+    * family probes themselves. */
+  private def probeInventory(variants: DataFrame): Option[(DataFrame, Array[String])] = {
     val vcol = col("variant")
     val nullS = lit(null).cast("string")
-    val nullL = lit(null).cast("long")
     val aggBranch = variants.agg(
         min(vcol).as("_s1"), max(vcol).as("_s2"),
         min(reverse(vcol)).as("_s3"), max(reverse(vcol)).as("_s4"),
-        min(length(vcol)).as("_ml"), count(lit(1)).as("_n"))
+        min(length(vcol)).as("_ml"))
       .select(lit(0).as("_kind"), col("_s1"), col("_s2"), col("_s3"),
-        col("_s4"), col("_ml"), col("_n"), nullS.as("_v"),
-        nullL.as("_vid"), nullL.as("_cases"))
+        col("_s4"), col("_ml"), nullS.as("_v"))
     val sampleBranch = variants
-      .orderBy(xxhash64(vcol), vcol).limit(SampleN)
+      .orderBy(xxhash64(vcol), vcol).limit(Variants.SampleN)
       .select(lit(1).as("_kind"), nullS.as("_s1"), nullS.as("_s2"),
         nullS.as("_s3"), nullS.as("_s4"),
-        lit(null).cast("int").as("_ml"), nullL.as("_n"), vcol.as("_v"),
-        col("rep_case").cast("long").as("_vid"),
-        col("n_cases").cast("long").as("_cases"))
+        lit(null).cast("int").as("_ml"), vcol.as("_v"))
     // 1 agg row + ≤ SampleN sample rows — bounded collect, one action
     val rows = aggBranch.unionByName(sampleBranch).collect()
     val agg = rows.find(_.getInt(0) == 0).get
@@ -174,17 +154,12 @@ object TraceCluster {
     val pre = lcpLen(agg.getString(1), agg.getString(2))
     val suf = math.max(0, math.min(
       lcpLen(agg.getString(3), agg.getString(4)), agg.getInt(5) - pre))
-    val sampled = rows.filter(_.getInt(0) == 1)
-    val rawSample = sampled.map(_.getString(7))
-    val whole =
-      if (agg.getLong(6) > SampleN ||
-          sampled.exists(r => r.isNullAt(8) || r.isNullAt(9))) None
-      else Some(sampled.map(r => (r.getString(7), r.getLong(8), r.getLong(9))))
-    if (pre == 0 && suf == 0) Some(Probe(variants, rawSample, whole))
-    else Some(Probe(
+    val rawSample = rows.filter(_.getInt(0) == 1).map(_.getString(6))
+    if (pre == 0 && suf == 0) Some((variants, rawSample))
+    else Some((
       variants.withColumn("variant",
         vcol.substr(lit(pre + 1), length(vcol) - (pre + suf))),
-      rawSample.map(stripStr(_, pre, suf)), whole))
+      rawSample.map(stripStr(_, pre, suf))))
   }
 
   /** Driver-side twin of the plan-level affix trim, in code points
@@ -203,7 +178,7 @@ object TraceCluster {
   private def sampleVariants(variants: DataFrame): Array[String] =
     variants.select(col("variant"))
       .orderBy(xxhash64(col("variant")), col("variant"))
-      .limit(SampleN).collect().map(_.getString(0))
+      .limit(Variants.SampleN).collect().map(_.getString(0))
 
   /** The blocking+verify pipeline on an (already-stripped) inventory —
     * exactly the pre-r11 `editPairs` body. */
@@ -249,23 +224,18 @@ object TraceCluster {
     * stripping (the r10 ×100 serial run measured 34 s with bins alone
     * vs 10 s with the strip vs killed-at-45-min with neither).
     */
-  private[graft] def stripCommonAffixes(variants: DataFrame): DataFrame =
-    stripCommonAffixesOpt(variants).getOrElse(variants)
-
-  /** [[stripCommonAffixes]], reporting `None` when there is nothing to
-    * strip (empty inventory or no inventory-wide common affix). */
-  private def stripCommonAffixesOpt(variants: DataFrame): Option[DataFrame] = {
+  private[graft] def stripCommonAffixes(variants: DataFrame): DataFrame = {
     val row = variants.agg(
       min(col("variant")), max(col("variant")),
       min(reverse(col("variant"))), max(reverse(col("variant"))),
       min(length(col("variant")))).head()
-    if (row.isNullAt(0)) return None // empty inventory
+    if (row.isNullAt(0)) return variants // empty inventory
     val pre = lcpLen(row.getString(0), row.getString(1))
     val suf = math.min(lcpLen(row.getString(2), row.getString(3)),
       row.getInt(4) - pre)
-    if (pre == 0 && suf <= 0) None
-    else Some(variants.withColumn("variant", col("variant")
-      .substr(lit(pre + 1), length(col("variant")) - (pre + math.max(suf, 0)))))
+    if (pre == 0 && suf <= 0) variants
+    else variants.withColumn("variant", col("variant")
+      .substr(lit(pre + 1), length(col("variant")) - (pre + math.max(suf, 0))))
   }
 
   /** Longest common prefix of two strings, in code points. */
@@ -276,8 +246,7 @@ object TraceCluster {
     i
   }
 
-  /** Sample size / guards for the dominant-affix fallback probe. */
-  private val SampleN = 1001
+  /** Guards for the dominant-affix fallback probe. */
   private val MinAffixLen = 4
   private val MinSampleN = 50
   private val MaxFamilies = 5
@@ -704,42 +673,40 @@ object TraceCluster {
   /** Full pipeline: `(variant, vid, cluster_id, n_cases)` — singleton
     * variants keep their own id as `cluster_id`.
     *
-    * Scale shape: [[probeInventory]] runs once. When the inventory
-    * holds at most [[SampleN]] variants its sample already carries
-    * every `(variant, vid, n_cases)` row, so the tail runs on the
-    * driver — [[driverPairs]], then [[Dedup.minRootLabels]] (the
-    * union-find of [[Dedup.clusters]]' driver path) — and the labeled
-    * rows come back as a local frame: no edit-pair plan, no
-    * checkpoint, and no job at all when the caller collects. Larger
-    * inventories run the distributed [[editPairs]] pipeline on the
-    * same probe and [[Dedup.clusters]]. Both paths label each
-    * component by its smallest vid.
+    * Scale shape: the universe is the string view of the frame's
+    * [[Variants]] table (variants that differ only in null activities
+    * or in where `>` falls are one variant here). When that table is
+    * on the driver and case ids are integral, the tail runs there —
+    * [[driverPairs]], then [[Dedup.minRootLabels]] (the union-find of
+    * [[Dedup.clusters]]' driver path) — and the labeled rows come back
+    * as a local frame: no edit-pair plan, no checkpoint, and no job at
+    * all when the caller collects. Larger tables, and string case ids,
+    * run the distributed [[editPairs]] pipeline over the cached table
+    * and [[Dedup.clusters]]. Both paths label each component by its
+    * smallest vid.
     */
   def clusterVariants(events: DataFrame, caseCol: String,
       activityCol: String, tsCol: String, tieBreak: String,
-      maxDist: Int): DataFrame = {
-    // The variant inventory feeds many plan branches (index, probe,
-    // short bucket, verify join-back, final labeling) — cache it so
-    // the event-mass window aggregation runs once, not per branch.
-    // CacheManager dedups identical plans, so repeated invocations
-    // share one entry (variant tables are inventory-sized).
-    val reps = Sessionize.variantRepresentatives(events, caseCol,
-      activityCol, tsCol, tieBreak).cache()
-    val probe = probeInventory(reps)
-    probe.flatMap(_.whole) match {
+      maxDist: Int): DataFrame =
+    clusterTable(Variants.of(events, caseCol, activityCol, tsCol, tieBreak), maxDist)
+
+  private[ops] def clusterTable(t: Variants.Table, maxDist: Int): DataFrame =
+    Variants.localStrings(t) match {
       case Some(inventory) =>
-        reps.unpersist() // the probe was its only reader
-        val spark = reps.sparkSession
+        val spark = t.frame.sparkSession
         import spark.implicits._
         val label = Dedup.minRootLabels(
-          driverPairs(inventory.map(r => (r._1, r._2)).toSeq, maxDist)
+          driverPairs(inventory.map(r => (r._1, r._2)), maxDist)
             .map { case (a, b, _) => (a, b) }).toMap
-        inventory.toSeq.map { case (variant, vid, nCases) =>
+        inventory.map { case (variant, vid, nCases) =>
           (variant, vid, label.getOrElse(vid, vid), nCases)
         }.toDF("variant", "vid", "cluster_id", "n_cases")
       case None =>
-        val comp = Dedup.clusters(pairsAfter(reps, probe, maxDist),
-            "vid_a", "vid_b")
+        // the inventory feeds many plan branches (index, probe, short
+        // bucket, verify join-back, final labeling): cache it so its
+        // aggregate over the table runs once, not per branch
+        val reps = Variants.strings(t.frame).cache()
+        val comp = Dedup.clusters(editPairs(reps, maxDist), "vid_a", "vid_b")
           .select(col("doc_id").as("_vid"), col("cluster_id"))
         reps
           .withColumn("vid", col("rep_case").cast("long"))
@@ -748,5 +715,4 @@ object TraceCluster {
             coalesce(col("cluster_id"), col("vid")).as("cluster_id"),
             col("n_cases"))
     }
-  }
 }

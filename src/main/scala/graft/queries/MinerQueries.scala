@@ -156,19 +156,14 @@ object MinerQueries {
       val ev = graft.Tables(s, dir, "events")
       val tree = InductiveLog.mine(ev, "user_id", "event_type", "ts", "event_id")
       val bNet = s.sparkContext.broadcast(PetriNet.fromTree(tree))
-      // r17: one partial-agg shuffle derives the per-case sequence
-      // (sort_array over the (ts, event_id)-ordered struct — the same
-      // ordering the window form used, at one exchange instead of
-      // window + two groupBys), and the variant table is EXPLICITLY
-      // repartitioned before the acceptance map: the rows are a few
-      // KB, so AQE's byte-based coalescing would fold the CPU-heavy
-      // accepts() stage onto one core (explicit repartition(n) is
-      // exempt from coalescing; n = defaultParallelism scales with
-      // the cluster, not a local constant).
-      ev.groupBy(col("user_id"))
-        .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
-          col("event_type")))).getField("event_type").as("_seq"))
-        .groupBy(col("_seq")).agg(count(lit(1)).as("_n"))
+      // the variant table (ops/Variants) is EXPLICITLY repartitioned
+      // before the acceptance map: the rows are a few KB, so AQE's
+      // byte-based coalescing would fold the CPU-heavy accepts() stage
+      // onto one core (explicit repartition(n) is exempt from
+      // coalescing; n = defaultParallelism scales with the cluster,
+      // not a local constant).
+      Variants.frame(ev, "user_id", "event_type", "ts", "event_id")
+        .select(col("seq"), col("n_cases"))
         .repartition(s.sparkContext.defaultParallelism)
         .as[(Seq[String], Long)]
         .map { case (v, n) =>

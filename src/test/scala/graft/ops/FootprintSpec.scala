@@ -6,8 +6,8 @@ import graft.{JobProbe, SparkSpec}
 import graft.xes.{XesCorpus, XesReader}
 
 /** [[Dfg.collectFootprint]] — the one-action abstraction [[Alpha]] and
-  * [[Inductive]] mine from — against the four separate queries it
-  * replaces, on every book log. */
+  * [[Inductive]] mine from, a fold over the [[Variants]] table —
+  * against the four separate queries it replaces, on every book log. */
 class FootprintSpec extends SparkSpec {
 
   private def bookEvents(file: String) =
@@ -40,11 +40,18 @@ class FootprintSpec extends SparkSpec {
   test("Alpha.mine and Inductive.mine each run one action") {
     val ev = bookEvents("L1.xes").cache()
     ev.count()
+    // each from a cold variant table: a cached one serves the second
+    // miner with no action at all (VariantsGuardSpec)
+    def cold() = Variants.frame(ev, "traceIdx", "activity", "ts", "seq").unpersist()
+    cold()
     val alpha = JobProbe(spark)(Alpha.mine(ev, "traceIdx", "activity", "ts", "seq"))
+    cold()
     val ind = JobProbe(spark)(Inductive.mine(ev, "traceIdx", "activity", "ts", "seq"))
+    cold()
     ev.unpersist()
-    // one action = the window exchange, the count exchange and the
-    // result stage; the four-collect forms ran four actions (≥ 8 jobs)
+    // one action = the window exchange, the table's aggregate exchange
+    // and the result stage; the four-collect forms ran four actions
+    // (≥ 8 jobs)
     assert(alpha.actions == 1 && alpha.jobs <= 3, alpha)
     assert(ind.actions == 1 && ind.jobs <= 3, ind)
   }

@@ -350,6 +350,9 @@ class TraceClusterSpec extends SparkSpec {
   }
 
   test("clusterVariants: at most SampleN variants run the probe and no edit-pair job") {
+    // the probe is the variant table's one action; from a cold table
+    // (an earlier test cached it), then the local frame collects free
+    Variants.frame(log, "case_id", "activity", "ts", "event_id").unpersist()
     val c = graft.JobProbe(spark) {
       val out = TraceCluster.clusterVariants(log, "case_id", "activity",
         "ts", "event_id", maxDist = 2)

@@ -78,6 +78,12 @@ def main(sf_dir, out_dir):
                   f"cp <outDir>/oracle_sql.json oracle_sql.json")
             failures += 1
     for name, sql in sorted(oracles.items()):
+        if not os.path.isdir(f"{out_dir}/{name}"):
+            # Verify wrote no result: the query failed, e.g. on an
+            # absent input ("[verify] <name> absent: <path>")
+            print(f"ABSENT {name}")
+            failures += 1
+            continue
         try:
             got = con.execute(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
             g_cols = [d[0] for d in got.description]
