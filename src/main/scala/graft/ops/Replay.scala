@@ -33,35 +33,77 @@ object Replay {
     produced: Long, consumed: Long, missing: Long, remaining: Long,
     fitness: Double)
 
-  def replayVariant(net: Alpha.WorkflowNet, acts: Seq[String]): VariantFitness = {
-    // place ids: 0 = source, 1 = sink, 2.. = mined places
-    val mined = net.places.toSeq
-    val tokens = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    var produced = 0L; var consumed = 0L; var missing = 0L
+  /** A workflow net compiled to place-indexed firing tables: for each
+    * activity, the places it consumes from (`feeders`) and produces
+    * into (`fedBy`). Place ids: 0 = source, 1 = sink, 2.. = mined
+    * places. Compiled once per replay call; the batch variant replay
+    * and the streaming fold (`StreamingConformance`) both read it. */
+  final case class Net(nPlaces: Int, feeders: Map[String, Array[Int]],
+      fedBy: Map[String, Array[Int]])
 
-    def feedersOf(a: String): Seq[Int] =
-      (if (net.startActivities.contains(a)) Seq(0) else Nil) ++
-        mined.zipWithIndex.collect { case (p, i) if p.outputs.contains(a) => i + 2 }
-    def fedBy(a: String): Seq[Int] =
-      (if (net.endActivities.contains(a)) Seq(1) else Nil) ++
-        mined.zipWithIndex.collect { case (p, i) if p.inputs.contains(a) => i + 2 }
-
-    tokens(0) = 1L; produced += 1        // initial marking: source
-    acts.foreach { a =>
-      feedersOf(a).foreach { p =>
-        consumed += 1
-        if (tokens(p) > 0) tokens(p) -= 1 else missing += 1
-      }
-      fedBy(a).foreach { p => tokens(p) += 1; produced += 1 }
-    }
-    consumed += 1                        // final marking: consume sink
-    if (tokens(1) > 0) tokens(1) -= 1 else missing += 1
-    val remaining = tokens.values.sum
-    val fitness =
-      0.5 * (1.0 - missing.toDouble / consumed.toDouble) +
-        0.5 * (1.0 - remaining.toDouble / produced.toDouble)
-    VariantFitness(acts, 0L, produced, consumed, missing, remaining, fitness)
+  def compile(net: Alpha.WorkflowNet): Net = {
+    val mined = net.places.toSeq.zipWithIndex
+    val alphabet = net.startActivities ++ net.endActivities ++
+      mined.flatMap { case (p, _) => p.inputs ++ p.outputs }
+    def table(port: Int, ends: Set[String],
+        side: Alpha.Place => Set[String]): Map[String, Array[Int]] =
+      alphabet.map { a =>
+        a -> ((if (ends.contains(a)) Seq(port) else Nil) ++
+          mined.collect { case (p, i) if side(p).contains(a) => i + 2 }).toArray
+      }.toMap
+    Net(mined.size + 2, table(0, net.startActivities, _.outputs),
+      table(1, net.endActivities, _.inputs))
   }
+
+  private val NoPlaces = new Array[Int](0)
+
+  /** Fires `acts` in order into the marking `toks` (updated in place)
+    * and returns the (produced, consumed, missing) it adds: firing
+    * consumes one token from every feeding place (a missing token is
+    * minted and counted) and produces one into every fed place. The
+    * streaming fold resumes it slice by slice. */
+  def fire(net: Net, toks: Array[Long], acts: Iterator[String]): (Long, Long, Long) = {
+    var produced = 0L; var consumed = 0L; var missing = 0L
+    acts.foreach { a =>
+      net.feeders.getOrElse(a, NoPlaces).foreach { p =>
+        consumed += 1
+        if (toks(p) > 0) toks(p) -= 1 else missing += 1
+      }
+      net.fedBy.getOrElse(a, NoPlaces).foreach { p =>
+        toks(p) += 1; produced += 1
+      }
+    }
+    (produced, consumed, missing)
+  }
+
+  /** A fresh marking: one token on the source (`produced` counts it). */
+  def initialMarking(net: Net): Array[Long] = {
+    val toks = new Array[Long](net.nPlaces)
+    toks(0) = 1L
+    toks
+  }
+
+  /** Settles a replayed trace: consumes the sink token from `toks`
+    * (updated in place), counts the leftovers and applies the fitness
+    * formula to the trace's running counters. */
+  def settle(acts: Seq[String], toks: Array[Long], produced: Long,
+      consumed: Long, missing: Long): VariantFitness = {
+    val miss = if (toks(1) > 0) { toks(1) -= 1; missing } else missing + 1
+    val remaining = toks.sum
+    val fitness =
+      0.5 * (1.0 - miss.toDouble / (consumed + 1).toDouble) +
+        0.5 * (1.0 - remaining.toDouble / produced.toDouble)
+    VariantFitness(acts, 0L, produced, consumed + 1, miss, remaining, fitness)
+  }
+
+  def replayVariant(net: Net, acts: Seq[String]): VariantFitness = {
+    val toks = initialMarking(net)
+    val (produced, consumed, missing) = fire(net, toks, acts.iterator)
+    settle(acts, toks, 1L + produced, consumed, missing)
+  }
+
+  def replayVariant(net: Alpha.WorkflowNet, acts: Seq[String]): VariantFitness =
+    replayVariant(compile(net), acts)
 
   /** Per-variant fitness table for a log against `net`. */
   def variantFitness(spark: SparkSession, events: DataFrame, caseCol: String,
@@ -73,8 +115,9 @@ object Replay {
       net: Alpha.WorkflowNet): Dataset[VariantFitness] = {
     val spark = t.frame.sparkSession
     import spark.implicits._
+    val c = compile(net)
     Variants.mapSequences(t) { case (seq, n) =>
-      replayVariant(net, seq).copy(nCases = n) }
+      replayVariant(c, seq).copy(nCases = n) }
   }
 
   /** Case-weighted log fitness in [0,1]. */

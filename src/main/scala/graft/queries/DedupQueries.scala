@@ -89,7 +89,7 @@ object DedupQueries {
         .withWatermark("ts", "10 seconds")
         .as[StreamingNearDup.BucketHit]
       ParityGate.collect(s, "q_stream_neardup_parity") {
-        StreamingNearDup.collisions(s, hits, ttlSeconds = 600L)
+        StreamingNearDup.collisions(s, hits, ttlSeconds = feed.gapSeconds)
       }() {
         _.select(col("docId").as("doc_id"), col("firstDocId").as("first_doc_id"),
           col("band"), col("bucket")) // bounded by bucket collisions
@@ -159,7 +159,7 @@ object DedupQueries {
       // shared doc feed: this gate, the CM twin, and future doc-stream
       // gates stage the identical projection once per JVM
       ParityFeed.withSharedFeed(s, s"docs:$dir", src, slices = 32) { (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, Ignore, "", maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, "", feed.flush1)
       // the portable charHash kernel runs IN-PLAN on the stream side
       // (codegen), exactly as in the batch aggregate's input
       val items = ParityFeed.stream(s, feed)
@@ -172,9 +172,9 @@ object DedupQueries {
         .as[StreamingSketches.HItem]
       ParityGate.collect(s, "q_stream_distinct_sketch_parity") {
         StreamingSketches.hllRegisters(s, items, m = 64,
-          budgetBits = 24, gapSeconds = 3600L, ignoreGroup = Ignore)
+          budgetBits = 24, gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, "",
-          maxTs + 2L * 86400L * 1000000L)) {
+          feed.flush2)) {
         // bounded: |langs| rows × 64 ints; same downstream algebra as
         // the batch gate, over the flushed registers
         _.select(col("group").as("lang"), col("regs").as("_regs"))
@@ -215,7 +215,7 @@ object DedupQueries {
         ((col("doc_id").cast("long") + 1L) * 1000000L).as("tsMicros"))
       // same shared doc feed as the HLL/CM twins: staged once per JVM
       ParityFeed.withSharedFeed(s, s"docs:$dir", src, slices = 32) { (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, Ignore, "", maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, "", feed.flush1)
       val key = graft.functions.NativeExpressions.charHash(col("text"), 7L)
       // build side = the lang='en' subset; sentinels (and any stale
       // sentinel slices left on the shared feed) pass the filter via
@@ -228,9 +228,9 @@ object DedupQueries {
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.BItem]
       ParityGate.collect(s, "q_stream_bloom_parity") {
-        StreamingSketches.bloomWords(s, items, gapSeconds = 3600L)
+        StreamingSketches.bloomWords(s, items, gapSeconds = feed.gapSeconds)
       }(() => ParityFeed.sentinel(s, feed, Ignore, "",
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // the flushed table IS the filter (≤ 2048 rows); the probe is
         // the batch kernel over it, broadcast exactly as in
         // q_dedup_bloom (one row per doc, the gate's own output)

@@ -35,8 +35,8 @@ object EventLogQueries {
     * absorption argument, hardened):
     *  - every gate appends CANONICAL far-future rows
     *    ([[eventsSentinel]]: user -9, type "\u0000", id -9, value 0)
-    *    at the STANDARDIZED flush offsets [[FlushS1]]/[[FlushS2]] past
-    *    the staging-time maxTs — offsets must be uniform across gates
+    *    at the feed's flush times (`FileFeed.flush1`/`flush2`, derived
+    *    once at staging) — offsets must be uniform across gates
     *    because a stale sentinel with a LARGER ts than a gate's own
     *    batch-2 sentinel would advance the watermark past it and
     *    late-drop it (LateDrops gates every run at zero);
@@ -51,9 +51,6 @@ object EventLogQueries {
     *    fold already drops user -1.
     * The (user_id, ts) uniqueness contract behind the fold orderings
     * is asserted ONCE at staging (was per-gate). */
-  private val FlushS1 = 100L * 86400L * 1000000L
-  private val FlushS2 = 200L * 86400L * 1000000L
-
   private def withEventsFeed[A](s: SparkSession, dir: String)(
       f: (ParityFeed.FileFeed, Long) => A): A =
     ParityFeed.withSharedFeed(s, s"events:$dir", {
@@ -192,7 +189,7 @@ object EventLogQueries {
     * finalize at wm > ts + H, so the flush must clear the LAST
     * purchase's horizon), and collect the finalized rows. */
   private def streamAsOfGate(s: SparkSession, dir: String, tag: String)(
-      op: (SparkSession, Dataset[graft.streaming.StreamingAsOf.AItem]) => DataFrame)
+      op: (SparkSession, Dataset[graft.streaming.StreamingAsOf.AItem], Long) => DataFrame)
       : DataFrame = {
     import s.implicits._
     import graft.streaming.StreamingAsOf
@@ -202,7 +199,7 @@ object EventLogQueries {
     // canonical sentinels and stale foreign ones alike — remaps to
     // the "__sentinel__" kind the fold already absorbs.
     withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(col("user_id").as("userId"),
           when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
@@ -216,8 +213,8 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingAsOf.AItem]
-      ParityGate.collect(s, tag)(op(s, items))(
-        () => eventsSentinel(s, feed, maxTs + FlushS2))(identity)
+      ParityGate.collect(s, tag)(op(s, items, feed.gapSeconds))(
+        () => eventsSentinel(s, feed, feed.flush2))(identity)
     }
   }
 
@@ -269,7 +266,7 @@ object EventLogQueries {
 
   /** Fixed DECLARE monitoring set for q_stream_declare_parity: one
     * constraint per implemented template, over the events alphabet. */
-  private val DeclareMonitorSet: Seq[graft.streaming.StreamingDeclare.Constraint] = {
+  private[graft] val DeclareMonitorSet: Seq[graft.streaming.StreamingDeclare.Constraint] = {
     import graft.streaming.StreamingDeclare.Constraint
     Seq(
       Constraint("existence", "signup"),
@@ -366,7 +363,7 @@ object EventLogQueries {
       // r18: shared superset feed; far-future rows remap to the
       // "__sentinel__" type the result fold already filters
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val ev = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
           .otherwise(col("event_type")).as("event_type"), col("tsMicros"))
@@ -376,7 +373,7 @@ object EventLogQueries {
         ev.groupBy(window(col("ts"), "1 day", "6 hours").as("w"), col("event_type"))
           .agg(count(lit(1)).as("n"))
           .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         _.filter(col("event_type") =!= "__sentinel__") // window × type rows
       }
       }
@@ -405,7 +402,7 @@ object EventLogQueries {
       ParityFeed.withSharedFeed(s, s"events2x:$dir",
         single.unionAll(single)) { (feed, maxTs) =>
       ParityFeed.sentinel(s, feed, -1L, "__sentinel__",
-        maxTs + 100L * 86400L * 1000000L)
+        feed.flush1)
       val ev = ParityFeed.stream(s, feed)
         .select(col("event_id"),
           when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
@@ -415,7 +412,7 @@ object EventLogQueries {
         .withWatermark("ts", "10 seconds")
         .dropDuplicatesWithinWatermark("event_id")
       // tumbling windows finalize the per-(window, type) counts when
-      // the sentinel (100 d out ≫ 30 d width) advances the watermark
+      // the sentinel (gap + 100 d out ≫ 30 d width) advances the watermark
       // past every data window — nothing event-proportional reaches
       // the sink or driver (rows = windows × types)
       ParityGate.collect(s, "q_stream_dedup_parity") {
@@ -423,7 +420,7 @@ object EventLogQueries {
           .agg(count(lit(1)).as("n"))
           .select(col("event_type"), col("n"))
       }(() => ParityFeed.sentinel(s, feed, -2L, "__sentinel__",
-          maxTs + 200L * 86400L * 1000000L)) {
+          feed.flush2)) {
         _.filter(col("event_type") =!= "__sentinel__")
           .groupBy("event_type").agg(sum(col("n")).as("n"))
       }
@@ -448,7 +445,7 @@ object EventLogQueries {
       // micro-batches total. Far-future rows remap to the -1 sentinel
       // user the result filter already drops.
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val ev = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(-1L))
           .otherwise(col("user_id")).as("user_id"), col("tsMicros"))
@@ -457,7 +454,7 @@ object EventLogQueries {
       ParityGate.collect(s, "q_stream_sessionize_parity") {
         graft.streaming.StreamingStats
           .sessionStats(ev, "user_id", "ts", gapSeconds = 43200L)
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         _.filter(col("user_id") =!= -1L)
           .select(col("user_id"), col("n_events"),
             unix_micros(col("t_start")).as("t_start_us"),
@@ -484,7 +481,7 @@ object EventLogQueries {
       // "_sentinel" activity; sentinel windows are already excluded by
       // the windowStartMicros <= maxDataTs result filter
       withEventsFeed(s, dir) { (feed, maxDataTs) =>
-      eventsSentinel(s, feed, maxDataTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val events = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxDataTs), lit("_sentinel"))
           .otherwise(col("event_type")).as("activity"), col("tsMicros"))
@@ -494,7 +491,7 @@ object EventLogQueries {
       ParityGate.collect(s, "q_stream_drift_parity") {
         graft.streaming.StreamingDrift
           .monitor(s, events, windowSeconds = 86400L, baseline)
-      }(() => eventsSentinel(s, feed, maxDataTs + FlushS2)) {
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         _.filter(col("windowStartMicros") <= maxDataTs) // one row per day
           .select(col("windowStartMicros").as("window_start_us"),
             col("nEvents").as("n_events"),
@@ -517,7 +514,7 @@ object EventLogQueries {
       // r18: shared superset feed; far-future rows remap to the
       // "_sentinel" case the result fold already filters
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val events = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit("_sentinel"))
           .otherwise(col("user_id").cast("string")).as("caseId"),
@@ -528,8 +525,8 @@ object EventLogQueries {
         .as[graft.streaming.TraceAssembly.InEvent]
       ParityGate.collect(s, "q_stream_declare_parity") {
         graft.streaming.StreamingDeclare
-          .monitor(s, events, gapSeconds = 43200L, DeclareMonitorSet)
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+          .monitor(s, events, gapSeconds = feed.gapSeconds, DeclareMonitorSet)
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         // fold to the 8-row per-template aggregate IN THE PLAN — the
         // per-(case × constraint) rows never cross to the driver (the
         // memory sink is the documented harness bound; the gate path
@@ -672,8 +669,9 @@ object EventLogQueries {
     // produces the row). Branch-passing sentinels (event_type
     // view/purchase, user -1) drive both branch watermarks —
     // necessary because the branch filters would swallow a neutral
-    // sentinel BEFORE the watermark nodes (the ProbeHop footgun) and
-    // the null rows would never flush. Oracle: plain SQL LEFT JOIN.
+    // sentinel BEFORE the watermark nodes (the sentinel-filter footgun,
+    // SCALE.md's hopping-window note) and the null rows would never
+    // flush. Oracle: plain SQL LEFT JOIN.
     "q_stream_outer_join_parity" -> { (s, dir) =>
       // r18: shared superset feed. This is the ONE gate whose own
       // sentinels must PASS its branch filters (view/purchase pairs,
@@ -685,11 +683,11 @@ object EventLogQueries {
       // flush ts) rows: watermark-idempotent, self-matches dropped by
       // the existing b_user != -1 result filter.
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      def sentinels(us: Long): Unit =
+      def sentinels(ts: Long): Unit =
         ParityFeed.sentinelRows(s, feed, Seq(
-          Seq(-1L, "view", -1L, 0.0, maxTs + us),
-          Seq(-1L, "purchase", -2L, 0.0, maxTs + us)))
-      sentinels(FlushS1)
+          Seq(-1L, "view", -1L, 0.0, ts),
+          Seq(-1L, "purchase", -2L, 0.0, ts)))
+      sentinels(feed.flush1)
       val src = ParityFeed.stream(s, feed)
         .select(col("user_id"),
           when(col("tsMicros") > lit(maxTs) && col("user_id") =!= lit(-1L),
@@ -714,7 +712,7 @@ object EventLogQueries {
         buys.join(views, expr(
           "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"),
           "leftOuter")
-      }(() => sentinels(FlushS2)) {
+      }(() => sentinels(feed.flush2)) {
         // count(v_id) skips the null-padded rows → n_views = 0 for
         // purchases the watermark released unmatched
         _.filter(col("b_user") =!= -1L)
@@ -850,15 +848,15 @@ object EventLogQueries {
           unix_micros(col("ts")).as("tsMicros"))
       ParityFeed.withFeed(s, src) { (feed, maxTs) =>
       ParityFeed.sentinel(s, feed, -1L, "__sentinel__", -1L,
-        maxTs + 86400L * 1000000L)
+        feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingAsOf.AItem]
       ParityGate.collect(s, "q_stream_asof_parity") {
-        StreamingAsOf.backward(s, items, gapSeconds = 3600L)
+        StreamingAsOf.backward(s, items, gapSeconds = feed.gapSeconds)
       }(() => ParityFeed.sentinel(s, feed, -2L, "__sentinel__", -2L,
-          maxTs + 2L * 86400L * 1000000L)) {
+          feed.flush2)) {
         _.select( // one row per purchase — the gate output
           col("userId").as("user_id"), col("purchaseId").as("purchase_id"),
           timestamp_micros(col("lastClickTsMicros")).as("last_click_ts"),
@@ -919,9 +917,9 @@ object EventLogQueries {
     // gates zero) — emitting exactly the horizon-bounded batch row.
     // Shares q_asof_first_click's DuckDB oracle VERBATIM.
     "q_stream_asof_forward_parity" -> { (s, dir) =>
-      streamAsOfGate(s, dir, "q_stream_asof_forward_parity") { (s2, items) =>
+      streamAsOfGate(s, dir, "q_stream_asof_forward_parity") { (s2, items, gap) =>
         graft.streaming.StreamingAsOf.forward(s2, items,
-          horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = 3600L)
+          horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = gap)
           .toDF().select(col("userId").as("user_id"),
             col("purchaseId").as("purchase_id"),
             timestamp_micros(col("firstClickTsMicros")).as("first_click_ts"),
@@ -938,9 +936,9 @@ object EventLogQueries {
     // standing long without polluting it. Shares
     // q_asof_nearest_click's oracle VERBATIM.
     "q_stream_asof_nearest_parity" -> { (s, dir) =>
-      streamAsOfGate(s, dir, "q_stream_asof_nearest_parity") { (s2, items) =>
+      streamAsOfGate(s, dir, "q_stream_asof_nearest_parity") { (s2, items, gap) =>
         graft.streaming.StreamingAsOf.nearest(s2, items,
-          horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = 3600L)
+          horizonSeconds = AsOfHorizonUs / 1000000L, gapSeconds = gap)
           .toDF().select(col("userId").as("user_id"),
             col("purchaseId").as("purchase_id"),
             timestamp_micros(col("nearestClickTsMicros")).as("nearest_click_ts"),
@@ -996,7 +994,7 @@ object EventLogQueries {
       // r18: shared superset feed; far-future rows remap to the
       // "__sentinel__" type StreamingUpsert.latest already ignores
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(col("user_id").as("userId"),
           when(col("tsMicros") > lit(maxTs), lit("__sentinel__"))
@@ -1006,9 +1004,9 @@ object EventLogQueries {
         .withWatermark("ts", "10 seconds")
         .as[StreamingUpsert.UItem]
       ParityGate.collect(s, "q_stream_upsert_parity") {
-        StreamingUpsert.latest(s, items, gapSeconds = 3600L,
+        StreamingUpsert.latest(s, items, gapSeconds = feed.gapSeconds,
           ignoreType = "__sentinel__")
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         _.select( // one row per live key — the gate output
           col("userId").as("user_id"), col("eventType").as("event_type"),
           timestamp_micros(col("tsMicros")).as("ts"),
@@ -1188,7 +1186,7 @@ object EventLogQueries {
       // result fold already filters, pushing the watermark past every
       // case's last-event + gap timeout so all cases close in batch 2
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val events = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(-1L))
           .otherwise(col("user_id")).as("caseId"),
@@ -1201,8 +1199,8 @@ object EventLogQueries {
       // only ≤ |stages| aggregate rows reach the driver, where the
       // (tiny) cumulative stage sums are formed
       val perIdx = ParityGate.collect(s, "q_stream_funnel_parity") {
-        StreamingFunnel.reached(s, events, stages, gapSeconds = 86400L)
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+        StreamingFunnel.reached(s, events, stages, gapSeconds = feed.gapSeconds)
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         _.filter(col("caseId") =!= -1L)
           .groupBy(col("reachedIdx")).agg(count(lit(1)).as("n"))
       }.collect()
@@ -1238,12 +1236,12 @@ object EventLogQueries {
       // r18: shared superset feed (uniqueness asserted once at
       // staging); far-future rows remap to the "_sentinel" case. The
       // sentinel trace still never contributes a finalized pair: its
-      // LAST event (the FlushS2 row) stays above every watermark, and
+      // LAST event (the flush2 row) stays above every watermark, and
       // same-ts sentinel pairs that do finalize surface only segments
       // absent from the profile, which the profile-anchored left join
       // drops.
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val events = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit("_sentinel"))
           .otherwise(col("user_id").cast("string")).as("caseId"),
@@ -1252,14 +1250,14 @@ object EventLogQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val pairs = StreamingTemporal.pairs(s, events, gapSeconds = 86400L)
+      val pairs = StreamingTemporal.pairs(s, events, gapSeconds = feed.gapSeconds)
         .select(col("actFrom").as("act_from"), col("actTo").as("act_to"),
           expr("waitUs div 1000000").as("wait_s"))
       ParityGate.collect(s, "q_stream_temporal_parity") {
         graft.ops.Temporal.deviationFlags(pairs, profile, zeta = 2.0)
           .filter(col("is_dev"))
           .select(col("act_from"), col("act_to"))
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) { sink =>
+      }(() => eventsSentinel(s, feed, feed.flush2)) { sink =>
         // alert-proportional sink → alphabet²-bounded rollup, then the
         // profile supplies each segment's total n (0-deviation segments
         // included via the left join)
@@ -1382,7 +1380,7 @@ object EventLogQueries {
       // r18: shared superset feed; far-future rows remap to the
       // "_sentinel" activity the result fold already filters
       withEventsFeed(s, dir) { (feed, maxTs) =>
-      eventsSentinel(s, feed, maxTs + FlushS1)
+      eventsSentinel(s, feed, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit("_sentinel"))
           .otherwise(col("event_type")).as("activity"),
@@ -1392,8 +1390,8 @@ object EventLogQueries {
         .as[StreamingBatching.BItem]
       ParityGate.collect(s, "q_stream_batching_parity") {
         StreamingBatching.batches(s, items,
-          gapUs = 86400L * 1000000L, gapSeconds = 86400L)
-      }(() => eventsSentinel(s, feed, maxTs + FlushS2)) {
+          gapUs = 86400L * 1000000L, gapSeconds = feed.gapSeconds)
+      }(() => eventsSentinel(s, feed, feed.flush2)) {
         // batch rows fold to the alphabet-bounded summary IN THE PLAN
         // (one row per activity)
         _.filter(col("activity") =!= "_sentinel")

@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.sql.types.StructType
 
 /** Feed harness for the streaming batch↔stream parity queries.
@@ -15,25 +15,30 @@ import org.apache.spark.sql.types.StructType
   * The sf-proportional gates feed from a TMPFS DROP-DIR FILE SOURCE
   * ([[withFeed]]): the input DataFrame is staged ONCE as parquet
   * slices under /dev/shm, all present before the query starts, so the
-  * first micro-batch consumes the whole input — the same
-  * "pre-added blocks land in ONE micro-batch" semantics the old
-  * MemoryStream harness had (the watermark only advances at the batch
-  * boundary, so no data event is ever late) — but with NOTHING
-  * data-proportional on the driver: source partitions come from the
-  * parquet slices (the feed is distributed end to end), and the staged
-  * dir doubles as the RETAINED REPLAYABLE SOURCE the two-pass
-  * operators' pass 2 reads back in one bounded batch job
-  * ([[replay]]). This retires the driver-buffered MemoryStream feed
-  * that was the graded suite's floor: the 120M-boxed-tuple OOM class
-  * at inflated scale, the single-block one-source-partition explode
-  * (and its repartition workaround), and the full second driver feed
-  * per replay all disappear with the buffer.
+  * first micro-batch consumes the whole input (the watermark only
+  * advances at the batch boundary, so no data event is ever late) —
+  * with NOTHING data-proportional on the driver: source partitions
+  * come from the parquet slices, and the staged dir doubles as the
+  * RETAINED REPLAYABLE SOURCE the two-pass operators' pass 2 reads
+  * back in one bounded batch job ([[replay]]).
   *
-  * Event-time timers still fire through far-future sentinel ROWS, now
+  * Inside a [[multiBatch]] scope — set only by the scale audit
+  * ([[graft.tools.StreamScaleBench]]) and its specs — slices are TIME
+  * RANGES: `repartitionByRange` on the event-time column, sorted
+  * within each slice, with ascending modification times, so slice
+  * i's max ≤ slice i+1's min and the file source (oldest first) reads
+  * them in event-time order; [[stream]] reads a bounded number of
+  * slices per trigger. The SAME gate definitions then run as a
+  * genuine multi-micro-batch stream with the watermark advancing
+  * between batches, lossless by construction.
+  *
+  * Event-time timers still fire through far-future sentinel ROWS,
   * appended as one-row parquet slices ([[sentinel]]): a new file is a
   * new micro-batch, exactly like a drop-dir tail in production. A
   * slice becomes visible to the source only once complete (written
-  * hidden, then renamed).
+  * hidden, then renamed). Each staged feed records its event-time
+  * range, and gives the gates their whole-history state gap and the
+  * two flush times past it ([[FileFeed]]).
   *
   * The feeds stop at the streaming frame: a gate runs its stream,
   * flushes and sink collect through [[ParityGate.collect]] inside the
@@ -41,13 +46,54 @@ import org.apache.spark.sql.types.StructType
   */
 private[graft] object ParityFeed {
 
-  /** A staged drop-dir feed: the directory and the staged schema (the
-    * file source requires an explicit schema). Each handle records the
-    * files its own [[sentinelRows]] calls created, so a shared feed's
-    * block can delete exactly those. */
-  final case class FileFeed(dir: String, schema: StructType) {
+  /** A staged drop-dir feed: the directory, the staged schema (the
+    * file source requires an explicit schema) and the event-time range
+    * of the staged data, read once at staging before any sentinel.
+    * Each handle records the files its own [[sentinelRows]] calls
+    * created, so a shared feed's block can delete exactly those. */
+  final case class FileFeed(dir: String, schema: StructType, minTs: Long,
+      maxTs: Long) {
     private[queries] val created = new ConcurrentLinkedQueue[Path]()
+
+    /** Whole-history state gap: the staged span plus a day. A keyed
+      * fold whose gap exceeds the span never times a key out
+      * mid-stream, which is the contract of the flush-once operators
+      * (`StreamingSketches.bloomWords`, `StreamingUpsert.latest`, …)
+      * and of every whole-case fold (funnel, trace assembly) under a
+      * multi-batch feed. Derived from the data, not fixed: a
+      * synthetic event time (lineitem's, from `l_orderkey`) spans
+      * more with every inflated copy. */
+    val gapSeconds: Long = (maxTs - minTs) / 1000000L + 86400L
+
+    /** The two flush times: sentinel k sits k·(gap + [[FlushMarginUs]])
+      * past maxTs, so the first moves the watermark past every key's
+      * last event + gap and the second's batch fires the timers. One
+      * derivation per staging, so every gate on a shared feed appends
+      * its sentinels at the same offsets. */
+    val flush1: Long = flushAt(1)
+    val flush2: Long = flushAt(2)
+
+    private def flushAt(k: Long): Long = Math.addExact(maxTs,
+      Math.multiplyExact(k,
+        Math.addExact(Math.multiplyExact(gapSeconds, 1000000L), FlushMarginUs)))
   }
+
+  /** Headroom of each flush past the gap: 100 days, which clears the
+    * gates' fixed windows and horizons (30-day dedup windows, 3-day
+    * as-of horizons). */
+  val FlushMarginUs: Long = 100L * 86400L * 1000000L
+
+  /** Multi-batch feeding: staged feeds are `slices` time-range slices,
+    * streamed `perTrigger` slices per micro-batch. */
+  final case class Sliced(slices: Int, perTrigger: Int)
+
+  private val sliced = new scala.util.DynamicVariable[Option[Sliced]](None)
+
+  /** Runs `f` with every feed it stages and streams in multi-batch
+    * form (see the object doc). Outside the scope a feed streams as
+    * one data micro-batch. */
+  def multiBatch[A](slices: Int, perTrigger: Int)(f: => A): A =
+    sliced.withValue(Some(Sliced(slices, perTrigger)))(f)
 
   private def rmTree(x: File): Unit = {
     if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rmTree))
@@ -65,32 +111,51 @@ private[graft] object ParityFeed {
     base
   }
 
+  /** Writes `df` to `dir` and reads back its event-time range (one
+    * parquet-stats-backed scan). Outside a [[multiBatch]] scope the
+    * feed streams as one batch, so `slices` round-robin slices set
+    * only its source-side parallelism; inside one, the scope's count
+    * of time-range slices. (Time-range slicing everywhere measured
+    * slower on the 32-gate Verify: its sampling job and sort run at
+    * every staging.) */
+  private def stage(s: SparkSession, df: DataFrame, dir: Path, tsCol: String,
+      slices: Int): FileFeed = {
+    sliced.value.fold(df.repartition(slices))(sl =>
+      df.repartitionByRange(sl.slices, col(tsCol)).sortWithinPartitions(tsCol))
+      .write.mode("overwrite").parquet(dir.toString)
+    // the file source takes the oldest files first: time-range slice
+    // (part) index order is event-time order, so encode it in
+    // ascending mtimes
+    val parts = Option(dir.toFile.listFiles()).getOrElse(Array.empty[File])
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val t0 = System.currentTimeMillis() - 60000L - parts.length * 1000L
+    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 1000L) }
+    val r = s.read.schema(df.schema).parquet(dir.toString)
+      .agg(min(col(tsCol)), max(col(tsCol))).head()
+    FileFeed(dir.toString, df.schema, r.getLong(0), r.getLong(1))
+  }
+
   /** Stages `df` to a fresh drop-dir and hands `(feed, maxTs)` to `f`,
     * deleting the dir afterwards. `tsCol` is the event-time micros
-    * column; its max over the staged data (one parquet-stats-backed
-    * scan of the slices) seeds sentinel construction. `slices` sizes
-    * the round-robin repartition before the write — it is the feed's
-    * source-side parallelism (each slice is its own scan task in the
-    * single data micro-batch; the downstream stateful exchange
-    * runs at [[ParityGate.StreamPartitions]] independently). The default
-    * 8 matches the stream parallelism the gates run at; gates whose
-    * map side is CPU-heavy (the heavy-hitters shingle explode) pass
-    * 32. */
+    * column. `slices` is the feed's source-side parallelism (each
+    * slice is its own scan task in the data micro-batch; the
+    * downstream stateful exchange runs at
+    * [[ParityGate.StreamPartitions]] independently). The default 8
+    * matches the stream parallelism the gates run at; gates whose map
+    * side is CPU-heavy (the heavy-hitters shingle explode) pass 32. */
   def withFeed[A](s: SparkSession, df: DataFrame, tsCol: String = "tsMicros",
       slices: Int = 8)(f: (FileFeed, Long) => A): A = {
     val dir = Files.createTempDirectory(feedBase(), "p")
     try {
-      df.repartition(slices).write.mode("overwrite").parquet(dir.toString)
-      val feed = FileFeed(dir.toString, df.schema)
-      val maxTs = replay(s, feed).agg(max(col(tsCol))).head().getLong(0)
-      f(feed, maxTs)
+      val feed = stage(s, df, dir, tsCol, slices)
+      f(feed, feed.maxTs)
     } finally rmTree(dir.toFile)
   }
 
   /** One staged feed SHARED across gates that stream the same
     * projection (keyed by `cacheKey`, which must encode the sf dir):
-    * staged once per JVM, kept until JVM exit, handed out with the
-    * maxTs computed AT STAGING TIME — before any gate appended
+    * staged once per JVM (and per [[multiBatch]] setting), kept until
+    * JVM exit, handed out with the range read AT STAGING TIME — before any gate appended
     * sentinel slices. The r13 judge measured the three robust-stats
     * gates each paying the staged-write cost for a near-identical
     * lineitem projection; this claws that back without touching any
@@ -114,14 +179,11 @@ private[graft] object ParityFeed {
       tsCol: String = "tsMicros", slices: Int = 8)(
       f: (FileFeed, Long) => A): A = {
     val (feed, maxTs) = shared.synchronized {
-      shared.getOrElseUpdate(cacheKey, {
+      shared.getOrElseUpdate(s"$cacheKey|${sliced.value}", {
         val dir = Files.createTempDirectory(feedBase(), "shared")
-        val d = df
-        d.repartition(slices).write.mode("overwrite").parquet(dir.toString)
-        val feed = FileFeed(dir.toString, d.schema)
-        val mx = replay(s, feed).agg(max(col(tsCol))).head().getLong(0)
         Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir.toFile)))
-        (feed, mx)
+        val feed = stage(s, df, dir, tsCol, slices)
+        (feed, feed.maxTs)
       })
     }
     // Delete the gate's own sentinel slices once its streams are
@@ -158,10 +220,14 @@ private[graft] object ParityFeed {
 
   /** The streaming face of a staged feed. All staged slices are
     * already present, so the first trigger reads them as ONE
-    * micro-batch (no maxFilesPerTrigger); each later [[sentinel]]
-    * slice arrives as its own batch. */
-  def stream(s: SparkSession, feed: FileFeed): DataFrame =
-    s.readStream.schema(feed.schema).parquet(feed.dir)
+    * micro-batch; inside a [[multiBatch]] scope each trigger reads at
+    * most the scope's `perTrigger` slices, oldest first. Each later
+    * [[sentinel]] slice arrives as its own batch. */
+  def stream(s: SparkSession, feed: FileFeed): DataFrame = {
+    val r = s.readStream.schema(feed.schema)
+    sliced.value.fold(r)(sl => r.option("maxFilesPerTrigger", sl.perTrigger.toLong))
+      .parquet(feed.dir)
+  }
 
   /** The batch face of the SAME staged files — the retained replayable
     * source pass 2 of a two-pass operator reads back in ONE bounded
@@ -276,8 +342,8 @@ private[graft] object ParityFeed {
     * timers WITHOUT new input; every parity query instead fires its
     * timers with explicit far-future sentinel rows, so the automatic
     * extra batch after each data batch is pure overhead (~0.6 s/query
-    * measured, ProbeStream) and the final table is identical either
-    * way — the timers fire in the sentinel's own data batch at the
+    * measured, SCALE.md "Parity-floor trims") and the final table is
+    * identical either way — the timers fire in the sentinel's own data batch at the
     * latest. Safe because a streaming query fixes both settings from
     * the conf AT START, inside this scope; batch queries planned
     * after restore are untouched. */
@@ -291,9 +357,9 @@ private[graft] object ParityFeed {
     // Checkpoint on tmpfs when available: the parity queries commit
     // offsets + state deltas for exactly 2-4 micro-batches and the
     // dirs are deleted right here, so disk durability buys nothing —
-    // ~0.1 s/query of fsync/IO measured (ProbeStream /tmp vs
-    // /dev/shm). Fresh UUID base per invocation ⇒ a rerun can never
-    // resume a previous run's state.
+    // ~0.1 s/query of fsync/IO measured /tmp vs /dev/shm (SCALE.md
+    // "Parity-floor trims"). Fresh UUID base per invocation ⇒ a rerun
+    // can never resume a previous run's state.
     val ckDir: Option[Path] =
       try {
         val base = Paths.get("/dev/shm/graft_ckpt")

@@ -119,16 +119,16 @@ object RelationalQueries {
         df.select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("group")).as("group"), col("v"), col("tsMicros"))
       // ---- pass 1: exact bucket histograms as keyed state ----
-      ParityFeed.sentinel(s, feed, Ignore, 0L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, 0L, feed.flush1)
       val items = itemStream(ParityFeed.stream(s, feed))
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
       ParityGate.collect(s, "q_stream_winsorized_parity") {
         StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
+          gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: ≤ groups · value-range/width rows (≈ 6 · 5100 here)
         val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
         val bands = StreamingWinsorized.bandBuckets(hist, loP, hiP)
@@ -183,7 +183,7 @@ object RelationalQueries {
       ParityFeed.withSharedFeed(s, s"robust:$dir", src) { (feed, maxTs) =>
       // sentinel rows remap to the Ignore group IN a projection (the
       // repo's standing sentinel rule)
-      ParityFeed.sentinel(s, feed, Ignore, 0L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, 0L, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("group")).as("group"), col("v"), col("tsMicros"))
@@ -192,9 +192,9 @@ object RelationalQueries {
         .as[StreamingWinsorized.VItem]
       ParityGate.collect(s, "q_stream_quantiles_parity") {
         StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
+          gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: ≤ groups · value-range/width rows
         val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
         // ---- pass 2: per-value counts in the rank buckets, ONE bounded
@@ -234,7 +234,7 @@ object RelationalQueries {
       // quantiles / outliers) stream the IDENTICAL lineitem projection;
       // one staging per JVM serves all three (r13 judge item #4)
       ParityFeed.withSharedFeed(s, s"robust:$dir", src) { (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, Ignore, 0L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, 0L, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("group")).as("group"), col("v"), col("tsMicros"))
@@ -243,9 +243,9 @@ object RelationalQueries {
         .as[StreamingWinsorized.VItem]
       ParityGate.collect(s, "q_stream_outliers_parity") {
         StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
+          gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         val hist = sink.as[StreamingWinsorized.BucketCount].collect().toSeq
         val res = new StreamingQuantiles.RankResolver(s, hist, Seq(990), W,
           Ignore)
@@ -346,7 +346,7 @@ object RelationalQueries {
         ((col("l_orderkey").cast("long") * 8L
           + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
       ParityFeed.withSharedFeed(s, s"robust:$dir", src) { (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, Ignore, 0L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, 0L, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("group")).as("group"), col("v"), col("tsMicros"))
@@ -355,9 +355,9 @@ object RelationalQueries {
         .as[StreamingWinsorized.VItem]
       ParityGate.collect(s, "q_stream_quantiles_sketch_parity") {
         StreamingSketchQuantiles.quantiles(s, items, k = K,
-          psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
+          psPermille = ps, gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: |groups| · |ps| rows (the flushed estimates)
         val est = sink
           .select(col("group"), col("pPermille").as("p_permille"),
@@ -405,7 +405,7 @@ object RelationalQueries {
         ((col("l_orderkey").cast("long") * 8L
           + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
       ParityFeed.withSharedFeed(s, s"robustw:$dir", src) { (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, Ignore, 0L, 1L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, Ignore, 0L, 1L, feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("group")).as("group"), col("v"), col("w"),
@@ -415,9 +415,9 @@ object RelationalQueries {
         .as[StreamingSketchQuantiles.WItem]
       ParityGate.collect(s, "q_stream_quantiles_sketch_weighted_parity") {
         StreamingSketchQuantiles.quantilesWeighted(s, items, k = K,
-          psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
+          psPermille = ps, gapSeconds = feed.gapSeconds, ignoreGroup = Ignore)
       }(() => ParityFeed.sentinel(s, feed, Ignore, 0L, 1L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: |groups| · |ps| rows (the flushed estimates)
         val est = sink
           .select(col("group"), col("pPermille").as("p_permille"),

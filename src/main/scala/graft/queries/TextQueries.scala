@@ -134,7 +134,7 @@ object TextQueries {
       ParityFeed.withSharedFeed(s, s"docs:$dir", src, slices = 32) { (feed, maxTs) =>
       // sentinel doc tokenizes to one token; its (row, bucket) pairs
       // remap to the ignore row by their far-future ts
-      ParityFeed.sentinel(s, feed, "zz_ignore", "s", maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, "zz_ignore", "s", feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(explode(TextOps.tokens(col("text"))).as("token"),
           col("tsMicros"))
@@ -150,9 +150,9 @@ object TextQueries {
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.CItem]
       ParityGate.collect(s, "q_stream_cm_parity") {
-        StreamingSketches.cmCells(s, items, w = w, gapSeconds = 3600L)
+        StreamingSketches.cmCells(s, items, w = w, gapSeconds = feed.gapSeconds)
       }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s",
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: ≤ d·w cell rows
         val cellRows = sink.select(col("row"), col("bucket"), col("n")).collect()
         val cells = s.createDataFrame(java.util.Arrays.asList(cellRows: _*),
@@ -323,16 +323,16 @@ object TextQueries {
           .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
             .otherwise(col("gram")).as("item"), col("tsMicros"))
       // ---- pass 1: candidate sketches ----
-      ParityFeed.sentinel(s, feed, "zz_ignore", "s s s", maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, "zz_ignore", "s s s", feed.flush1)
       // no withWatermark here: candidates() attaches the query's one
       // watermark itself, downstream of its map-side pre-combine
       val items = shingleStream(ParityFeed.stream(s, feed))
         .as[StreamingHeavyHitters.Item]
       ParityGate.collect(s, "q_stream_heavy_hitters_parity") {
         StreamingHeavyHitters.candidates(s, items, k = 1 << 14,
-          nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore)
+          nBuckets = 8, ppm = ppm, gapSeconds = feed.gapSeconds, ignoreItem = Ignore)
       }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded by the post-prune candidate set (≈ heavy set + border)
         val cands = sink.select(col("item")).distinct().as[String].collect()
         // ---- pass 2: exact recount, ONE bounded batch job over the
@@ -403,7 +403,7 @@ object TextQueries {
       // the same shared staged doc feed as the exact-hh/hll/cm twins
       ParityFeed.withSharedFeed(s, s"docs:$dir", docs, slices = 32) { (feed, maxTs) =>
       ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-        maxTs + 86400L * 1000000L)
+        feed.flush1)
       val items = ParityFeed.stream(s, feed)
         .select(explode(TextOps.shingleStrings(col("text"), 3))
           .as("gram"), col("tsMicros"))
@@ -417,10 +417,10 @@ object TextQueries {
       // a wrong N cannot pass silently — n_total is oracle-hashed)
       ParityGate.collect(s, "q_stream_hh_sketch_parity") {
         StreamingHeavyHitters.candidates(s, items, k = k,
-          nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore,
+          nBuckets = 8, ppm = ppm, gapSeconds = feed.gapSeconds, ignoreItem = Ignore,
           emitBucketCounts = true)
       }(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: the post-prune candidate superset (≈ heavy + border)
         // plus one exact-count row per flush epoch
         val allRows = sink.select(col("item"), col("wLower").as("w_lower"))
@@ -490,7 +490,7 @@ object TextQueries {
             col("n_chars").cast("long").as("weight"),
             ((col("doc_id").cast("long") + 1L) * 1000000L).as("tsMicros"))) {
         (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, "", 0L, 1L, feed.flush1)
       // sentinel rows remap to IgnoreId IN a projection — a filter
       // would be pushed below the watermark node and stall it
       val items = ParityFeed.stream(s, feed)
@@ -502,9 +502,9 @@ object TextQueries {
         .as[StreamingSample.Item]
       ParityGate.collect(s, "q_stream_sample_parity") {
         StreamingSample.topK(s, items, k = 100, seed = 11L,
-          nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
+          nBuckets = 8, gapSeconds = feed.gapSeconds, ignoreId = IgnoreId)
       }(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: ≤ nBuckets·k flushed rows
         val flushed = sink.as[StreamingSample.BucketTop].collect().toSeq
         StreamingSample.merge(flushed, k = 100)
@@ -531,7 +531,7 @@ object TextQueries {
             col("n_chars").cast("long").as("weight"),
             ((col("doc_id").cast("long") + 1L) * 1000000L).as("tsMicros"))) {
         (feed, maxTs) =>
-      ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 86400L * 1000000L)
+      ParityFeed.sentinel(s, feed, "", 0L, 1L, feed.flush1)
       // sentinel rows remap to IgnoreId IN a projection (standing rule)
       val items = ParityFeed.stream(s, feed)
         .select(col("group"),
@@ -543,9 +543,9 @@ object TextQueries {
         .as[StreamingSample.GItem]
       ParityGate.collect(s, "q_stream_stratified_sample_parity") {
         StreamingSample.topKByGroup(s, items, k = 20, seed = 11L,
-          nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
+          nBuckets = 8, gapSeconds = feed.gapSeconds, ignoreId = IgnoreId)
       }(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
-          maxTs + 2L * 86400L * 1000000L)) { sink =>
+          feed.flush2)) { sink =>
         // bounded: ≤ |langs|·nBuckets·k flushed rows
         val flushed = sink.as[StreamingSample.GroupBucketTop].collect().toSeq
         StreamingSample.mergeByGroup(flushed, k = 20)

@@ -20,10 +20,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * progress entries — a query with more micro-batches than that
   * would evict its early entries and [[count]] would silently
   * undercount the very loss it guards against. Callers must either
-  * raise the conf before starting the query (the scale harness
-  * [[graft.tools.StreamScaleBench]] sets it to 4096, far above its
-  * ≤ 31-batch runs) or sample [[count]] at least once per retention
-  * window.
+  * raise the conf before starting the query (the scale audit
+  * [[graft.tools.StreamScaleBench]] sets it to 4096, far above the
+  * batch count of any of its rows) or sample [[count]] at least once
+  * per retention window.
   */
 object LateDrops {
 

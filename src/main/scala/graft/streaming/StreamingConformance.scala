@@ -21,7 +21,8 @@ import graft.ops.{Alignments, Alpha, PetriNet, Replay}
   * before the state op), and a (ts, activity) tie group never
   * straddles the strict `ts < wm` cut — so folding the below-watermark
   * prefix each batch and buffering only in-horizon events reproduces
-  * [[Replay.replayVariant]] over the fully sorted trace bit-for-bit.
+  * [[Replay.replayVariant]] over the fully sorted trace bit-for-bit —
+  * both fire the same compiled net ([[Replay.compile]], [[Replay.fire]]).
   * Per-case state: token vector + counters + the in-horizon buffer
   * (gap × rate), independent of trace length — the 100 TB-stream shape
   * for arbitrarily long-running cases.
@@ -42,29 +43,6 @@ object StreamingConformance extends Serializable {
   case class TraceAlignment(caseId: String, nEvents: Long,
       cost: Int, fitness: Double)
 
-  /** Driver-side compiled net: place-indexed firing tables (place ids:
-    * 0 = source, 1 = sink, 2.. = mined places — the
-    * [[Replay.replayVariant]] numbering). */
-  private case class FiringTables(nPlaces: Int,
-      feeders: Map[String, Array[Int]], fedBy: Map[String, Array[Int]])
-
-  private def compile(net: Alpha.WorkflowNet): FiringTables = {
-    val mined = net.places.toSeq
-    val alphabet = net.startActivities ++ net.endActivities ++
-      mined.flatMap(p => p.inputs ++ p.outputs)
-    val feeders = alphabet.map { a =>
-      a -> ((if (net.startActivities.contains(a)) Seq(0) else Nil) ++
-        mined.zipWithIndex.collect { case (p, i) if p.outputs.contains(a) => i + 2 })
-        .toArray
-    }.toMap
-    val fedBy = alphabet.map { a =>
-      a -> ((if (net.endActivities.contains(a)) Seq(1) else Nil) ++
-        mined.zipWithIndex.collect { case (p, i) if p.inputs.contains(a) => i + 2 })
-        .toArray
-    }.toMap
-    FiringTables(mined.size + 2, feeders, fedBy)
-  }
-
   /** Keyed replay state: `toks` is the marking (tokens per place id);
     * `tss`/`acts` buffer only in-horizon (at-or-above watermark)
     * events; counters mirror [[Replay.replayVariant]]'s. */
@@ -80,44 +58,24 @@ object StreamingConformance extends Serializable {
       events: Dataset[TraceAssembly.InEvent], gapSeconds: Long,
       net: Alpha.WorkflowNet): Dataset[TraceFitness] = {
     import spark.implicits._
-    val tables = compile(net)
-    val bTab = spark.sparkContext.broadcast(tables)
-    val empty = new Array[Int](0)
+    val bNet = spark.sparkContext.broadcast(Replay.compile(net))
 
-    // fire one sorted slice into the marking — the exact loop body of
-    // Replay.replayVariant, resumable because it reads only the state
+    // fire one sorted slice into the marking — Replay.fire, resumable
+    // because it reads only the state
     def fold(st: RpSt, sorted: Seq[(Long, String)]): RpSt = {
       if (sorted.isEmpty) return st
-      val t = bTab.value
       val toks = st.toks.toArray
-      var produced = st.produced; var consumed = st.consumed
-      var missing = st.missing; var n = st.nEvents
-      sorted.foreach { case (_, a) =>
-        t.feeders.getOrElse(a, empty).foreach { p =>
-          consumed += 1
-          if (toks(p) > 0) toks(p) -= 1 else missing += 1
-        }
-        t.fedBy.getOrElse(a, empty).foreach { p =>
-          toks(p) += 1; produced += 1
-        }
-        n += 1
-      }
-      RpSt(toks.toSeq, produced, consumed, missing, n,
-        st.tss, st.acts, st.lastMicros)
+      val (p, c, m) = Replay.fire(bNet.value, toks, sorted.iterator.map(_._2))
+      RpSt(toks.toSeq, st.produced + p, st.consumed + c, st.missing + m,
+        st.nEvents + sorted.size, st.tss, st.acts, st.lastMicros)
     }
 
-    // final-marking settlement of Replay.replayVariant
+    // final-marking settlement and fitness of Replay.replayVariant
     def close(caseId: String, st0: RpSt): TraceFitness = {
       val st = fold(st0, st0.tss.zip(st0.acts).sortBy(e => (e._1, e._2)))
-      val toks = st.toks.toArray
-      var missing = st.missing
-      val consumed = st.consumed + 1
-      if (toks(1) > 0) toks(1) -= 1 else missing += 1
-      val remaining = toks.sum
-      val fitness =
-        0.5 * (1.0 - missing.toDouble / consumed.toDouble) +
-          0.5 * (1.0 - remaining.toDouble / st.produced.toDouble)
-      TraceFitness(caseId, st.nEvents, fitness, missing, remaining)
+      val vf = Replay.settle(Nil, st.toks.toArray, st.produced, st.consumed,
+        st.missing)
+      TraceFitness(caseId, st.nEvents, vf.fitness, vf.missing, vf.remaining)
     }
 
     def update(caseId: String, in: Iterator[TraceAssembly.InEvent],
@@ -128,11 +86,9 @@ object StreamingConformance extends Serializable {
         Iterator(close(caseId, st))
       } else {
         val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val old = state.getOption.getOrElse {
-          val toks = new Array[Long](bTab.value.nPlaces)
-          toks(0) = 1L // initial marking: source; produced counts it
-          RpSt(toks.toSeq, 1L, 0L, 0L, 0L, Nil, Nil, 0L)
-        }
+        val old = state.getOption.getOrElse( // produced counts the source
+          RpSt(Replay.initialMarking(bNet.value).toSeq, 1L, 0L, 0L, 0L,
+            Nil, Nil, 0L))
         var last = old.lastMicros
         val fresh = scala.collection.mutable.ListBuffer.empty[(Long, String)]
         in.foreach { e =>

@@ -119,8 +119,9 @@ object StreamingSketches {
     * the same word — the flushed table is then an OR-decomposition of
     * the filter, not the filter itself. A violation fails loudly
     * downstream (duplicate words break the probe's word-count
-    * fingerprint), but callers should size the gap up front;
-    * StreamScaleBench asserts gap > span before running. */
+    * fingerprint), so callers size the gap from the data: the parity
+    * gates pass their staged feed's whole-history gap
+    * (`ParityFeed.FileFeed.gapSeconds`, span plus a day). */
   def bloomWords(spark: SparkSession, items: Dataset[BItem],
       gapSeconds: Long, ignoreWord: Long = -1L): Dataset[BloomWord] = {
     import spark.implicits._

@@ -21,8 +21,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * than the delay silently undercounts that key). Time-ordered
   * ingestion (range-partitioned file drops, per-source offsets with
   * bounded skew + a matching watermark delay) satisfies this; both
-  * repo harnesses do (single pre-start MemoryStream batch; the
-  * range-sliced file source in StreamScaleBench).
+  * parity feed does (`ParityFeed`: time-range slices, one data batch
+  * for the oracle gate, several per trigger bound in the scale
+  * audit).
   *
   * State is ONE timestamp per key, and a key whose last event has
   * fallen `gapSeconds` behind the watermark is evicted by event-time

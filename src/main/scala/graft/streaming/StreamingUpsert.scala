@@ -47,8 +47,9 @@ object StreamingUpsert {
     * A key quiet for longer than the gap flushes mid-stream and, if
     * touched again, re-creates its state and flushes a SECOND row for
     * the same key — the output is then a changelog segment list, not
-    * one latest row per key. StreamScaleBench asserts gap > span
-    * before running; other callers must size the gap the same way. */
+    * one latest row per key. The parity gate passes its staged feed's
+    * whole-history gap (`ParityFeed.FileFeed.gapSeconds`, span plus a
+    * day); other callers must size the gap the same way. */
   def latest(spark: SparkSession, items: Dataset[UItem], gapSeconds: Long,
       ignoreType: String): Dataset[ULatest] = {
     import spark.implicits._

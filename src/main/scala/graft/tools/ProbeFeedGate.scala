@@ -7,9 +7,8 @@ import graft.{GraftSession, Tables}
 import graft.queries.ParityFeed
 
 /** r18 floor decomposition for the CURRENT drop-dir file-feed parity
-  * harness (ProbeStream pins the retired MemoryStream floor): times
-  * each phase of a representative stateful gate — staging write,
-  * maxTs agg, stream start, data batch, sentinel append, sentinel
+  * harness: times each phase of a representative stateful gate — staging write,
+  * range agg, stream start, data batch, sentinel append, sentinel
   * batch, stop, result fold — so the 32-gate fixed cost can be
   * attacked where it actually lives. Dev tool, not graded.
   *
@@ -44,10 +43,10 @@ object ProbeFeedGate {
           t("stage-write") {
             src.repartition(8).write.mode("overwrite").parquet(d.toString)
           }
-          val feed = ParityFeed.FileFeed(d.toString, src.schema)
-          val maxTs = t("maxTs-agg") {
-            ParityFeed.replay(spark, feed).agg(max(col("tsMicros")))
-              .head().getLong(0)
+          val feed = t("range-agg") {
+            val r = spark.read.schema(src.schema).parquet(d.toString)
+              .agg(min(col("tsMicros")), max(col("tsMicros"))).head()
+            ParityFeed.FileFeed(d.toString, src.schema, r.getLong(0), r.getLong(1))
           }
           val events = ParityFeed.stream(spark, feed)
             .withColumn("ts", timestamp_micros(col("tsMicros")))
@@ -61,8 +60,7 @@ object ProbeFeedGate {
           try {
             t("batch1-data") { q.processAllAvailable() }
             t("sentinel-write") {
-              ParityFeed.sentinel(spark, feed, "\u0000",
-                maxTs + 86400L * 1000000L)
+              ParityFeed.sentinel(spark, feed, "\u0000", feed.flush1)
             }
             t("batch2-sentinel") { q.processAllAvailable() }
           } finally t("stop") { q.stop() }

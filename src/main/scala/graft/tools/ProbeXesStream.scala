@@ -17,8 +17,8 @@ import graft.xes.XesReader
   * batches) ≈ 1.9 s, fpt=7 (2 batches) ≈ 1.3 s, single batch ≈ 1.2 s,
   * batch read 0.6 s. This sized `q_stream_xes_parity`'s fpt=5 choice:
   * still genuinely multi-batch (3 triggers), while the deep
-  * multi-batch coverage (33–325 triggers) lives in StreamScaleBench's
-  * xes row.
+  * multi-batch coverage is StreamScaleBench's xes row (the same gate
+  * over the corpus ×copies: 26 triggers at ×10).
   *
   * Env: SPARK_GRAFT_XES_BOOK (corpus dir, defaults to the reference
   * checkout's book corpus).

@@ -79,9 +79,8 @@ object ScaleBench {
   /** Per-copy character bijection for text columns (copy 0 = identity):
     * vowel rotation + consonant-pair shift + full-consonant rotation.
     * A bijection maps shingle sets injectively, so within-copy
-    * similarity structure is exact while copies decorrelate. Shared
-    * with [[StreamScaleBench]]'s document staging. */
-  private[tools] def decorrelateText(txt: Column, i: Int): Column = {
+    * similarity structure is exact while copies decorrelate. */
+  private def decorrelateText(txt: Column, i: Int): Column = {
     val t1 = if (i % 5 == 0) txt else translate(txt, Vowels, vowelMap(i))
     // copies 5..9 would repeat copies 0..4's bijection; shift a
     // consonant pair too so the first 10 copies are pairwise
@@ -171,6 +170,37 @@ object ScaleBench {
            "supplier").contains(t))
       Tables(spark, src, t).write.mode("overwrite").parquet(s"$dst/$t.parquet")
 
+  /** Inflates `base` ×[[Copies]] into `scaled` unless a complete
+    * inflation at this scale is already there (or `rebuild`); returns
+    * whether it inflated. The scratch dir lives at a fixed default
+    * path, so a ×100 point's leftover inflation would silently feed a
+    * later ×10 sweep — every row still "works", the artifact is just
+    * labeled the wrong scale. Reuse therefore requires the
+    * `_scale_stamp` to match this run's Copies; the stamp is cleared
+    * before the write and written after it, so a crash mid-inflate
+    * never leaves a valid stamp beside mixed-scale tables. The
+    * streaming scale audit ([[StreamScaleBench]]) stages through this
+    * too. */
+  def ensureInflated(spark: SparkSession, base: String, scaled: String,
+      rebuild: Boolean): Boolean = {
+    import java.nio.file.{Files, Paths}
+    val stampP = Paths.get(scaled, "_scale_stamp")
+    val complete = Files.exists(Paths.get(s"$scaled/embeddings.parquet"))
+    val stampOk = Files.exists(stampP) &&
+      new String(Files.readAllBytes(stampP)).trim == s"copies=$Copies"
+    val inflating = !complete || !stampOk || rebuild
+    if (inflating) {
+      if (!stampOk && complete)
+        println(s"scratch dir $scaled stamp mismatch (wants copies=$Copies) — re-inflating")
+      println(s"inflating $base x$Copies -> $scaled")
+      Files.deleteIfExists(stampP)
+      Files.createDirectories(Paths.get(scaled))
+      inflate(spark, base, scaled)
+      Files.writeString(stampP, s"copies=$Copies")
+    }
+    inflating
+  }
+
   def inflate(spark: SparkSession, src: String, dst: String): Unit = {
     inflateEvents(spark, src, dst)
     inflateDocuments(spark, src, dst)
@@ -230,29 +260,8 @@ object ScaleBench {
     val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     GraftSession.quietWindowWarnings() // bench-only (see GraftSession)
 
-    // scale stamp (r14, shared with StreamScaleBench's staging guard):
-    // the scratch dir lives at a fixed default path, so a ×100 deep
-    // point's leftover inflation would silently feed a later ×10 sweep
-    // — every row still "works", the artifact is just labeled the
-    // wrong scale. Reuse requires the stamp to match this run's Copies.
-    val stampP = java.nio.file.Paths.get(scaled, "_scale_stamp")
-    val stampOk = java.nio.file.Files.exists(stampP) &&
-      new String(java.nio.file.Files.readAllBytes(stampP)).trim ==
-        s"copies=$Copies"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$scaled/embeddings.parquet"))
-        || !stampOk || args.contains("--rebuild")) {
-      if (!stampOk &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get(s"$scaled/embeddings.parquet")))
-        println(s"scratch dir $scaled stamp mismatch (wants copies=$Copies) — re-inflating")
-      println(s"inflating $base x$Copies -> $scaled")
-      // stamps bracket the write: cleared BEFORE, written AFTER — a
-      // crash mid-inflate must not leave the OLD valid stamp beside
-      // mixed-scale tables (review finding)
-      java.nio.file.Files.deleteIfExists(stampP)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(scaled))
-      inflate(spark, base, scaled)
-      java.nio.file.Files.writeString(stampP, s"copies=$Copies")
-    } else if (args.contains("--rebuild-supplier")) {
+    if (!ensureInflated(spark, base, scaled, args.contains("--rebuild")) &&
+        args.contains("--rebuild-supplier")) {
       // refresh just the entity universe (cheap) when the scratch dir
       // predates the supplier-inflation scheme
       println(s"re-inflating supplier x$Copies -> $scaled")

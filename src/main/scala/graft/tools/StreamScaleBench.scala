@@ -1,2044 +1,382 @@
 package graft.tools
 
-import java.io.File
+import java.nio.file.{Files, Paths}
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
-import graft.{GraftSession, Tables}
-import graft.ops.{Alpha, Replay}
-import graft.streaming.{LateDrops, StreamingConformance, StreamingDeclare,
-  StreamingDfg, StreamingDrift, StreamingFunnel, StreamingNearDup,
-  StreamingStats, StreamingThrottle, TraceAssembly}
+import graft.{GraftSession, SparkEntry, Tables}
+import graft.queries.{EventLogQueries, ParityFeed, XesQueries}
+import graft.streaming.{StreamingDeclare, StreamingNearDup}
 
-/** Streaming scale audit under a REAL file source (VERDICT r8 item 2):
-  * the MemoryStream parity harness buffers its whole input on the
-  * driver and OOMs at ×100 (SCALE.md) — a harness bound, not an
-  * operator bound. This tool lifts it: the inflated events table is
-  * staged as TIME-SLICED parquet files with ascending modification
-  * times, `readStream` + `maxFilesPerTrigger` consumes them as a
-  * multi-micro-batch stream (the watermark advances between batches,
-  * exactly like a real ingestion tail), and ALL EIGHTEEN stateful
-  * streaming operators run with NOTHING data-proportional on the
-  * driver:
+/** Streaming scale audit: the oracle-checked parity gates, run as
+  * multi-micro-batch streams over ScaleBench's ×copies inflation.
   *
-  *  - funnel (StreamingFunnel.reached, whole-history gap): per-case
-  *    keyed state, all cases flushed by the final event-time timers;
-  *  - dfg (TraceAssembly → StreamingDfg.edges, whole-history gap):
-  *    closed-trace edge emission, folded per batch;
-  *  - drift (StreamingDrift.monitor, tumbling day windows): windows
-  *    CLOSE MID-STREAM as the watermark passes each window end — the
-  *    state-eviction path under genuine multi-batch advance (state
-  *    peaks at open-windows × alphabet, not stream length);
-  *  - throttle, exactly-once dedup: one-row-per-key state with
-  *    gap/horizon eviction — peak state ∝ active keys, not stream;
-  *  - sessionize (built-in session_window), stats (Complete-mode
-  *    running triple, one state row + HLL), declare + conformance
-  *    (closed-trace checks against broadcast constraint set / mined
-  *    alpha net), neardup (MinHash+LSH bucket claims — THE state that
-  *    grows with corpus size; its TTL deliberately spans the stream
-  *    so peak_state_rows measures the bucket universe honestly);
-  *  - heavy_hitters (per-bucket Misra-Gries sketches in
-  *    flatMapGroupsWithState + an exact candidate recount in ONE
-  *    bounded batch job over the RETAINED drop-dir — the two-pass
-  *    scheme under the replayable-source contract, per-candidate
-  *    counts checked exactly against the vocabulary shuffle);
-  *  - winsorized (per-group exact bucket histograms in
-  *    flatMapGroupsWithState + a band refinement in ONE bounded
-  *    batch job over the retained files — the robust-stats two-pass
-  *    scheme, output compared BIT-FOR-BIT against the batch
-  *    cum-table kernel);
-  *  - quantiles (the same exact bucket histograms + a per-value
-  *    rank-bucket recount in ONE bounded batch job — rank-selection
-  *    values compared exactly against the batch cum-table kernel,
-  *    with every rank bucket's recount ENFORCED equal to pass 1);
-  *  - sample + sample_by_group (per-bucket bounded top-k πps heaps in
-  *    flatMapGroupsWithState, ONE pass, no replay — state ≤
-  *    strata·nBuckets·k rows regardless of stream length, output
-  *    compared exactly against the batch sequentialPoisson /
-  *    sequentialPoissonByGroup kernels).
+  * Each `q_stream_*_parity` query that reads the sf dir runs through
+  * `SparkEntry.queries` on the inflated dir, inside a
+  * [[ParityFeed.multiBatch]] scope: its feed is staged as [[Slices]]
+  * time-range slices with ascending mtimes and streamed [[PerTrigger]]
+  * slices per micro-batch, so the watermark advances between batches
+  * and the state gaps, timers and evictions run as they would on a
+  * real ingestion tail. The gate code is the one the oracle checks;
+  * nothing here re-wires an operator.
   *
-  * A further row audits the streaming XES SOURCE itself (drop-dir
-  * of replicated corpus files → readEventsStream → trace assembly →
-  * DFG edges, exact vs the batch xes source over the same files).
+  * Each gate's output is compared, by an order-free [[fingerprint]],
+  * with a batch reference on the same dir:
+  *  - `twin:<query>`: the batch query whose oracle SQL is the gate's
+  *    ([[Twins]], derived from `SparkEntry.oracleSql`);
+  *  - `local`: for a gate without a twin, a batch computation in the
+  *    gate's output shape ([[LocalRefs]]; `StreamScaleLocalRefSpec`
+  *    checks each against the oracle-verified gate at sf0.01);
+  *  - `row`: three rows no sf-dir gate covers run the book-corpus gate
+  *    definitions over scaled input — `dfg` and `conformance` over the
+  *    inflated events, `xes` over the book corpus ×copies.
   *
-  * Session-shaped comparisons use an order-free exact fingerprint
-  * (count + integer sums + bit_xor of xxhash64 over the row) so the
-  * match is exact without driver-side row sets. Every run reports
-  * `late_drops` (LateDrops.count) — zero proves the exact-match rows
-  * were computed over a lossless stream.
+  * Micro-batches, peak state rows and rows dropped at the watermark
+  * come from a listener keyed by the gate's sink-name prefix.
   *
-  * Every query sinks via foreachBatch: the per-batch fold (stage
-  * counts / edge counts / window rows) is computed distributed and
-  * only alphabet-sized aggregates cross to the driver. Results are
-  * compared EXACTLY against batch computations over the same staged
-  * files (Funnel.orderedStages; whole-case directly-follows; the
-  * drift oracle's integer L1 algebra).
-  *
-  * Time-ordered slices make the stream late-event-free by
-  * construction (`repartitionByRange` on the event time ⇒ slice i's
-  * max ≤ slice i+1's min; mod-time order = slice order), which is
-  * what a partitioned log tail (Kafka per-partition order, hourly
-  * object-store drops) provides in production.
-  *
-  * Env: SPARK_GRAFT_SF_DIR (base, default sf0.1),
-  * SPARK_GRAFT_SCALE_COPIES (default 10), SPARK_GRAFT_STREAM_STAGE
-  * (default /tmp/graft_stream_stage), SPARK_GRAFT_STREAM_FILES
-  * (slices, default 48), SPARK_GRAFT_STREAM_FPT (maxFilesPerTrigger,
-  * default 4), SPARK_GRAFT_STREAM_OUT (json, default
-  * /root/repo/bench_stream_scale.json). `--rebuild` re-stages.
+  * Env: SPARK_GRAFT_SF_DIR (base, default sf0.1), SPARK_GRAFT_SCALE_DIR
+  * and SPARK_GRAFT_SCALE_COPIES (ScaleBench's inflation, reused when
+  * its stamp matches), SPARK_GRAFT_CPUS, SPARK_GRAFT_STREAM_OUT
+  * (default `bench_stream_scale_x<copies>_c<cpus>.json`).
+  * `--only=a,b` runs the named rows (gate or row names) and writes
+  * `<out>.partial` unless the out path is set; `--rebuild` re-inflates.
   */
 object StreamScaleBench {
 
-  /** Materialized directory listing — Files.list must be closed or it
-    * leaks a directory file descriptor per call. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.toVector
-    } finally st.close()
+  /** Time-range slices per staged feed and slices per trigger: 12 data
+    * micro-batches per gate. */
+  val Slices = 48
+  val PerTrigger = 4
+
+  private def isGate(n: String): Boolean =
+    n.startsWith("q_stream_") && n.endsWith("_parity")
+
+  /** The gates that read the sf dir: every gate but the book-corpus
+    * ones. */
+  val Gates: Seq[String] =
+    (SparkEntry.queries.keySet -- XesQueries.queries.keySet).filter(isGate)
+      .toSeq.sorted
+
+  /** Gate → batch twin: the non-gate query whose oracle body is
+    * identical to the gate's. */
+  val Twins: Map[String, String] = {
+    val oracle = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+    Gates.flatMap { g =>
+      oracle.collectFirst { case (`g`, body) => body }.flatMap(body =>
+        oracle.collectFirst { case (q, b) if b == body && !isGate(q) => g -> q })
+    }.toMap
   }
 
-  val Stages = Seq("view", "click", "purchase")
+  private def events(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events").select(col("user_id"), col("event_type"),
+      col("event_id"), unix_micros(col("ts")).as("us"))
 
-  /** Staging-scale stamp (r14 footgun, caught live): the doc stagings
-    * live at FIXED default paths, so a ×100 run's leftover staging
-    * would feed a later ×10 run silently — every row still
-    * self-matches (stream and batch read the same files), the artifact
-    * is just labeled the wrong scale. A staged dir now records the
-    * (copies, files) it was built at; reuse REQUIRES an exact match,
-    * else the dir is deleted and the caller re-stages. Returns true
-    * when the existing staging is reusable as-is. */
-  private def stagingReusable(dir: String, stamp: String,
-      sub: String = "data"): Boolean = {
-    if (!new File(s"$dir/$sub").exists()) return false
-    val stampF = new File(dir, "_scale_stamp")
-    val got =
-      if (stampF.exists())
-        new String(java.nio.file.Files.readAllBytes(stampF.toPath)).trim
-      else "unstamped"
-    if (got == stamp) true
-    else {
-      println(s"staged dir $dir was built at [$got], this run wants " +
-        s"[$stamp] — re-staging (reusing a mismatched staging would " +
-        s"mislabel every row's scale)")
-      def rm(x: File): Unit = {
-        if (x.isDirectory) Option(x.listFiles()).foreach(_.foreach(rm))
-        x.delete()
-      }
-      // Blast radius is ONLY the staging payload ($dir/$sub) plus the
-      // stamp — $dir comes from a user-controlled env var, so deleting
-      // the whole directory would wipe unrelated siblings if someone
-      // pointed the var at a shared path (r14 advice finding).
-      rm(new File(s"$dir/$sub"))
-      clearStamp(dir)
-      false
-    }
+  /** A purchase and the views by the same user in the hour before it,
+    * the two join gates' condition. */
+  private def viewsBeforePurchase(s: SparkSession, dir: String,
+      how: String): DataFrame = {
+    val ev = events(s, dir)
+    val buys = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("b_user"), col("event_id").as("b_id"),
+        col("us").as("b_us"))
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("event_id").as("v_id"),
+        col("us").as("v_us"))
+    buys.join(views, col("v_user") === col("b_user") &&
+        col("v_us") >= col("b_us") - 3600000000L && col("v_us") <= col("b_us"), how)
+      .groupBy(col("b_id").as("purchase_id"))
+      .agg(count(col("v_id")).as("n_views"), min(col("v_id")).as("first_view_id"))
   }
 
-  /** Stamps bracket the staging write: [[clearStamp]] BEFORE, write
-    * AFTER — a crash mid-stage leaves NO stamp beside the partial
-    * data, so the next run re-stages instead of silently reusing a
-    * truncated staging (review finding on the first stamp cut, whose
-    * --rebuild path kept a valid stamp through the rewrite). */
-  private def clearStamp(dir: String): Unit =
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(dir, "_scale_stamp"))
-
-  private def writeStamp(dir: String, stamp: String): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "_scale_stamp"), stamp)
-
-  private val schema = StructType(Seq(
-    StructField("caseId", LongType), StructField("activity", StringType),
-    StructField("tsMicros", LongType)))
-
-  /** Documents staged for the near-dup operator: same (long, string,
-    * long) shape as the event schema, so the slice/sentinel machinery
-    * is shared verbatim. */
-  private val docSchema = StructType(Seq(
-    StructField("docId", LongType), StructField("text", StringType),
-    StructField("tsMicros", LongType)))
-
-  /** Inflate events ×copies (ScaleBench's key-offset scheme: trace
-    * bodies preserved, case space grows) and write time-ordered
-    * slices with ascending mod times. */
-  def stage(spark: SparkSession, src: String, dir: String, copies: Int,
-      files: Int): Unit = {
-    val ev = Tables(spark, src, "events")
-      .select(col("user_id").as("caseId"), col("event_type").as("activity"),
-        unix_micros(col("ts")).as("tsMicros"))
-    val inflated = (0 until copies).map { i =>
-      ev.withColumn("caseId", col("caseId") + lit(i.toLong * 100000000L))
-    }.reduce(_ unionAll _)
-    val data = s"$dir/data"
-    inflated.repartitionByRange(files, col("tsMicros"))
-      .sortWithinPartitions("tsMicros")
-      .write.mode("overwrite").parquet(data)
-    // slice order = partition index order = event-time order; encode it
-    // in ascending mod times (the file source processes oldest-first)
-    val parts = new File(data).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val t0 = System.currentTimeMillis() - parts.length * 2000L - 60000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 2000L) }
-  }
-
-  private def maxDataTs(spark: SparkSession, dir: String,
-      sch: StructType = schema): Long =
-    spark.read.schema(sch).parquet(s"$dir/data")
-      .filter(col(sch.fields(0).name) >= 0L)
-      .agg(max("tsMicros")).head().getLong(0)
-
-  /** Append a one-row sentinel slice (new file ⇒ new micro-batch).
-    * Works for any (long, string, long) staged schema. */
-  private def sentinel(spark: SparkSession, dir: String, tsMicros: Long,
-      sch: StructType): Unit = {
-    import spark.implicits._
-    Seq((-1L, "_s", tsMicros))
-      .toDF(sch.fields.map(_.name).toIndexedSeq: _*)
-      .coalesce(1).write.mode("append").parquet(s"$dir/data")
-  }
-
-  private def stream(spark: SparkSession, dir: String, fpt: Int,
-      sch: StructType, watermark: Boolean): DataFrame = {
-    val src = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", fpt)
-      .parquet(s"$dir/data")
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-    if (watermark) src.withWatermark("ts", "10 seconds") else src
-  }
-
-  /** Runs a streaming query built by `mk` over the staged slices with
-    * a foreachBatch fold, fires the final timers with two sentinel
-    * slices, and returns (folded rows, batches, peak state rows,
-    * watermark-dropped rows, seconds). `fold` maps each micro-batch
-    * output to a SMALL DataFrame; only its collected rows cross to
-    * the driver. With `keepLast` (Complete-mode queries) only the
-    * final batch's fold survives instead of accumulating.
-    * Sentinel 1 sits one day PAST max(last event + gap) so every
-    * real case's timeout is behind the watermark it sets; the
-    * timers then fire in sentinel 2's batch (timeouts are checked
-    * against the watermark computed from PRIOR batches). Sentinel
-    * files are deleted afterwards so the staged dir stays pristine
-    * for the next operator.
-    *
-    * The time-ordered slices make every run late-event-free by
-    * construction; `lateDrops` (LateDrops.count) PROVES it per run —
-    * a nonzero value means the exact-match comparison below was
-    * against a silently lossy stream and the row is invalid. */
-  private def run(spark: SparkSession, dir: String, fpt: Int,
-      maxTs: Long, gapDays: Long, sch: StructType = schema,
-      mode: OutputMode = OutputMode.Append(), keepLast: Boolean = false,
-      // false = the op declares its own watermark downstream of a typed
-      // transform (Spark forbids redefining one already on the source)
-      sourceWatermark: Boolean = true)(
-      mk: DataFrame => DataFrame)(fold: DataFrame => DataFrame):
-      (Seq[Row], Long, Long, Long, Double) = {
-    val acc = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val before = new File(s"$dir/data").listFiles().map(_.getName).toSet
-    val t0 = System.nanoTime()
-    val foldFn: (DataFrame, Long) => Unit = { (df, _) =>
-      batches.incrementAndGet()
-      val rows = fold(df).collect()
-      if (keepLast) acc.clear()
-      rows.foreach(acc.add)
-    }
-    val q: StreamingQuery = mk(stream(spark, dir, fpt, sch, sourceWatermark)).writeStream
-      .outputMode(mode)
-      .foreachBatch(foldFn).start()
-    try {
-      q.processAllAvailable()
-      sentinel(spark, dir, maxTs + (gapDays + 1L) * 86400L * 1000000L, sch)
-      q.processAllAvailable()
-      sentinel(spark, dir, maxTs + 2L * (gapDays + 1L) * 86400L * 1000000L, sch)
-      q.processAllAvailable()
-      val peak = q.recentProgress.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatten.map(_.numRowsTotal)) match {
-        case a if a.nonEmpty => a.max
-        case _ => 0L
-      }
-      (acc.toArray(Array.empty[Row]).toSeq, batches.get(), peak,
-        LateDrops.count(q), (System.nanoTime() - t0) / 1e9)
-    } finally {
-      q.stop()
-      new File(s"$dir/data").listFiles()
-        .filter(f => !before.contains(f.getName)).foreach(_.delete())
-    }
-  }
-
-  /** Whole-history gap: longer than the data span, so a case's funnel /
-    * trace state merges its entire history before the final flush —
-    * the semantics the batch comparators compute. Drift uses day
-    * windows and evicts mid-stream regardless. */
-  val GapDays = 45L
-
-  def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10").toInt
-    val dir = sys.env.getOrElse("SPARK_GRAFT_STREAM_STAGE", "/tmp/graft_stream_stage")
-    val files = sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES", "48").toInt
-    val fpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_FPT", "4").toInt
-    val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT",
-      "/root/repo/bench_stream_scale.json")
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    GraftSession.quietWindowWarnings()
-    // LateDrops folds over RETAINED progress entries; keep retention
-    // far above any batch count this harness can produce, or the
-    // loss guard itself could undercount (review finding)
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "4096")
-    import spark.implicits._
-
-    val evStamp = s"copies=$copies files=$files"
-    if (!stagingReusable(dir, evStamp) || args.contains("--rebuild")) {
-      println(s"staging $base x$copies -> $dir ($files slices)")
-      clearStamp(dir)
-      val d = new File(s"$dir/data")
-      if (d.exists()) { d.listFiles().foreach(_.delete()); d.delete() }
-      stage(spark, base, dir, copies, files)
-      writeStamp(dir, evStamp)
-    }
-    val maxTs = maxDataTs(spark, dir)
-    val batchEv = spark.read.schema(schema).parquet(s"$dir/data")
-      .filter(col("caseId") >= 0L)
-
-    val gapSeconds = GapDays * 86400L
-    // The flush-once contract of the one-pass sketch/upsert ops
-    // (StreamingSketches.bloomWords, StreamingUpsert.latest, …)
-    // requires gap > event-time span: a key quiet for more than the
-    // gap mid-stream flushes, then re-emits if touched again. Assert
-    // it here rather than relying on GapDays happening to exceed the
-    // staged data (r14 advice finding).
-    locally {
-      val minTs = spark.read.schema(schema).parquet(s"$dir/data")
-        .filter(col("caseId") >= 0L)
-        .agg(min("tsMicros")).head().getLong(0)
-      val spanSec = (maxTs - minTs) / 1000000L
-      require(gapSeconds > spanSec,
-        s"gapSeconds=$gapSeconds must exceed the staged event-time span " +
-          s"($spanSec s): a smaller gap lets a quiet key flush and " +
-          s"re-emit, breaking the flushed-table-IS-the-sketch contract")
-    }
-    val results = scala.collection.mutable.ArrayBuffer[String]()
-    // calibration probes (the Bench/ScaleBench scheme, extended here
-    // in r14 after an external load burst inflated half an ×10 sweep
-    // 2–3× with nothing in the artifact able to show it): a fixed CPU
-    // probe runs before every selected op row and lands in the
-    // artifact with the 1-min load average, so a contended window is
-    // visible NEXT TO the row it contaminated.
-    def calibProbe(): Double = Calib.probe(spark)
-    // parallel 32-task probe (r16 judge item 5): catches PARTIAL-width
-    // external contention the light probe cannot see
-    def calibProbePar(): Double = Calib.probePar(spark)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val calibBase = (1 to 3).map(_ => calibProbe()).min
-    val calibParBase = (1 to 3).map(_ => calibProbePar()).min
-    val calib =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double)]
-    // --ops=a,b,c reruns a subset of rows (iteration / targeted refresh);
-    // default runs everything.
-    val opsFilter: Option[Set[String]] = args.find(_.startsWith("--ops="))
-      .map(_.stripPrefix("--ops=").split(',').toSet)
-    // the valid tokens are exactly the artifact's op keys; a typo must
-    // fail loudly, not silently skip every block and write an empty
-    // artifact
-    val KnownOps = Set("funnel", "dfg", "temporal", "drift", "throttle",
-      "dedup", "sessionize", "batching", "stats", "declare", "conformance", "hopping",
-      "join", "outer_join", "neardup", "heavy_hitters", "hh_sketch",
-      "winsorized", "quantiles", "quantiles_sketch",
-      "quantiles_sketch_w", "hll", "cm",
-      "bloom", "upsert", "asof", "asof_fwd", "asof_near", "sample",
-      "sample_by_group", "xes")
-    opsFilter.foreach { f =>
-      val bad = f -- KnownOps
-      require(bad.isEmpty, s"unknown --ops tokens: ${bad.mkString(",")}; " +
-        s"valid: ${KnownOps.toSeq.sorted.mkString(",")}")
-      require(!f.contains("hh_sketch") || f.contains("heavy_hitters"),
-        "hh_sketch certifies heavy_hitters' pass-1 output (the same " +
-          "fold IS the no-retention operator): include heavy_hitters too")
-    }
-    // wanted() doubles as the calib hook: the FIRST evaluation for an
-    // op records its block-entry probe (hh_sketch probes inside the
-    // heavy_hitters block — its measurement is the shared fold, so
-    // that is its window). The seen-set makes re-evaluation harmless:
-    // a combined condition like wanted("hll") || wanted("cm") cannot
-    // insert duplicate probe rows (review finding).
-    val probed = scala.collection.mutable.Set.empty[String]
-    def wanted(op: String): Boolean = {
-      val w = opsFilter.forall(_.contains(op))
-      if (w && probed.add(op))
-        calib += ((op, calibProbe(), osBean.getSystemLoadAverage,
-          calibProbePar()))
-      w
-    }
-
-    // ---- funnel: per-case keyed state, final timer flush ----
-    if (wanted("funnel")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingFunnel.reached(spark,
-          df.as[StreamingFunnel.InEvent], Stages, gapSeconds).toDF()
-      } { batch =>
-        batch.filter(col("caseId") >= 0L)
-          .groupBy(col("reachedIdx")).agg(count(lit(1)).as("n"))
-      }
-      val byIdx = rows.map(r => r.getInt(0) -> r.getLong(1))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
-      val streamCounts = Stages.indices.map(i =>
-        byIdx.collect { case (idx, n) if idx >= i => n }.sum)
-      val t0 = System.nanoTime()
-      val batchCounts = graft.ops.Funnel.orderedStages(
-          batchEv.withColumn("ts", timestamp_micros(col("tsMicros"))),
-          caseCol = "caseId", tsCol = "ts",
-          stages = Stages.map(s => s -> (col("activity") === s)))
-        .orderBy("stage_idx").select("n_cases").as[Long].collect().toSeq
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamCounts == batchCounts
-      println(f"funnel  x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok $streamCounts vs $batchCounts")
-      results += s""""funnel":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- dfg: trace assembly -> edge emission, folded per batch ----
-    if (wanted("dfg")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingDfg.edges(spark,
-          df.select(col("caseId").cast("string").as("caseId"),
-            col("activity"), col("tsMicros"), col("ts"))
-            .as[TraceAssembly.InEvent], gapSeconds).toDF()
-      } { batch =>
-        batch.filter(col("actFrom") =!= "_s" && col("actTo") =!= "_s")
-          .groupBy(col("actFrom"), col("actTo")).agg(count(lit(1)).as("n"))
-      }
-      val streamEdges = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
-      val t0 = System.nanoTime()
-      val w = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"), col("activity"))
-      val batchEdges = batchEv
-        .withColumn("_next", lead(col("activity"), 1).over(w))
-        .filter(col("_next").isNotNull)
-        .groupBy(col("activity").as("a"), col("_next").as("b"))
-        .agg(count(lit(1)).as("n"))
-        .as[(String, String, Long)].collect()
-        .map { case (a, b, n) => (a, b) -> n }.toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamEdges == batchEdges
-      println(f"dfg     x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamEdges.size} edges)")
-      results += s""""dfg":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- temporal: ONLINE pair fold + in-stream deviation filter ----
-    // The online-conformance shape: transition pairs emit as the
-    // watermark finalizes them (not at case close), the z-filter runs
-    // IN-STREAM as a stream-static broadcast join against the fixed
-    // profile, and only DEVIATING occurrences leave the stateful stage
-    // — sink volume ∝ alerts. State per case: one (ts, activity) pair
-    // + in-horizon buffer (the DFG compaction minus the edge map).
-    if (wanted("temporal")) {
-      // The fixed profile is MATERIALIZED to a LocalTableScan
-      // (alphabet²-bounded collect, the StreamingDrift baseline-Map
-      // convention): a lazy batch DF over the staged drop-dir must
-      // never be referenced INSIDE the streaming query — a mid-stream
-      // re-listing of the mutating dir captures sentinel slices that
-      // the run deletes afterwards, and the stale listing then fails
-      // any later re-evaluation (caught live in this round's first
-      // ×10 sweep: FAILED_READ_FILE on a deleted sentinel).
-      val profLazy = graft.ops.Temporal.profileOf(
-        graft.ops.Temporal.pairsWithSeconds(
-          batchEv.withColumn("ts", timestamp_micros(col("tsMicros"))),
-          caseCol = "caseId", activityCol = "activity",
-          tsCol = "ts", tieBreak = "activity"))
-      val profRows = profLazy.collect()
-      val profile = spark.createDataFrame(
-        java.util.Arrays.asList(profRows: _*), profLazy.schema)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        val pairs = graft.streaming.StreamingTemporal.pairs(spark,
-          df.select(col("caseId").cast("string").as("caseId"),
-            col("activity"), col("tsMicros"), col("ts"))
-            .as[TraceAssembly.InEvent], gapSeconds)
-          .select(col("actFrom").as("act_from"), col("actTo").as("act_to"),
-            expr("waitUs div 1000000").as("wait_s"))
-        graft.ops.Temporal.deviationFlags(pairs, profile, zeta = 2.0)
-          .filter(col("is_dev"))
-          .select(col("act_from"), col("act_to"))
-      } { batch =>
-        batch.groupBy(col("act_from"), col("act_to"))
-          .agg(count(lit(1)).as("n"))
-      }
-      val streamDevs = rows.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
-      val t0 = System.nanoTime()
-      val batchDevs = graft.ops.Temporal.deviationFlags(
-          graft.ops.Temporal.pairsWithSeconds(
-            batchEv.withColumn("ts", timestamp_micros(col("tsMicros"))),
-            caseCol = "caseId", activityCol = "activity",
-            tsCol = "ts", tieBreak = "activity"), profile, zeta = 2.0)
-        .filter(col("is_dev"))
-        .groupBy(col("act_from"), col("act_to")).agg(count(lit(1)).as("n"))
-        .as[(String, String, Long)].collect()
-        .map { case (a, b, n) => (a, b) -> n }.toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamDevs == batchDevs
-      println(f"temporal x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamDevs.values.sum} deviations)")
-      results += s""""temporal":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- drift: tumbling day windows, MID-STREAM eviction ----
-    if (wanted("drift")) {
-      val baseline = batchEv.groupBy(col("activity")).count()
-        .as[(String, Long)].collect().toMap
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingDrift.monitor(spark,
-          df.select(col("activity"), col("tsMicros"), col("ts"))
-            .as[StreamingDrift.InEvent], 86400L, baseline).toDF()
-      } { batch => batch } // already window-rows (≤ span/1d of them)
-      val streamWins = rows.filter(_.getLong(0) <= maxTs)
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-      val t0 = System.nanoTime()
-      val g = baseline.values.sum
-      val winUs = 86400L * 1000000L
-      val perWin = batchEv
-        .groupBy(expr(s"(tsMicros div $winUs) * $winUs").as("ws"),
-          col("activity"))
-        .agg(count(lit(1)).as("n_pa"))
-        .as[(Long, String, Long)].collect()
-        .groupBy(_._1)
-      val batchWins = perWin.map { case (ws, as) =>
-        val m = as.map(a => a._2 -> a._3).toMap
-        val nP = m.values.sum
-        val acts = m.keySet ++ baseline.keySet
-        val num = acts.iterator.map(a =>
-          math.abs(m.getOrElse(a, 0L) * g - baseline.getOrElse(a, 0L) * nP)).sum
-        (ws, nP, if (nP == 0 || g == 0) 0.0 else num.toDouble / (nP.toDouble * g.toDouble))
-      }.toSeq.sortBy(_._1)
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamWins == batchWins
-      println(f"drift   x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamWins.size} windows)")
-      results += s""""drift":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- throttle: one-timestamp state, CONTINUOUS mid-stream
-    // eviction (timeout = last event + gap, far shorter than the data
-    // span — peak state tracks keys active within the gap horizon,
-    // not the key universe) ----
-    if (wanted("throttle")) {
-      val thGap = 600L
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingThrottle.keptCounts(spark,
-          df.select(col("caseId"), col("activity").as("label"),
-            col("tsMicros"), col("tsMicros").as("tie"), col("ts"))
-            .as[StreamingThrottle.InEvent], thGap).toDF()
-      } { batch =>
-        batch.filter(col("label") =!= "_s")
-          .groupBy(col("label"))
-          .agg(sum(col("nTotal")).as("t"), sum(col("nKept")).as("k"))
-      }
-      val streamCounts = rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .groupBy(_._1).map { case (l, v) =>
-          l -> (v.map(_._2._1).sum, v.map(_._2._2).sum) }
-      val t0 = System.nanoTime()
-      // batch truth: the same lag-relative rule (tie = tsMicros — equal
-      // timestamps within a key are order-indifferent for counting:
-      // a zero gap drops the later one under either ordering)
-      val w = Window.partitionBy(col("caseId"), col("activity"))
-        .orderBy(col("tsMicros"))
-      val batchCounts = batchEv
-        .withColumn("_prev", lag(col("tsMicros"), 1).over(w))
-        .withColumn("_kept", col("_prev").isNull ||
-          col("tsMicros") - col("_prev") > thGap * 1000000L)
-        .groupBy(col("activity"))
-        .agg(count(lit(1)).as("t"),
-          sum(when(col("_kept"), 1L).otherwise(0L)).as("k"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> (r._2, r._3)).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamCounts == batchCounts
-      println(f"throttle x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamCounts.size} labels)")
-      results += s""""throttle":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- exactly-once dedup: every slice DUPLICATED as a sibling
-    // file with the next mod-time (the at-least-once redelivery
-    // failure mode), so original and copy land in the same or the
-    // immediately following trigger — inside the watermark horizon,
-    // where dropDuplicatesWithinWatermark guarantees the drop. The
-    // per-type counts after online dedup must equal the single-copy
-    // batch counts exactly. ----
-    if (wanted("dedup")) {
-      // batch truth MATERIALIZED before the dup files exist (batchEv
-      // is lazy — evaluating it later would scan the duplicates too).
-      // The dedup key (caseId, activity, tsMicros) is unique in the
-      // single-copy data (verified: 100k distinct of 100k at sf0.1;
-      // per-copy key offsets preserve it at any inflation), so plain
-      // counts ARE the post-dedup truth.
-      val batchCounts = batchEv.groupBy(col("activity"))
-        .agg(count(lit(1)).as("n"))
-        .as[(String, Long)].collect().toMap
-      val data = new File(s"$dir/data")
-      val originals = data.listFiles().filter(_.getName.startsWith("part-"))
-        .sortBy(_.lastModified())
-      val dups = originals.map { f =>
-        val d = new File(data, f.getName.replace("part-", "dup-part-"))
-        java.nio.file.Files.copy(f.toPath, d.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        d.setLastModified(f.lastModified() + 1L)
-        d
-      }
-      try {
-        val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-          df.dropDuplicatesWithinWatermark("caseId", "activity", "tsMicros")
-        } { batch =>
-          batch.filter(col("caseId") >= 0L)
-            .groupBy(col("activity")).agg(count(lit(1)).as("n"))
-        }
-        val streamCounts = rows.map(r => r.getString(0) -> r.getLong(1))
-          .groupBy(_._1).map { case (a, v) => a -> v.map(_._2).sum }
-        val ok = streamCounts == batchCounts
-        println(f"dedup   x$copies stream=$secs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamCounts.size} labels)")
-        results += s""""dedup":{"stream_s":$secs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-      } finally dups.foreach(_.delete())
-    }
-
-    // ---- sessionize: built-in session_window (watermark-closed),
-    // sessions close MID-STREAM as the watermark passes; compared via
-    // an order-free exact fingerprint (count + sum + xor of row
-    // hashes), so nothing session-proportional crosses to the driver
-    // beyond the per-batch 1-row fold ----
-    if (wanted("sessionize")) {
-      val sessGap = 43200L
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingStats.sessionStats(df, "caseId", "ts", sessGap)
-      } { batch =>
-        batch.filter(col("caseId") >= 0L)
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("n_events")), lit(0L)).as("ev"),
-            coalesce(expr(
-              "bit_xor(xxhash64(caseId, n_events, unix_micros(t_start), unix_micros(t_end)))"),
-              lit(0L)).as("h"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      // batch truth: gap rule per case — new session when the gap from
-      // the previous event is >= sessGap (session_window merges on
-      // OVERLAP of [ts, ts+gap), so an exact gap starts a new session)
-      val w = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"))
-      val bs = batchEv
-        .withColumn("_prev", lag(col("tsMicros"), 1).over(w))
-        .withColumn("_new", (col("_prev").isNull ||
-          col("tsMicros") - col("_prev") >= sessGap * 1000000L).cast("long"))
-        .withColumn("_sess", sum(col("_new"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("caseId"), col("_sess"))
-        .agg(count(lit(1)).as("n_events"), min(col("tsMicros")).as("t0"),
-          max(col("tsMicros")).as("t1"))
-        .agg(count(lit(1)).as("n"), sum(col("n_events")).as("ev"),
-          expr("bit_xor(xxhash64(caseId, n_events, t0, t1))").as("h"))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp
-      println(f"session x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} sessions)")
-      results += s""""sessionize":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- batching: gate 32's per-(activity, resource) run fold
-    // under the REAL file source — state is the OPEN batch only (four
-    // longs; a flushed key parks as its standing batch counter), so
-    // peak state is key-count-bounded at any scale. One emitted row
-    // per CLOSED maximal run; compared to the batch lag/cumsum window
-    // construction over the same staged files via the order-free
-    // fingerprint (the per-batch rows are data-proportional and never
-    // cross to the driver). ----
-    if (wanted("batching")) {
-      import graft.streaming.StreamingBatching
-      val bGapUs = 86400L * 1000000L
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(col("activity"),
-            col("caseId").as("resource"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingBatching.BItem]
-        StreamingBatching.batches(spark, items, gapUs = bGapUs,
-          gapSeconds = gapSeconds).toDF()
-      } { batch =>
-        batch.filter(col("resource") >= 0L)
-          .agg(count(lit(1)).as("n"),
-            coalesce(expr("bit_xor(xxhash64(activity, resource, batchId," +
-              " batchSize, tStartUs, tEndUs))"), lit(0L)).as("h1"),
-            coalesce(expr("bit_xor(xxhash64(batchSize, tEndUs, activity," +
-              " resource, batchId, 7))"), lit(0L)).as("h2"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L),
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      // batch truth: the q_batching lag/cumsum construction (same
-      // batch iff gap <= gapUs); (caseId, activity, tsMicros) is
-      // unique in the staging, so the ts order needs no tie-break
-      val w = Window.partitionBy(col("activity"), col("caseId"))
-        .orderBy(col("tsMicros"))
-      val bs = batchEv
-        .withColumn("_prev", lag(col("tsMicros"), 1).over(w))
-        .withColumn("_new", (col("_prev").isNull ||
-          col("tsMicros") - col("_prev") > bGapUs).cast("long"))
-        .withColumn("batchId", sum(col("_new"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("activity"), col("caseId").as("resource"), col("batchId"))
-        .agg(count(lit(1)).as("batchSize"), min(col("tsMicros")).as("tStartUs"),
-          max(col("tsMicros")).as("tEndUs"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(activity, resource, batchId," +
-            " batchSize, tStartUs, tEndUs))"), lit(0L)).as("h1"),
-          coalesce(expr("bit_xor(xxhash64(batchSize, tEndUs, activity," +
-            " resource, batchId, 7))"), lit(0L)).as("h2"))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp && streamFp._1 > 0L
-      println(f"batching x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} batches, fingerprint-exact)")
-      results += s""""batching":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"n_batches":${streamFp._1}}"""
-    }
-
-    // ---- stats: the reference's StatsCollector as a running global
-    // aggregate (Complete mode, one state row + HLL sketch) — the
-    // final triple must equal the batch aggregate exactly
-    // (approx_count_distinct is a deterministic hash sketch with
-    // order-free register maxima, so batch and stream agree bit-wise) ----
-    if (wanted("stats")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays,
-        mode = OutputMode.Complete(), keepLast = true) { df =>
-        StreamingStats.running(df.filter(col("activity") =!= "_s"), "caseId")
-      } { batch => batch }
-      val streamTriple = rows.headOption
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val t0 = System.nanoTime()
-      val b = StreamingStats.running(batchEv, "caseId").head()
-      val batchTriple = Some((b.getLong(0), b.getLong(1), b.getLong(2)))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamTriple == batchTriple
-      println(f"stats   x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok $streamTriple vs $batchTriple")
-      results += s""""stats":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- declare: closed-trace constraint monitoring (TraceAssembly
-    // state + stateless broadcast evaluation); per-constraint verdict
-    // counts folded per batch, batch truth re-evaluates the identical
-    // profile algebra per case with the same (ts, activity) sort ----
-    if (wanted("declare")) {
-      val constraints = Seq(
-        StreamingDeclare.Constraint("existence", "signup"),
-        StreamingDeclare.Constraint("absence2", "error"),
-        StreamingDeclare.Constraint("init", "signup"),
-        StreamingDeclare.Constraint("last", "purchase"),
-        StreamingDeclare.Constraint("responded_existence", "click", "purchase"),
-        StreamingDeclare.Constraint("response", "click", "purchase"),
-        StreamingDeclare.Constraint("precedence", "signup", "purchase"),
-        StreamingDeclare.Constraint("succession", "signup", "error"))
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingDeclare.monitor(spark,
-          df.select(col("caseId").cast("string").as("caseId"),
-            col("activity"), col("tsMicros"), col("ts"))
-            .as[TraceAssembly.InEvent], GapDays * 86400L, constraints).toDF()
-      } { batch =>
-        batch.filter(col("caseId") =!= "-1")
-          .groupBy(col("template"), col("actA"), col("actB"))
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("applicable"), 1L).otherwise(0L)).as("na"),
-            sum(when(col("satisfied"), 1L).otherwise(0L)).as("ns"))
-      }
-      val streamByC = rows
-        .map(r => (r.getString(0), r.getString(1), r.getString(2)) ->
-          (r.getLong(3), r.getLong(4), r.getLong(5)))
-        .groupBy(_._1).map { case (k, v) =>
-          k -> (v.map(_._2._1).sum, v.map(_._2._2).sum, v.map(_._2._3).sum) }
-      val t0 = System.nanoTime()
-      val bCons = spark.sparkContext.broadcast(constraints)
-      val batchByC = batchEv
-        .select(col("caseId"), col("activity"), col("tsMicros"))
+  /** Batch references in the gate's output shape, for the gates
+    * without a twin. */
+  val LocalRefs: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "q_stream_declare_parity" -> { (s, dir) =>
+      import s.implicits._
+      val cons = EventLogQueries.DeclareMonitorSet
+      events(s, dir)
+        .select(col("user_id"), col("event_type"), col("us"))
         .as[(Long, String, Long)]
         .groupByKey(_._1)
         .flatMapGroups { (_, it) =>
+          // TraceAssembly's closed-trace order: (tsMicros, activity)
           val acts = it.toSeq.sortBy(e => (e._3, e._2)).map(_._2)
-          bCons.value.iterator.map { c =>
+          cons.map { c =>
             val (app, sat) = StreamingDeclare.evaluate(c, acts)
-            (c.template, c.actA, c.actB, 1L,
-              if (app) 1L else 0L, if (sat) 1L else 0L)
+            (c.template, c.actA, c.actB, if (app) 1L else 0L, if (sat) 1L else 0L)
           }
-        }
-        .groupByKey(t => (t._1, t._2, t._3))
-        .mapGroups { (k, it) =>
-          val s = it.toSeq
-          (k, (s.map(_._4).sum, s.map(_._5).sum, s.map(_._6).sum))
-        }.collect().toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamByC == batchByC
-      println(f"declare x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamByC.size} constraints)")
-      results += s""""declare":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- conformance: per-closed-trace token replay against the
-    // alpha net mined (batch-side) from the same staged log; folded to
-    // integer-exact aggregates (double fitness compared only as the
-    // perfect-fitness count — float sums are order-dependent) ----
-    if (wanted("conformance")) {
-      val net = Alpha.mine(
-        batchEv.withColumn("ts", timestamp_micros(col("tsMicros"))),
-        "caseId", "activity", "tsMicros", "activity")
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        StreamingConformance.replayFitness(spark,
-          df.select(col("caseId").cast("string").as("caseId"),
-            col("activity"), col("tsMicros"), col("ts"))
-            .as[TraceAssembly.InEvent], GapDays * 86400L, net).toDF()
-      } { batch =>
-        batch.filter(col("caseId") =!= "-1")
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("nEvents")), lit(0L)).as("ev"),
-            coalesce(sum(col("missing")), lit(0L)).as("miss"),
-            coalesce(sum(col("remaining")), lit(0L)).as("rem"),
-            coalesce(sum(when(col("fitness") === 1.0, 1L).otherwise(0L)),
-              lit(0L)).as("fit1"))
-      }
-      val streamAgg = (rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
-        rows.map(_.getLong(2)).sum, rows.map(_.getLong(3)).sum,
-        rows.map(_.getLong(4)).sum)
-      val t0 = System.nanoTime()
-      val bNet = spark.sparkContext.broadcast(net)
-      val ba = batchEv
-        .select(col("caseId"), col("activity"), col("tsMicros"))
-        .as[(Long, String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (_, it) =>
-          val acts = it.toSeq.sortBy(e => (e._3, e._2)).map(_._2)
-          val vf = Replay.replayVariant(bNet.value, acts)
-          (1L, acts.length.toLong, vf.missing, vf.remaining,
-            if (vf.fitness == 1.0) 1L else 0L)
-        }
-        .reduce((a, b) =>
-          (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4, a._5 + b._5))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamAgg == ba
-      println(f"conform x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok $streamAgg vs $ba")
-      results += s""""conformance":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- hopping windows: the pure watermarked window aggregation
-    // (1-day windows hopping every 6 h); windows close mid-stream as
-    // the watermark passes their end — compared via the order-free
-    // exact fingerprint. The sentinel rows MUST flow into the agg and
-    // be filtered in the FOLD: a pre-agg filter on `activity` is
-    // pushed BELOW the EventTimeWatermark node by Catalyst
-    // (predicates not referencing the event-time column move through
-    // it), which would kill the sentinels before the watermark node
-    // and leave the final open windows unflushed forever — measured:
-    // exactly the last 4 hop-starts × alphabet went missing. ----
-    if (wanted("hopping")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays) { df =>
-        df.groupBy(window(col("ts"), "1 day", "6 hours").as("w"), col("activity"))
-          .agg(count(lit(1)).as("n"))
-          .select(unix_micros(col("w.start")).as("ws"), col("activity"), col("n"))
-      } { batch =>
-        batch.filter(col("activity") =!= "_s")
-          .agg(count(lit(1)).as("rows"),
-          coalesce(sum(col("n")), lit(0L)).as("ev"),
-          coalesce(expr("bit_xor(xxhash64(ws, activity, n))"), lit(0L)).as("h"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      // batch truth: each event lands in the 4 hops covering it; hop
-      // start = the aligned 6 h grid points within (ts - 1d, ts]
-      val hopUs = 6L * 3600L * 1000000L
-      val bs = batchEv
-        .select(col("activity"), col("tsMicros"),
-          explode(sequence(lit(0), lit(3))).as("k"))
-        .withColumn("ws", (col("tsMicros") - col("tsMicros") % hopUs) - col("k") * hopUs)
-        .filter(col("tsMicros") < col("ws") + 4L * hopUs)
-        .groupBy(col("ws"), col("activity"))
+        }.toDF("template", "act_a", "act_b", "app", "sat")
+        .groupBy("template", "act_a", "act_b")
+        .agg(count(lit(1)).as("n_cases"), sum("app").as("n_applicable"),
+          sum("sat").as("n_satisfied"))
+    },
+    // the dedup gate's doubled feed must reduce to the single copy
+    "q_stream_dedup_parity" -> { (s, dir) =>
+      Tables(s, dir, "events").groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("rows"), coalesce(sum(col("n")), lit(0L)).as("ev"),
-          expr("bit_xor(xxhash64(ws, activity, n))").as("h"))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp
-      println(f"hopping x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} window rows)")
-      results += s""""hopping":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- stream-stream interval join: views within the hour before
-    // each purchase (q_stream_join_parity's shape under the REAL file
-    // source) — join state buffered per side, evicted by watermark +
-    // range bound; the one stateful class the r10 parity gate added,
-    // here with its eviction measured. The branch filters DO swallow
-    // the sentinels before the per-branch watermarks — harmless for an
-    // INNER join (matches emit eagerly per batch; no end-of-stream
-    // flush is needed), and eviction is driven by the data batches'
-    // own watermark advance, which is what peak_state_rows measures. ----
-    if (wanted("join")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays,
-          sourceWatermark = false) { df =>
-        val views = df.filter(col("activity") === "view")
-          .select(col("caseId").as("v_user"), col("ts").as("v_ts"),
-            col("tsMicros").as("v_us"))
-          .withWatermark("v_ts", "10 seconds")
-        val buys = df.filter(col("activity") === "purchase")
-          .select(col("caseId").as("b_user"), col("ts").as("b_ts"),
-            col("tsMicros").as("b_us"))
-          .withWatermark("b_ts", "10 seconds")
-        views.join(buys, expr(
-          "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"))
-      } { batch =>
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(b_user, b_us, v_us))"), lit(0L)).as("h"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      val views = batchEv.filter(col("activity") === "view")
-        .select(col("caseId").as("v_user"), col("tsMicros").as("v_us"))
-      val buys = batchEv.filter(col("activity") === "purchase")
-        .select(col("caseId").as("b_user"), col("tsMicros").as("b_us"))
-      val bf = views.join(buys, expr(
-          "v_user = b_user AND v_us >= b_us - 3600000000 AND v_us <= b_us"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(b_user, b_us, v_us))"), lit(0L)).as("h"))
-        .head()
-      val batchFp = (bf.getLong(0), bf.getLong(1))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp
-      println(f"join    x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} pairs)")
-      results += s""""join":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- LEFT-OUTER stream-stream join: the null-padded rows are
-    // produced by watermark-driven STATE EVICTION, not by data — the
-    // end-of-stream flush needs the sentinels to reach BOTH branch
-    // watermark nodes, so the branch filters deliberately let "_s"
-    // through (isin) and the fold drops the sentinel pairs ----
-    if (wanted("outer_join")) {
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs, GapDays,
-          sourceWatermark = false) { df =>
-        val views = df.filter(col("activity").isin("view", "_s"))
-          .select(col("caseId").as("v_user"), col("ts").as("v_ts"),
-            col("tsMicros").as("v_us"))
-          .withWatermark("v_ts", "10 seconds")
-        val buys = df.filter(col("activity").isin("purchase", "_s"))
-          .select(col("caseId").as("b_user"), col("ts").as("b_ts"),
-            col("tsMicros").as("b_us"))
-          .withWatermark("b_ts", "10 seconds")
-        buys.join(views, expr(
-          "v_user = b_user AND v_ts >= b_ts - interval 1 hour AND v_ts <= b_ts"),
-          "leftOuter")
-      } { batch =>
-        batch.filter(col("b_user") >= 0L)
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(when(col("v_us").isNull, 1L).otherwise(0L)), lit(0L))
-              .as("unmatched"),
-            coalesce(expr(
-              "bit_xor(xxhash64(b_user, b_us, coalesce(v_us, -1)))"), lit(0L)).as("h"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum, rows.map(_.getLong(1)).sum,
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      val views = batchEv.filter(col("activity") === "view")
-        .select(col("caseId").as("v_user"), col("tsMicros").as("v_us"))
-      val buys = batchEv.filter(col("activity") === "purchase")
-        .select(col("caseId").as("b_user"), col("tsMicros").as("b_us"))
-      val bf = buys.join(views, expr(
-          "v_user = b_user AND v_us >= b_us - 3600000000 AND v_us <= b_us"),
-          "leftOuter")
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(when(col("v_us").isNull, 1L).otherwise(0L)), lit(0L))
-            .as("unmatched"),
-          coalesce(expr(
-            "bit_xor(xxhash64(b_user, b_us, coalesce(v_us, -1)))"), lit(0L)).as("h"))
-        .head()
-      val batchFp = (bf.getLong(0), bf.getLong(1), bf.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp
-      println(f"ojoin   x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} rows, ${streamFp._2} unmatched)")
-      results += s""""outer_join":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
-    }
-
-    // ---- neardup: MinHash+LSH bucket claims with per-bucket
-    // first-holder state — THE state that grows with corpus size, so
-    // the TTL here deliberately covers the whole span (no mid-stream
-    // expiry) and peak_state_rows IS the honest bucket-universe
-    // measurement. Documents staged separately (per-copy character
-    // bijection, dense 1 s event spacing). ----
-    // shared staging for the document-stream rows. neardup wants the
-    // per-copy character bijection (plain replicas would collide in
-    // every MinHash bucket); heavy_hitters wants PLAIN replication
-    // (counts scale with N, so the heavy set is scale-invariant and
-    // the audit's output is nonempty — decorrelated copies dilute
-    // every count below any fixed ppm threshold by construction).
-    def ensureDocsStaged(docDir: String, decorrelate: Boolean): Unit = {
-      if (!stagingReusable(docDir, evStamp) || args.contains("--rebuild")) {
-        println(s"staging documents $base x$copies -> $docDir (decorrelate=$decorrelate)")
-        clearStamp(docDir)
-        val d = new File(s"$docDir/data")
-        if (d.exists()) { d.listFiles().foreach(_.delete()); d.delete() }
-        val docs = Tables(spark, base, "documents")
-        val nDocs = docs.count()
-        val inflated = (0 until copies).map { i =>
-          docs.select(
-            (col("doc_id") + lit(i.toLong * 100000000L)).as("docId"),
-            (if (decorrelate) ScaleBench.decorrelateText(col("text"), i)
-             else col("text")).as("text"),
-            // dense event time: copy-major rank, 1 s spacing
-            ((col("doc_id") + lit(i * nDocs) + 1L) * 1000000L).as("tsMicros"))
-        }.reduce(_ unionAll _)
-        val data = s"$docDir/data"
-        inflated.repartitionByRange(files, col("tsMicros"))
-          .sortWithinPartitions("tsMicros")
-          .write.mode("overwrite").parquet(data)
-        val parts = new File(data).listFiles()
-          .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-        val t0 = System.currentTimeMillis() - parts.length * 2000L - 60000L
-        parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 2000L) }
-        writeStamp(docDir, evStamp)
-      }
-    }
-    val docDir = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOC_STAGE",
-      "/tmp/graft_stream_docs")
-
-    if (wanted("neardup")) {
-      ensureDocsStaged(docDir, decorrelate = true)
-      val docMaxTs = maxDataTs(spark, docDir, docSchema)
-      val ttl = docMaxTs / 1000000L + 86400L // whole span: no mid-stream expiry
-      val (rows, nb, peak, drops, secs) = run(spark, docDir, fpt, docMaxTs,
-          GapDays, sch = docSchema, sourceWatermark = false) { df =>
-        StreamingNearDup.collisions(spark,
-          StreamingNearDup.bucketHits(spark,
-            df.filter(col("docId") >= 0L).as[StreamingNearDup.Doc],
-            k = 3, numHashes = 32, bands = 8, seed = 42L)
-            // the watermark lives HERE (not on the source): the typed
-            // flatMap would drop the metadata and Spark disallows
-            // redefining an existing source watermark
-            .withColumn("ts", timestamp_micros(col("tsMicros")))
-            .withWatermark("ts", "10 seconds")
-            .as[StreamingNearDup.BucketHit], ttl).toDF()
-      } { batch =>
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(docId, firstDocId, band, bucket))"),
-            lit(0L)).as("h"))
-      }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      // batch truth: same sketch map-side, first holder per bucket by
-      // (tsMicros, docId), every other hit collides against it
-      val hitsB = StreamingNearDup.bucketHits(spark,
-        spark.read.schema(docSchema).parquet(s"$docDir/data")
-          .filter(col("docId") >= 0L).as[StreamingNearDup.Doc],
+    },
+    "q_stream_drift_parity" -> { (s, dir) =>
+      val ev = events(s, dir).select(col("event_type").as("a"), col("us"))
+      val g = ev.groupBy(col("a")).agg(count(lit(1)).as("g_a"))
+      val gtot = g.agg(sum(col("g_a"))).head().getLong(0)
+      val w = ev.groupBy(expr("(us div 86400000000) * 86400000000").as("ws"),
+          col("a"))
+        .agg(count(lit(1)).as("n_pa"))
+      val wt = w.groupBy(col("ws")).agg(sum(col("n_pa")).as("n_p"))
+      wt.crossJoin(g).join(w, Seq("ws", "a"), "left")
+        .groupBy(col("ws"), col("n_p"))
+        .agg(sum(abs(coalesce(col("n_pa"), lit(0L)) * gtot -
+          col("g_a") * col("n_p"))).as("l1x2"))
+        .select(col("ws").as("window_start_us"), col("n_p").as("n_events"),
+          (col("l1x2").cast("double") /
+            (col("n_p").cast("double") * lit(gtot.toDouble))).as("l1x2_vs_baseline"))
+    },
+    "q_stream_join_parity" -> ((s, dir) => viewsBeforePurchase(s, dir, "inner")),
+    "q_stream_outer_join_parity" ->
+      ((s, dir) => viewsBeforePurchase(s, dir, "left")),
+    // first holder of a (band, bucket) = min (ts, doc id); every other
+    // hit collides against it
+    "q_stream_neardup_parity" -> { (s, dir) =>
+      import s.implicits._
+      val hits = StreamingNearDup.bucketHits(s,
+        Tables(s, dir, "documents")
+          .select(col("doc_id").cast("long").as("docId"), col("text"),
+            ((col("doc_id").cast("long") + 1L) * 1000000L).as("tsMicros"))
+          .as[StreamingNearDup.Doc],
         k = 3, numHashes = 32, bands = 8, seed = 42L).toDF()
-      val firsts = hitsB.groupBy(col("band"), col("bucket"))
+      val firsts = hits.groupBy(col("band"), col("bucket"))
         .agg(min(struct(col("tsMicros"), col("docId"))).as("f"))
-        .select(col("band"), col("bucket"), col("f.docId").as("firstDocId"))
-      val bf = hitsB.join(firsts, Seq("band", "bucket"))
-        .filter(col("docId") =!= col("firstDocId"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(docId, firstDocId, band, bucket))"),
-            lit(0L)).as("h"))
-        .head()
-      val batchFp = (bf.getLong(0), bf.getLong(1))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp
-      println(f"neardup x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} collisions)")
-      results += s""""neardup":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok}"""
+        .select(col("band"), col("bucket"), col("f.docId").as("first_doc_id"))
+      hits.join(firsts, Seq("band", "bucket"))
+        .filter(col("docId") =!= col("first_doc_id"))
+        .select(col("docId").as("doc_id"), col("first_doc_id"), col("band"),
+          col("bucket"))
+    },
+    // session_window merges on overlap of [ts, ts + gap): a gap of
+    // exactly 12 h starts a new session
+    "q_stream_sessionize_parity" -> { (s, dir) =>
+      val w = Window.partitionBy(col("user_id")).orderBy(col("us"))
+      events(s, dir)
+        .withColumn("_new", (lag(col("us"), 1).over(w).isNull ||
+          col("us") - lag(col("us"), 1).over(w) >= 43200L * 1000000L).cast("long"))
+        .withColumn("_sid", sum(col("_new")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("user_id"), col("_sid"))
+        .agg(count(lit(1)).as("n_events"), min(col("us")).as("t_start_us"),
+          max(col("us")).as("t_end_us"))
+        .drop("_sid")
     }
+  )
 
-    // ---- heavy_hitters: the 15th gate's two-pass scheme under a REAL
-    // file source — pass 1 folds per-bucket Misra-Gries sketches as
-    // flatMapGroupsWithState state over the shingle stream (state rows
-    // = nBuckets, each ≤ k counters), flushed by the sentinel-driven
-    // timers; pass 2 is ONE bounded batch aggregation over the
-    // RETAINED drop-dir (the replayable-source contract), exact-
-    // counting only the emitted candidates. Batch truth: the
-    // vocabulary GROUP BY … HAVING the
-    // sketch path avoids, over the same staged files. Sentinel docs
-    // explode to one Ignore item (a plain "_s" doc has < 3 tokens and
-    // would vanish before the watermark node, stalling it). ----
-    if (wanted("heavy_hitters")) {
-      import graft.streaming.StreamingHeavyHitters
-      import graft.text.TextOps
-      // own staging (plain replication — see ensureDocsStaged)
-      val hhDir = docDir + "_hh"
-      ensureDocsStaged(hhDir, decorrelate = false)
-      val docMaxTs = maxDataTs(spark, hhDir, docSchema)
-      val Ignore = " "
-      val ppm = 75
-      val hhK = 1 << 14
-      val (rows, nb, peak, drops, secs) = run(spark, hhDir, fpt, docMaxTs,
-          GapDays, sch = docSchema, sourceWatermark = false) { df =>
-        // spread the DOC rows (tiny — ~40 MB/batch) across all cores
-        // BEFORE the explode: with fpt files per trigger the scan stage
-        // has ≤ fpt partitions, which serialized the shingle explode +
-        // the operator's map-side pre-combine onto 4 tasks (r14 probe:
-        // pass 1 245.8 s; 32-way it parallelizes both)
-        val items = df.repartition(32).select(
-            explode(when(col("docId") < 0L, array(lit(Ignore)))
-              .otherwise(TextOps.shinglesOf(TextOps.tokens(col("text")), 3)))
-              .as("item"),
-            col("tsMicros"))
-          // no withWatermark here: candidates() attaches the query's
-          // one watermark itself, downstream of its map-side pre-combine
-          .as[StreamingHeavyHitters.Item]
-        // nBuckets is the stateful stage's PARALLELISM knob (distinct
-        // state keys = concurrently folding tasks) and output-invariant
-        // by construction (the recount makes the answer exact whatever
-        // the bucketing): 8 buckets left 24 of the 32 cores idle in the
-        // MG fold — the sketch pass was 255.8 s at ×100; 32 buckets
-        // spread it, peak state stays bounded at nBuckets rows
-        StreamingHeavyHitters.candidates(spark, items, k = hhK,
-          nBuckets = 32, ppm = ppm, gapSeconds = GapDays * 86400L,
-          ignoreItem = Ignore).toDF()
-      } { batch => batch.select(col("item"), col("wLower")) }
-      val cands = rows.map(_.getString(0)).distinct.toArray
-      // pass 2: ONE bounded batch aggregation over the RETAINED files
-      // (the replayable-source contract; r12 judge item #1 — was a
-      // foreachBatch re-stream costing 3.4× batch at ×100, one job +
-      // driver collect per micro-batch)
-      val t1 = System.nanoTime()
-      val rec = new StreamingHeavyHitters.ExactRecount(spark, cands, Ignore)
-      rec.addBatch(spark.read.schema(docSchema).parquet(s"$hhDir/data")
-        .filter(col("docId") >= 0L)
-        .select(explode(TextOps.shinglesOf(TextOps.tokens(col("text")), 3))
-          .as("item")), 0L)
-      val recountSecs = (System.nanoTime() - t1) / 1e9
-      val streamHeavy = rec.result(ppm).toMap
-      // batch truth: the vocabulary shuffle. The exactness check is
-      // TWO-LEVEL: the ≥-threshold output sets must be equal AND the
-      // recount's per-candidate exact counts must equal the batch
-      // counts of the same items (so the audit is non-vacuous even if
-      // the heavy set were empty at some scale).
-      val t0 = System.nanoTime()
-      val sh = spark.read.schema(docSchema).parquet(s"$hhDir/data")
-        .filter(col("docId") >= 0L)
-        .select(explode(TextOps.shinglesOf(TextOps.tokens(col("text")), 3))
-          .as("item"))
-      val nTot = sh.count()
-      val thr = (nTot / 1000000L) * ppm +
-        ((nTot % 1000000L) * ppm + 999999L) / 1000000L
-      val vocabCounts = sh.groupBy(col("item")).agg(count(lit(1)).as("n"))
-      val batchHeavy = vocabCounts.filter(col("n") >= thr)
-        .as[(String, Long)].collect().toMap
-      val batchCandCounts = vocabCounts
-        .join(broadcast(cands.toSeq.toDF("item")), "item")
-        .as[(String, Long)].collect().toMap // bounded by |candidates|
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamHeavy == batchHeavy && rec.streamLength == nTot &&
-        rec.candidateCounts == batchCandCounts
-      val totalSecs = secs + recountSecs
-      println(f"hhitter x$copies stream=$totalSecs%6.1fs (sketch=$secs%.1f recount=$recountSecs%.1f) batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${cands.length} cands, ${streamHeavy.size} heavy of $nTot shingles)")
-      results += s""""heavy_hitters":{"stream_s":$totalSecs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"candidates":${cands.length},"heavy":${streamHeavy.size}}"""
+  /** The batch reference of gate `g` on `dir`: its twin, else its
+    * local reference. */
+  def batchReference(s: SparkSession, g: String, dir: String): DataFrame =
+    Twins.get(g).fold(LocalRefs(g)(s, dir))(t => SparkEntry.queries(t)(s, dir))
 
-      // ---- hh_sketch: the NO-RETENTION face of the SAME pass-1 fold
-      // (the 24th gate at scale). The flushed candidates with their MG
-      // lower bounds ARE the operator's whole output — no recount, no
-      // replay — so stream_s is pass 1's wall, already measured above.
-      // Batch twin: the one-pass sketchHeavyHitters (one scan, NO
-      // vocabulary shuffle). Certification (reported as audit_s, the
-      // qsketch convention): mgAudit over the staged files — per TRUE
-      // heavy item, found / lower_le_exact / gap_le_bound must be
-      // deterministically TRUE for BOTH estimates. ----
-      if (wanted("hh_sketch")) {
-        import graft.text.HeavyHitters
-        val t2 = System.nanoTime()
-        val bEst = HeavyHitters.sketchHeavyHitters(
-            spark.read.schema(docSchema).parquet(s"$hhDir/data")
-              .filter(col("docId") >= 0L)
-              .select(explode(
-                TextOps.shinglesOf(TextOps.tokens(col("text")), 3))
-                .as("item")),
-            col("item"), ppm, hhK)
-          .select(col("item"), col("w_lower")).collect() // ≤ k rows
-        val bSketchSecs = (System.nanoTime() - t2) / 1e9
-        val streamEst = spark.createDataFrame(
-          java.util.Arrays.asList(rows.map(r =>
-            org.apache.spark.sql.Row(r.getString(0), r.getLong(1))): _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("item",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("w_lower",
-              org.apache.spark.sql.types.LongType))))
-        val bEstDf = spark.createDataFrame(
-          java.util.Arrays.asList(bEst: _*),
-          streamEst.schema)
-        val t3 = System.nanoTime()
-        def allCertified(est: org.apache.spark.sql.DataFrame): (Long, Boolean) = {
-          val a = HeavyHitters.mgAudit(sh, col("item"), est, ppm, hhK)
-            .select(col("found") && col("lower_le_exact") &&
-              col("gap_le_bound")).as[Boolean].collect()
-          (a.length.toLong, a.nonEmpty && a.forall(identity))
-        }
-        val (nHeavyS, okS) = allCertified(streamEst)
-        val (nHeavyB, okB) = allCertified(bEstDf)
-        val auditSecs = (System.nanoTime() - t3) / 1e9
-        val okSk = okS && okB && nHeavyS == nHeavyB &&
-          nHeavyS == batchHeavy.size.toLong
-        println(f"hh_sketch x$copies stream=$secs%6.1fs batch=$bSketchSecs%6.1fs audit=$auditSecs%.1fs batches=$nb peakState=$peak drops=$drops match=$okSk ($nHeavyS heavy certified, stream ${rows.length} / batch ${bEst.length} est rows)")
-        results += s""""hh_sketch":{"stream_s":$secs,"batch_s":$bSketchSecs,"audit_s":$auditSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$okSk,"heavy":$nHeavyS}"""
+  /** Order-free fingerprint of a result: row count plus two xors of
+    * `xxhash64` over each row (different seeds). Columns are taken in
+    * name order, integral values as longs and fractional values
+    * rounded to 9 places, as `tools/check.py` compares them. */
+  def fingerprint(df: DataFrame): (Long, Long, Long) = {
+    val cols = df.schema.fields.sortBy(_.name).toSeq.map { f =>
+      f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          col(f.name).cast(LongType)
+        case FloatType | DoubleType | _: DecimalType =>
+          round(col(f.name).cast(DoubleType), 9)
+        case _ => col(f.name)
       }
     }
+    val r = df.select(xxhash64(cols: _*).as("h1"), xxhash64(lit(7L) +: cols: _*).as("h2"))
+      .agg(count(lit(1)), coalesce(bit_xor(col("h1")), lit(0L)),
+        coalesce(bit_xor(col("h2")), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
 
-    // ---- winsorized: the 16th gate's two-pass robust-stats scheme
-    // under a REAL file source — pass 1 folds exact per-(group,
-    // value-bucket) histograms as flatMapGroupsWithState state over
-    // the event stream (state = activities × touched buckets, NOT
-    // stream length), flushed by the sentinel-driven timers; pass 2 is
-    // ONE bounded BandRefiner batch aggregation over the RETAINED
-    // drop-dir (the replayable-source contract the heavy-hitters row
-    // documents), folding only the two rank buckets' per-value counts
-    // plus three-region BigInt partials. The value is a derived i64
-    // (pmod(xxhash64(caseId, tsMicros), 2e6) − 1e6 — signed, so the
-    // floor-div bucketing is exercised on both sides). Batch truth:
-    // Quantiles.winsorizedStats over the SAME staged files, compared
-    // BIT-FOR-BIT including the three derived doubles (the parity
-    // gate's bit-equality claim, now proven under multi-batch
-    // watermark advance at ×copies). ----
-    if (wanted("winsorized")) {
-      import graft.streaming.StreamingWinsorized
-      val Ignore = " "
-      val loP = 10; val hiP = 990
-      val W = 512L // tuning only: sizes state + refinement, never the answer
-      val vCol = pmod(xxhash64(col("caseId"), col("tsMicros")),
-        lit(2000000L)) - lit(1000000L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        // sentinel rows remap to Ignore IN a projection (the standing
-        // sentinel rule: a filter below the watermark node stalls it)
-        val items = df.select(when(col("caseId") < 0L, lit(Ignore))
-              .otherwise(col("activity")).as("group"),
-            vCol.as("v"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingWinsorized.VItem]
-        StreamingWinsorized.histogram(spark, items, width = W,
-          gapSeconds = gapSeconds, ignoreGroup = Ignore).toDF()
-      } { batch => batch.select(col("group"), col("bucket"), col("n")) }
-      val bands = StreamingWinsorized.bandBuckets(
-        rows.map(r => StreamingWinsorized.BucketCount(
-          r.getString(0), r.getLong(1), r.getLong(2))), loP, hiP)
-      // pass 2: ONE bounded batch aggregation over the RETAINED files
-      // (the replayable-source contract; r12 judge item #1 — was a
-      // foreachBatch re-stream)
-      val t1 = System.nanoTime()
-      val ref = new StreamingWinsorized.BandRefiner(spark, bands, W, Ignore)
-      ref.addBatch(batchEv
-        .select(col("activity").as("group"), vCol.as("v")), 0L)
-      val refineSecs = (System.nanoTime() - t1) / 1e9
-      val bits = (d: Double) => java.lang.Double.doubleToLongBits(d)
-      val streamRows = ref.result(loP, hiP).map(r => r.group ->
-        (r.nTotal, r.loValue, r.hiValue, bits(r.winsorizedSum),
-          bits(r.winsorizedSumSq), bits(r.winsorizedMean),
-          bits(r.winsorizedVar), bits(r.winsorizedStd))).toMap
-      // batch truth: the one-pass cum-table kernel over the same files
-      val t0 = System.nanoTime()
-      val batchRows = graft.ops.Quantiles.winsorizedStats(
-          batchEv.select(col("activity").as("group"), vCol.as("v")),
-          Seq("group"), col("v"), loP, hiP)
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), bits(r.getDouble(4)),
-            bits(r.getDouble(5)), bits(r.getDouble(6)), bits(r.getDouble(7)),
-            bits(r.getDouble(8)))).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamRows == batchRows && streamRows.nonEmpty
-      val totalSecs = secs + refineSecs
-      println(f"winsor  x$copies stream=$totalSecs%6.1fs (hist=$secs%.1f refine=$refineSecs%.1f) batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamRows.size} groups, bit-exact)")
-      results += s""""winsorized":{"stream_s":$totalSecs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"groups":${streamRows.size}}"""
-    }
+  final case class StreamStats(batches: Long, dataBatches: Long,
+      peakStateRows: Long, lateDrops: Long)
 
-    // ---- quantiles: the 19th gate's two-pass rank-selection scheme
-    // under a REAL file source — pass 1 is the winsorized row's exact
-    // per-(group, value-bucket) histogram VERBATIM (shared keyed-state
-    // kernel); pass 2 is ONE bounded RankResolver batch aggregation
-    // over the RETAINED drop-dir counting per-value rows inside only
-    // the rank buckets (broadcast inner join), with every rank
-    // bucket's recount ENFORCED equal to the pass-1 histogram. Same
-    // signed derived i64 value as the winsorized row. Batch truth:
-    // Quantiles.exactByGroup over the SAME staged files, compared as
-    // the exact (group, permille) -> value map. ----
-    if (wanted("quantiles")) {
-      import graft.streaming.{StreamingQuantiles, StreamingWinsorized}
-      val Ignore = " "
-      val ps = Seq(250, 500, 750, 900, 990)
-      val W = 512L // tuning only: sizes state + join volume, never the answer
-      val vCol = pmod(xxhash64(col("caseId"), col("tsMicros")),
-        lit(2000000L)) - lit(1000000L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        // sentinel rows remap to Ignore IN a projection (the standing
-        // sentinel rule: a filter below the watermark node stalls it)
-        val items = df.select(when(col("caseId") < 0L, lit(Ignore))
-              .otherwise(col("activity")).as("group"),
-            vCol.as("v"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingWinsorized.VItem]
-        StreamingWinsorized.histogram(spark, items, width = W,
-          gapSeconds = gapSeconds, ignoreGroup = Ignore).toDF()
-      } { batch => batch.select(col("group"), col("bucket"), col("n")) }
-      val hist = rows.map(r => StreamingWinsorized.BucketCount(
-        r.getString(0), r.getLong(1), r.getLong(2)))
-      // pass 2: ONE bounded batch aggregation over the RETAINED files
-      val t1 = System.nanoTime()
-      val res = new StreamingQuantiles.RankResolver(spark, hist, ps, W, Ignore)
-      res.addBatch(batchEv
-        .select(col("activity").as("group"), vCol.as("v")), 0L)
-      val streamVals = res.result()
-        .map(r => (r.group, r.pPermille) -> r.value).toMap
-      val resolveSecs = (System.nanoTime() - t1) / 1e9
-      // batch truth: the rank-selection kernel over the same files
-      val t0 = System.nanoTime()
-      val batchVals = graft.ops.Quantiles.exactByGroup(
-          batchEv.select(col("activity").as("group"), vCol.as("v")),
-          Seq("group"), col("v"), ps)
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
-        .toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamVals == batchVals && streamVals.nonEmpty
-      // the 20th gate's outlier algebra rides the SAME resolver state
-      // (threshold at rank p, n_above = n − |v ≤ thr|) — audited here
-      // against the batch outlierCounts kernel rather than as its own
-      // row (same pass-1 operator, zero extra streaming work)
-      val streamOut = res.outlierCounts(990)
-        .map(r => r.group -> (r.nTotal, r.nAbove)).toMap
-      val batchOut = graft.ops.Quantiles.outlierCounts(
-          batchEv.select(col("activity").as("group"), vCol.as("v")),
-          Seq("group"), col("v"), 990)
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      val okOut = streamOut == batchOut && streamOut.nonEmpty
-      val totalSecs = secs + resolveSecs
-      println(f"quant   x$copies stream=$totalSecs%6.1fs (hist=$secs%.1f resolve=$resolveSecs%.1f) batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok outliers=$okOut (${streamVals.size} group-permille rows, exact)")
-      results += s""""quantiles":{"stream_s":$totalSecs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"outliers_match":$okOut,"rows":${streamVals.size}}"""
-    }
+  /** A micro-batch reading more rows than this is a data batch: the
+    * largest sentinel slice (the outer-join gate's) holds 2. */
+  private val SentinelRowsMax = 2L
 
-    // ---- quantiles_sketch: the 21st gate's ONE-PASS Munro–Paterson
-    // sketch under a REAL file source — keyed state is the group's
-    // serialized sketch (a bounded Array[Long] independent of stream
-    // length), NO pass 2 and NO replay: the no-retention-regime member
-    // of the robust-stats family. The audit certifies BOTH sides'
-    // estimates within the shared a-priori rank-error bound against
-    // exact rank windows (one batch conditional-agg pass over the
-    // staged files — the CERTIFICATION, not the operator) and requires
-    // stream n/bound == batch n/bound exactly. Batch truth timing:
-    // SketchQuantiles.approxByGroup (the one-pass batch sketch) over
-    // the same staged files. ----
-    if (wanted("quantiles_sketch")) {
-      import graft.ops.SketchQuantiles
-      import graft.streaming.{StreamingSketchQuantiles, StreamingWinsorized}
-      val Ignore = " "
-      val ps = Seq(250, 500, 750, 900, 990)
-      val K = 4096
-      val vCol = pmod(xxhash64(col("caseId"), col("tsMicros")),
-        lit(2000000L)) - lit(1000000L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        // sentinel rows remap to Ignore IN a projection (the standing
-        // sentinel rule: a filter below the watermark node stalls it)
-        val items = df.select(when(col("caseId") < 0L, lit(Ignore))
-              .otherwise(col("activity")).as("group"),
-            vCol.as("v"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingWinsorized.VItem]
-        StreamingSketchQuantiles.quantiles(spark, items, k = K,
-          psPermille = ps, gapSeconds = gapSeconds,
-          ignoreGroup = Ignore).toDF()
-      } { batch => batch.select(col("group"), col("pPermille"),
-          col("valueEst"), col("nTotal"), col("errBoundRank")) }
-      val streamEst = rows.map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      // batch truth: the one-pass batch sketch over the same files
-      val t0 = System.nanoTime()
-      val batchEst = SketchQuantiles.approxByGroup(
-          batchEv.select(col("activity").as("group"), vCol.as("v")),
-          col("group"), col("v"), ps, k = K)
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      // audit: both sides' estimates certified within the bound
-      val t1 = System.nanoTime()
-      val estAll = (streamEst.toSeq.map { case ((g, p), (v, n, b)) =>
-          (g, p, v, n, b, "s") } ++
-        batchEst.toSeq.map { case ((g, p), (v, n, b)) =>
-          (g, p, v, n, b, "b") })
-        .toDF("group", "p_permille", "value_est", "n_total",
-          "err_bound_rank", "side")
-      val audit = batchEv
-        .select(col("activity").as("group"), vCol.as("v"))
-        .join(broadcast(estAll), Seq("group"))
-        .groupBy(col("group"), col("p_permille"), col("value_est"),
-          col("n_total"), col("err_bound_rank"), col("side"))
-        .agg(sum(when(col("v") < col("value_est"), 1L).otherwise(0L)).as("_lt"),
-          sum(when(col("v") <= col("value_est"), 1L).otherwise(0L)).as("_le"))
-        .withColumn("_target", expr("(n_total div 1000) * p_permille" +
-          " + ((n_total % 1000) * p_permille + 999) div 1000"))
-        .select((col("_lt") < col("_target") + col("err_bound_rank") &&
-          col("_le") >= col("_target") - col("err_bound_rank")).as("ok"))
-        .as[Boolean].collect()
-      val auditSecs = (System.nanoTime() - t1) / 1e9
-      val nbOk = streamEst.keySet == batchEst.keySet &&
-        streamEst.forall { case (kk, (_, n, b)) =>
-          val (_, bn, bb) = batchEst(kk); n == bn && b == bb }
-      val ok = audit.length == 2 * streamEst.size &&
-        audit.forall(identity) && nbOk && streamEst.nonEmpty
-      println(f"qsketch x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs audit=$auditSecs%.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamEst.size} group-permille rows, within-bound)")
-      results += s""""quantiles_sketch":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"rows":${streamEst.size}}"""
-    }
+  /** Collects the progress of every streaming query; [[take]] reads
+    * off the queries of one gate by its sink-name prefix. */
+  private[graft] final class GateListener extends StreamingQueryListener {
+    import StreamingQueryListener._
+    private val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val running = ConcurrentHashMap.newKeySet[UUID]()
+    // the started event reaches session listeners synchronously
+    override def onQueryStarted(e: QueryStartedEvent): Unit = running.add(e.runId)
+    override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      running.remove(e.runId)
 
-    // ---- quantiles_sketch_w: gate 31's WEIGHTED one-pass sketch
-    // under the REAL file source — identical keyed machinery (one
-    // bounded Array[Long] per group; the wire format flags the
-    // weighted fills by negating slot 0), each row folding a derived
-    // mass w ∈ [1, 9] via MpSketch.addWeighted. n_total is the
-    // group's total MASS and the bound errBoundRank(mass, k); the
-    // audit certifies BOTH sides within the bound against exact
-    // WEIGHTED ranks (_lt/_le accumulate mass, not rows) and requires
-    // stream n/bound == batch n/bound exactly. Batch truth:
-    // SketchQuantiles.approxByGroupWeighted over the same files. ----
-    if (wanted("quantiles_sketch_w")) {
-      import graft.ops.SketchQuantiles
-      import graft.streaming.StreamingSketchQuantiles
-      val Ignore = " "
-      val ps = Seq(250, 500, 750, 900, 990)
-      val K = 4096
-      val vCol = pmod(xxhash64(col("caseId"), col("tsMicros")),
-        lit(2000000L)) - lit(1000000L)
-      val wCol = pmod(xxhash64(col("tsMicros"), col("caseId"), lit(13)),
-        lit(9L)) + lit(1L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(when(col("caseId") < 0L, lit(Ignore))
-              .otherwise(col("activity")).as("group"),
-            vCol.as("v"), wCol.as("w"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSketchQuantiles.WItem]
-        StreamingSketchQuantiles.quantilesWeighted(spark, items, k = K,
-          psPermille = ps, gapSeconds = gapSeconds,
-          ignoreGroup = Ignore).toDF()
-      } { batch => batch.select(col("group"), col("pPermille"),
-          col("valueEst"), col("nTotal"), col("errBoundRank")) }
-      val streamEst = rows.map(r => (r.getString(0), r.getInt(1)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val t0 = System.nanoTime()
-      val batchEst = SketchQuantiles.approxByGroupWeighted(
-          batchEv.select(col("activity").as("group"), vCol.as("v"),
-            wCol.as("w")),
-          col("group"), col("v"), col("w"), ps, k = K)
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val estAll = (streamEst.toSeq.map { case ((g, p), (v, n, b)) =>
-          (g, p, v, n, b, "s") } ++
-        batchEst.toSeq.map { case ((g, p), (v, n, b)) =>
-          (g, p, v, n, b, "b") })
-        .toDF("group", "p_permille", "value_est", "n_total",
-          "err_bound_rank", "side")
-      val audit = batchEv
-        .select(col("activity").as("group"), vCol.as("v"), wCol.as("w"))
-        .join(broadcast(estAll), Seq("group"))
-        .groupBy(col("group"), col("p_permille"), col("value_est"),
-          col("n_total"), col("err_bound_rank"), col("side"))
-        .agg(sum(when(col("v") < col("value_est"), col("w")).otherwise(0L)).as("_lt"),
-          sum(when(col("v") <= col("value_est"), col("w")).otherwise(0L)).as("_le"))
-        .withColumn("_target", expr("(n_total div 1000) * p_permille" +
-          " + ((n_total % 1000) * p_permille + 999) div 1000"))
-        .select((col("_lt") < col("_target") + col("err_bound_rank") &&
-          col("_le") >= col("_target") - col("err_bound_rank")).as("ok"))
-        .as[Boolean].collect()
-      val auditSecs = (System.nanoTime() - t1) / 1e9
-      val nbOk = streamEst.keySet == batchEst.keySet &&
-        streamEst.forall { case (kk, (_, n, b)) =>
-          val (_, bn, bb) = batchEst(kk); n == bn && b == bb }
-      val ok = audit.length == 2 * streamEst.size &&
-        audit.forall(identity) && nbOk && streamEst.nonEmpty
-      println(f"qsketchw x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs audit=$auditSecs%.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamEst.size} group-permille rows, within-bound)")
-      results += s""""quantiles_sketch_w":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"rows":${streamEst.size}}"""
+    /** Waits (≤ 60 s) for the termination events of all started
+      * queries — a query's progress events precede it on the bus — then
+      * folds and drops the progress of the sinks named `prefix_*`. */
+    def take(prefix: String): StreamStats = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!running.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      val mine = progress.asScala.toSeq
+        .filter(p => Option(p.name).exists(_.startsWith(prefix + "_")))
+      mine.foreach(progress.remove)
+      val ops = mine.flatMap(_.stateOperators.toSeq)
+      StreamStats(mine.count(_.numInputRows > 0),
+        mine.count(_.numInputRows > SentinelRowsMax),
+        if (ops.isEmpty) 0L else ops.map(_.numRowsTotal).max,
+        ops.map(_.numRowsDroppedByWatermark).sum)
     }
+  }
 
-    // ---- hll: the 22nd gate's order-free register fold under a REAL
-    // file source — keyed state is one m-register vector per group,
-    // ONE pass, NO replay; the per-value update is the batch
-    // aggregate's own method, so the flushed registers must be
-    // BIT-EQUAL to the batch TypedImperativeAggregate over the same
-    // staged files (register maxima commute with any batching). Group
-    // = activity (events staging); hash = the portable charHash of the
-    // derived value column, computed in-plan. ----
-    if (wanted("hll")) {
-      import graft.functions.{HllSketch, NativeExpressions}
-      import graft.streaming.StreamingSketches
-      val Ignore = " "
-      val m = 64; val budgetBits = 24
-      val hCol = NativeExpressions.charHash(
-        concat_ws("_", col("caseId"), col("tsMicros")), 7L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(when(col("caseId") < 0L, lit(Ignore))
-              .otherwise(col("activity")).as("group"),
-            hCol.as("h"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSketches.HItem]
-        StreamingSketches.hllRegisters(spark, items, m = m,
-          budgetBits = budgetBits, gapSeconds = gapSeconds,
-          ignoreGroup = Ignore).toDF()
-      } { batch => batch.select(col("group"), col("regs")) }
-      val got = rows.map(r => r.getString(0) ->
-        r.getSeq[Int](1).toVector).toMap
-      val t0 = System.nanoTime()
-      val want = batchEv
-        .groupBy(col("activity").as("group"))
-        .agg(HllSketch.registers(hCol, m = m, budgetBits = budgetBits)
-          .as("regs"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Int](1).toVector)
-        .toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = got == want && got.nonEmpty
-      println(f"hll     x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${got.size} groups, bit-exact registers)")
-      results += s""""hll":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"groups":${got.size}}"""
-    }
+  /** The inflated events as a `(caseId, activity, tsMicros)` trace
+    * source. */
+  private def traceSource(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events").select(col("user_id").cast("string").as("caseId"),
+      col("event_type").as("activity"), unix_micros(col("ts")).as("tsMicros"))
 
-    // ---- cm: the 23rd gate's order-free bucket-sum fold under a REAL
-    // file source — keyed state is one Array[Long](w) per hash row
-    // (d keys, the whole sketch d·w longs), ONE pass, NO replay; cells
-    // must be BIT-EQUAL to the batch (row, bucket, n) table over the
-    // same staged files (sums commute with any batching). Tokens =
-    // the activity column (bounded alphabet exercises collisions). ----
-    if (wanted("cm")) {
-      import graft.text.CmSketch
-      import graft.streaming.StreamingSketches
-      val d = 4; val w = 64; val seed = 42L
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df
-          .select(explode(array((0 until d).map(r =>
-              struct(lit(r).as("r"),
-                CmSketch.bucket(col("activity"), r, w, seed).as("b"))): _*))
-              .as("rb"),
-            col("caseId"), col("tsMicros"))
-          .select(when(col("caseId") < 0L, lit(-1))
-              .otherwise(col("rb.r")).as("row"),
-            col("rb.b").as("bucket"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSketches.CItem]
-        StreamingSketches.cmCells(spark, items, w = w,
-          gapSeconds = gapSeconds).toDF()
-      } { batch => batch.select(col("row"), col("bucket"), col("n")) }
-      val got = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val t0 = System.nanoTime()
-      val want = CmSketch.sketch(
-          batchEv.select(col("activity").as("token")), "token",
-          d = d, w = w, seed = seed)
-        .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = got == want && got.nonEmpty
-      println(f"cm      x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${got.size} cells, bit-exact)")
-      results += s""""cm":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"cells":${got.size}}"""
-    }
+  /** A row runs its stream and hands back the result with its batch
+    * reference, built on demand. */
+  private type Row = () => (DataFrame, () => DataFrame)
 
-    // ---- bloom: the 25th gate's order-free bit-OR fold under a REAL
-    // file source — keyed state is one long per touched filter word
-    // (≤ mBits/32 = 2048 keys TOTAL regardless of stream length: the
-    // only operator whose key space IS the sketch), ONE pass, NO
-    // replay; flushed words must be BIT-EQUAL to the batch bit_or
-    // build over the same staged files (OR commutes with any
-    // batching). Key = the portable charHash of the derived value
-    // column; positions computed in-plan with Bloom.positions' own
-    // arithmetic — one source of truth for the bit layout. ----
-    if (wanted("bloom")) {
-      import graft.dedup.Bloom
-      import graft.functions.NativeExpressions
-      import graft.streaming.StreamingSketches
-      val kCol = NativeExpressions.charHash(
-        concat_ws("_", col("caseId"), col("tsMicros")), 7L)
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = Bloom.streamWordMasks(df, kCol,
-            sentinel = col("caseId") < 0L)
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSketches.BItem]
-        StreamingSketches.bloomWords(spark, items,
-          gapSeconds = gapSeconds).toDF()
-      } { batch => batch.select(col("word"), col("bits")) }
-      val got = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val t0 = System.nanoTime()
-      val want = Bloom.build(batchEv, kCol)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = got == want && got.nonEmpty
-      println(f"bloom   x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${got.size} words, bit-exact)")
-      results += s""""bloom":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"words":${got.size}}"""
-    }
-
-    // ---- upsert: the 26th gate's latest-wins compaction under a REAL
-    // file source — keyed state is ONE (ts, id, value) triple per live
-    // (caseId, activity) key (exactly the batch shuffle's reducer
-    // state, never stream-length-proportional), ONE pass, NO replay;
-    // the lexicographic max commutes, so the flushed rows must be
-    // BIT-EQUAL to the batch max(struct(...)) aggregate. Compared via
-    // an order-free exact fingerprint (count + two independent xors of
-    // row hashes — no sums: ANSI overflow at inflated key counts), so
-    // nothing key-proportional crosses to the driver. ----
-    if (wanted("upsert")) {
-      import graft.streaming.StreamingUpsert
-      val idCol = xxhash64(col("caseId"), col("activity"), col("tsMicros"))
-      val vCol = (pmod(xxhash64(col("tsMicros"), col("caseId")),
-        lit(100000L)) / lit(100.0))
-      def fp(batch: DataFrame): DataFrame =
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(userId, eventType, tsMicros," +
-            " eventId, value))"), lit(0L)).as("h1"),
-          coalesce(expr("bit_xor(xxhash64(eventId, value, tsMicros," +
-            " eventType, userId, 7))"), lit(0L)).as("h2"))
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(col("caseId").as("userId"),
-            col("activity").as("eventType"), idCol.as("eventId"),
-            vCol.as("value"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingUpsert.UItem]
-        StreamingUpsert.latest(spark, items, gapSeconds = gapSeconds,
-          ignoreType = "_s").toDF()
-      } { batch => fp(batch) }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L),
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      val bs = fp(batchEv
-          .groupBy(col("caseId").as("userId"),
-            col("activity").as("eventType"))
-          .agg(max(struct(col("tsMicros"), idCol.as("eventId"),
-            vCol.as("value"))).as("l"))
-          .select(col("userId"), col("eventType"),
-            col("l.tsMicros").as("tsMicros"), col("l.eventId").as("eventId"),
-            col("l.value").as("value")))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp && streamFp._1 > 0L
-      println(f"upsert  x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} keys, fingerprint-exact)")
-      results += s""""upsert":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"keys":${streamFp._1}}"""
-    }
-
-    // ---- asof: the 27th gate's backward as-of join under a REAL
-    // file source — the join flavor the built-in stream-stream join
-    // cannot express (no lower time bound ⇒ no eviction bound).
-    // Clicks older than the watermark compact to ONE long per key;
-    // state is that value + the horizon's clicks/pending purchases,
-    // evicted CONTINUOUSLY as the watermark advances (peak measures
-    // it). Batch truth: a range window (all same-ts rows included, so
-    // the ≤ tie matches the fold) over the same staged files;
-    // compared via the order-free fingerprint — purchase rows are
-    // data-proportional and never cross to the driver. ----
-    if (wanted("asof")) {
-      import graft.streaming.StreamingAsOf
-      val pidCol = xxhash64(col("caseId"), col("tsMicros"))
-      def fp(batch: DataFrame): DataFrame =
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(userId, purchaseId," +
-            " lastClickTsMicros, lastClickId))"), lit(0L)).as("h1"),
-          coalesce(expr("bit_xor(xxhash64(lastClickTsMicros, userId," +
-            " lastClickId, purchaseId, 7))"), lit(0L)).as("h2"))
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(col("caseId").as("userId"),
-            col("activity").as("kind"), pidCol.as("eventId"),
-            col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingAsOf.AItem]
-        StreamingAsOf.backward(spark, items,
-          gapSeconds = gapSeconds).toDF()
-      } { batch => fp(batch) }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L),
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      // (caseId, activity, tsMicros) is unique in the staging (see the
-      // dedup row), so pidCol is unique among a case's purchases
-      val w = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      val bs = fp(batchEv
-          .withColumn("lastClick",
-            max(when(col("activity") === "click", col("tsMicros"))).over(w))
-          .filter(col("activity") === "purchase")
-          .select(col("caseId").as("userId"), pidCol.as("purchaseId"),
-            col("lastClick").as("lastClickTsMicros"),
-            when(col("lastClick").isNotNull,
-              xxhash64(col("caseId"), col("lastClick")))
-              .as("lastClickId")))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp && streamFp._1 > 0L
-      println(f"asof    x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} purchases, fingerprint-exact)")
-      results += s""""asof":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"purchases":${streamFp._1}}"""
-    }
-
-    // ---- asof_fwd / asof_near: the 29th/30th gates' horizon-bounded
-    // forward and nearest as-of flavors under the REAL file source.
-    // Forward's state is FULLY transient (pending purchases live
-    // horizon + delay, clicks evict at the watermark, drained keys
-    // REMOVE); nearest adds backward's one standing long per key with
-    // the frozen-bwd discipline. The 3-day horizon (the gates'
-    // contract, inside the ~30-day staged span) makes all three row
-    // classes real at scale: matched, horizon-cut, no-follower.
-    // Batch truth: range windows over the same staged files (forward
-    // frame [0, H], backward [-inf, 0]), same fingerprint scheme. ----
-    val AsOfHorizonUs = 3L * 86400L * 1000000L
-    def asOfFwdBatch(): DataFrame = {
-      val pidCol = xxhash64(col("caseId"), col("tsMicros"))
-      val wf = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"))
-        .rangeBetween(Window.currentRow, AsOfHorizonUs)
-      batchEv
-        .withColumn("firstClick",
-          min(when(col("activity") === "click", col("tsMicros"))).over(wf))
-        .filter(col("activity") === "purchase")
-        .select(col("caseId").as("userId"), pidCol.as("purchaseId"),
-          col("firstClick").as("firstClickTsMicros"),
-          when(col("firstClick").isNotNull,
-            xxhash64(col("caseId"), col("firstClick")))
-            .as("firstClickId"))
-    }
-    if (wanted("asof_fwd")) {
-      import graft.streaming.StreamingAsOf
-      val pidCol = xxhash64(col("caseId"), col("tsMicros"))
-      def fp(batch: DataFrame): DataFrame =
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(userId, purchaseId," +
-            " firstClickTsMicros, firstClickId))"), lit(0L)).as("h1"),
-          coalesce(expr("bit_xor(xxhash64(firstClickTsMicros, userId," +
-            " firstClickId, purchaseId, 7))"), lit(0L)).as("h2"))
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(col("caseId").as("userId"),
-            col("activity").as("kind"), pidCol.as("eventId"),
-            col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingAsOf.AItem]
-        StreamingAsOf.forward(spark, items,
-          horizonSeconds = AsOfHorizonUs / 1000000L,
-          gapSeconds = gapSeconds).toDF()
-      } { batch => fp(batch) }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L),
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      val bs = fp(asOfFwdBatch()).head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp && streamFp._1 > 0L
-      println(f"asof_fwd x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} purchases, fingerprint-exact)")
-      results += s""""asof_fwd":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"purchases":${streamFp._1}}"""
-    }
-
-    if (wanted("asof_near")) {
-      import graft.streaming.StreamingAsOf
-      val pidCol = xxhash64(col("caseId"), col("tsMicros"))
-      def fp(batch: DataFrame): DataFrame =
-        batch.agg(count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(userId, purchaseId," +
-            " nearestClickTsMicros, nearestClickId))"), lit(0L)).as("h1"),
-          coalesce(expr("bit_xor(xxhash64(nearestClickTsMicros, userId," +
-            " nearestClickId, purchaseId, 7))"), lit(0L)).as("h2"))
-      val (rows, nb, peak, drops, secs) = run(spark, dir, fpt, maxTs,
-          GapDays, sourceWatermark = false) { df =>
-        val items = df.select(col("caseId").as("userId"),
-            col("activity").as("kind"), pidCol.as("eventId"),
-            col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingAsOf.AItem]
-        StreamingAsOf.nearest(spark, items,
-          horizonSeconds = AsOfHorizonUs / 1000000L,
-          gapSeconds = gapSeconds).toDF()
-      } { batch => fp(batch) }
-      val streamFp = (rows.map(_.getLong(0)).sum,
-        rows.map(_.getLong(1)).reduceOption(_ ^ _).getOrElse(0L),
-        rows.map(_.getLong(2)).reduceOption(_ ^ _).getOrElse(0L))
-      val t0 = System.nanoTime()
-      val wb = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      val wf = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"))
-        .rangeBetween(Window.currentRow, AsOfHorizonUs)
-      val bs = fp(batchEv
-          .withColumn("lastClick",
-            max(when(col("activity") === "click", col("tsMicros"))).over(wb))
-          .withColumn("firstClick",
-            min(when(col("activity") === "click", col("tsMicros"))).over(wf))
-          .filter(col("activity") === "purchase")
-          .withColumn("nearest",
-            when(col("lastClick").isNull, col("firstClick"))
-              .when(col("firstClick").isNull, col("lastClick"))
-              .when(col("tsMicros") - col("lastClick") <=
-                col("firstClick") - col("tsMicros"), col("lastClick"))
-              .otherwise(col("firstClick")))
-          .select(col("caseId").as("userId"), pidCol.as("purchaseId"),
-            col("nearest").as("nearestClickTsMicros"),
-            when(col("nearest").isNotNull,
-              xxhash64(col("caseId"), col("nearest")))
-              .as("nearestClickId")))
-        .head()
-      val batchFp = (bs.getLong(0), bs.getLong(1), bs.getLong(2))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamFp == batchFp && streamFp._1 > 0L
-      println(f"asof_near x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (${streamFp._1} purchases, fingerprint-exact)")
-      results += s""""asof_near":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"purchases":${streamFp._1}}"""
-    }
-
-    // ---- sample: the 17th gate's bounded top-k πps fold under a
-    // REAL file source — ONE pass, no replay: the πps priority is a
-    // pure function of (id, weight, seed), so per-bucket ≤ k-entry
-    // heaps in flatMapGroupsWithState ARE the whole stream-side
-    // computation (peak_state_rows here measures the ≤ nBuckets·k
-    // bound directly — the only operator whose state is CONSTANT in
-    // the stream length by construction). Ids are unique across
-    // copies (the +1e8·copy offset), weight = length(text). Batch
-    // truth: Sampling.sequentialPoisson over the same staged files,
-    // compared as the exact ordered (priority, id, weight) list. ----
-    if (wanted("sample")) {
-      import graft.streaming.StreamingSample
-      val sDir = docDir + "_hh" // shares heavy_hitters' plain staging
-      ensureDocsStaged(sDir, decorrelate = false)
-      val docMaxTs = maxDataTs(spark, sDir, docSchema)
-      val IgnoreId = Long.MinValue
-      val sK = 1000
-      val (rows, nb, peak, drops, secs) = run(spark, sDir, fpt, docMaxTs,
-          GapDays, sch = docSchema, sourceWatermark = false) { df =>
-        val items = df.select(
-            when(col("docId") < 0L, lit(IgnoreId)).otherwise(col("docId"))
-              .as("id"),
-            length(col("text")).cast("long").as("weight"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSample.Item]
-        StreamingSample.topK(spark, items, k = sK, seed = 42L,
-          nBuckets = 8, gapSeconds = gapSeconds, ignoreId = IgnoreId).toDF()
-      } { batch => batch.select(col("bucket"), col("priority"), col("id"),
-        col("weight")) }
-      val streamSel = StreamingSample.merge(rows.map(r =>
-        StreamingSample.BucketTop(r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))), sK)
-      val t0 = System.nanoTime()
-      val batchSel = graft.ops.Sampling.sequentialPoisson(
-          spark.read.schema(docSchema).parquet(s"$sDir/data")
-            .filter(col("docId") >= 0L)
-            .select(col("docId"),
-              length(col("text")).cast("long").as("weight")),
-          "docId", "weight", sK, 42L)
-        .collect().map(r => StreamingSample.Sel(r.getLong(2), r.getLong(0),
-          r.getLong(1))).toSeq
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamSel == batchSel && streamSel.size == sK
-      println(f"sample  x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (k=$sK, ${rows.size} flushed)")
-      results += s""""sample":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"flushed":${rows.size}}"""
-    }
-
-    // ---- sample_by_group: the 18th gate's stratified fold under the
-    // same real file source — identical machinery, the key just adds
-    // the stratum (derived: pmod(docId, 5), so every copy populates
-    // all five strata); state = strata × nBuckets keys, peak measured.
-    // Batch truth: sequentialPoissonByGroup over the same staged
-    // files, compared as the exact per-group ranked list. ----
-    if (wanted("sample_by_group")) {
-      import graft.streaming.StreamingSample
-      val sDir = docDir + "_hh"
-      ensureDocsStaged(sDir, decorrelate = false)
-      val docMaxTs = maxDataTs(spark, sDir, docSchema)
-      val IgnoreId = Long.MinValue
-      val gK = 200
-      val grp = concat(lit("g"), pmod(col("docId"), lit(5L)).cast("string"))
-      val (rows, nb, peak, drops, secs) = run(spark, sDir, fpt, docMaxTs,
-          GapDays, sch = docSchema, sourceWatermark = false) { df =>
-        val items = df.select(grp.as("group"),
-            when(col("docId") < 0L, lit(IgnoreId)).otherwise(col("docId"))
-              .as("id"),
-            length(col("text")).cast("long").as("weight"), col("tsMicros"))
-          .withColumn("ts", timestamp_micros(col("tsMicros")))
-          .withWatermark("ts", "10 seconds")
-          .as[StreamingSample.GItem]
-        StreamingSample.topKByGroup(spark, items, k = gK, seed = 42L,
-          nBuckets = 8, gapSeconds = gapSeconds, ignoreId = IgnoreId).toDF()
-      } { batch => batch.select(col("group"), col("bucket"),
-        col("priority"), col("id"), col("weight")) }
-      val streamSel = StreamingSample.mergeByGroup(rows.map(r =>
-        StreamingSample.GroupBucketTop(r.getString(0), r.getInt(1),
-          r.getLong(2), r.getLong(3), r.getLong(4))), gK)
-      val t0 = System.nanoTime()
-      val batchSel = graft.ops.Sampling.sequentialPoissonByGroup(
-          spark.read.schema(docSchema).parquet(s"$sDir/data")
-            .filter(col("docId") >= 0L)
-            .select(grp.as("group"), col("docId"),
-              length(col("text")).cast("long").as("weight")),
-          "group", "docId", "weight", gK, 42L)
-        .collect().map(r => StreamingSample.GSel(r.getString(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getInt(4)))
-        .toSeq.sortBy(s => (s.group, s.rk))
-      val bSecs = (System.nanoTime() - t0) / 1e9
-      val ok = streamSel == batchSel && streamSel.size == 5 * gK
-      println(f"sampleG x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=$nb peakState=$peak drops=$drops match=$ok (k=$gK x 5 strata, ${rows.size} flushed)")
-      results += s""""sample_by_group":{"stream_s":$secs,"batch_s":$bSecs,"batches":$nb,"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"flushed":${rows.size}}"""
-    }
-
-    // ---- xes: the streaming XES SOURCE under a real drop-dir (r10
-    // judge item #4) — the book corpus replicated ×copies with
-    // distinct file names (so (file, traceIdx) case keys never
-    // collide), consumed by XesReader.readEventsStream (the xes
-    // FileFormat as stream source: per-file StAX parse with the size
-    // guard, maxFilesPerTrigger batches) → trace
-    // assembly → DFG edges. Replicas share one event-time range, so
-    // arrival order is NOT event-time order across batches — the
-    // watermark delay spans the corpus (span + 2 days) to keep the
-    // stream lossless, late_drops proves it, and the final timers
-    // fire via two sentinel .xes files dropped PAST the delay+gap
-    // horizon. Batch truth: the registered batch `xes` source over
-    // the SAME staged files, lead-window directly-follows ordered by
-    // (tsMicros, activity) — TraceAssembly's closed-trace sort. ----
-    if (wanted("xes")) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import scala.jdk.CollectionConverters._
-      val xdir = sys.env.getOrElse("SPARK_GRAFT_STREAM_XES_STAGE",
-        "/tmp/graft_stream_xes")
-      val xfpt = sys.env.getOrElse("SPARK_GRAFT_STREAM_XES_FPT", "32").toInt
-      // corpus dir is overridable so the row runs on boxes without the
-      // reference checkout at its canonical path (r11 advice)
-      val book = sys.env.getOrElse("SPARK_GRAFT_XES_BOOK", graft.Fixtures.book)
-      val filesDir = Paths.get(s"$xdir/files")
-      // the corpus staging depends only on copies — the --files knob
-      // sizes event-parquet slices, not this dir (review finding: an
-      // over-keyed stamp would re-copy book × copies for nothing)
-      if (!stagingReusable(xdir, s"copies=$copies", sub = "files") ||
-          args.contains("--rebuild")) {
-        println(s"staging xes corpus x$copies -> $xdir")
-        clearStamp(xdir)
-        if (Files.exists(filesDir)) {
-          listDir(filesDir).foreach(Files.delete)
-        } else Files.createDirectories(filesDir)
-        val srcs = listDir(Paths.get(book))
-          .filter(_.toString.endsWith(".xes")).sortBy(_.getFileName.toString)
-        val t0 = System.currentTimeMillis() - copies * srcs.size * 50L - 60000L
-        var i = 0
-        for (c <- 0 until copies; p <- srcs) {
-          val dst = filesDir.resolve(f"c$c%03d_${p.getFileName.toString}")
-          Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-          dst.toFile.setLastModified(t0 + i * 50L); i += 1
-        }
-        writeStamp(xdir, s"copies=$copies")
+  /** Rows no sf-dir gate covers. The sink-name prefix is the row
+    * name. */
+  private def rows(s: SparkSession, dir: String, copies: Int): Map[String, Row] = Map(
+    "dfg" -> { () =>
+      val src = traceSource(s, dir)
+      val w = Window.partitionBy(col("caseId")).orderBy(col("tsMicros"), col("activity"))
+      (XesQueries.dfgGate(s, "dfg", src), () =>
+        src.withColumn("_next", lead(col("activity"), 1).over(w))
+          .filter(col("_next").isNotNull)
+          .groupBy(col("activity").as("act_from"), col("_next").as("act_to"))
+          .agg(count(lit(1)).as("n")))
+    },
+    "conformance" -> { () =>
+      import s.implicits._
+      val src = traceSource(s, dir)
+      val net = graft.ops.Alpha.mine(
+        src.withColumn("ts", timestamp_micros(col("tsMicros"))),
+        "caseId", "activity", "tsMicros", "activity")
+      val bNet = s.sparkContext.broadcast(graft.ops.Replay.compile(net))
+      (XesQueries.conformanceGate(s, "conformance", src, net), () =>
+        src.as[(String, String, Long)].groupByKey(_._1).mapGroups { (c, it) =>
+          val acts = it.toSeq.sortBy(e => (e._3, e._2)).map(_._2)
+          val vf = graft.ops.Replay.replayVariant(bNet.value, acts)
+          (c, acts.length.toLong, vf.fitness, vf.missing, vf.remaining)
+        }.toDF("case_id", "n_events", "fitness", "missing", "remaining"))
+    },
+    // the book corpus ×copies under distinct names (so (file, trace)
+    // keys never collide), oldest copy first; the reference reads the
+    // same copies, then deletes them
+    "xes" -> { () =>
+      val drop = Files.createTempDirectory("graft_xes_audit")
+      val srcs = Option(new java.io.File(graft.Fixtures.book).listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.endsWith(".xes")).sortBy(_.getName)
+      val t0 = System.currentTimeMillis() - 60000L - copies * srcs.length * 10L
+      for (c <- 0 until copies; (f, i) <- srcs.zipWithIndex) {
+        val dst = drop.resolve(f"c$c%03d_${f.getName}")
+        Files.copy(f.toPath, dst)
+        dst.toFile.setLastModified(t0 + (c * srcs.length + i) * 10L)
       }
-      val batchEvX = graft.xes.XesReader
-        .readEvents(spark, s"$xdir/files/*.xes").toDF()
-        .filter(col("traceIdx").isNotNull && col("activity").isNotNull &&
-          col("tsMicros").isNotNull)
-      val Row(minTs: Long, maxTsX: Long) =
-        batchEvX.agg(min("tsMicros"), max("tsMicros")).head()
-      val delayDays = (maxTsX - minTs) / 86400000000L + 2L
-      def sentinelXes(tag: String, tsMicros: Long): java.nio.file.Path = {
-        val iso = java.time.OffsetDateTime.ofInstant(
-          java.time.Instant.ofEpochMilli(tsMicros / 1000L),
-          java.time.ZoneOffset.UTC)
-          .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-        val xml =
-          s"""<?xml version="1.0" encoding="UTF-8" ?>
-             |<log xes.version="1.0" xmlns="http://www.xes-standard.org/">
-             |<trace><string key="concept:name" value="$tag"/>
-             |<event><string key="concept:name" value="_s"/>
-             |<date key="time:timestamp" value="$iso"/></event></trace>
-             |</log>""".stripMargin
-        val p = filesDir.resolve(s"zz_sentinel_$tag.xes")
-        Files.writeString(p, xml)
-        p
+      def rm(): Unit = {
+        Option(drop.toFile.listFiles()).foreach(_.foreach(_.delete()))
+        Files.delete(drop)
       }
-      val acc = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
-      val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-      val gapSecondsX = GapDays * 86400L
-      val t0s = System.nanoTime()
-      val evStream = graft.xes.XesReader
-        .readEventsStream(spark, s"$xdir/files", Some(xfpt))
-        .flatMap(e => for (ti <- e.traceIdx; a <- e.activity; ts <- e.tsMicros)
-          yield TraceAssembly.InEvent(e.file + "#" + ti, a, ts))
-        .withColumn("ts", timestamp_micros(col("tsMicros")))
-        .withWatermark("ts", s"$delayDays days")
-        .as[TraceAssembly.InEvent]
-      val qx = StreamingDfg.edges(spark, evStream, gapSecondsX).toDF()
-        .writeStream.outputMode(OutputMode.Append())
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          batches.incrementAndGet()
-          df.filter(col("actFrom") =!= "_s" && col("actTo") =!= "_s")
-            .groupBy(col("actFrom"), col("actTo"))
-            .agg(count(lit(1)).as("n"))
-            .collect().foreach(acc.add)
-        }.start()
-      // track sentinel files as they are created and delete them in the
-      // finally: a mid-run failure must not leave them in the staged
-      // dir, where the NEXT run's batch comparator would read them
-      val sentinels = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-      try {
-        qx.processAllAvailable()
-        sentinels += sentinelXes("s1",
-          maxTsX + (delayDays + GapDays + 2L) * 86400000000L)
-        qx.processAllAvailable()
-        sentinels += sentinelXes("s2",
-          maxTsX + 2L * (delayDays + GapDays + 2L) * 86400000000L)
-        qx.processAllAvailable()
-      } finally {
-        qx.stop()
-        sentinels.foreach(p => try Files.delete(p)
-          catch { case _: Exception => () })
-      }
-      val peak = qx.recentProgress.flatMap(p =>
-        Option(p.stateOperators).toSeq.flatten.map(_.numRowsTotal)) match {
-        case a if a.nonEmpty => a.max
-        case _ => 0L
-      }
-      val drops = LateDrops.count(qx)
-      val secs = (System.nanoTime() - t0s) / 1e9
-      val streamEdges = acc.iterator().asScala.toSeq
-        .groupBy(r => (r.getString(0), r.getString(1)))
-        .map { case (k, v) => k -> v.map(_.getLong(2)).sum }
-      val t0b = System.nanoTime()
-      val w = Window.partitionBy(col("file"), col("traceIdx"))
-        .orderBy(col("tsMicros"), col("activity"))
-      val batchEdges = batchEvX
-        .withColumn("_next", lead(col("activity"), 1).over(w))
-        .filter(col("_next").isNotNull)
-        .groupBy(col("activity").as("f"), col("_next").as("t"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-        .toMap
-      val bSecs = (System.nanoTime() - t0b) / 1e9
-      val ok = streamEdges == batchEdges
-      val nFiles = listDir(filesDir).size
-      println(f"xes     x$copies stream=$secs%6.1fs batch=$bSecs%6.1fs batches=${batches.get()} peakState=$peak drops=$drops match=$ok (${streamEdges.values.sum} edges, $nFiles files)")
-      results += s""""xes":{"stream_s":$secs,"batch_s":$bSecs,"batches":${batches.get()},"peak_state_rows":$peak,"late_drops":$drops,"match":$ok,"files":$nFiles}"""
+      val got = try XesQueries.xesSourceGate(s, "xes", drop.toString)
+        catch { case e: Throwable => rm(); throw e }
+      (got, () => try {
+        val ref = XesQueries.xesTraceDigest(
+          graft.xes.XesReader.readEvents(s, s"$drop/*.xes").toDF())
+        s.createDataFrame(java.util.Arrays.asList(ref.collect(): _*), ref.schema)
+      } finally rm())
     }
+  )
 
-    // a filtered (--ops=) run must not silently clobber a full
-    // artifact: suffix the default out path with .partial
-    val outPath = if (opsFilter.isDefined &&
-        !sys.env.contains("SPARK_GRAFT_STREAM_OUT")) out + ".partial" else out
-    calib += (("end", calibProbe(), osBean.getSystemLoadAverage,
-      calibProbePar()))
+  def main(args: Array[String]): Unit = {
+    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val scaled = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val copies = ScaleBench.Copies
+    val only = args.find(_.startsWith("--only="))
+      .map(_.stripPrefix("--only=").split(',').toSeq)
+    val out = sys.env.getOrElse("SPARK_GRAFT_STREAM_OUT",
+      s"bench_stream_scale_x${copies}_c$cpus.json" + (if (only.isDefined) ".partial" else ""))
+    val spark = GraftSession.get(cpus)
+    GraftSession.quietWindowWarnings()
+
+    val missing = Gates.filterNot(g => Twins.contains(g) || LocalRefs.contains(g))
+    require(missing.isEmpty, s"gates without a batch reference: ${missing.mkString(",")}")
+    val extra = rows(spark, scaled, copies)
+    val known = Gates ++ extra.keys.toSeq.sorted
+    only.foreach { o =>
+      val bad = o.filterNot(known.contains)
+      require(bad.isEmpty, s"unknown --only names: ${bad.mkString(",")}; " +
+        s"valid: ${known.mkString(",")}")
+    }
+    val selected = only.getOrElse(known)
+
+    ScaleBench.ensureInflated(spark, base, scaled, args.contains("--rebuild"))
+    // LateDrops folds the retained progress; keep it above any batch
+    // count a row produces
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "4096")
+    val listener = new GateListener
+    spark.streams.addListener(listener)
+    // a fixed CPU probe before every row lands in the artifact with the
+    // 1-min load average, so a contended window is visible next to the
+    // row it inflated
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val calibBase = (1 to 3).map(_ => Calib.probe(spark)).min
+    val calibParBase = (1 to 3).map(_ => Calib.probePar(spark)).min
+    val calib = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double, Double)]
+
+    def secs[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val a = f
+      (a, (System.nanoTime() - t0) / 1e9)
+    }
+    val results = ParityFeed.multiBatch(Slices, PerTrigger) {
+      selected.map { name =>
+        calib += ((name, Calib.probe(spark), osBean.getSystemLoadAverage,
+          Calib.probePar(spark)))
+        val label =
+          if (extra.contains(name)) "row"
+          else Twins.get(name).fold("local")(t => s"twin:$t")
+        val row: Row = extra.getOrElse(name, () => (SparkEntry.queries(name)(spark, scaled),
+          () => batchReference(spark, name, scaled)))
+        val ((got, reference), runS) = secs(row())
+        val (fpGot, fpS) = secs(fingerprint(got))
+        val streamS = runS + fpS
+        val st = listener.take(name)
+        val (fpRef, refS) = secs(fingerprint(reference()))
+        val ok = fpGot == fpRef && st.lateDrops == 0L
+        println(f"$name%-44s stream=$streamS%7.1fs ref=$refS%6.1fs " +
+          s"batches=${st.batches} data=${st.dataBatches} peakState=${st.peakStateRows} " +
+          s"drops=${st.lateDrops} rows=${fpGot._1} match=$ok ($label)")
+        s""""$name":{"reference":"$label","stream_s":$streamS,"ref_s":$refS,""" +
+          s""""batches":${st.batches},"data_batches":${st.dataBatches},""" +
+          s""""peak_state_rows":${st.peakStateRows},"late_drops":${st.lateDrops},""" +
+          s""""rows":${fpGot._1},"match":$ok}"""
+      }
+    }
+    calib += (("end", Calib.probe(spark), osBean.getSystemLoadAverage,
+      Calib.probePar(spark)))
     val contended = Calib.contended(calib.map(_._2).toSeq, calibBase) ||
       Calib.contended(calib.map(_._4).toSeq, calibParBase)
     val calibJson = calib.map { case (op, s, l, p) => f"""["$op",$s%.3f,$l%.2f,$p%.3f]""" }
       .mkString(s"""{"baseline":${f"$calibBase%.3f"},"par_baseline":${f"$calibParBase%.3f"},"contended":$contended,"probes":[""", ",", "]}")
-    val line = s"""{"metric":"stream_scale","copies":$copies,"files":$files,"fpt":$fpt,"base":"$base","calib":$calibJson,"ops":${results.mkString("{", ",", "}")}}"""
+    val line = s"""{"metric":"stream_scale","copies":$copies,"files":$Slices,"fpt":$PerTrigger,"cpus":$cpus,"base":"$base","calib":$calibJson,"ops":${results.mkString("{", ",", "}")}}"""
     println(line)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
-    catch { case _: Throwable => () }
+    Files.writeString(Paths.get(out), line + "\n")
     spark.stop()
   }
 }

@@ -78,7 +78,7 @@ class ParityFeedSpec extends SparkSpec {
     // ts filter must exclude them — the absorption contract the
     // robust-stats + sketch gates rely on
     ParityFeed.sentinel(spark, feed = ParityFeed.FileFeed(dir1,
-      srcDf(1).schema), -9L, "_s", max1 + 86400000000L)
+      srcDf(1).schema, 1000000L, max1), -9L, "_s", max1 + 86400000000L)
     val (_, max3) = ParityFeed.withSharedFeed(spark, k,
       sys.error("must not restage"): org.apache.spark.sql.DataFrame) {
       (feed, maxTs) =>
@@ -161,5 +161,28 @@ class ParityFeedSpec extends SparkSpec {
       // every id appears exactly twice — union(df, df), not 2x rounding
       assert(rows.groupBy("id").count().where(col("count") =!= 2L).count() == 0L)
     }
+  }
+
+  test("multiBatch: whole-history, doubled-feed and two-pass gates stream " +
+    "in several micro-batches and equal their batch references") {
+    import graft.tools.StreamScaleBench
+    val sf = "/root/testdata/sf0.01"
+    val listener = new StreamScaleBench.GateListener
+    spark.streams.addListener(listener)
+    try ParityFeed.multiBatch(slices = 8, perTrigger = 2) {
+      // funnel and upsert: the shared events feed under a whole-history
+      // gap (a (user, type) key goes quiet for a whole 7.5-day trigger,
+      // so a gap shorter than the span splits its latest row); dedup:
+      // the doubled feed; winsorized: pass 2 replays the slices
+      for (g <- Seq("q_stream_funnel_parity", "q_stream_upsert_parity",
+          "q_stream_dedup_parity", "q_stream_winsorized_parity")) {
+        val got = graft.SparkEntry.queries(g)(spark, sf)
+        val st = listener.take(g)
+        assert(st.dataBatches >= 3L, s"$g: $st")
+        assert(st.lateDrops == 0L, s"$g: $st")
+        assert(StreamScaleBench.fingerprint(got) == StreamScaleBench.fingerprint(
+          StreamScaleBench.batchReference(spark, g, sf)), g)
+      }
+    } finally spark.streams.removeListener(listener)
   }
 }
