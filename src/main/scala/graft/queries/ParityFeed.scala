@@ -6,7 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.sql.types.StructType
 
@@ -48,7 +48,7 @@ private[graft] object ParityFeed {
 
   /** A staged drop-dir feed: the directory, the staged schema (the
     * file source requires an explicit schema) and the event-time range
-    * of the staged data, read once at staging before any sentinel.
+    * of the staged data, observed by the staging write before any sentinel.
     * Each handle records the files its own [[sentinelRows]] calls
     * created, so a shared feed's block can delete exactly those. */
   final case class FileFeed(dir: String, schema: StructType, minTs: Long,
@@ -111,17 +111,18 @@ private[graft] object ParityFeed {
     base
   }
 
-  /** Writes `df` to `dir` and reads back its event-time range (one
-    * parquet-stats-backed scan). Outside a [[multiBatch]] scope the
-    * feed streams as one batch, so `slices` round-robin slices set
-    * only its source-side parallelism; inside one, the scope's count
-    * of time-range slices. (Time-range slicing everywhere measured
-    * slower on the 32-gate Verify: its sampling job and sort run at
-    * every staging.) */
+  /** Writes `df` to `dir` and observes its event-time range in the
+    * same job. Outside a [[multiBatch]] scope the feed streams as one
+    * batch, so `slices` round-robin slices set only its source-side
+    * parallelism; inside one, the scope's count of time-range slices.
+    * (Time-range slicing everywhere measured slower on the 32-gate
+    * Verify: its sampling job and sort run at every staging.) */
   private def stage(s: SparkSession, df: DataFrame, dir: Path, tsCol: String,
       slices: Int): FileFeed = {
+    val range = Observation()
     sliced.value.fold(df.repartition(slices))(sl =>
       df.repartitionByRange(sl.slices, col(tsCol)).sortWithinPartitions(tsCol))
+      .observe(range, min(col(tsCol)).as("lo"), max(col(tsCol)).as("hi"))
       .write.mode("overwrite").parquet(dir.toString)
     // the file source takes the oldest files first: time-range slice
     // (part) index order is event-time order, so encode it in
@@ -130,9 +131,9 @@ private[graft] object ParityFeed {
       .filter(_.getName.startsWith("part-")).sortBy(_.getName)
     val t0 = System.currentTimeMillis() - 60000L - parts.length * 1000L
     parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 1000L) }
-    val r = s.read.schema(df.schema).parquet(dir.toString)
-      .agg(min(col(tsCol)), max(col(tsCol))).head()
-    FileFeed(dir.toString, df.schema, r.getLong(0), r.getLong(1))
+    val r = range.get
+    FileFeed(dir.toString, df.schema, r("lo").asInstanceOf[Long],
+      r("hi").asInstanceOf[Long])
   }
 
   /** Stages `df` to a fresh drop-dir and hands `(feed, maxTs)` to `f`,

@@ -26,6 +26,14 @@ object RelationalQueries {
 
   private def dec(c: String) = col(c).cast("decimal(18,2)")
 
+  /** The robust-stats gates' synthetic event time: one microsecond per
+    * line, in (orderkey, linenumber) order. Microseconds keep the
+    * feed's whole-history gap and the flushes past it inside a long
+    * at ×100 inflation, where ScaleBench offsets each copy's
+    * orderkeys by 10¹⁰. */
+  private def lineTs = (col("l_orderkey").cast("long") * 8L
+    + col("l_linenumber").cast("long")).as("tsMicros")
+
   /** Final-result decimal → double. The exact decimal sum is computed
     * identically by Spark and DuckDB; one correctly-rounded IEEE cast
     * on the finished value keeps the driver's pandas-side hash stable
@@ -106,8 +114,7 @@ object RelationalQueries {
       val src = Tables(s, dir, "lineitem").select(
         concat_ws("|", col("l_returnflag"), col("l_linestatus")).as("group"),
         expr("CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT)").as("v"),
-        ((col("l_orderkey").cast("long") * 8L
-          + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
+        lineTs)
       // SHARED staged feed: the three robust-stats gates (winsorized /
       // quantiles / outliers) stream the IDENTICAL lineitem projection;
       // one staging per JVM serves all three (r13 judge item #4)
@@ -175,8 +182,7 @@ object RelationalQueries {
       val src = Tables(s, dir, "lineitem").select(
         concat_ws("|", col("l_returnflag"), col("l_linestatus")).as("group"),
         expr("CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT)").as("v"),
-        ((col("l_orderkey").cast("long") * 8L
-          + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
+        lineTs)
       // SHARED staged feed: the three robust-stats gates (winsorized /
       // quantiles / outliers) stream the IDENTICAL lineitem projection;
       // one staging per JVM serves all three (r13 judge item #4)
@@ -228,8 +234,7 @@ object RelationalQueries {
       val src = Tables(s, dir, "lineitem").select(
         concat_ws("|", col("l_returnflag"), col("l_linestatus")).as("group"),
         expr("CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT)").as("v"),
-        ((col("l_orderkey").cast("long") * 8L
-          + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
+        lineTs)
       // SHARED staged feed: the three robust-stats gates (winsorized /
       // quantiles / outliers) stream the IDENTICAL lineitem projection;
       // one staging per JVM serves all three (r13 judge item #4)
@@ -343,8 +348,7 @@ object RelationalQueries {
       val src = Tables(s, dir, "lineitem").select(
         concat_ws("|", col("l_returnflag"), col("l_linestatus")).as("group"),
         expr("CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT)").as("v"),
-        ((col("l_orderkey").cast("long") * 8L
-          + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
+        lineTs)
       ParityFeed.withSharedFeed(s, s"robust:$dir", src) { (feed, maxTs) =>
       ParityFeed.sentinel(s, feed, Ignore, 0L, feed.flush1)
       val items = ParityFeed.stream(s, feed)
@@ -402,8 +406,7 @@ object RelationalQueries {
         concat_ws("|", col("l_returnflag"), col("l_linestatus")).as("group"),
         expr("CAST(round(CAST(l_extendedprice AS DOUBLE) * 100) AS BIGINT)").as("v"),
         col("l_quantity").cast("long").as("w"),
-        ((col("l_orderkey").cast("long") * 8L
-          + col("l_linenumber").cast("long")) * 1000000L).as("tsMicros"))
+        lineTs)
       ParityFeed.withSharedFeed(s, s"robustw:$dir", src) { (feed, maxTs) =>
       ParityFeed.sentinel(s, feed, Ignore, 0L, 1L, feed.flush1)
       val items = ParityFeed.stream(s, feed)

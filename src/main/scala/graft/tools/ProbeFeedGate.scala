@@ -7,9 +7,10 @@ import graft.{GraftSession, Tables}
 import graft.queries.ParityFeed
 
 /** r18 floor decomposition for the CURRENT drop-dir file-feed parity
-  * harness: times each phase of a representative stateful gate — staging write,
-  * range agg, stream start, data batch, sentinel append, sentinel
-  * batch, stop, result fold — so the 32-gate fixed cost can be
+  * harness: times each phase of a representative stateful gate —
+  * staging write (which observes the feed's time range), stream start,
+  * data batch, sentinel append, sentinel batch, stop, result fold —
+  * so the 32-gate fixed cost can be
   * attacked where it actually lives. Dev tool, not graded.
   *
   * Usage: ProbeFeedGate [sfDir] [runs]
@@ -40,13 +41,14 @@ object ProbeFeedGate {
         java.nio.file.Files.createDirectories(base)
         val d = java.nio.file.Files.createTempDirectory(base, "probe")
         try {
-          t("stage-write") {
-            src.repartition(8).write.mode("overwrite").parquet(d.toString)
-          }
-          val feed = t("range-agg") {
-            val r = spark.read.schema(src.schema).parquet(d.toString)
-              .agg(min(col("tsMicros")), max(col("tsMicros"))).head()
-            ParityFeed.FileFeed(d.toString, src.schema, r.getLong(0), r.getLong(1))
+          val feed = t("stage-write") {
+            val range = org.apache.spark.sql.Observation()
+            src.repartition(8)
+              .observe(range, min(col("tsMicros")).as("lo"), max(col("tsMicros")).as("hi"))
+              .write.mode("overwrite").parquet(d.toString)
+            val r = range.get
+            ParityFeed.FileFeed(d.toString, src.schema, r("lo").asInstanceOf[Long],
+              r("hi").asInstanceOf[Long])
           }
           val events = ParityFeed.stream(spark, feed)
             .withColumn("ts", timestamp_micros(col("tsMicros")))
